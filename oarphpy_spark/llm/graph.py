@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from oarphpy_spark.util.checkpoints import truncate_lineage
+from oarphpy_spark.util.checkpoints import release_checkpoint, truncate_lineage
 
 
 def _check_canonical(e: DataFrame, who: str) -> DataFrame:
@@ -65,20 +65,6 @@ def _check_canonical(e: DataFrame, who: str) -> DataFrame:
         )
     return e
 
-
-def _unpersist_checkpoint(df: DataFrame) -> None:
-    """Best-effort release of the executor blocks behind an eager
-    ``localCheckpoint`` (same mechanism as
-    ``queries.graph_queries._release_checkpoint``): the checkpointed
-    Dataset wraps a ``LogicalRDD`` whose backing RDD holds the blocks;
-    unpersisting it frees them deterministically instead of waiting on
-    driver GC + ContextCleaner. No-op (swallowed) for reliable
-    checkpoints and already-released frames. The DataFrame is unusable
-    afterwards — callers only release frames that nothing references."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — best-effort teardown
-        pass
 
 _SRC, _DST = "__cc_src", "__cc_dst"
 
@@ -877,7 +863,7 @@ def ktruss(
             # (ADVICE r15): only the final sup/e pair stays alive for
             # the return join.
             for df in old_ckpts + prev_ckpts:
-                _unpersist_checkpoint(df)
+                release_checkpoint(df)
             e = e_next
             break
         # Incremental maintenance pays work proportional to the
@@ -902,7 +888,7 @@ def ktruss(
         # (ADVICE r15 — the reverted enumerate-once experiment measured
         # reps degrading 13 -> 37 s from exactly this accumulation).
         for df in old_ckpts:
-            _unpersist_checkpoint(df)
+            release_checkpoint(df)
         old_ckpts = prev_ckpts
         prev_ckpts = made
         e = e_next

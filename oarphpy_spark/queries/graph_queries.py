@@ -20,6 +20,11 @@ from pyspark.sql import functions as F
 
 from oarphpy_spark.registry import query
 from oarphpy_spark.tables import table
+from oarphpy_spark.util.checkpoints import (
+    release_shared,
+    session_shared,
+    truncate_lineage,
+)
 
 _COPURCHASE_EDGES_SQL = """
       SELECT DISTINCT a.l_partkey AS s, b.l_partkey AS d
@@ -74,129 +79,51 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> {"pr": edges, "deg": degrees | absent}:
-# the materialized relations shared by the whole co-purchase graph
-# family. "pr" is built on first touch by ANY family member; "deg"
-# lazily on the first caller that actually needs degrees (the two
-# link-prediction paths) — edge-only consumers (triangles, k-core,
-# k-truss, SSSP, ...) never pay the 2|E|-row degree aggregation or
-# its checkpoint storage (ADVICE r13).
-_LP_SHARED: dict[tuple[str, str], dict[str, DataFrame]] = {}
+release_shared_edges = release_shared
 
 
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free the executor-side blocks backing an eager
-    ``localCheckpoint``. The checkpointed Dataset wraps a
-    ``LogicalRDD`` over the persisted internal-row RDD;
-    ``plan.rdd().unpersist()`` drops those blocks deterministically
-    (verified: persistent-RDD count goes to 0). The DataFrame is
-    unusable afterwards (lineage was truncated), so callers must also
-    drop every reference — release then rebuild, never reuse."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — best-effort on a dying session
-        pass
-
-
-def release_shared_edges(
-    spark: SparkSession, sf_dir: str | None = None
-) -> int:
-    """Public release API for the session-shared graph relations
-    (the ``release_cached`` counterpart for ``localCheckpoint``-backed
-    caches — VERDICT r13 item 3). Unpersists the checkpointed
-    edge/degree blocks and drops the cache entries for this session's
-    ``applicationId`` (all sf_dirs, or just ``sf_dir`` if given), so a
-    long-lived session touching many sf_dirs can bound its executor
-    storage. Entries keyed by a STALE applicationId (a previous
-    in-process session) are dropped too — their context is gone and
-    the blocks with it — but they do NOT count toward the return
-    value: the count reflects only live entries matching the caller's
-    filter, so ``assert release_shared_edges(spark, sf) == 1`` cannot
-    flake on leftovers from a prior in-process session (ADVICE r14).
-    Safe to call at any time: the next family query simply rebuilds.
-    Returns the number of live entries dropped."""
-    app = spark.sparkContext.applicationId
-    dropped = 0
-    for key in list(_LP_SHARED):
-        stale = key[0] != app
-        if not stale and sf_dir is not None and key[1] != sf_dir:
-            continue
-        entry = _LP_SHARED.pop(key)
-        if not stale:  # stale app: JVM-side blocks died with its context
-            dropped += 1
-            for df in entry.values():
-                _release_checkpoint(df)
-    # Wedge-exchange sizing memos ride the same lifecycle: they were
-    # derived from the (now released) degree table, so drop them for
-    # every (app, sf_dir) the loop above released.
-    for key in list(_LP_WEDGE_N):
-        if key[0] != app or sf_dir is None or key[1] == sf_dir:
-            _LP_WEDGE_N.pop(key)
-    return dropped
-
-
-def _lp_shared_entry(spark: SparkSession, sf_dir: str) -> dict:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LP_SHARED:
-        # Evict entries from dead in-process sessions so recreated
-        # sessions don't accumulate unreachable keys (ADVICE r13).
-        for stale in [k for k in _LP_SHARED if k[0] != key[0]]:
-            _LP_SHARED.pop(stale)
-        _LP_SHARED[key] = {
-            "pr": _domain_checked_edges(
-                _copurchase_edges(spark, sf_dir)
-            ).localCheckpoint(eager=True)
-        }
-    return _LP_SHARED[key]
+def _shared_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The co-purchase edge relation, materialized once per (session,
+    sf_dir) and shared by every graph query over it — triangles,
+    k-core, k-truss, degree stats, assortativity, both link-prediction
+    paths — instead of each re-deriving the DISTINCT lineitem
+    self-join, the biggest subtree in each of those plans. Same rows
+    as ``_copurchase_edges`` (the domain check only raises, never
+    filters)."""
+    return session_shared(
+        spark,
+        sf_dir,
+        "copurchase_edges",
+        lambda: truncate_lineage(
+            _domain_checked_edges(_copurchase_edges(spark, sf_dir))
+        ),
+    )
 
 
 def _lp_shared_relations(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Edge set ``pr``, undirected adjacency ``und`` and degree table
-    ``deg`` shared by both link-prediction paths.
-
-    The two slowest queries in the suite (exact + sketch link
-    prediction, ~25 s each at sf0.1) previously each rebuilt the same
-    DISTINCT lineitem self-join and 2|E|-row degree aggregation
-    (VERDICT r12 item 3). Both relations are |E|-bounded — far smaller
-    than the ~100x|E| candidate tables downstream — so they are
-    materialized ONCE per (session, sf_dir) with an eager
-    ``localCheckpoint`` (executor-local storage, lineage truncated)
-    and reused; running both queries in one session now pays the edge
-    derivation once. ``und`` is a narrow, shuffle-free projection of
-    the checkpointed ``pr`` and needs no storage of its own. Release
-    with ``release_shared_edges``."""
-    entry = _lp_shared_entry(spark, sf_dir)
-    pr = entry["pr"]
-    if "deg" not in entry:
-        entry["deg"] = (
-            pr.unionAll(
-                pr.select(F.col("d").alias("s"), F.col("s").alias("d"))
-            )
-            .groupBy(F.col("s").alias("node"))
-            .agg(F.count("*").alias("dg"))
-            .localCheckpoint(eager=True)
-        )
-    deg = entry["deg"]
+    ``deg`` shared by both link-prediction paths. The |V|-row degree
+    table is materialized on the first degree consumer only, so
+    edge-only queries never pay its 2|E|-row aggregation. ``und`` is a
+    narrow, shuffle-free projection of ``pr`` and needs no storage of
+    its own."""
+    pr = _shared_edges(spark, sf_dir)
     und = pr.unionAll(
         pr.select(F.col("d").alias("s"), F.col("s").alias("d"))
     )
+    deg = session_shared(
+        spark,
+        sf_dir,
+        "copurchase_deg",
+        lambda: truncate_lineage(
+            und.groupBy(F.col("s").alias("node")).agg(
+                F.count("*").alias("dg")
+            )
+        ),
+    )
     return pr, und, deg
-
-
-def _shared_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The session-shared materialized co-purchase edge relation (see
-    ``_lp_shared_relations``). Every graph query over this graph —
-    triangles, k-core, k-truss, degree stats, assortativity, both
-    link-prediction paths — consumes the same |E|-bounded
-    localCheckpoint instead of re-deriving the DISTINCT lineitem
-    self-join, which is the single biggest subtree in each of those
-    plans. Same rows as ``_copurchase_edges`` (the domain-check
-    projection only raises, never filters). Edge-only consumers go
-    through here and never trigger the lazy degree-table build (see
-    ``_lp_shared_entry``)."""
-    return _lp_shared_entry(spark, sf_dir)["pr"]
 
 
 @query(
@@ -942,12 +869,6 @@ _LP_SKETCH_T = 128
 # 5-12 GB per stage).
 _WEDGE_ROWS_PER_PARTITION = 750_000
 
-# (applicationId, sf_dir, degree_cap, sample_t) -> partition count for
-# the wedge aggregation exchange. Memoized beside _LP_SHARED (purged
-# by release_shared_edges) so only the first plan build per session
-# pays the 1-row sizing job.
-_LP_WEDGE_N: dict[tuple[str, str, int | None, int | None], int] = {}
-
 
 def _wedge_agg_partitions(
     spark: SparkSession,
@@ -967,8 +888,9 @@ def _wedge_agg_partitions(
     C(T, 2) wedges after top-T sampling). Floor of 2x
     defaultParallelism keeps small inputs fully parallel; the result
     scales with wedge volume, never with the local core count."""
-    key = (spark.sparkContext.applicationId, sf_dir, degree_cap, sample_t)
-    if key not in _LP_WEDGE_N:
+    def size() -> int:
+        import math
+
         _, _, deg = _lp_shared_relations(spark, sf_dir)
         d = F.col("dg")
         sel = deg
@@ -985,10 +907,8 @@ def _wedge_agg_partitions(
             ).collect()[0]["w"]
             or 0.0
         )
-        import math
-
         par = spark.sparkContext.defaultParallelism
-        _LP_WEDGE_N[key] = int(
+        return int(
             min(
                 max(
                     math.ceil(wedge_rows / _WEDGE_ROWS_PER_PARTITION),
@@ -997,7 +917,10 @@ def _wedge_agg_partitions(
                 200_000,
             )
         )
-    return _LP_WEDGE_N[key]
+
+    return session_shared(
+        spark, sf_dir, ("wedge_n", degree_cap, sample_t), size
+    )
 
 
 @query(
@@ -1077,7 +1000,7 @@ def _link_prediction_exact(
         c.unpersist()
     # Enforced skew contract: count the wedge centers the cap excluded
     # and report them. The count runs on the session-shared,
-    # localCheckpointed degree table (|V|-bounded, lineage truncated),
+    # checkpointed degree table (|V|-bounded, lineage truncated),
     # so it is a milliseconds-scale job — never a rescan of the fact
     # table — and it runs AFTER the 20-row output materialized, so the
     # measured query plan is untouched.
@@ -1135,7 +1058,7 @@ def _link_prediction_exact_plan(
       local scale and silently stop at cluster scale).
 
     pr / und / deg come from the session-shared
-    ``_lp_shared_relations`` cache (|E|-bounded, localCheckpointed
+    ``_lp_shared_relations`` cache (|E|-bounded, checkpointed
     once), so this and the sketch companion derive the edge set and
     degree table once between them (VERDICT r12 item 3). ``capped``
     feeds both wedge sides — persist it or each side re-runs the
@@ -1227,7 +1150,7 @@ def _link_prediction_exact_plan(
         .orderBy(F.desc("jaccard"), "u", "v")
         .limit(20)
     )
-    # pr/deg are session-shared (localCheckpointed, not persist()ed) —
+    # pr/deg are session-shared (checkpointed, not persist()ed) —
     # only the per-call capped adjacency is released by the caller.
     return out, [capped]
 
@@ -1316,7 +1239,7 @@ def _link_prediction_sketch_plan(
 ) -> tuple[DataFrame, list[DataFrame]]:
     T = _LP_SKETCH_T
     # pr / und / deg are session-shared with the exact path (VERDICT
-    # r12 item 3): |E|-bounded, localCheckpointed once per (session,
+    # r12 item 3): |E|-bounded, checkpointed once per (session,
     # sf_dir).
     pr, und, deg = _lp_shared_relations(spark, sf_dir)
     # dd = the FULL degree of the neighbor endpoint, attached before
@@ -1451,7 +1374,7 @@ def _link_prediction_sketch_plan(
         .orderBy(F.desc("est_jaccard"), "u", "v")
         .limit(20)
     )
-    # pr/deg are session-shared (localCheckpointed, not persist()ed) —
+    # pr/deg are session-shared (checkpointed, not persist()ed) —
     # only the per-call sampled-adjacency cache is released by the
     # caller.
     return out, [w]

@@ -30,6 +30,11 @@ from oarphpy_spark.llm.similarity import (
 from oarphpy_spark.operators.prefix import with_global_cumsum
 from oarphpy_spark.registry import query
 from oarphpy_spark.tables import table
+from oarphpy_spark.util.checkpoints import (
+    release_shared,
+    session_shared,
+    truncate_lineage,
+)
 
 # Offline artifacts of the ANN indexes, cached per scale-factor dir:
 # embedding dimensionality and the IVF centroid table (tiny: n_cells
@@ -38,57 +43,29 @@ from oarphpy_spark.tables import table
 _EMB_DIM: dict[str, int] = {}
 _IVF_CENTS: dict[tuple[str, int], list[tuple[int, list[float]]]] = {}
 
-# (applicationId, sf_dir) -> the materialized MinHash band-bucket
-# relation over the documents table at the registry-standard params
-# (8 hashes / 4 bands / 3-shingles). Four registered queries
-# (q_dedup_minhash, q_dedup_minhash_verified, q_dedup_clusters,
-# q_component_sizes) derive this identical corpus-proportional
-# relation — tokenize + shingle + 8 min-wise hashes per doc — so one
-# session running several of them pays the derivation ONCE (r16,
-# VERDICT r15 item 7; same lifecycle pattern as the graph family's
-# shared edge relation). |buckets| = 4 x |docs| rows of
-# (id, band, 32-char hash) — a sliver of the corpus.
-_MINHASH_SHARED: dict[tuple[str, str], DataFrame] = {}
-
 
 def _shared_minhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash band buckets of the documents table at the registry
+    parameters (8 hashes / 4 bands / 3-shingles), materialized once per
+    (session, sf_dir): q_dedup_minhash, q_dedup_minhash_verified,
+    q_dedup_clusters and q_component_sizes all consume this relation,
+    so a session running several of them tokenizes, shingles and
+    hashes the corpus once. 4 x |docs| rows of (id, band, hash)."""
     from oarphpy_spark.llm.dedup import minhash_band_buckets
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MINHASH_SHARED:
-        for stale in [k for k in _MINHASH_SHARED if k[0] != key[0]]:
-            _MINHASH_SHARED.pop(stale)
-        _MINHASH_SHARED[key] = minhash_band_buckets(
-            table(spark, sf_dir, "documents"),
-            "text",
-            "doc_id",
-            8,
-            4,
-            3,
-        ).localCheckpoint(eager=True)
-    return _MINHASH_SHARED[key]
+    return session_shared(
+        spark,
+        sf_dir,
+        "minhash_buckets",
+        lambda: truncate_lineage(
+            minhash_band_buckets(
+                table(spark, sf_dir, "documents"), "text", "doc_id", 8, 4, 3
+            )
+        ),
+    )
 
 
-def release_shared_buckets(
-    spark: SparkSession, sf_dir: str | None = None
-) -> int:
-    """Release the session-shared MinHash bucket checkpoint(s) — the
-    ``release_shared_edges`` counterpart for the dedup-LSH family.
-    Returns the number of live entries dropped; the next family query
-    simply rebuilds."""
-    from oarphpy_spark.queries.graph_queries import _release_checkpoint
-
-    app = spark.sparkContext.applicationId
-    dropped = 0
-    for key in list(_MINHASH_SHARED):
-        stale = key[0] != app
-        if not stale and sf_dir is not None and key[1] != sf_dir:
-            continue
-        df = _MINHASH_SHARED.pop(key)
-        if not stale:
-            dropped += 1
-            _release_checkpoint(df)
-    return dropped
+release_shared_buckets = release_shared
 
 
 def _emb_dim(spark: SparkSession, sf_dir: str) -> int:

@@ -82,9 +82,6 @@ class SessionFactory:
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         # --- determinism across engines/oracles ---------------------------
         "spark.sql.session.timeZone": "UTC",
-        # Parquet ns timestamps (events.ts) scan as int64 nanos; the
-        # table loader converts to TimestampType (µs) JVM-side.
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

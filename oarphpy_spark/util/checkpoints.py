@@ -28,6 +28,13 @@ loop goes quadratic. Two mechanisms exist:
 - ``reliable=False`` — force ``localCheckpoint`` (benchmarks,
   single-node batch jobs).
 
+The same module owns the session's other storage decision: which
+derived relations are reused across queries. :func:`session_shared`
+builds a named value once per (application, scope) — e.g. the
+co-purchase edges every graph query consumes, or the MinHash buckets
+every LSH dedup query consumes — and :func:`release_shared` is the one
+call that frees them (:func:`release_checkpoint` on each DataFrame).
+
 The reference has no iterative operator and so no equivalent; its
 closest durability primitive is the egg-shipping SessionFactory
 (reference ``oarphpy/spark.py:472-791``), which solves code
@@ -35,6 +42,10 @@ distribution, not lineage.
 """
 
 from __future__ import annotations
+
+import threading
+from collections.abc import Callable, Hashable
+from typing import Any
 
 from pyspark.sql import DataFrame
 
@@ -80,3 +91,67 @@ def truncate_lineage(
             )
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the executor blocks behind an eager ``localCheckpoint`` of
+    ``df``. The checkpointed Dataset wraps a ``LogicalRDD`` over the
+    persisted RDD; unpersisting it drops the blocks now instead of at
+    driver GC + ContextCleaner. A no-op for reliable checkpoints and
+    already-released frames. A released local checkpoint cannot be
+    recomputed (its lineage is gone), so callers release only frames
+    nothing references any more."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:  # noqa: BLE001 — best-effort on a dying session
+        pass
+
+
+# (applicationId, scope) -> {name: value}. Keyed by applicationId so a
+# value never outlives the SparkContext whose blocks back it.
+_SHARED: dict[tuple[str, Hashable], dict[Hashable, Any]] = {}
+_SHARED_LOCK = threading.RLock()
+
+
+def session_shared(
+    spark, scope: Hashable, name: Hashable, build: Callable[[], Any]
+) -> Any:
+    """The value ``name`` in ``scope`` for this session's application,
+    built with ``build()`` on first touch and reused until
+    :func:`release_shared`. Scopes left by dead applications (a
+    previous in-process session) are evicted here. Builders may look
+    up other values of the same scope; concurrent callers wait for one
+    build instead of each running their own."""
+    app = spark.sparkContext.applicationId
+    with _SHARED_LOCK:
+        for key in [k for k in _SHARED if k[0] != app]:
+            del _SHARED[key]
+        values = _SHARED.get((app, scope), {})
+        if name in values:
+            return values[name]
+        value = build()
+        _SHARED.setdefault((app, scope), {})[name] = value
+        return value
+
+
+def release_shared(spark, scope: Hashable | None = None) -> int:
+    """Drop this application's shared scopes (all, or just ``scope``)
+    and release every DataFrame in them; the next touch rebuilds.
+    Scopes of dead applications are dropped too but not counted (their
+    blocks died with their context), so the return value — the number
+    of live scopes dropped — cannot pick up leftovers of an earlier
+    in-process session."""
+    app = spark.sparkContext.applicationId
+    dropped = 0
+    with _SHARED_LOCK:
+        for key in list(_SHARED):
+            live = key[0] == app
+            if live and scope is not None and key[1] != scope:
+                continue
+            values = _SHARED.pop(key)
+            if live:
+                dropped += 1
+                for v in values.values():
+                    if isinstance(v, DataFrame):
+                        release_checkpoint(v)
+    return dropped

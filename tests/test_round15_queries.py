@@ -59,12 +59,14 @@ def test_release_shared_edges_count_excludes_stale_entries(spark):
     reflects only live entries matching the caller's filter, so
     callers asserting `== 1` can't flake on leftovers (ADVICE r14)."""
     import oarphpy_spark.queries.graph_queries as gq
+    from oarphpy_spark.util import checkpoints
 
     gq.release_shared_edges(spark)
     gq._shared_edges(spark, SF)  # one live entry
     stale_key = ("app-from-a-dead-session", SF)
-    gq._LP_SHARED[stale_key] = {"pr": None}  # blocks died with its ctx
+    # blocks died with its ctx
+    checkpoints._SHARED[stale_key] = {"copurchase_edges": None}
 
     assert gq.release_shared_edges(spark, SF) == 1  # live only
-    assert stale_key not in gq._LP_SHARED  # ...but still evicted
-    assert not gq._LP_SHARED
+    assert stale_key not in checkpoints._SHARED  # ...but still evicted
+    assert not checkpoints._SHARED

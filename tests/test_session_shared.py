@@ -1,0 +1,77 @@
+"""The session memo in ``util/checkpoints``: one release call frees
+every relation the graph and dedup-LSH query families share, and the
+shared builds follow the same durability switch as every other
+lineage cut."""
+
+from __future__ import annotations
+
+from .conftest import SF_SMALL as SF
+
+
+def test_release_shared_frees_every_family_relation(spark):
+    """Edges, degrees, the wedge sizing memo and the MinHash buckets
+    of one sf_dir live in one scope: a single release drops it (count
+    1), frees every checkpoint block it held, and the next touch
+    rebuilds."""
+    import oarphpy_spark.queries.graph_queries as gq
+    import oarphpy_spark.queries.llm_queries as lq
+    from oarphpy_spark.util import checkpoints
+
+    jsc = spark.sparkContext._jsc
+    checkpoints.release_shared(spark)
+    n0 = jsc.getPersistentRDDs().size()
+
+    edges = gq._shared_edges(spark, SF)
+    _, _, deg = gq._lp_shared_relations(spark, SF)
+    assert gq._wedge_agg_partitions(spark, SF, sample_t=gq._LP_SKETCH_T) > 0
+    assert lq.q_dedup_minhash(spark, SF).count() > 0
+    buckets = lq._shared_minhash_buckets(spark, SF)
+    # edges, degrees and buckets each hold one checkpoint
+    assert jsc.getPersistentRDDs().size() == n0 + 3
+
+    assert checkpoints.release_shared(spark, SF) == 1
+    assert jsc.getPersistentRDDs().size() == n0
+    assert not checkpoints._SHARED
+
+    assert gq._shared_edges(spark, SF) is not edges
+    assert gq._lp_shared_relations(spark, SF)[2] is not deg
+    assert lq._shared_minhash_buckets(spark, SF) is not buckets
+    checkpoints.release_shared(spark)
+
+
+def test_shared_edges_use_reliable_checkpoint_when_dir_set(spark, tmp_path):
+    """With a checkpoint dir configured, the shared edge relation is a
+    reliable checkpoint (no executor-local persisted RDD), with the
+    same rows as a fresh derivation."""
+    import oarphpy_spark.queries.graph_queries as gq
+    from oarphpy_spark.util.checkpoints import (
+        clear_checkpoint_dir,
+        release_shared,
+    )
+
+    jsc = spark.sparkContext._jsc
+    release_shared(spark)
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        n0 = jsc.getPersistentRDDs().size()
+        shared = gq._shared_edges(spark, SF)
+        assert jsc.getPersistentRDDs().size() == n0
+        fresh = gq._copurchase_edges(spark, SF)
+        assert sorted(shared.collect()) == sorted(fresh.collect())
+    finally:
+        release_shared(spark)
+        clear_checkpoint_dir(spark)
+
+
+def test_session_presets_leave_nanos_as_long_unset():
+    """``tables.table`` sets the legacy nanos conf only around reads of
+    genuinely-ns files; a session-wide default would turn every other
+    ns-parquet read into silent bigints."""
+    from oarphpy_spark.session import (
+        K8SSessionFactory,
+        NotebookSessionFactory,
+        SessionFactory,
+    )
+
+    for factory in (SessionFactory, K8SSessionFactory, NotebookSessionFactory):
+        assert "spark.sql.legacy.parquet.nanosAsLong" not in factory.CONF_KV
