@@ -85,12 +85,6 @@ def encode_png(img) -> bytes:
     return png_encode(img)
 
 
-def jpeg_header_dimensions(data: bytes) -> tuple[int, int] | None:
-    from oarphpy_spark.util.images import jpeg_header_dimensions as _jhd
-
-    return _jhd(data)
-
-
 def blob_feature_stats(blobs: DataFrame) -> DataFrame:
     """Per-format rollup over a blob table — metadata-only (never
     deserializes data), so it is scan-bound at any scale."""

@@ -286,8 +286,9 @@ def q_tfevents_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``oarphpy/util/tfutil.py:253-302``). The fixture is generated
     deterministically here (an event file is just TFRecord-framed
     protobufs, both written by this repo's own codecs), and the scan
-    itself is the distributed binaryFile + mapInPandas path that
-    handles a directory of real training logs at cluster scale. The
+    itself is the distributed ``tfrecords`` data source read plus a
+    ``parse_event`` mapInPandas, the path that handles a directory of
+    real training logs at cluster scale. The
     oracle is the literal expected table — DuckDB can't read the wire
     format, but the VALUES contract pins every decoded field."""
     import struct as _struct
@@ -345,7 +346,7 @@ def q_tfevents_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     # Fixture lives in a PID-keyed temp dir for the DURATION OF THE SCAN
     # only, then is removed — no litter across runs. The distributed
-    # ``binaryFile`` read requires executors to share the driver
+    # ``tfrecords`` read requires executors to share the driver
     # filesystem (true in local mode and on any cluster whose event-log
     # dir is shared storage — the real deployment shape for TensorBoard
     # logs); the scan is forced eagerly below so cleanup can't race it.

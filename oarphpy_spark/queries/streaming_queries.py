@@ -552,10 +552,8 @@ def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from oarphpy_spark.sources.replay_stream import (
-        parquet_row_count,
-        register,
-    )
+    from oarphpy_spark.sources.replay_stream import register
+    from oarphpy_spark.util.scale import parquet_row_count
 
     register(spark)
     path = _os.path.join(sf_dir, "events.parquet")

@@ -1,7 +1,7 @@
 """Streaming Python data source that REPLAYS a parquet table in
 deterministic offset slices — the streaming half of the Python
-DataSource API (the batch half is sources/archive_v2.py and
-tfrecords_v2.py).
+DataSource API (the batch half is the ``archive`` and ``tfrecords``
+readers in sources/archive.py and sources/tfrecords.py).
 
 ``SimpleDataSourceStreamReader`` contract: ``read(start)`` returns
 (rows, next_offset) and Spark persists the offset range per
@@ -111,15 +111,8 @@ def register(spark) -> None:
     spark.dataSource.register(ReplayDataSource)
 
 
-def parquet_row_count(path: str) -> int:
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows
-
-
 __all__ = [
     "ReplayDataSource",
     "register",
-    "parquet_row_count",
     "REPLAY_SLICES",
 ]

@@ -34,9 +34,9 @@ dims + encoded PNG bytes (decode with
 ``decode_image_summary``) and tensors surface dtype/shape/values, so
 neither TF nor imageio is ever required.
 
-Scan is distributed: files land on executors via the ``binaryFile``
-source and records explode in Arrow-batched ``mapInPandas`` — same
-scale shape as ``tfrecords_df``.
+Scan is distributed: records come from the ``tfrecords`` data source
+(``tfrecords_df``), which streams each file on an executor, and only
+the ``parse_event`` step runs in Arrow-batched ``mapInPandas``.
 """
 
 from __future__ import annotations
@@ -47,6 +47,8 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+
+from oarphpy_spark.sources.tfrecords import tfrecords_df
 
 
 def iter_proto_fields(data: bytes) -> Iterator[tuple[int, int, object]]:
@@ -287,24 +289,18 @@ def tf_summary_df(
     ``full=True``, decoded image-summary dims/PNG-bytes and
     tensor-summary dtype/shape/values columns (the reference
     ``TFSummaryReader``'s full row shape, TF-free)."""
-    from oarphpy_spark.sources.tfrecords import iter_tfrecords
-
-    files = spark.read.format("binaryFile").load(path_glob).select(
-        "path", "content"
-    )
     cols = _FULL_COLS if full else _SCALAR_COLS
 
     def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
         for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for rec in iter_tfrecords(io.BytesIO(content)):
-                    for r in parse_event(rec, full=full):
-                        rows.append({"path": path, **r})
+            rows = [
+                {"path": path, **r}
+                for path, rec in zip(pdf["path"], pdf["record"])
+                for r in parse_event(rec, full=full)
+            ]
             if rows:
                 yield pd.DataFrame(rows, columns=cols)
 
     schema = TFEVENTS_FULL_SCHEMA if full else TFEVENTS_SCHEMA
-    return files.mapInPandas(explode, schema=schema)
+    records = tfrecords_df(spark, path_glob).select("path", "record")
+    return records.mapInPandas(explode, schema=schema)

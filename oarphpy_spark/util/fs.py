@@ -5,6 +5,7 @@ Hadoop filesystem layer, not these."""
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tarfile
@@ -36,6 +37,22 @@ def all_files_recursive(root: str) -> Iterator[str]:
     for dirpath, _dirnames, filenames in os.walk(root):
         for f in sorted(filenames):
             yield os.path.join(dirpath, f)
+
+
+def input_files(path: str) -> list[str]:
+    """The files a file-source ``path`` names: the file itself, the
+    sorted matches of a glob, or the files directly inside a directory,
+    skipping hidden and ``_``-prefixed names (such as a writer's
+    ``_staging``). A path matching nothing comes back as-is, so the
+    reader's open raises the not-found error."""
+    if os.path.isdir(path):
+        return [
+            os.path.join(path, n)
+            for n in sorted(os.listdir(path))
+            if not n.startswith((".", "_"))
+            and os.path.isfile(os.path.join(path, n))
+        ]
+    return sorted(glob.glob(path)) or [path]
 
 
 def is_archive(path: str) -> bool:

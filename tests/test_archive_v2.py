@@ -5,7 +5,7 @@ import zipfile
 
 import pytest
 
-from oarphpy_spark.sources.archive_v2 import register
+from oarphpy_spark.sources.archive import register
 
 
 @pytest.fixture(scope="module")
@@ -81,3 +81,19 @@ def test_archive_file_flyweight_reference_alias(tmp_path):
         tf.add(p, arcname="z.txt")
     (tfw,) = ArchiveFileFlyweight.fws_from(str(tp))
     assert (tfw.name, tfw.data) == ("z.txt", b"gamma")
+
+
+def test_read_directory_of_archives(ar_session, tmp_path):
+    """A directory path reads every archive directly inside it and
+    skips ``.``/``_``-prefixed names (which are not archives here)."""
+    d = tmp_path / "archives"
+    d.mkdir()
+    for i in range(2):
+        with zipfile.ZipFile(d / f"part{i}.zip", "w") as zf:
+            zf.writestr(f"m{i}.txt", f"member {i}")
+    (d / "_SUCCESS").write_text("")
+    (d / ".hidden").write_text("not an archive")
+
+    df = ar_session.read.format("archive").load(str(d))
+    rows = {r["name"]: bytes(r["data"]) for r in df.collect()}
+    assert rows == {"m0.txt": b"member 0", "m1.txt": b"member 1"}

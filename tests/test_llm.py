@@ -13,10 +13,10 @@ from oarphpy_spark.llm.dedup import minhash_candidate_pairs, simhash16
 from oarphpy_spark.llm.multimodal import (
     blob_feature_stats,
     decode_image,
-    jpeg_header_dimensions,
     synth_blob_table,
 )
 from oarphpy_spark.llm.similarity import brute_force_topk, hyperplane_lsh_topk
+from oarphpy_spark.util.images import jpeg_header_dimensions
 
 from .conftest import SF_SMALL
 

@@ -10,8 +10,8 @@ import pytest
 from oarphpy_spark.sources.replay_stream import (
     REPLAY_SLICES,
     ReplayStreamReader,
-    parquet_row_count,
 )
+from oarphpy_spark.util.scale import parquet_row_count
 
 PATH = "/root/testdata/sf0.001/events.parquet"
 

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from oarphpy_spark.sources.tfrecords import iter_tfrecords, write_tfrecords
-from oarphpy_spark.sources.tfrecords_v2 import register
+from oarphpy_spark.sources.tfrecords import register
 
 
 @pytest.fixture(scope="module")
@@ -73,3 +73,22 @@ def test_read_reports_truncation(tfr_session, tmp_path):
     df = tfr_session.read.format("tfrecords").load(str(tmp_path / "bad.tfrecord"))
     with pytest.raises(Exception, match="truncated"):
         df.collect()
+
+
+def test_read_directory_written_by_sink(tfr_session, tmp_path):
+    """A directory path reads the files directly inside it, so the
+    sink's output directory loads back without a glob."""
+    out = str(tmp_path / "sink_dir")
+    src = tfr_session.range(50).select(
+        F.sha1(F.col("id").cast("string")).cast("binary").alias("record")
+    ).repartition(2)
+    src.write.format("tfrecords").option("path", out).mode("append").save()
+
+    back = tfr_session.read.format("tfrecords").load(out)
+    assert sorted(bytes(r["record"]) for r in back.collect()) == sorted(
+        bytes(r["record"]) for r in src.collect()
+    )
+
+    (tmp_path / "empty").mkdir()
+    empty = tfr_session.read.format("tfrecords").load(str(tmp_path / "empty"))
+    assert empty.count() == 0
