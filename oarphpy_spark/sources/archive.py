@@ -14,9 +14,9 @@ contract, minus RDDs:
 * executors open their archive locally and emit Arrow batches of at
   most 64 MB — bytes never pass through the driver.
 
-Options: ``path`` (archive file, glob, or directory of archives),
-``membersperpartition`` (default 256). :func:`archive_df` registers the
-format and reads the (name, data) columns in one call.
+Options: ``path`` (archive file, glob, or directory searched
+recursively), ``membersperpartition`` (default 256). :func:`archive_df`
+registers the format and reads the (name, data) columns in one call.
 """
 
 from __future__ import annotations
@@ -190,11 +190,17 @@ def register(spark) -> None:
 
 def archive_df(spark: SparkSession, path: str) -> DataFrame:
     """All members of the zip/tar archive(s) at ``path`` (file, glob or
-    directory) as (name STRING, data BINARY), read through the
-    ``archive`` format, which this registers with ``spark``.
+    directory, expanded by :func:`~oarphpy_spark.util.fs.input_files`)
+    as (name STRING, data BINARY), read through the ``archive`` format,
+    which this registers with ``spark``.
 
-    ``path`` must be reachable from executors (shared fs / distributed
-    fs); on local mode any local path works.
+    ``path`` is a local or POSIX-mounted path, resolved against the
+    driver's current directory, and must be reachable from executors
+    (shared fs); on local mode any local path works.
     """
     register(spark)
-    return spark.read.format("archive").load(path).select("name", "data")
+    return (
+        spark.read.format("archive")
+        .load(os.path.abspath(path))
+        .select("name", "data")
+    )

@@ -284,7 +284,9 @@ _FULL_COLS = _SCALAR_COLS + [
 def tf_summary_df(
     spark: SparkSession, path_glob: str, full: bool = False
 ) -> DataFrame:
-    """Scan TensorBoard event files matching ``path_glob`` into rows of
+    """Scan TensorBoard event files matching ``path_glob`` (file, glob
+    or log directory, searched recursively as :func:`tfrecords_df`
+    does; local or POSIX-mounted paths only) into rows of
     (path, step, wall_time, tag, simple_value) — plus, with
     ``full=True``, decoded image-summary dims/PNG-bytes and
     tensor-summary dtype/shape/values columns (the reference

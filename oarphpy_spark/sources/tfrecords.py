@@ -273,8 +273,10 @@ def register(spark) -> None:
 
 def tfrecords_df(spark: SparkSession, path_glob: str) -> DataFrame:
     """All records of the TFRecord file(s) at ``path_glob`` (file, glob
-    or directory) as (path STRING, record_idx BIGINT, record BINARY),
-    read through the ``tfrecords`` format, which this registers with
-    ``spark``."""
+    or directory, expanded by :func:`~oarphpy_spark.util.fs.input_files`)
+    as (path STRING, record_idx BIGINT, record BINARY), read through the
+    ``tfrecords`` format, which this registers with ``spark``.
+    ``path_glob`` is a local or POSIX-mounted path, resolved against the
+    driver's current directory; ``path`` is the absolute file path."""
     register(spark)
-    return spark.read.format("tfrecords").load(path_glob)
+    return spark.read.format("tfrecords").load(os.path.abspath(path_glob))

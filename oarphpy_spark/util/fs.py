@@ -1,7 +1,8 @@
 """Local-filesystem utilities (capability parity with the reference's
-fs helpers, ``oarphpy/util/misc.py:430-467``). Driver-side only — at
-cluster scale, storage paths are object-store URIs handled by Spark's
-Hadoop filesystem layer, not these."""
+fs helpers, ``oarphpy/util/misc.py:430-467``). Local or POSIX-mounted
+paths only: no ``hdfs://``/``s3a://``/``file:`` URIs and no Hadoop
+``{a,b}`` globs. That includes :func:`input_files`, the path expansion
+of the ``archive`` and ``tfrecords`` sources."""
 
 from __future__ import annotations
 
@@ -40,19 +41,25 @@ def all_files_recursive(root: str) -> Iterator[str]:
 
 
 def input_files(path: str) -> list[str]:
-    """The files a file-source ``path`` names: the file itself, the
-    sorted matches of a glob, or the files directly inside a directory,
-    skipping hidden and ``_``-prefixed names (such as a writer's
-    ``_staging``). A path matching nothing comes back as-is, so the
-    reader's open raises the not-found error."""
-    if os.path.isdir(path):
-        return [
-            os.path.join(path, n)
-            for n in sorted(os.listdir(path))
-            if not n.startswith((".", "_"))
-            and os.path.isfile(os.path.join(path, n))
-        ]
-    return sorted(glob.glob(path)) or [path]
+    """The files a file-source ``path`` names. Each match of the glob
+    ``path`` (or ``path`` itself) that is a file is taken as-is; each
+    that is a directory contributes every file below it, recursively,
+    skipping hidden and ``_``-prefixed files and subdirectories (such
+    as a writer's ``_staging``). A path matching nothing comes back
+    as-is, so the reader's open raises the not-found error."""
+    out: list[str] = []
+    for match in sorted(glob.glob(path)) or [path]:
+        if not os.path.isdir(match):
+            out.append(match)
+            continue
+        for dirpath, dirnames, filenames in os.walk(match):
+            dirnames[:] = sorted(n for n in dirnames if not n.startswith((".", "_")))
+            out.extend(
+                os.path.join(dirpath, n)
+                for n in sorted(filenames)
+                if not n.startswith((".", "_"))
+            )
+    return out
 
 
 def is_archive(path: str) -> bool:

@@ -84,8 +84,8 @@ def test_archive_file_flyweight_reference_alias(tmp_path):
 
 
 def test_read_directory_of_archives(ar_session, tmp_path):
-    """A directory path reads every archive directly inside it and
-    skips ``.``/``_``-prefixed names (which are not archives here)."""
+    """A directory path reads every archive inside it and skips
+    ``.``/``_``-prefixed names (which are not archives here)."""
     d = tmp_path / "archives"
     d.mkdir()
     for i in range(2):

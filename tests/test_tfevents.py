@@ -192,3 +192,16 @@ def test_tf_summary_df_scan(spark, tmp_path):
         ((r["step"], r["tag"], round(r["simple_value"], 6)) for r in df.collect())
     )
     assert rows == [(0, "loss", 2.0), (1, "loss", 1.5), (1, "lr", 0.01)]
+
+
+def test_tf_summary_df_reads_run_subdirectories(spark, tmp_path):
+    """The usual TensorBoard layout, ``logdir/<run>/events.*``, scans
+    from the log directory itself."""
+    for run, step in [("train", 0), ("eval", 1)]:
+        (tmp_path / run).mkdir()
+        with open(tmp_path / run / "events.out.tfevents.1.host", "wb") as f:
+            write_tfrecords(f, [_scalar_event(100.0, step, [("loss", 2.0)])])
+
+    df = tf_summary_df(spark, str(tmp_path))
+    rows = sorted((r["path"].split("/")[-2], r["step"]) for r in df.collect())
+    assert rows == [("eval", 1), ("train", 0)]

@@ -76,8 +76,8 @@ def test_read_reports_truncation(tfr_session, tmp_path):
 
 
 def test_read_directory_written_by_sink(tfr_session, tmp_path):
-    """A directory path reads the files directly inside it, so the
-    sink's output directory loads back without a glob."""
+    """A directory path reads the files inside it, so the sink's
+    output directory loads back without a glob."""
     out = str(tmp_path / "sink_dir")
     src = tfr_session.range(50).select(
         F.sha1(F.col("id").cast("string")).cast("binary").alias("record")
@@ -92,3 +92,36 @@ def test_read_directory_written_by_sink(tfr_session, tmp_path):
     (tmp_path / "empty").mkdir()
     empty = tfr_session.read.format("tfrecords").load(str(tmp_path / "empty"))
     assert empty.count() == 0
+
+
+def test_read_nested_run_directories(tfr_session, tmp_path, monkeypatch):
+    """Directories are read recursively, whether named directly or
+    matched by a glob, pruning ``.``/``_``-prefixed subdirectories; a
+    relative path resolves against the driver's current directory."""
+    from oarphpy_spark.sources.tfrecords import tfrecords_df
+
+    d = tmp_path / "runs"
+    for rel, recs in [
+        ("run1/x.tfrecord", [b"a", b"b"]),
+        ("run2/y.tfrecord", [b"c"]),
+        ("run2/deep/z.tfrecord", [b"d"]),
+        ("run1/_staging/part.tfrecord", [b"staged"]),
+        (".hidden/h.tfrecord", [b"hidden"]),
+    ]:
+        (d / rel).parent.mkdir(parents=True, exist_ok=True)
+        with open(d / rel, "wb") as f:
+            write_tfrecords(f, recs)
+    (d / "run1" / "_SUCCESS").write_text("")
+
+    for p in [str(d), str(d / "*")]:
+        df = tfr_session.read.format("tfrecords").load(p)
+        assert sorted(bytes(r["record"]) for r in df.collect()) == [
+            b"a", b"b", b"c", b"d"
+        ]
+
+    monkeypatch.chdir(tmp_path)
+    rows = tfrecords_df(tfr_session, "runs/run2").collect()
+    assert sorted(r["path"] for r in rows) == [
+        str(d / "run2" / "deep" / "z.tfrecord"),
+        str(d / "run2" / "y.tfrecord"),
+    ]

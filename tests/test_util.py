@@ -118,6 +118,23 @@ def test_fs_utils(tmp_path):
     assert missing_or_empty(str(tmp_path / "a"))
 
 
+def test_input_files_expands_files_globs_and_directory_trees(tmp_path):
+    from oarphpy_spark.util.fs import input_files
+
+    for rel in ["top.bin", "r1/a.bin", "r1/_SUCCESS", "r1/deep/b.bin",
+                "r2/c.bin", "_staging/s.bin", ".cache/h.bin"]:
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_bytes(b"")
+    t = str(tmp_path)
+    tree = [f"{t}/top.bin", f"{t}/r1/a.bin", f"{t}/r1/deep/b.bin", f"{t}/r2/c.bin"]
+
+    assert input_files(t) == tree
+    assert sorted(input_files(f"{t}/*")) == sorted(tree + [f"{t}/_staging/s.bin"])
+    assert input_files(f"{t}/r*/*.bin") == [f"{t}/r1/a.bin", f"{t}/r2/c.bin"]
+    assert input_files(f"{t}/top.bin") == [f"{t}/top.bin"]
+    assert input_files(f"{t}/missing") == [f"{t}/missing"]
+
+
 def test_download_copies_plain_file(tmp_path):
     from oarphpy_spark.util.fs import download
 
