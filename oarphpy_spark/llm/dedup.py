@@ -31,6 +31,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from oarphpy_spark.functions.text import md5_str, norm_tokens, shingles
+from oarphpy_spark.util.checkpoints import (
+    hold_caches,
+    release_cached,  # noqa: F401 — re-exported for existing callers
+)
 from oarphpy_spark.util.partitioning import spread
 
 
@@ -128,8 +132,11 @@ def minhash_candidate_pairs(
     from the documents table — tokenize + shingle + 8 min-wise hashes,
     the corpus-proportional part — so one session running several of
     them should pay that derivation once, like the graph family's
-    shared edge relation). The caller owns its lifecycle: no persist
-    here and no ``_oarphpy_persisted`` ride-along."""
+    shared edge relation). When ``buckets`` is given, ``df``,
+    ``text_col``, ``id_col``, ``num_hashes``, ``bands`` and
+    ``shingle_n`` are ignored: the buckets already encode them. The
+    caller owns the buckets' lifecycle: no persist here and no
+    ride-along cache."""
     shared_buckets = buckets is not None
     if not shared_buckets:
         buckets = minhash_band_buckets(
@@ -175,39 +182,15 @@ def minhash_candidate_pairs(
         .agg(F.count("*").alias("n_shared_bands"))
     )
     # Deterministic cache release: the persisted bucket table rides on
-    # the result as `_oarphpy_persisted`; long-lived sessions that call
+    # the result (hold_caches); long-lived sessions that call
     # this repeatedly should `release_cached(pairs)` after
     # materializing, instead of waiting for driver GC + ContextCleaner
     # to notice the reference is gone. (Not attached for caller-owned
     # shared buckets — releasing those per-query would tear down the
     # session-shared checkpoint under its other consumers.)
     if not shared_buckets:
-        pairs._oarphpy_persisted = buckets
+        hold_caches(pairs, buckets)
     return pairs
-
-
-def release_cached(result: DataFrame) -> None:
-    """Unpersist intermediates an operator cached on behalf of
-    ``result`` (see ``minhash_candidate_pairs``,
-    ``llm.graph.triangle_count``). Call AFTER the result has been
-    materialized (written/collected); a later re-computation of
-    ``result`` still works — it just re-builds the cached table(s).
-
-    Storage-level policy: every ride-along cache is created with an
-    ARGLESS ``DataFrame.persist()``, whose default is
-    ``MEMORY_AND_DISK_DESER`` — under memory pressure the cached
-    blocks spill to disk instead of being evicted and silently
-    re-derived mid-query (the RDD ``cache()``/MEMORY_ONLY failure
-    mode).  tests/test_persist_policy.py machine-checks both halves:
-    no source site may pass a memory-only level, and live
-    ``_oarphpy_persisted`` entries must report ``useDisk=True``; the
-    sf1.0 4 GB-squeeze smoke (scripts/scale_smoke_mem.py) exercises
-    the actual spill path."""
-    cached = getattr(result, "_oarphpy_persisted", None)
-    if cached is None:
-        return
-    for df in cached if isinstance(cached, (list, tuple)) else [cached]:
-        df.unpersist()
 
 
 def simhash16(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -320,8 +303,7 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    out._oarphpy_persisted = [docs]
-    return out
+    return hold_caches(out, docs)
 
 
 def incremental_dedup(
@@ -459,7 +441,7 @@ def set_similarity_join(
     # corpus — persist it or every branch re-runs that derivation.
     # prefix feeds both self-join sides (the per-doc rank window
     # would otherwise sort the full token relation twice). The caches
-    # ride on the result as `_oarphpy_persisted` (see release_cached).
+    # ride on the result (hold_caches; freed by release_cached).
     t = tok.select(
         F.col(id_col).alias("id"), F.col(token_col).alias("token")
     ).distinct().persist()
@@ -549,8 +531,7 @@ def set_similarity_join(
             F.round(jac, 6).alias("jaccard"),
         )
     )
-    out._oarphpy_persisted = [t, prefix, arr]
-    return out
+    return hold_caches(out, t, prefix, arr)
 
 
 def containment_join(
@@ -596,7 +577,7 @@ def containment_join(
     t = tok.select(
         F.col(id_col).alias("id"), F.col(token_col).alias("token")
     ).distinct().persist()
-    # t (persisted, released via `_oarphpy_persisted`/release_cached)
+    # t (persisted, released via hold_caches/release_cached)
     # feeds five branches — sizes, df, the ranked probe, the postings
     # index, and the verify arrays; without the cache each re-runs
     # the upstream corpus explode+distinct.
@@ -671,5 +652,4 @@ def containment_join(
             F.col("overlap") / F.col("na").cast("double"), 6
         ).alias("containment"),
     )
-    out._oarphpy_persisted = [t, arr]
-    return out
+    return hold_caches(out, t, arr)

@@ -19,12 +19,10 @@ edge table that *shrinks* as stars collapse.
 Per-round driver work is one tiny action (a 1-row convergence
 checksum); lineage is truncated every round via
 ``util/checkpoints.truncate_lineage`` so round k's plan does not
-replay rounds 1..k-1. Every iterative operator here takes a
-``reliable`` parameter: None (auto) uses a RELIABLE ``checkpoint()``
-whenever ``sc.setCheckpointDir`` is configured — the production mode,
-where a lost executor cannot orphan the truncated blocks — and falls
-back to ``localCheckpoint`` otherwise; True requires the checkpoint
-dir (raises if missing); False forces the fast local form.
+replay rounds 1..k-1. Every iterative operator here cuts through it:
+a RELIABLE ``checkpoint()`` whenever ``sc.setCheckpointDir`` is
+configured — the production mode, where a lost executor cannot orphan
+the truncated blocks — and the fast ``localCheckpoint`` otherwise.
 
 The reference has no graph operator; this extends its dedup surface
 (reference `oarphpy/spark.py` has only row-level utilities) the way
@@ -36,7 +34,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from oarphpy_spark.util.checkpoints import release_checkpoint, truncate_lineage
+from oarphpy_spark.util.checkpoints import (
+    hold_caches,
+    release_checkpoint,
+    truncate_lineage,
+)
 
 
 def _check_canonical(e: DataFrame, who: str) -> DataFrame:
@@ -109,7 +111,6 @@ def connected_components(
     src: str,
     dst: str,
     max_iter: int = 12,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Transitive closure of an undirected edge list.
 
@@ -132,12 +133,10 @@ def connected_components(
         .filter(F.col(_SRC) != F.col(_DST))
         .distinct()
     )
-    e = truncate_lineage(e, reliable=reliable)
+    e = truncate_lineage(e)
     prev = None
     for _ in range(max_iter):
-        e_next = truncate_lineage(
-            _small_star(_large_star(e)), reliable=reliable
-        )
+        e_next = truncate_lineage(_small_star(_large_star(e)))
         # One 1-row action per round: (edge count, order-independent
         # content checksum). Equal rounds => the star set is a fixpoint.
         row = e_next.agg(
@@ -165,7 +164,6 @@ def pagerank(
     iterations: int = 5,
     damping: float = 0.85,
     seed_indicator=None,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank as repeated join+aggregate — the
     Pregel message-passing shape expressed declaratively.
@@ -186,10 +184,8 @@ def pagerank(
     on dst(=node) emits that same partitioning, so the rank-update
     left join needs no extra exchange. Lineage is truncated every
     iteration (without it, iteration k replans and recomputes 1..k-1,
-    which is quadratic); ``reliable`` selects executor-loss-safe
-    ``checkpoint()`` vs fast ``localCheckpoint`` — see
-    ``util/checkpoints`` (auto-detects a configured checkpoint dir by
-    default). The final result is
+    which is quadratic) through ``util/checkpoints.truncate_lineage``,
+    reliable iff a checkpoint dir is configured. The final result is
     checkpointed eagerly so the persisted loop inputs can be released
     deterministically before returning. Nodes with no inbound edges
     settle at 1-d; nodes absent from ``edges`` do not appear.
@@ -233,9 +229,8 @@ def pagerank(
         ranks = truncate_lineage(
             _pagerank_step(nodes, edges_w, ranks, damping, base),
             eager=False,
-            reliable=reliable,
         )
-    ranks = truncate_lineage(ranks, eager=True, reliable=reliable)
+    ranks = truncate_lineage(ranks, eager=True)
     nodes.unpersist()
     edges_w.unpersist()
     return ranks
@@ -281,7 +276,6 @@ def sssp(
     dst: str = "dst",
     weight: str = "w",
     rounds: int = 4,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Bounded-hop single-source shortest paths: distributed
     Bellman-Ford over an undirected weighted edge list, a FIXED number
@@ -302,8 +296,7 @@ def sssp(
     no-ops). The symmetrized edge table is built ONCE,
     hash-repartitioned on its join key and persisted, so only the
     small frontier relation shuffles each round; lineage is truncated
-    per round (``reliable`` selects durable vs local truncation, see
-    ``util/checkpoints``).
+    per round (``util/checkpoints.truncate_lineage``).
 
     ``source`` is a literal node id. Returns (node, dist) for nodes
     reachable within ``rounds`` hops; dist is LONG when weights are
@@ -360,7 +353,6 @@ def sssp(
             .filter(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
             .select("node", F.col("nd").alias("dist")),
             eager=True,
-            reliable=reliable,
         )
         if improved.isEmpty():
             break  # fixpoint: every further round is a no-op
@@ -369,10 +361,9 @@ def sssp(
             .groupBy("node")
             .agg(F.min("dist").alias("dist")),
             eager=False,
-            reliable=reliable,
         )
         frontier = improved
-    dist = truncate_lineage(dist, eager=True, reliable=reliable)
+    dist = truncate_lineage(dist, eager=True)
     sym.unpersist()
     base.unpersist()
     return dist
@@ -413,8 +404,9 @@ def triangle_count(
     static plan held 48 scans of the underlying fact table; exchange
     reuse doesn't collapse them because each branch re-derives with
     fresh expression ids). Measured at sf1.0: 12.7 s -> 10.1 s
-    best-of-2. The caches ride on the result as ``_oarphpy_persisted``
-    — release with ``llm.dedup.release_cached`` after materializing.
+    best-of-2. The caches ride on the result (``hold_caches``) —
+    release with ``util/checkpoints.release_cached`` after
+    materializing.
     This is NOT optional hygiene: SQL-persisted plans are held by the
     session's CacheManager until an explicit ``unpersist()``, so
     driver GC of the DataFrame does NOT reclaim them (ContextCleaner
@@ -504,8 +496,7 @@ def triangle_count(
     out = closed.agg(
         F.count("*").alias("n_triangles")
     ).crossJoin(und.agg(F.count("*").alias("n_edges")))
-    out._oarphpy_persisted = persisted
-    return out
+    return hold_caches(out, *persisted)
 
 
 def kcore(
@@ -514,7 +505,6 @@ def kcore(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 12,
-    reliable: bool | None = None,
     *,
     input_canonical: bool = False,
 ) -> DataFrame:
@@ -529,8 +519,7 @@ def kcore(
     only SHRINKS, so rounds get cheaper as peeling cascades.
     Per-round driver work is a 1-row edge count (the convergence
     check); lineage is truncated per round as in the other iterative
-    operators (``reliable`` selects durable vs local truncation, see
-    ``util/checkpoints``). Raises if ``max_iter`` rounds don't reach
+    operators (``util/checkpoints.truncate_lineage``). Raises if ``max_iter`` rounds don't reach
     the fixpoint — callers (and the unrolled SQL oracle, whose round
     count must be >= the real one; extra unrolled rounds are no-ops
     at the fixpoint because peeling is monotone) rely on convergence
@@ -557,7 +546,7 @@ def kcore(
             .filter(F.col("lo") != F.col("hi"))
             .distinct()
         )
-        e = truncate_lineage(e, reliable=reliable)
+        e = truncate_lineage(e)
     n_prev = e.count()
     for _ in range(max_iter):
         sym = e.select(F.col("lo").alias("v")).unionByName(
@@ -571,8 +560,7 @@ def kcore(
         )
         e_next = truncate_lineage(
             e.join(keep.withColumnRenamed("v", "lo"), "lo", "left_semi")
-            .join(keep.withColumnRenamed("v", "hi"), "hi", "left_semi"),
-            reliable=reliable,
+            .join(keep.withColumnRenamed("v", "hi"), "hi", "left_semi")
         )
         n = e_next.count()
         e = e_next
@@ -676,7 +664,6 @@ def ktruss(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
-    reliable: bool | None = None,
     *,
     input_canonical: bool = False,
 ) -> DataFrame:
@@ -748,7 +735,7 @@ def ktruss(
             .filter(F.col("lo") != F.col("hi"))
             .distinct()
         )
-        e = truncate_lineage(e, reliable=reliable)
+        e = truncate_lineage(e)
 
     # Scale-adaptive support-operator selection (one cheap degree
     # aggregation on the INPUT graph — an upper bound for every peel
@@ -841,11 +828,9 @@ def ktruss(
     old_ckpts: list[DataFrame] = []  # created two rounds back
     for _ in range(max_iter):
         if pending is None:
-            sup = truncate_lineage(full_support(e), reliable=reliable)
+            sup = truncate_lineage(full_support(e))
         else:
-            sup = truncate_lineage(
-                decremented_support(*pending), reliable=reliable
-            )
+            sup = truncate_lineage(decremented_support(*pending))
         # keeps' domain is exactly the surviving edge set: a full
         # enumeration omits triangle-less edges (support 0 < k-2 for
         # k >= 3; the support > 0 clause keeps k = 2 consistent with
@@ -854,7 +839,7 @@ def ktruss(
         keeps = sup.filter(
             (F.col("support") >= k - 2) & (F.col("support") > 0)
         )
-        e_next = truncate_lineage(keeps.select("lo", "hi"), reliable=reliable)
+        e_next = truncate_lineage(keeps.select("lo", "hi"))
         n = e_next.count()
         n_deleted = n_prev - n
         made = [sup, e_next]
@@ -875,8 +860,7 @@ def ktruss(
         # deleted this round).
         if n > 0 and n_deleted <= 0.25 * n_prev:
             deleted = truncate_lineage(
-                e.join(e_next, ["lo", "hi"], "left_anti"),
-                reliable=reliable,
+                e.join(e_next, ["lo", "hi"], "left_anti")
             )
             made.append(deleted)
             pending = (keeps, deleted, e)
@@ -905,7 +889,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 3,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007), made DETERMINISTIC: every node starts labeled with
@@ -951,8 +934,8 @@ def label_propagation(
                 ).alias("label")
             )
         )
-        labels = truncate_lineage(labels, eager=False, reliable=reliable)
-    labels = truncate_lineage(labels, eager=True, reliable=reliable)
+        labels = truncate_lineage(labels, eager=False)
+    labels = truncate_lineage(labels, eager=True)
     sym.unpersist()
     return labels
 
@@ -963,7 +946,6 @@ def strongly_connected_components(
     dst: str = "dst",
     max_outer: int = 16,
     max_inner: int = 64,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """SCCs of a DIRECTED edge list via trim + Orzan coloring — the
     label-propagation SCC used by Pregel-style systems (Orzan 2004;
@@ -987,7 +969,7 @@ def strongly_connected_components(
        monotone), assign, subtract, repeat.
 
     Every relation that loops is lineage-truncated per step
-    (``reliable`` as elsewhere); the active-subgraph edge table is
+    (``util/checkpoints.truncate_lineage``); the active-subgraph edge table is
     rebuilt per outer round but the node set only shrinks. Worst
     case (adversarial id order on a path) is O(V) outer rounds —
     bounded by ``max_outer`` with a convergence raise, same
@@ -999,13 +981,12 @@ def strongly_connected_components(
         .filter(F.col("s") != F.col("d"))
         .distinct()
     )
-    e0 = truncate_lineage(e0, eager=True, reliable=reliable)
+    e0 = truncate_lineage(e0, eager=True)
     nodes = truncate_lineage(
         e0.select(F.col("s").alias("node"))
         .union(e0.select("d"))
         .distinct(),
         eager=True,
-        reliable=reliable,
     )
     # The empty seed's schema derives from the input edge id type
     # (scc_id = MAX node id, same type), so string/other non-integral
@@ -1047,17 +1028,15 @@ def strongly_connected_components(
                 .distinct()
                 .select("node", F.col("node").alias("scc_id")),
                 eager=True,
-                reliable=reliable,
             )
             if trimmed.isEmpty():
                 break
             assigned = truncate_lineage(
-                assigned.unionByName(trimmed), eager=True, reliable=reliable
+                assigned.unionByName(trimmed), eager=True
             )
             nodes = truncate_lineage(
                 nodes.join(trimmed, "node", "left_anti"),
                 eager=True,
-                reliable=reliable,
             )
         else:
             raise RuntimeError(
@@ -1086,7 +1065,6 @@ def strongly_connected_components(
                 .groupBy("node")
                 .agg(F.max("color").alias("color")),
                 eager=False,
-                reliable=reliable,
             )
             if numeric_ids:
                 s = new_color.agg(
@@ -1134,7 +1112,6 @@ def strongly_connected_components(
                 "node", F.col("color").alias("scc_id")
             ),
             eager=True,
-            reliable=reliable,
         )
         prev_n = None
         for _ in range(max_inner):
@@ -1144,7 +1121,6 @@ def strongly_connected_components(
             marked = truncate_lineage(
                 marked.unionByName(msgs).distinct(),
                 eager=False,
-                reliable=reliable,
             )
             n = marked.count()
             if n == prev_n:
@@ -1154,13 +1130,10 @@ def strongly_connected_components(
             raise RuntimeError(
                 f"scc backward peel did not converge in {max_inner} steps"
             )
-        assigned = truncate_lineage(
-            assigned.unionByName(marked), eager=True, reliable=reliable
-        )
+        assigned = truncate_lineage(assigned.unionByName(marked), eager=True)
         nodes = truncate_lineage(
             nodes.join(marked, "node", "left_anti"),
             eager=True,
-            reliable=reliable,
         )
         ce.unpersist()
         ae.unpersist()

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from oarphpy_spark.operators.prefix import with_global_row_number
 from oarphpy_spark.registry import query
 from oarphpy_spark.tables import register_temp_views, table
+from oarphpy_spark.util.checkpoints import truncate_lineage
 
 # Canonical weighted co-purchase edges: parts sharing an order,
 # s < d, with a deterministic data-derived integer weight (the demo
@@ -90,7 +91,6 @@ def q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses each node's candidate distances map-side. The oracle
     unrolls the identical recurrence as MATERIALIZED CTE stages."""
     from oarphpy_spark.llm.graph import sssp
-    from oarphpy_spark.util.checkpoints import truncate_lineage
 
     # Materialize the edge self-join ONCE: the seed lookup and the
     # operator's symmetric union would otherwise each re-run it.
@@ -1894,7 +1894,7 @@ def q_heavy_hitters_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("est_lo"), "token")
     )
-    out = top.localCheckpoint(eager=True)
+    out = truncate_lineage(top)
     cnt.unpersist()
     return out
 

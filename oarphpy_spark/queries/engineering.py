@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from oarphpy_spark.functions.text import md5_str
 from oarphpy_spark.registry import query
 from oarphpy_spark.tables import table
+from oarphpy_spark.util.checkpoints import truncate_lineage
 
 # The "new snapshot" for the diff is derived deterministically from the
 # orders table so the oracle can re-derive it verbatim: every 19th key
@@ -597,12 +598,13 @@ def q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (F.col("v0.last_total") != F.col("v1.last_total")),
             1,
         ).otherwise(0)
-        out = joined.agg(
-            F.count(F.col("v0.k")).alias("n_keys_v0"),
-            F.count(F.col("v1.k")).alias("n_keys_v1"),
-            F.sum(changed).cast("long").alias("n_changed"),
-        ).localCheckpoint(eager=True)
-        return out
+        return truncate_lineage(
+            joined.agg(
+                F.count(F.col("v0.k")).alias("n_keys_v0"),
+                F.count(F.col("v1.k")).alias("n_keys_v1"),
+                F.sum(changed).cast("long").alias("n_changed"),
+            )
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -654,7 +656,7 @@ def q_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame
             .partitionBy("event_type")
             .parquet(root)
         )
-        out = (
+        return truncate_lineage(
             spark.read.parquet(root)
             .groupBy("event_type")
             .agg(
@@ -664,9 +666,7 @@ def q_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame
                 ).alias("sum_centi"),
             )
             .orderBy("event_type")
-            .localCheckpoint(eager=True)
         )
-        return out
     finally:
         if old_mode is None:
             spark.conf.unset(conf_key)

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from oarphpy_spark.registry import query
 from oarphpy_spark.tables import table
 from oarphpy_spark.util.checkpoints import (
+    hold_caches,
     release_shared,
     session_shared,
     truncate_lineage,
@@ -488,10 +489,7 @@ def q_graph_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("clustering_coeff"),
         )
     )
-    out._oarphpy_persisted = list(
-        getattr(tri, "_oarphpy_persisted", [])
-    ) + [deg]
-    return out
+    return hold_caches(out, tri, deg)
 
 
 @query(
@@ -995,7 +993,7 @@ def _link_prediction_exact(
     spark: SparkSession, sf_dir: str, degree_cap: int
 ) -> DataFrame:
     out, caches = _link_prediction_exact_plan(spark, sf_dir, degree_cap)
-    out = out.localCheckpoint(eager=True)
+    out = truncate_lineage(out)
     for c in caches:
         c.unpersist()
     # Enforced skew contract: count the wedge centers the cap excluded
@@ -1063,7 +1061,7 @@ def _link_prediction_exact_plan(
     degree table once between them (VERDICT r12 item 3). ``capped``
     feeds both wedge sides — persist it or each side re-runs the
     semi-join (same pathology the triangle operator had; released
-    after the localCheckpoint materializes the 20-row output)."""
+    after the lineage cut materializes the 20-row output)."""
     pr, und, deg = _lp_shared_relations(spark, sf_dir)
     # Wedge centers above the cap never enter the self-join: the
     # filter lands on the (small) degree table and semi-joins the
@@ -1228,7 +1226,7 @@ def q_link_prediction_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking on estimated Jaccard est/(du+dv-est) computed as ONE
     integer-exact division sm/(1e6*(du+dv)-sm)."""
     out, caches = _link_prediction_sketch_plan(spark, sf_dir)
-    out = out.localCheckpoint(eager=True)
+    out = truncate_lineage(out)
     for c in caches:
         c.unpersist()
     return out
@@ -1477,6 +1475,6 @@ def q_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("reciprocity"),
     )
-    out = out.localCheckpoint(eager=True)
+    out = truncate_lineage(out)
     w.unpersist()
     return out

@@ -31,6 +31,7 @@ from oarphpy_spark.operators.prefix import with_global_cumsum
 from oarphpy_spark.registry import query
 from oarphpy_spark.tables import table
 from oarphpy_spark.util.checkpoints import (
+    hold_caches,
     release_shared,
     session_shared,
     truncate_lineage,
@@ -811,7 +812,7 @@ def q_dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    return pairs
+    return hold_caches(pairs, sim)
 
 
 @query(
@@ -1169,7 +1170,7 @@ def q_dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
+    out = (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
         .select(
@@ -1182,6 +1183,7 @@ def q_dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("jaccard") >= 0.5)
     )
+    return hold_caches(out, sets)
 
 
 @query(
@@ -2345,9 +2347,8 @@ def q_kmeans_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Same deterministic cache-release contract as
     # minhash_candidate_pairs: callers in long-lived sessions call
-    # llm.dedup.release_cached(out) after materializing.
-    out._oarphpy_persisted = vq
-    return out
+    # release_cached(out) after materializing.
+    return hold_caches(out, vq)
 
 
 def _jl_signs(d_in: int = 64, d_out: int = 16) -> list[tuple[int, int, int]]:

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from oarphpy_spark.registry import query
 from oarphpy_spark.tables import table
+from oarphpy_spark.util.checkpoints import truncate_lineage
 
 _SCORED = """
       SELECT ROUND(CAST(embedding[1] AS DOUBLE), 6) AS s,
@@ -296,7 +297,7 @@ def q_rank1_als(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("qm"),
         )
     )
-    out = q.orderBy("item").localCheckpoint(eager=True)
+    out = truncate_lineage(q.orderBy("item"))
     r.unpersist()
     return out
 

@@ -33,6 +33,7 @@ from oarphpy_spark.streaming.windows import (
     stream_events,
     tumbling_counts_stream,
 )
+from oarphpy_spark.util.checkpoints import truncate_lineage
 
 
 def _events_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -189,7 +190,7 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError("q_stream_upsert drain did not finish")
-    snap = read_snapshot(spark, root).localCheckpoint(eager=True)
+    snap = truncate_lineage(read_snapshot(spark, root))
     shutil.rmtree(work, ignore_errors=True)
     return snap
 
@@ -438,7 +439,7 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = run_to_memory_sink(
             agg, "q_stream_late_data_sink", output_mode="append"
         )
-        return out.localCheckpoint(eager=True)
+        return truncate_lineage(out)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -737,7 +738,7 @@ def q_stream_dedup_within_watermark(
             )
         )
         out = run_to_memory_sink(agg, "q_stream_ddww_sink")
-        return out.localCheckpoint(eager=True)
+        return truncate_lineage(out)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -847,6 +848,6 @@ def q_stream_running_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("user_id")
         )
-        return final.localCheckpoint(eager=True)
+        return truncate_lineage(final)
     finally:
         shutil.rmtree(work, ignore_errors=True)

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from oarphpy_spark.registry import query
 from oarphpy_spark.tables import table
+from oarphpy_spark.util.checkpoints import hold_caches
 
 
 @query(
@@ -1068,8 +1069,7 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("channel", "total_credit", "n_attributed")
         .orderBy("channel")
     )
-    out._oarphpy_persisted = purchases
-    return out
+    return hold_caches(out, purchases)
 
 
 @query(

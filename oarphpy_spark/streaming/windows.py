@@ -73,7 +73,7 @@ def stream_events(
     normalize to a UTC TIMESTAMP column named ``ts``, so downstream
     window/watermark logic — and batch-equivalence tests — see one
     contract."""
-    from oarphpy_spark.tables import _events_ts_kind
+    from oarphpy_spark.tables import _events_ts_kind, _normalize_events_ts
 
     if os.path.isfile(source_dir):
         # Streaming file sources require a directory; wrap a lone
@@ -110,12 +110,7 @@ def stream_events(
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(source_dir)
-    if ts_type == "bigint":  # int64 nanoseconds
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return _normalize_events_ts(reader.parquet(source_dir), kind)
 
 
 def tumbling_counts_stream(

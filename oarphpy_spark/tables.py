@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # Footer-probe cache: (path, mtime_ns, size) -> one of
 # 'ns' | 'ntz' | 'utc' | 'none'.  Keyed on stat so a regenerated
@@ -72,6 +73,22 @@ def _events_ts_kind(path: str) -> str:
         )
     return kinds.pop()
 
+
+def _normalize_events_ts(df: DataFrame, kind: str) -> DataFrame:
+    """Turn the ``ts`` column of an events scan whose physical form is
+    ``kind`` (see :func:`_events_ts_kind`) into a UTC TIMESTAMP: int64
+    nanos via ``timestamp_micros(ts div 1000)`` (the same ns→µs
+    truncation DuckDB applies), TIMESTAMP_NTZ by a cast to TIMESTAMP;
+    'utc' and 'none' pass through. Shared by the batch loader
+    (:func:`table`) and the streaming scan
+    (``streaming.windows.stream_events``)."""
+    if kind == "ns":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if kind == "ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -127,8 +144,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name != "events":
         return spark.read.parquet(path)
 
-    from pyspark.sql import functions as F
-
     kind = _events_ts_kind(path)
     if kind == "ns":
         conf_key = "spark.sql.legacy.parquet.nanosAsLong"
@@ -141,13 +156,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 spark.conf.unset(conf_key)
             else:
                 spark.conf.set(conf_key, prior)
-        # Same ns→µs truncation DuckDB applies.
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     else:
         df = spark.read.parquet(path)
-        if kind == "ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return _normalize_events_ts(df, kind)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -145,7 +145,7 @@ def run_parity(
     — even if both engines would have agreed on the same file (which
     is exactly how the q_scc_sizes LEAD-ambiguity hid at sf0.01)."""
     from oarphpy_spark import registry
-    from oarphpy_spark.llm.dedup import release_cached
+    from oarphpy_spark.util.checkpoints import release_cached
 
     qfn = registry.queries()[name]
     sql = registry.oracle_sql().get(name)
@@ -154,7 +154,7 @@ def run_parity(
         spark_pdf = df.toPandas()
     finally:
         # Operators that persist shared subtrees ride the caches on the
-        # result via `_oarphpy_persisted`; SQL-cached plans are held by
+        # result (util/checkpoints.hold_caches); SQL-cached plans are held by
         # the CacheManager until explicit unpersist, so a full-registry
         # run in one session would otherwise accumulate them for the
         # session lifetime.

@@ -1,9 +1,13 @@
-"""Lineage truncation with a production-safe switch.
+"""Lineage cuts and operator-cache release: the one module that
+decides how a DataFrame's lineage is cut and how the caches an
+operator persists are freed.
 
 Every iterative operator in this engine (connected components,
-PageRank, k-core, k-truss, label propagation) must cut its DataFrame
-lineage each round, or round k's plan replays rounds 1..k-1 and the
-loop goes quadratic. Two mechanisms exist:
+PageRank, k-core, k-truss, label propagation, SCC) must cut its
+DataFrame lineage each round, or round k's plan replays rounds
+1..k-1 and the loop goes quadratic; queries also cut their final
+results so the persisted inputs can be released. Two mechanisms
+exist:
 
 - ``DataFrame.localCheckpoint()`` — blocks stored on executor local
   disk/memory. Fast (no DFS write), but an executor LOSS orphans the
@@ -15,18 +19,20 @@ loop goes quadratic. Two mechanisms exist:
   HDFS/object storage). Survives executor loss; costs one DFS
   round-trip per truncation.
 
-:func:`truncate_lineage` picks between them:
+:func:`truncate_lineage` is the only lineage cut in the engine and
+picks between them from what the session shows: the reliable form iff
+a checkpoint dir is configured on the SparkContext, else local. A
+production job that calls ``sc.setCheckpointDir(...)`` at startup
+gets executor-loss-safe loops and results with zero per-operator
+plumbing; local runs keep the fast path.
 
-- ``reliable=None`` (default) — AUTO: use the reliable form iff a
-  checkpoint dir is configured on the SparkContext, else local. A
-  production job that calls ``sc.setCheckpointDir(...)`` at startup
-  gets executor-loss-safe loops with zero per-operator plumbing;
-  local runs keep the fast path.
-- ``reliable=True`` — require the reliable form; raise with a
-  actionable message if no checkpoint dir is set (silently degrading
-  to local would defeat the caller's explicit durability request).
-- ``reliable=False`` — force ``localCheckpoint`` (benchmarks,
-  single-node batch jobs).
+Ride-along caches: an operator that ``persist()``s an intermediate
+for its lazy result cannot unpersist it before returning. It attaches
+the cache to the result with :func:`hold_caches`, and the caller
+frees it with :func:`release_cached` once the result is materialized.
+SQL-persisted plans are held by the session's CacheManager until an
+explicit ``unpersist()``, so driver GC of the result does NOT reclaim
+them.
 
 The same module owns the session's other storage decision: which
 derived relations are reused across queries. :func:`session_shared`
@@ -68,27 +74,14 @@ def clear_checkpoint_dir(spark) -> None:
     getattr(jsc, "checkpointDir_$eq")(none_opt)
 
 
-def truncate_lineage(
-    df: DataFrame,
-    *,
-    eager: bool = True,
-    reliable: bool | None = None,
-) -> DataFrame:
-    """Cut ``df``'s lineage; see module docstring for mode selection.
+def truncate_lineage(df: DataFrame, *, eager: bool = True) -> DataFrame:
+    """Cut ``df``'s lineage: a reliable ``checkpoint()`` if a
+    checkpoint dir is configured, else ``localCheckpoint()``.
 
     ``eager=False`` defers materialization to the first action — used
     for per-round truncations whose very next statement is the
     convergence-check action anyway."""
-    if reliable is None:
-        reliable = checkpoint_dir_configured(df)
-    if reliable:
-        if not checkpoint_dir_configured(df):
-            raise RuntimeError(
-                "reliable=True requires a checkpoint directory: call "
-                "spark.sparkContext.setCheckpointDir('<dfs path>') "
-                "before running this operator (use a path on shared "
-                "storage — HDFS/object store — not executor-local disk)"
-            )
+    if checkpoint_dir_configured(df):
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
 
@@ -105,6 +98,39 @@ def release_checkpoint(df: DataFrame) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:  # noqa: BLE001 — best-effort on a dying session
         pass
+
+
+def hold_caches(result: DataFrame, *dfs: DataFrame) -> DataFrame:
+    """Append ``dfs`` to ``result``'s ride-along caches and return
+    ``result``; :func:`release_cached` frees them. Each of ``dfs`` is
+    either a DataFrame persisted on behalf of ``result`` or an
+    operator result that holds caches of its own, which ``result``
+    then holds in its place (e.g. a query built on
+    ``triangle_count``'s output)."""
+    held = list(getattr(result, "_oarphpy_persisted", []))
+    for df in dfs:
+        held.extend(getattr(df, "_oarphpy_persisted", [df]))
+    result._oarphpy_persisted = held
+    return result
+
+
+def release_cached(result: DataFrame) -> None:
+    """Unpersist the caches :func:`hold_caches` attached to
+    ``result``. Call AFTER the result has been materialized
+    (written/collected); a later re-computation of ``result`` still
+    works — it just re-builds the cached table(s).
+
+    Storage-level policy: every ride-along cache is created with an
+    ARGLESS ``DataFrame.persist()``, whose default is
+    ``MEMORY_AND_DISK_DESER`` — under memory pressure the cached
+    blocks spill to disk instead of being evicted and silently
+    re-derived mid-query (the RDD ``cache()``/MEMORY_ONLY failure
+    mode). tests/test_persist_policy.py machine-checks both halves:
+    no source site may pass a memory-only level, and live ride-along
+    entries must report ``useDisk=True``; the sf1.0 4 GB-squeeze smoke
+    (scripts/scale_smoke_mem.py) exercises the actual spill path."""
+    for df in getattr(result, "_oarphpy_persisted", []):
+        df.unpersist()
 
 
 # (applicationId, scope) -> {name: value}. Keyed by applicationId so a

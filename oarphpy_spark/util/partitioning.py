@@ -55,6 +55,12 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     eagerly materialize upstream shuffle stages at composition time
     (ADVICE r15), besides reading a pre-AQE partition count that can
     mis-trigger a redundant repartition.
+
+    Every logical ``Join`` counts as shuffle-implying, broadcast joins
+    included: a broadcast-hash join streams its big side without an
+    exchange, but the node is matched by name before physical planning,
+    so such a plan is returned unchanged too (its big side keeps its
+    scan split count).
     """
     if _has_shuffle_ancestor(df):
         return df

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Dump `.explain("formatted")` for every bench query (headline +
-extras) into plans/r15/<query>_<tag>.txt, where <tag> is argv[1]
+extras) into plans/r16/<query>_<tag>.txt, where <tag> is argv[1]
 (before/after). Queries whose public wrapper eagerly materializes
-(localCheckpoint) are captured from their internal plan builders so
+(truncate_lineage) are captured from their internal plan builders so
 the file shows the REAL computation plan, not a LogicalRDD scan.
 
 Usage: python scripts/dump_plans_r16.py before [slug ...]

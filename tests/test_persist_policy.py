@@ -69,13 +69,23 @@ def test_no_memory_only_persist_site():
 def test_live_caches_are_disk_backed(spark):
     """Materialize operators that ride `_oarphpy_persisted` caches and
     assert every live cache entry's effective StorageLevel has
-    useDisk=True (eviction degrades to spill, not recompute)."""
+    useDisk=True (eviction degrades to spill, not recompute), and that
+    release_cached leaves the session's CacheManager empty (no cache
+    the query persisted is left unattached)."""
     from oarphpy_spark import registry
     from oarphpy_spark.llm.dedup import release_cached
 
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
     qs = registry.queries()
-    # One single-cache operator, one list-carrying graph operator.
-    for name in ("q_set_similarity_join", "q_triangle_count"):
+    # One single-cache operator, one list-carrying graph operator, and
+    # two queries that persist a relation of their own.
+    for name in (
+        "q_set_similarity_join",
+        "q_triangle_count",
+        "q_dedup_simhash_hamming",
+        "q_dedup_minhash_verified",
+    ):
         df = qs[name](spark, SF_SMALL)
         try:
             df.write.mode("overwrite").format("noop").save()
@@ -89,3 +99,4 @@ def test_live_caches_are_disk_backed(spark):
                 assert lvl.useMemory, f"{name}: cache level {lvl} lacks memory"
         finally:
             release_cached(df)
+        assert cache_manager.isEmpty(), f"{name}: caches left after release"

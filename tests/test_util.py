@@ -358,3 +358,45 @@ def test_scale_smoke_skew_audit_parses_and_flags(tmp_path):
     assert len(audit["violations"]) == 1
     assert audit["violations"][0]["stage"] == 0
     assert audit["violations"][0]["ratio"] > 10
+
+
+def test_spread_repartitions_single_file_scan(spark, tmp_path):
+    """A one-file parquet table scans as ONE partition; spread brings
+    it up to the cluster's default parallelism."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from oarphpy_spark.util.partitioning import spread
+
+    path = str(tmp_path / "one.parquet")
+    pq.write_table(pa.table({"k": list(range(200))}), path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == 1
+    target = spark.sparkContext.defaultParallelism
+    assert target > 1
+    out = spread(df)
+    assert out.rdd.getNumPartitions() == target
+    assert sorted(r.k for r in out.collect()) == list(range(200))
+
+
+def test_spread_leaves_join_and_aggregate_plans_unchanged(spark, tmp_path):
+    """A plan with a join or an aggregate is returned as-is — a
+    broadcast-hash join included: every logical Join counts as
+    shuffle-implying."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from oarphpy_spark.util.partitioning import spread
+
+    path = str(tmp_path / "one.parquet")
+    pq.write_table(pa.table({"k": list(range(200))}), path)
+    big = spark.read.parquet(path)
+    small = spark.read.parquet(path).filter(F.col("k") < 5)
+    bcast = big.join(F.broadcast(small), "k")
+    physical = bcast._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in physical
+    agg = big.groupBy((F.col("k") % 3).alias("m")).count()
+    shuffled = big.join(small, "k")
+    for df in (bcast, agg, shuffled):
+        assert spread(df) is df
