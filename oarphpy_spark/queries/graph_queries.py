@@ -883,9 +883,16 @@ def _wedge_agg_partitions(
     timed bench reps never re-pay it). ``degree_cap`` sizes the exact
     path (centers above the cap are excluded before expansion);
     ``sample_t`` sizes the sketch path (a center contributes at most
-    C(T, 2) wedges after top-T sampling). Floor of 2x
+    C(T, 2) wedges after top-T sampling). Exactly one of the two must
+    be given; anything else raises ``ValueError``. Floor of 2x
     defaultParallelism keeps small inputs fully parallel; the result
     scales with wedge volume, never with the local core count."""
+    if (degree_cap is None) == (sample_t is None):
+        raise ValueError(
+            "_wedge_agg_partitions needs exactly one of degree_cap and "
+            f"sample_t (got degree_cap={degree_cap!r}, sample_t={sample_t!r})"
+        )
+
     def size() -> int:
         import math
 

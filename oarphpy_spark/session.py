@@ -82,6 +82,11 @@ class SessionFactory:
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         # --- determinism across engines/oracles ---------------------------
         "spark.sql.session.timeZone": "UTC",
+        # --- lineage cuts --------------------------------------------------
+        # With a checkpoint dir set, util/checkpoints writes reliable
+        # checkpoint files; let the ContextCleaner delete those of
+        # RDDs no longer referenced instead of keeping them forever.
+        "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

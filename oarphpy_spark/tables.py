@@ -11,6 +11,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Footer-probe cache: (path, mtime_ns, size) -> one of
 # 'ns' | 'ntz' | 'utc' | 'none'.  Keyed on stat so a regenerated
@@ -42,6 +43,72 @@ def _probe_ts_kind_one(probe: str) -> str:
             kind = "utc"
         _TS_KIND_CACHE[key] = kind
     return kind
+
+
+# Schema memo: path -> (stamp, schema inferred under that stamp).  A
+# hit reads with the schema given, which skips Spark's inference job
+# (one footer-reading job per call) while the file listing stays fresh.
+_SCHEMA_CACHE: dict[str, tuple[tuple, StructType]] = {}
+
+# Session confs that change what Spark 4.1 infers from parquet
+# footers: the ``ParquetToSparkSchemaConverter(SQLConf)`` inputs, the
+# variant-shredding switch its ``convert`` reads, and the
+# ``ParquetOptions``/``ParquetFileFormat.inferSchema`` switches that
+# choose which footers are merged.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded",
+)
+
+
+def _files_stamp(path: str) -> tuple | None:
+    """``(mtime_ns, size)`` of a file; for a directory, the sorted
+    ``(relative name, mtime_ns, size)`` of every entry below it,
+    skipping ``.``/``_``-prefixed names as Spark's listing does.
+    ``None`` when ``path`` cannot be stat-ed locally (missing, or a
+    URI): the caller then infers, and Spark reports the error."""
+    try:
+        st = os.stat(path)
+        if not os.path.isdir(path):
+            return (st.st_mtime_ns, st.st_size)
+        stamp = []
+        for dirpath, dirnames, filenames in os.walk(path):
+            dirnames[:] = [n for n in dirnames if not n.startswith((".", "_"))]
+            for n in dirnames + filenames:
+                if n.startswith((".", "_")):
+                    continue
+                full = os.path.join(dirpath, n)
+                st = os.stat(full)
+                stamp.append((os.path.relpath(full, path), st.st_mtime_ns, st.st_size))
+        return tuple(sorted(stamp))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers each path's schema once.
+    The memo entry is stamped with the files' stat and the current
+    values of :data:`_INFERENCE_CONFS`; a rewritten file, an added or
+    removed part file, or a flipped conf misses and re-infers."""
+    files = _files_stamp(path)
+    if files is None:
+        return spark.read.parquet(path)
+    stamp = (files, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_CACHE[path] = (stamp, df.schema)
+    return df
 
 
 def _events_ts_kind(path: str) -> str:
@@ -110,6 +177,18 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pushdown-capable FileScan (predicates + column pruning reach the
     parquet reader).
 
+    Each path's schema is inferred once (:func:`_read_parquet`): Spark
+    infers a parquet schema with one job per read, ~70 ms of pure
+    overhead, so a warm call instead passes the memoized schema to
+    ``spark.read.schema(...)`` and launches no job. The memo entry is
+    stamped with the file's ``(mtime_ns, size)`` — for a directory,
+    every non-hidden entry below it — and with the session's
+    schema-inference confs (``binaryAsString``, ``int96AsTimestamp``,
+    ``inferTimestampNTZ.enabled``, ``nanosAsLong``, ``caseSensitive``,
+    ``mergeSchema`` and the rest of :data:`_INFERENCE_CONFS`). A
+    rewritten, added or removed file or a changed conf re-infers; the
+    file listing itself is never memoized.
+
     ``events.ts`` arrives in whatever physical form the fixture
     generator used, and that has varied across driver regenerations;
     all three forms normalize to the same UTC TIMESTAMP column:
@@ -142,7 +221,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name != "events":
-        return spark.read.parquet(path)
+        return _read_parquet(spark, path)
 
     kind = _events_ts_kind(path)
     if kind == "ns":
@@ -150,14 +229,14 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         prior = spark.conf.get(conf_key, None)
         spark.conf.set(conf_key, "true")
         try:
-            df = spark.read.parquet(path)
+            df = _read_parquet(spark, path)
         finally:
             if prior is None:
                 spark.conf.unset(conf_key)
             else:
                 spark.conf.set(conf_key, prior)
     else:
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
     return _normalize_events_ts(df, kind)
 
 

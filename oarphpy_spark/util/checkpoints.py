@@ -90,7 +90,10 @@ def release_checkpoint(df: DataFrame) -> None:
     """Free the executor blocks behind an eager ``localCheckpoint`` of
     ``df``. The checkpointed Dataset wraps a ``LogicalRDD`` over the
     persisted RDD; unpersisting it drops the blocks now instead of at
-    driver GC + ContextCleaner. A no-op for reliable checkpoints and
+    driver GC + ContextCleaner. A no-op for reliable checkpoints (the
+    ContextCleaner deletes their files once unreferenced, which the
+    ``SessionFactory`` presets enable with
+    ``spark.cleaner.referenceTracking.cleanCheckpoints``) and
     already-released frames. A released local checkpoint cannot be
     recomputed (its lineage is gone), so callers release only frames
     nothing references any more."""

@@ -44,6 +44,66 @@ def test_iter_arrow_batches_columnar_and_complete(spark):
     assert t.column("v").to_pylist() == [i * 0.5 for i in t.column("id").to_pylist()]
 
 
+def _typed_frame(spark):
+    """Five partitions of every Arrow-sensitive column kind."""
+    return spark.range(0, 50, 1, 5).select(
+        "id",
+        F.timestamp_micros(F.col("id") * 1_000_003).alias("ts"),
+        (F.col("id") / 7).cast("decimal(12,3)").alias("dec"),
+        F.array(F.col("id"), F.col("id") + 1).alias("arr"),
+        F.create_map(F.col("id").cast("string"), F.col("id") * 2).alias("m"),
+        F.struct(F.col("id").alias("a"), F.lit("x").alias("b")).alias("st"),
+        F.col("id").cast("string").cast("binary").alias("bin"),
+        F.when(F.col("id") % 3 == 0, None)
+        .otherwise(F.col("id").cast("string"))
+        .alias("s"),
+    )
+
+
+@pytest.mark.parametrize(
+    "conf",
+    [
+        {"spark.sql.session.timeZone": "America/Los_Angeles"},
+        {"spark.sql.execution.arrow.useLargeVarTypes": "true"},
+    ],
+    ids=["session_tz", "large_var_types"],
+)
+def test_iter_arrow_batches_equals_to_arrow(spark, conf):
+    """The feed yields exactly the table ``toArrow()`` collects: same
+    types (timestamps labelled UTC, large var types when enabled),
+    same values, same row order."""
+    import pyarrow as pa
+
+    prior = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        df = _typed_frame(spark)
+        got = pa.Table.from_batches(list(iter_arrow_batches(df)))
+        want = df.toArrow()
+        assert got.schema == want.schema
+        assert got.equals(want)
+    finally:
+        for k, v in prior.items():
+            spark.conf.set(k, v)
+
+
+def test_iter_arrow_batches_partition_order(spark):
+    df = spark.range(0, 1000, 1, 7)
+    ids = [i for b in iter_arrow_batches(df) for i in b.column("id").to_pylist()]
+    assert ids == list(range(1000))
+
+
+def test_iter_arrow_batches_raises_task_failure(spark):
+    df = spark.range(0, 100, 1, 5).select(
+        F.when(F.col("id") == 42, F.raise_error(F.lit("feed-boom")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+    with pytest.raises(Exception, match="feed-boom"):
+        list(iter_arrow_batches(df))
+
+
 def test_iter_row_batches_empty_df(spark):
     df = spark.range(10).filter("id < 0")
     assert list(iter_row_batches(df)) == []

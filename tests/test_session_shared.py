@@ -75,3 +75,32 @@ def test_session_presets_leave_nanos_as_long_unset():
 
     for factory in (SessionFactory, K8SSessionFactory, NotebookSessionFactory):
         assert "spark.sql.legacy.parquet.nanosAsLong" not in factory.CONF_KV
+
+
+def test_session_presets_clean_unreferenced_checkpoints():
+    """With a checkpoint dir set, every lineage cut writes reliable
+    checkpoint files; the presets let Spark's cleaner delete those of
+    unreferenced RDDs so a long-lived session does not fill the dir."""
+    from oarphpy_spark.session import (
+        K8SSessionFactory,
+        NotebookSessionFactory,
+        SessionFactory,
+    )
+
+    for factory in (SessionFactory, K8SSessionFactory, NotebookSessionFactory):
+        key = "spark.cleaner.referenceTracking.cleanCheckpoints"
+        assert factory.CONF_KV[key] == "true"
+
+
+def test_wedge_agg_partitions_needs_exactly_one_sizing_arg(spark):
+    """Neither argument would filter every center through ``dg <= None``
+    and size from zero wedges; both would silently drop ``degree_cap``.
+    Both misuses raise before any Spark work."""
+    import pytest
+
+    import oarphpy_spark.queries.graph_queries as gq
+
+    with pytest.raises(ValueError, match="exactly one"):
+        gq._wedge_agg_partitions(spark, SF)
+    with pytest.raises(ValueError, match="exactly one"):
+        gq._wedge_agg_partitions(spark, SF, degree_cap=10, sample_t=4)

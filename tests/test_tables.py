@@ -1,0 +1,83 @@
+"""``tables.table`` infers each parquet path's schema once: a warm call
+reads with the memoized schema and launches no Spark job, while a
+rewritten file or a flipped schema-inference conf re-infers."""
+
+from __future__ import annotations
+
+import os
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from oarphpy_spark.tables import register_temp_views, table
+
+from .conftest import SF_SMALL as SF
+
+
+def _jobs_launched(spark, fn):
+    """(fn(), number of Spark jobs fn launched), counted by job group."""
+    sc = spark.sparkContext
+    group = f"t-tables-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_table_launches_no_job(spark):
+    cold, _ = _jobs_launched(spark, lambda: table(spark, SF, "lineitem"))
+    warm, n_jobs = _jobs_launched(spark, lambda: table(spark, SF, "lineitem"))
+    assert n_jobs == 0
+    assert warm.schema == cold.schema
+    assert warm.count() == cold.count()
+
+
+def test_warm_register_temp_views_launches_no_job(spark):
+    register_temp_views(spark, SF)
+    _, n_jobs = _jobs_launched(spark, lambda: register_temp_views(spark, SF))
+    assert n_jobs == 0
+    assert spark.sql("SELECT count(*) FROM nation").collect()[0][0] > 0
+
+
+def test_rewritten_file_reinfers_schema(spark, tmp_path):
+    path = os.path.join(str(tmp_path), "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+    assert table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+    assert table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1, 2], "r_name": ["A", "B", "C"]}), path
+    )
+    df = table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert sorted(r["r_name"] for r in df.collect()) == ["A", "B", "C"]
+
+
+def test_added_part_file_is_read(spark, tmp_path):
+    path = os.path.join(str(tmp_path), "nation.parquet")
+    os.makedirs(path)
+    pq.write_table(pa.table({"n_nationkey": [0]}), os.path.join(path, "a.parquet"))
+    assert table(spark, str(tmp_path), "nation").count() == 1
+
+    pq.write_table(pa.table({"n_nationkey": [1, 2]}), os.path.join(path, "b.parquet"))
+    assert table(spark, str(tmp_path), "nation").count() == 3
+
+
+def test_inference_conf_change_reinfers_schema(spark, tmp_path):
+    pq.write_table(
+        pa.table({"k": [1], "b": pa.array([b"x"], pa.binary())}),
+        os.path.join(str(tmp_path), "part.parquet"),
+    )
+    key = "spark.sql.parquet.binaryAsString"
+    try:
+        spark.conf.set(key, "false")
+        assert dict(table(spark, str(tmp_path), "part").dtypes)["b"] == "binary"
+        spark.conf.set(key, "true")
+        assert dict(table(spark, str(tmp_path), "part").dtypes)["b"] == "string"
+        spark.conf.set(key, "false")
+        assert dict(table(spark, str(tmp_path), "part").dtypes)["b"] == "binary"
+    finally:
+        spark.conf.unset(key)
