@@ -20,4 +20,13 @@ Design stance (see SURVEY.md):
 
 __version__ = "0.1.0"
 
+from pyspark import TaskContext as _TaskContext
+
 from oarphpy_spark.session import SessionFactory  # noqa: F401
+
+# In a Python worker (a task is running): stop every later task of this
+# worker from re-reading pyspark.zip (see util/zipimports).
+if _TaskContext.get() is not None:
+    from oarphpy_spark.util import zipimports as _zipimports
+
+    _zipimports.install()

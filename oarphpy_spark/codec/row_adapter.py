@@ -230,11 +230,29 @@ class RowAdapter:
     @staticmethod
     def to_df(spark, objs: list, prototype: Any = None):
         """Encode objects and build a DataFrame (schema from a prototype
-        so all-empty/None columns still type correctly)."""
+        so all-empty/None columns still type correctly).
+
+        Same rows and partitions as ``spark.createDataFrame(rows,
+        schema, verifySchema=False)``, without its Python tasks: that
+        call re-pickles the parallelized rows in a Python worker
+        (``RDD._pickled``) before the JVM unpickles them, once per
+        partition and again on every action. The JVM reads the rows as
+        ``parallelize`` pickled them instead (``SerDeUtil.pythonToJava``
+        takes both batch framings). Needs a classic (non-Connect)
+        session.
+        """
+        from pyspark.sql import DataFrame
+
         proto = prototype if prototype is not None else objs[0]
         schema = RowAdapter.to_schema(proto)
         rows = [RowAdapter.to_row(o) for o in objs]
-        return spark.createDataFrame(rows, schema=schema, verifySchema=False)
+        rdd, struct = spark._createFromLocal(rows, schema)
+        serde = spark._jvm.SerDeUtil
+        jrdd = serde.toJavaArray(serde.pythonToJava(rdd._jrdd, True))
+        jdf = spark._jsparkSession.applySchemaToPythonRDD(jrdd.rdd(), struct.json())
+        df = DataFrame(jdf, spark)
+        df._schema = struct
+        return df
 
     @staticmethod
     def collect_objects(df) -> list:

@@ -200,3 +200,18 @@ def test_dict_plus_slots_hybrid_roundtrip(spark, tmp_path):
     o.x = 11
     back = _roundtrip_df(spark, [o], tmp_path)
     assert back[0].x == 11
+
+
+def test_to_df_matches_create_dataframe_without_a_python_task(spark):
+    objs = [DictObj(foo=i, bar=f"b{i}") for i in range(10)] + [DictObj(foo=None, bar=None)]
+    schema = RowAdapter.to_schema(objs[0])
+    rows = [RowAdapter.to_row(o) for o in objs]
+    want = spark.createDataFrame(rows, schema=schema, verifySchema=False)
+
+    df = RowAdapter.to_df(spark, objs)
+    assert df.schema == want.schema
+    assert df.rdd.getNumPartitions() == want.rdd.getNumPartitions()
+    assert df.collect() == want.collect()
+    # createDataFrame re-pickles its rows in a Python worker first.
+    assert "PythonRDD[" in want._jdf.rdd().toDebugString()
+    assert "PythonRDD[" not in df._jdf.rdd().toDebugString()
