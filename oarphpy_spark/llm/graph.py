@@ -16,10 +16,16 @@ survives 100 TB: no adjacency lists in driver memory, no per-node
 message loops, just a handful of hash-partitioned self-joins over an
 edge table that *shrinks* as stars collapse.
 
-Per-round driver work is one tiny action (a 1-row convergence
-checksum); lineage is truncated every round via
-``util/checkpoints.truncate_lineage`` so round k's plan does not
-replay rounds 1..k-1. Every iterative operator here cuts through it:
+In the convergence-checked loops (connected components, k-core,
+k-truss, SSSP) a round is one Spark action: the eager lineage cut of
+the round's result (``util/checkpoints.truncate_lineage``, so round
+k's plan does not replay rounds 1..k-1), with the convergence test —
+a row count, a content checksum — counted inside that same job
+through ``operators/counters.observed`` rather than by a second
+action over the checkpoint. On small graphs a round costs what its
+Spark jobs cost, not what its rows cost, so the action count is the
+round's price. Every iterative operator here cuts through
+``truncate_lineage``:
 a RELIABLE ``checkpoint()`` whenever ``sc.setCheckpointDir`` is
 configured — the production mode, where a lost executor cannot orphan
 the truncated blocks — and the fast ``localCheckpoint`` otherwise.
@@ -34,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from oarphpy_spark.operators.counters import observed
 from oarphpy_spark.util.checkpoints import (
     hold_caches,
     release_checkpoint,
@@ -136,16 +143,21 @@ def connected_components(
     e = truncate_lineage(e)
     prev = None
     for _ in range(max_iter):
-        e_next = truncate_lineage(_small_star(_large_star(e)))
-        # One 1-row action per round: (edge count, order-independent
-        # content checksum). Equal rounds => the star set is a fixpoint.
-        row = e_next.agg(
+        # (edge count, order-independent content checksum), counted
+        # inside the round's checkpoint job. Equal rounds => the star
+        # set is a fixpoint.
+        e_next, obs = observed(
+            _small_star(_large_star(e)),
+            "connected_components",
             F.count("*").alias("n"),
             F.coalesce(
                 F.sum(F.xxhash64(_SRC, _DST).cast("decimal(38,0)")), F.lit(0)
             ).alias("chk"),
-        ).collect()[0]
+        )
+        e_next = truncate_lineage(e_next)
+        row = obs.get
         state = (row["n"], row["chk"])
+        release_checkpoint(e)
         e = e_next
         if state == prev:
             break
@@ -293,7 +305,8 @@ def sssp(
     with the frontier instead of staying at |reached| x |edges| —
     on a converging graph later rounds approach free, and the loop
     exits early once the frontier empties (sound: further rounds are
-    no-ops). The symmetrized edge table is built ONCE,
+    no-ops; the frontier's size is counted inside its checkpoint
+    job). The symmetrized edge table is built ONCE,
     hash-repartitioned on its join key and persisted, so only the
     small frontier relation shuffles each round; lineage is truncated
     per round (``util/checkpoints.truncate_lineage``).
@@ -348,13 +361,14 @@ def sssp(
             .groupBy("node")
             .agg(F.min("nd").alias("nd"))
         )
-        improved = truncate_lineage(
+        improved, obs = observed(
             relaxed.join(dist, "node", "left")
             .filter(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
             .select("node", F.col("nd").alias("dist")),
-            eager=True,
+            "sssp",
         )
-        if improved.isEmpty():
+        improved = truncate_lineage(improved, eager=True)
+        if obs.get["n_rows"] == 0:
             break  # fixpoint: every further round is a no-op
         dist = truncate_lineage(
             dist.unionByName(improved)
@@ -499,6 +513,14 @@ def triangle_count(
     return hold_caches(out, *persisted)
 
 
+# Keep-set size (node ids) up to which a kcore round broadcasts its
+# keep set to both semi-joins. Spark cannot size a checkpointed table,
+# so unhinted it shuffles the keep set before AQE turns the join into
+# a broadcast: extra jobs in every round of a job-latency-bound peel.
+# 2^20 longs are 8 MB, far below the presets' 64 MB broadcast bound.
+_KCORE_BROADCAST_KEEP_MAX_ROWS = 1 << 20
+
+
 def kcore(
     edges: DataFrame,
     k: int,
@@ -514,31 +536,48 @@ def kcore(
     every node keeps >= k neighbors (dense-community extraction,
     spam/bot-ring mining, graph sparsification preprocessing).
 
-    Each round is one degree aggregation + two semi-joins keyed on
-    node id — hash-partitioned, no adjacency lists, and the edge set
-    only SHRINKS, so rounds get cheaper as peeling cascades.
-    Per-round driver work is a 1-row edge count (the convergence
-    check); lineage is truncated per round as in the other iterative
-    operators (``util/checkpoints.truncate_lineage``). Raises if ``max_iter`` rounds don't reach
-    the fixpoint — callers (and the unrolled SQL oracle, whose round
-    count must be >= the real one; extra unrolled rounds are no-ops
-    at the fixpoint because peeling is monotone) rely on convergence
-    being VERIFIED, not assumed.
+    Each round is ONE Spark action: the eager checkpoint of the
+    round's degree table ``deg_i = degrees(e0 ⋉ K_{i-1})``, where
+    ``K_{i-1}`` holds the nodes with ``core_deg >= k`` in
+    ``deg_{i-1}`` (``K_{-1}`` = every node). The keep sets are nested
+    — a node of ``deg_i`` lies on an edge whose endpoints are both in
+    ``K_{i-1}``, so ``K_i`` is a subset of ``K_{i-1}`` — hence two
+    semi-joins of the ORIGINAL edge set ``e0`` against ``K_{i-1}``
+    give exactly the peeled edge set of round i, and no per-round
+    edge table is written. The trade-off:
+    every round re-scans ``e0`` through the semi-joins instead of
+    reading a shrinking edge checkpoint; on a job-latency-bound peel
+    one fewer eager job per round is worth far more than the smaller
+    scan. The convergence test — no node below k — is counted inside
+    the checkpoint job itself (``operators/counters.observed``), so it
+    costs no action of its own, and the superseded degree table is
+    released as soon as the next one is built. The same job counts
+    the keep set, which is broadcast to the next round's semi-joins
+    while it holds at most ``_KCORE_BROADCAST_KEEP_MAX_ROWS`` nodes
+    and shuffled beyond that. Raises if ``max_iter``
+    rounds don't reach the fixpoint — callers (and the unrolled SQL
+    oracle, whose round count must be >= the real one; extra unrolled
+    rounds are no-ops at the fixpoint because peeling is monotone)
+    rely on convergence being VERIFIED, not assumed.
 
     Returns (node, core_deg): surviving nodes with their in-core
-    degree (>= k by construction); empty when no k-core exists.
+    degree (>= k by construction); empty when no k-core exists. The
+    result is the final round's checkpointed degree table, so reading
+    it does no further aggregation.
 
     ``input_canonical=True`` asserts the input is already canonical
     (src < dst, distinct, materialized) and skips the canonicalize +
-    distinct shuffle — see ``triangle_count``.
+    distinct shuffle — see ``triangle_count``. That input belongs to
+    the caller and is never released here; the canonical copy made
+    when ``input_canonical=False`` is released before returning.
     """
     if input_canonical:
-        e = _check_canonical(
+        e0 = _check_canonical(
             edges.select(F.col(src).alias("lo"), F.col(dst).alias("hi")),
             "kcore",
         )
     else:
-        e = (
+        e0 = truncate_lineage(
             edges.select(
                 F.least(F.col(src), F.col(dst)).alias("lo"),
                 F.greatest(F.col(src), F.col(dst)).alias("hi"),
@@ -546,33 +585,37 @@ def kcore(
             .filter(F.col("lo") != F.col("hi"))
             .distinct()
         )
-        e = truncate_lineage(e)
-    n_prev = e.count()
+    deg, n_keep = None, 0
     for _ in range(max_iter):
-        sym = e.select(F.col("lo").alias("v")).unionByName(
-            e.select(F.col("hi").alias("v"))
+        e = e0
+        if deg is not None:
+            keep = deg.filter(F.col("core_deg") >= k).select("node")
+            if n_keep <= _KCORE_BROADCAST_KEEP_MAX_ROWS:
+                keep = F.broadcast(keep)
+            e = e0.join(
+                keep.withColumnRenamed("node", "lo"), "lo", "left_semi"
+            ).join(keep.withColumnRenamed("node", "hi"), "hi", "left_semi")
+        deg_next, obs = observed(
+            e.select(F.explode(F.array("lo", "hi")).alias("node"))
+            .groupBy("node")
+            .agg(F.count("*").alias("core_deg")),
+            "kcore",
+            F.count("*").alias("n"),
+            F.count(F.when(F.col("core_deg") < k, 1)).alias("below"),
         )
-        keep = (
-            sym.groupBy("v")
-            .agg(F.count("*").alias("__d"))
-            .filter(F.col("__d") >= k)
-            .select("v")
-        )
-        e_next = truncate_lineage(
-            e.join(keep.withColumnRenamed("v", "lo"), "lo", "left_semi")
-            .join(keep.withColumnRenamed("v", "hi"), "hi", "left_semi")
-        )
-        n = e_next.count()
-        e = e_next
-        if n == n_prev:
+        deg_next = truncate_lineage(deg_next)
+        if deg is not None:
+            release_checkpoint(deg)
+        deg = deg_next
+        counts = obs.get
+        if counts["below"] == 0:
             break
-        n_prev = n
+        n_keep = counts["n"] - counts["below"]
     else:
         raise RuntimeError(f"kcore did not converge in {max_iter} rounds")
-    sym = e.select(F.col("lo").alias("node")).unionByName(
-        e.select(F.col("hi").alias("node"))
-    )
-    return sym.groupBy("node").agg(F.count("*").alias("core_deg"))
+    if not input_canonical:
+        release_checkpoint(e0)
+    return deg
 
 
 # Max degree up to which ktruss computes per-edge support via
@@ -672,10 +715,11 @@ def ktruss(
     mining primitive than k-core (every edge is embedded in triangles,
     not just every node in edges). Iterative support peeling: count
     per-edge triangle support, drop edges below k-2, repeat until the
-    fixpoint; convergence is verified per round with a 1-row edge
-    count and the operator raises past ``max_iter`` (so an unrolled
-    SQL oracle with >= the real round count is sound — peeling is
-    monotone, extra rounds are no-ops).
+    fixpoint; convergence is verified per round with an edge count
+    taken inside the round's checkpoint job, and the operator raises
+    past ``max_iter`` (so an unrolled SQL oracle with >= the real
+    round count is sound — peeling is monotone, extra rounds are
+    no-ops).
 
     Per round the support table is recomputed one of three ways,
     chosen adaptively (r16):
@@ -742,16 +786,19 @@ def ktruss(
     # round, since edges only shrink): adjacency-intersection support
     # needs one adjacency array per row, so it is gated on the max
     # degree (512 KB of ints per row at the 65536 threshold); past the
-    # threshold the O(1)-per-task wedge enumeration takes over.
-    max_deg = (
+    # threshold the O(1)-per-task wedge enumeration takes over. The
+    # same action yields the input edge count: each canonical edge
+    # adds 1 to two degrees.
+    max_deg, sum_deg = (
         e.select(F.col("lo").alias("n"))
         .unionByName(e.select(F.col("hi").alias("n")))
         .groupBy("n")
         .agg(F.count("*").alias("dg"))
-        .agg(F.max("dg"))
-        .collect()[0][0]
-        or 0
+        .agg(F.max("dg"), F.sum("dg"))
+        .collect()[0]
     )
+    max_deg = max_deg or 0
+    n_prev = (sum_deg or 0) // 2
     full_support = (
         _ktruss_intersect_support
         if max_deg <= _KTRUSS_INTERSECT_MAX_DEGREE
@@ -819,7 +866,6 @@ def ktruss(
             ).alias("support"),
         )
 
-    n_prev = e.count()
     sup = None
     # pending = (keeps, deleted, e_old): inputs for the next round's
     # incremental update; None forces a full enumeration.
@@ -839,8 +885,9 @@ def ktruss(
         keeps = sup.filter(
             (F.col("support") >= k - 2) & (F.col("support") > 0)
         )
-        e_next = truncate_lineage(keeps.select("lo", "hi"))
-        n = e_next.count()
+        e_next, obs = observed(keeps.select("lo", "hi"), "ktruss")
+        e_next = truncate_lineage(e_next)
+        n = obs.get["n_rows"]
         n_deleted = n_prev - n
         made = [sup, e_next]
         if n_deleted == 0:

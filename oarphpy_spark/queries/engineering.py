@@ -626,7 +626,8 @@ def q_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame
     'recompute one day/type and swap it in without touching sibling
     partitions': write events partitioned by event_type, then
     overwrite in DYNAMIC mode with a feed containing only a filtered
-    'click' slice. Under partitionOverwriteMode=dynamic Spark deletes
+    'click' slice. Under partitionOverwriteMode=dynamic (an option on
+    that one write, so the session conf never flips) Spark deletes
     ONLY the partitions present in the incoming write (the default
     STATIC mode would truncate the whole table — the production
     data-loss footgun this query pins). The read-back aggregate
@@ -639,20 +640,20 @@ def q_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame
 
     root = os.path.join(scratch_dir(), f"oarphpy_spark_dpo_{os.getpid()}")
     shutil.rmtree(root, ignore_errors=True)
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    old_mode = spark.conf.get(conf_key, None)
     try:
         ev = table(spark, sf_dir, "events").select(
             "event_id", "event_type", "value"
         )
         ev.write.mode("overwrite").partitionBy("event_type").parquet(root)
-        spark.conf.set(conf_key, "dynamic")
+        # A per-write option, not the session conf: concurrent writers
+        # on the session keep their own overwrite mode.
         (
             ev.where(
                 (F.col("event_type") == "click")
                 & (F.col("event_id") % 2 == 0)
             )
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("event_type")
             .parquet(root)
         )
@@ -668,10 +669,6 @@ def q_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame
             .orderBy("event_type")
         )
     finally:
-        if old_mode is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, old_mode)
         shutil.rmtree(root, ignore_errors=True)
 
 

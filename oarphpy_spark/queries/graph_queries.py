@@ -322,10 +322,15 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-core of the co-purchase graph by iterative peeling
     (llm/graph.py:kcore — distributed Batagelj-Zaversnik): drop
     nodes with fewer than 60 in-core neighbors until the fixpoint,
-    convergence VERIFIED per round with a 1-row edge count (raises
-    past the bound — a silent partial peel would misreport the
-    core). Each round is a degree agg + two semi-joins keyed on node
-    id over an edge set that only shrinks. The oracle unrolls six
+    convergence VERIFIED per round (raises past the bound — a silent
+    partial peel would misreport the core). Each round is one action:
+    the checkpoint of a degree table over the shared edges
+    semi-joined to the previous round's keep set — the keep sets are
+    nested, so that IS the peeled edge set — with the "no node below
+    60" test counted inside the same job. Each round re-scans the
+    shared edges instead of writing a per-round edge table. The
+    shared edges are the caller's and stay alive; superseded degree
+    tables are released as the peel goes. The oracle unrolls six
     peel rounds — more than the measured fixpoint (2 rounds at every
     fixture SF); monotonicity makes the extra rounds no-ops, and an
     insufficient unroll would fail parity loudly rather than agree

@@ -16,9 +16,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from oarphpy_spark.registry import query
-from oarphpy_spark.tables import table
+from oarphpy_spark.tables import memo_on_table, table
 
-# Offline Bloom-filter bits per scale dir (see q_join_bloom_prune).
+# Offline Bloom-filter bits per scale dir, rebuilt when the supplier
+# table is rewritten (see q_join_bloom_prune).
 _BLOOM_BITS: dict = {}
 
 
@@ -262,9 +263,13 @@ def q_join_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s_acctbal") >= 9000)
         .withColumnRenamed("s_suppkey", "suppkey")
     )
-    if sf_dir not in _BLOOM_BITS:
-        _BLOOM_BITS[sf_dir] = build_bloom(supp, "suppkey")
-    bits = _BLOOM_BITS[sf_dir]
+    bits = memo_on_table(
+        _BLOOM_BITS,
+        sf_dir,
+        sf_dir,
+        "supplier",
+        lambda: build_bloom(supp, "suppkey"),
+    )
     return bloom_prejoin(li, supp, "suppkey", bits=bits).groupBy("s_name").agg(
         F.count("*").alias("n_items"),
         F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(

@@ -29,7 +29,7 @@ from oarphpy_spark.llm.similarity import (
 )
 from oarphpy_spark.operators.prefix import with_global_cumsum
 from oarphpy_spark.registry import query
-from oarphpy_spark.tables import table
+from oarphpy_spark.tables import memo_on_table, table
 from oarphpy_spark.util.checkpoints import (
     hold_caches,
     release_shared,
@@ -37,12 +37,13 @@ from oarphpy_spark.util.checkpoints import (
     truncate_lineage,
 )
 
-# Offline artifacts of the ANN indexes, cached per scale-factor dir:
+# Offline artifacts of the ANN indexes, cached per scale-factor dir
+# until its embeddings table is rewritten (``tables.memo_on_table``):
 # embedding dimensionality and the IVF centroid table (tiny: n_cells
 # rows). In production both come from an offline training/metadata
 # step; recomputing them per query run would add a driver job apiece.
-_EMB_DIM: dict[str, int] = {}
-_IVF_CENTS: dict[tuple[str, int], list[tuple[int, list[float]]]] = {}
+_EMB_DIM: dict[str, tuple] = {}
+_IVF_CENTS: dict[tuple[str, int], tuple] = {}
 
 
 def _shared_minhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -70,28 +71,34 @@ release_shared_buckets = release_shared
 
 
 def _emb_dim(spark: SparkSession, sf_dir: str) -> int:
-    if sf_dir not in _EMB_DIM:
-        from oarphpy_spark.llm.similarity import _vec_dim
+    from oarphpy_spark.llm.similarity import _vec_dim
 
-        _EMB_DIM[sf_dir] = _vec_dim(table(spark, sf_dir, "embeddings"), "embedding")
-    return _EMB_DIM[sf_dir]
+    return memo_on_table(
+        _EMB_DIM,
+        sf_dir,
+        sf_dir,
+        "embeddings",
+        lambda: _vec_dim(table(spark, sf_dir, "embeddings"), "embedding"),
+    )
 
 
 def _ivf_centroids(
     spark: SparkSession, sf_dir: str, n_cells: int
 ) -> list[tuple[int, list[float]]]:
-    key = (sf_dir, n_cells)
-    if key not in _IVF_CENTS:
-        emb = table(spark, sf_dir, "embeddings")
+    def build():
         rows = (
-            emb.filter(F.col("vec_id") < n_cells)
+            table(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") < n_cells)
             .select("vec_id", "embedding")
             .collect()
         )
-        _IVF_CENTS[key] = [
+        return [
             (int(r["vec_id"]), [float(x) for x in r["embedding"]]) for r in rows
         ]
-    return _IVF_CENTS[key]
+
+    return memo_on_table(
+        _IVF_CENTS, (sf_dir, n_cells), sf_dir, "embeddings", build
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -111,6 +111,23 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def memo_on_table(memo: dict, key, sf_dir: str, name: str, build):
+    """``build()``, memoized in ``memo[key]`` until table ``name``
+    under ``sf_dir`` is rewritten: the entry is stamped with the
+    table's :func:`_files_stamp`, the stamp :func:`_read_parquet`
+    keys its schemas on, so a driver-side artifact derived from a
+    table (an index's dimensionality, its centroids, a filter's bits)
+    is rebuilt exactly when a fresh read of the table would differ.
+    A table whose files cannot be stat-ed is rebuilt on every call."""
+    stamp = _files_stamp(os.path.join(sf_dir, f"{name}.parquet"))
+    hit = memo.get(key)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        return hit[1]
+    value = build()
+    memo[key] = (stamp, value)
+    return value
+
+
 def _events_ts_kind(path: str) -> str:
     """Classify the physical form of ``events.ts`` from parquet footers
     only (no row groups read): 'ns' (INT64 nanos — unscannable by Spark

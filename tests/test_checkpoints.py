@@ -89,3 +89,88 @@ def test_query_result_cut_follows_checkpoint_dir(spark, tmp_path):
     got = sorted(q(spark, SF_SMALL).collect())
     assert got == want
     assert _files_under(ckpt), "result cut wrote nothing to the dir"
+
+
+def _converged_graph_results(spark) -> dict:
+    """One multi-round run of each operator whose convergence is
+    counted inside its round's checkpoint job, on a graph with a
+    known answer."""
+    from oarphpy_spark.llm import graph as g
+
+    def edges(pairs):
+        return spark.createDataFrame(pairs, "s long, d long")
+
+    chain = edges([(i, i + 1) for i in range(1, 8)] + [(10, 11)])
+    cycle_with_tail = edges(
+        [(0, 1), (1, 2), (2, 3), (3, 4), (0, 4), (4, 10), (10, 11), (11, 12)]
+    )
+    k5 = [(a, b) for a in range(5) for b in range(5) if a < b]
+    k5_pendant = edges(k5 + [(0, 10), (1, 10)])
+    weighted = spark.createDataFrame(
+        [(1, 2, 1), (2, 3, 1), (3, 4, 1), (1, 4, 10)], "s long, d long, w long"
+    )
+    return {
+        "connected_components": sorted(
+            tuple(r) for r in g.connected_components(chain, "s", "d").collect()
+        ),
+        "kcore": sorted(
+            tuple(r) for r in g.kcore(cycle_with_tail, 2, "s", "d").collect()
+        ),
+        "ktruss": sorted(
+            tuple(r) for r in g.ktruss(k5_pendant, 4, "s", "d").collect()
+        ),
+        # 6 rounds allowed, the frontier empties after the 4th
+        "sssp": sorted(
+            tuple(r) for r in g.sssp(weighted, 1, "s", "d", rounds=6).collect()
+        ),
+    }
+
+
+def test_observed_convergence_follows_checkpoint_dir(spark, tmp_path):
+    """connected_components, kcore, ktruss and sssp read their
+    convergence counts from the checkpoint job itself; the counts, and
+    so the results, are the same under local and reliable lineage
+    cuts."""
+    want = {
+        "connected_components": [(i, 1) for i in range(2, 9)] + [(11, 10)],
+        "kcore": [(i, 2) for i in range(5)],
+        "ktruss": [(a, b, 3) for a in range(5) for b in range(5) if a < b],
+        "sssp": [(1, 0), (2, 1), (3, 2), (4, 3)],
+    }
+    assert _converged_graph_results(spark) == want
+    ckpt = str(tmp_path / "ckpt4")
+    spark.sparkContext.setCheckpointDir(ckpt)
+    assert _converged_graph_results(spark) == want
+    assert _files_under(ckpt)
+
+
+# Each token may appear in oarphpy_spark/ only in the module that owns
+# the decision behind it: how lineage is cut and ride-along caches are
+# held (util/checkpoints), and how plan metrics are observed
+# (operators/counters).
+_OWNED_TOKENS = {
+    "localCheckpoint(": "util/checkpoints.py",
+    ".checkpoint(": "util/checkpoints.py",
+    "_oarphpy_persisted": "util/checkpoints.py",
+    "Observation(": "operators/counters.py",
+}
+
+
+def test_lineage_cuts_and_observations_have_one_owner():
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "oarphpy_spark",
+    )
+    strays = []
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, root).replace(os.sep, "/")
+            with open(path, encoding="utf-8") as f:
+                for lineno, line in enumerate(f, 1):
+                    for token, owner in _OWNED_TOKENS.items():
+                        if token in line and rel != owner:
+                            strays.append(f"{rel}:{lineno}: {token}")
+    assert not strays, strays

@@ -255,6 +255,141 @@ def test_kcore_known_graphs(spark):
     assert _kc(empty, 2).count() == 0
 
 
+# A 5-cycle with a 3-edge pendant path, canonical (src < dst): at k=2
+# the peel drops 12, then 11, then 10, and a fourth round finds no
+# node below k. The 2-core is the cycle.
+_CYCLE_WITH_TAIL = [(0, 1), (1, 2), (2, 3), (3, 4), (0, 4)] + [
+    (4, 10), (10, 11), (11, 12)
+]
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def _checkpoint_rdd_id(df) -> int:
+    return df._jdf.queryExecution().analyzed().rdd().id()
+
+
+def _actions_in_group(spark, group: str) -> int:
+    """Number of SQL executions (actions) that ran jobs in ``group``.
+    Under AQE one action runs a Spark job per shuffle stage it
+    materializes, so the action, not the job, is what a per-round
+    budget counts."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ids = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert ids, group
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    n = 0
+    for i in range(execs.size()):
+        jobs = str(execs.apply(i).jobs().keys().mkString(","))
+        if {int(j) for j in jobs.split(",") if j} & ids:
+            n += 1
+    return n
+
+
+def test_kcore_one_action_per_peel_round(spark):
+    """Each peel round is one action — the eager checkpoint of its
+    degree table, with the "no node below k" count observed in that
+    same job — and reading the result is one more."""
+    import uuid
+
+    from oarphpy_spark.llm.graph import kcore
+
+    df = spark.createDataFrame(
+        _CYCLE_WITH_TAIL, "src long, dst long"
+    ).localCheckpoint()
+    # the peel really takes 4 rounds
+    with pytest.raises(RuntimeError, match="did not converge in 3"):
+        kcore(df, 2, max_iter=3, input_canonical=True)
+    sc = spark.sparkContext
+    group = f"kcore_rounds_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "kcore rounds")
+    try:
+        got = {
+            (r.node, r.core_deg)
+            for r in kcore(df, 2, input_canonical=True).collect()
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == {(i, 2) for i in range(5)}
+    assert _actions_in_group(spark, group) <= 4 + 1
+
+
+def test_kcore_releases_superseded_rounds(spark):
+    """Only the result's checkpoint outlives ``kcore``: every
+    superseded degree table, and the canonical copy made of a
+    non-canonical input, are released — for a multi-round peel, a
+    cascade to empty and an empty input alike."""
+    from oarphpy_spark.llm.graph import kcore
+
+    reversed_tail = [(b, a) for a, b in _CYCLE_WITH_TAIL]
+    cases = [
+        (reversed_tail, {(i, 2) for i in range(5)}),
+        ([(i, i + 1) for i in range(5)], set()),  # path: cascade to empty
+        ([], set()),
+    ]
+    for edges, want in cases:
+        df = spark.createDataFrame(edges, "src long, dst long")
+        before = _persistent_rdd_ids(spark)
+        out = kcore(df, 2)
+        assert _persistent_rdd_ids(spark) - before == {_checkpoint_rdd_id(out)}
+        assert {(r.node, r.core_deg) for r in out.collect()} == want
+
+
+def test_kcore_broadcast_and_shuffled_keep_sets_match_peeling(spark):
+    """Both join strategies for the keep set (broadcast while it is
+    small, shuffled beyond ``_KCORE_BROADCAST_KEEP_MAX_ROWS``) give the
+    k-core a sequential peel computes."""
+    import oarphpy_spark.llm.graph as g
+
+    rng = random.Random(5)
+    edges = {tuple(sorted(rng.sample(range(40), 2))) for _ in range(140)}
+    k = 4
+    alive = {v for e in edges for v in e}
+    while True:
+        deg = {v: 0 for v in alive}
+        for a, b in edges:
+            if a in alive and b in alive:
+                deg[a] += 1
+                deg[b] += 1
+        low = {v for v, d in deg.items() if d < k}
+        if not low:
+            break
+        alive -= low
+    want = {(v, d) for v, d in deg.items()}
+    assert want  # non-degenerate: a 4-core survives
+
+    df = spark.createDataFrame(sorted(edges), "src long, dst long")
+    orig = g._KCORE_BROADCAST_KEEP_MAX_ROWS
+    try:
+        for bound in (orig, -1):
+            g._KCORE_BROADCAST_KEEP_MAX_ROWS = bound
+            got = {(r.node, r.core_deg) for r in g.kcore(df, k).collect()}
+            assert got == want, bound
+    finally:
+        g._KCORE_BROADCAST_KEEP_MAX_ROWS = orig
+
+
+def test_q_kcore_keeps_shared_edges_and_drops_superseded_rounds(spark):
+    """q_kcore peels the session-shared edge relation (2 rounds at the
+    small fixture): that relation stays readable, and the only block
+    the query leaves behind is its own result's."""
+    import oarphpy_spark.queries.graph_queries as gq
+    from tests.conftest import SF_SMALL
+
+    edges = gq._shared_edges(spark, SF_SMALL)
+    n_edges = edges.count()
+    before = _persistent_rdd_ids(spark)
+    out = gq.q_kcore(spark, SF_SMALL)
+    after = _persistent_rdd_ids(spark)
+    assert after - before == {_checkpoint_rdd_id(out)}
+    assert _checkpoint_rdd_id(edges) in after
+    assert edges.count() == n_edges
+    assert out.count() > 0
+
+
 def test_ktruss_known_graphs(spark):
     from oarphpy_spark.llm.graph import ktruss
 

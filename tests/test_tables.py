@@ -81,3 +81,77 @@ def test_inference_conf_change_reinfers_schema(spark, tmp_path):
         assert dict(table(spark, str(tmp_path), "part").dtypes)["b"] == "binary"
     finally:
         spark.conf.unset(key)
+
+
+def _write_embeddings(path: str, vectors: list[list[float]]) -> None:
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(len(vectors)), pa.int64()),
+                "embedding": pa.array(vectors, pa.list_(pa.float32())),
+            }
+        ),
+        path,
+    )
+
+
+def test_ann_artifacts_follow_a_rewritten_embeddings_table(spark, tmp_path):
+    """The IVF centroids and the embedding dimensionality are memoized
+    per sf dir, stamped with the embeddings table's files: a rewrite
+    serves the new table's artifacts, an untouched table the memo."""
+    from oarphpy_spark.queries import llm_queries as lq
+
+    sf = str(tmp_path)
+    path = os.path.join(sf, "embeddings.parquet")
+    _write_embeddings(path, [[1.0, 0.0], [0.0, 1.0], [1.0, 1.0]])
+    assert lq._ivf_centroids(spark, sf, 2) == [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
+    assert lq._emb_dim(spark, sf) == 2
+    _, n_jobs = _jobs_launched(spark, lambda: lq._ivf_centroids(spark, sf, 2))
+    assert n_jobs == 0
+
+    _write_embeddings(path, [[2.0, 0.0, 0.5], [0.0, 3.0, 0.5]])
+    assert lq._ivf_centroids(spark, sf, 2) == [
+        (0, [2.0, 0.0, 0.5]),
+        (1, [0.0, 3.0, 0.5]),
+    ]
+    assert lq._emb_dim(spark, sf) == 3
+
+
+def test_bloom_bits_follow_a_rewritten_supplier_table(spark, tmp_path):
+    """q_join_bloom_prune's filter bits are rebuilt when the supplier
+    table is rewritten: stale bits would prune the new suppliers' fact
+    rows before the join and drop their groups."""
+    from oarphpy_spark.queries.joins import q_join_bloom_prune
+
+    sf = str(tmp_path)
+    pq.write_table(
+        pa.table(
+            {
+                "l_suppkey": pa.array([1, 2, 3, 4] * 3, pa.int64()),
+                "l_extendedprice": [10.0] * 12,
+                "l_discount": [0.0] * 12,
+            }
+        ),
+        os.path.join(sf, "lineitem.parquet"),
+    )
+
+    def write_supplier(rich: list[int]) -> None:
+        keys = [1, 2, 3, 4]
+        pq.write_table(
+            pa.table(
+                {
+                    "s_suppkey": pa.array(keys, pa.int64()),
+                    "s_name": [f"S{k}" for k in keys],
+                    "s_acctbal": [9500.0 if k in rich else 10.0 for k in keys],
+                }
+            ),
+            os.path.join(sf, "supplier.parquet"),
+        )
+
+    def names() -> list[str]:
+        return sorted(r["s_name"] for r in q_join_bloom_prune(spark, sf).collect())
+
+    write_supplier([1, 2])
+    assert names() == ["S1", "S2"]
+    write_supplier([2, 3, 4])
+    assert names() == ["S2", "S3", "S4"]
