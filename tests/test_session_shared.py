@@ -8,6 +8,13 @@ from __future__ import annotations
 from .conftest import SF_SMALL as SF
 
 
+def _persisted_ids(jsc) -> set[int]:
+    """Ids of the persisted RDDs. Tests compare these sets, not their
+    sizes: Spark's ContextCleaner may unpersist an unreferenced
+    checkpoint left by an earlier test at any JVM GC, mid-test."""
+    return {int(i) for i in jsc.getPersistentRDDs().keySet()}
+
+
 def test_release_shared_frees_every_family_relation(spark):
     """Edges, degrees, the wedge sizing memo and the MinHash buckets
     of one sf_dir live in one scope: a single release drops it (count
@@ -19,7 +26,7 @@ def test_release_shared_frees_every_family_relation(spark):
 
     jsc = spark.sparkContext._jsc
     checkpoints.release_shared(spark)
-    n0 = jsc.getPersistentRDDs().size()
+    ids0 = _persisted_ids(jsc)
 
     edges = gq._shared_edges(spark, SF)
     _, _, deg = gq._lp_shared_relations(spark, SF)
@@ -27,10 +34,10 @@ def test_release_shared_frees_every_family_relation(spark):
     assert lq.q_dedup_minhash(spark, SF).count() > 0
     buckets = lq._shared_minhash_buckets(spark, SF)
     # edges, degrees and buckets each hold one checkpoint
-    assert jsc.getPersistentRDDs().size() == n0 + 3
+    assert len(_persisted_ids(jsc) - ids0) == 3
 
     assert checkpoints.release_shared(spark, SF) == 1
-    assert jsc.getPersistentRDDs().size() == n0
+    assert _persisted_ids(jsc) - ids0 == set()
     assert not checkpoints._SHARED
 
     assert gq._shared_edges(spark, SF) is not edges
@@ -53,9 +60,9 @@ def test_shared_edges_use_reliable_checkpoint_when_dir_set(spark, tmp_path):
     release_shared(spark)
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
-        n0 = jsc.getPersistentRDDs().size()
+        ids0 = _persisted_ids(jsc)
         shared = gq._shared_edges(spark, SF)
-        assert jsc.getPersistentRDDs().size() == n0
+        assert _persisted_ids(jsc) - ids0 == set()
         fresh = gq._copurchase_edges(spark, SF)
         assert sorted(shared.collect()) == sorted(fresh.collect())
     finally:
