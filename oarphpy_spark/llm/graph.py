@@ -49,7 +49,7 @@ from oarphpy_spark.util.checkpoints import (
 
 
 def _check_canonical(e: DataFrame, who: str) -> DataFrame:
-    """Debug-tier guard for ``input_canonical=True`` (ADVICE r15): the
+    """Debug-tier guard for ``input_canonical=True``: the
     contract (src < dst on every row, distinct) is normally enforced
     only by the call-site comments — a caller passing a non-canonical
     relation gets silently WRONG triangle/k-core/k-truss counts
@@ -481,16 +481,14 @@ def triangle_count(
     lo_first = (F.col("deg_lo") < F.col("deg_hi")) | (
         (F.col("deg_lo") == F.col("deg_hi")) & (F.col("lo") < F.col("hi"))
     )
-    # NOTE (r16): an r15 edit repartition+sorted the oriented relation
-    # on the apex before persisting, claiming the wedge self-join arms
-    # would then read the cache with no Exchange/Sort. The claim was
-    # FALSE — AQE wraps cached plans (AdaptiveSparkPlan under
-    # InMemoryRelation) and hides their output partitioning, so both
-    # consumer-side Exchange+Sort stayed (r15's own after-plan, lines
-    # 11-14: Sort+Exchange above InMemoryTableScan — the same negative
-    # result the link-prediction experiment recorded and reverted that
-    # round). The edit only ADDED a build-side shuffle; reverted here
-    # and re-A/B'd (AB_TRIANGLE_r16.json).
+    # NOTE: repartition+sorting the oriented relation on the apex
+    # before persisting does NOT let the wedge self-join arms read the
+    # cache without an Exchange/Sort. AQE wraps cached plans
+    # (AdaptiveSparkPlan under InMemoryRelation) and hides their output
+    # partitioning, so both consumer-side Exchange+Sort stay (Sort +
+    # Exchange above InMemoryTableScan in the physical plan — the same
+    # negative result the link-prediction experiment found). That edit
+    # only ADDED a build-side shuffle, so it was reverted.
     oriented = ranked.select(
         F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("a"),
         F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("b"),
@@ -750,7 +748,7 @@ def ktruss(
     the post-convergence support join then re-reads it instead of
     replaying the final round's full enumeration, which the r14 form
     paid twice; superseded rounds' checkpoint blocks are released
-    two rounds behind (ADVICE r15). (An enumerate-once variant that
+    two rounds behind. (An enumerate-once variant that
     materializes the triangle list and semi-join-filters it per round
     was measured SLOWER at sf0.1 — 13.2 s first rep vs 12.5 s — and
     its per-round localCheckpoints accumulated storage blocks until
@@ -891,9 +889,8 @@ def ktruss(
         n_deleted = n_prev - n
         made = [sup, e_next]
         if n_deleted == 0:
-            # Converged. Release every superseded per-round checkpoint
-            # (ADVICE r15): only the final sup/e pair stays alive for
-            # the return join.
+            # Converged. Release every superseded per-round checkpoint:
+            # only the final sup/e pair stays alive for the return join.
             for df in old_ckpts + prev_ckpts:
                 release_checkpoint(df)
             e = e_next
@@ -916,7 +913,7 @@ def ktruss(
         # Checkpoints from two rounds back are unreferenced once this
         # round's sup/e_next are materialized (eager truncation above);
         # free their blocks instead of waiting on GC + ContextCleaner
-        # (ADVICE r15 — the reverted enumerate-once experiment measured
+        # (the reverted enumerate-once experiment measured
         # reps degrading 13 -> 37 s from exactly this accumulation).
         for df in old_ckpts:
             release_checkpoint(df)

@@ -1,19 +1,7 @@
 """Query definitions, grouped by SURVEY.md §2 category.
 
 Importing this package registers every declared query into
-``oarphpy_spark.registry``.
-
-External correctness harnesses may only check a bounded prefix of the
-registered queries, so ``_ROUND_PRIORITY`` pins the prefix to the
-queries that most need fresh verification this round: never-verified
-new queries first, then every implementation changed during the
-round, then the stalest driver records (code-churn staleness AND,
-since round 13, record-age staleness — a green row older than
-AGE_LIMIT=4 rounds becomes seatable even when its code is unchanged).
-``scripts/staleness_audit.py`` machine-checks this allocation (window
-saturated stale-first, backlog recorded); the union of all rounds'
-windows plus the full-registry local parity gate covers every
-declared query.
+``oarphpy_spark.registry``, in import order.
 """
 
 import oarphpy_spark.queries.analytics_extras  # noqa: F401
@@ -38,75 +26,3 @@ import oarphpy_spark.queries.sql_api  # noqa: F401
 import oarphpy_spark.queries.streaming_queries  # noqa: F401
 import oarphpy_spark.queries.tpch  # noqa: F401
 import oarphpy_spark.queries.windows_events  # noqa: F401
-
-from oarphpy_spark import registry
-
-_ROUND_PRIORITY = [
-    # --- round 15: no never-verified slugs remain. Changed code
-    # first: q_link_prediction (the _link_prediction_exact helper
-    # gained the enforced hub-exclusion counter, VERDICT r14 item 6).
-    # Then the record-age backlog oldest-first from
-    # scripts/staleness_audit.py (the r07/r08 analytics + property
-    # bands — much of SS2.B's last driver-green was r10 and ages into
-    # the AGE_LIMIT=4 rule this round).
-    "q_link_prediction",
-    "q_funnel_latency",
-    "q_graph_modularity",
-    "q_grouped_linreg",
-    "q_histogram_2d",
-    "q_hll_merge",
-    "q_hll_relational",
-    "q_interval_coverage",
-    "q_join_salted_skew",
-    "q_kmeans_relational",
-    "q_mann_whitney",
-    "q_negative_sampling",
-    "q_ohlc_bars",
-    "q_pi_deterministic",
-    "q_random_projection",
-    "q_rolling_median",
-    "q_session_entropy",
-    "q_session_paths",
-    "q_snapshot_time_travel",
-    "q_sql_lateral_topk",
-    "q_sql_recursive_reach",
-    "q_stream_late_data",
-    "q_stream_ohlc",
-    "q_time_weighted_avg",
-    "q_token_pmi",
-    "q_udtf_chunks",
-    "q_variant_shred",
-    "q_welch_ttest",
-    "q_acf",
-    "q_benford_digits",
-    "q_bitmap_intersect",
-    "q_cusum_changepoint",
-    "q_dedup_simhash",
-    "q_emb_pq_codebook",
-    "q_event_pattern",
-    "q_exact_global_median",
-    "q_fn_listagg",
-    "q_fn_url",
-    "q_graph_reciprocity",
-    "q_grouped_apply_zscore",
-    "q_heavy_hitters_mergeable",
-    "q_holt_linear",
-    "q_k_anonymity",
-    "q_kaplan_meier",
-    "q_multimodal_dedup",
-    "q_ntile_deciles",
-    "q_p99_contributors",
-    "q_rank1_als",
-    "q_seasonality_index",
-    "q_set_ops_all",
-]
-
-registry.set_priority(_ROUND_PRIORITY)
-
-# NEXT ROUND (14): keep the window SATURATED (scripts/staleness_audit
-# enforces it). Lead with any new queries, then implementations
-# changed during the round, then the audit's recommended_window
-# order (the audit's record-age rule now surfaces old-but-unchanged
-# driver rows too). After the round-13 window the oldest remaining
-# driver evidence is the r06 band; two more disciplined windows
-# re-green everything within the AGE_LIMIT=4 horizon.

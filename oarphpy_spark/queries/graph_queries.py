@@ -997,7 +997,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: skewed production graph, capped-out hubs are wedge centers whose
 #: candidate pairs are silently absent from the result. This counter
 #: (plus the warning below) makes the exclusion observable instead of
-#: silent (VERDICT r14 item 6).
+#: silent.
 LP_LAST_STATS: dict[str, int] = {}
 
 
@@ -1070,7 +1070,7 @@ def _link_prediction_exact_plan(
     pr / und / deg come from the session-shared
     ``_lp_shared_relations`` cache (|E|-bounded, checkpointed
     once), so this and the sketch companion derive the edge set and
-    degree table once between them (VERDICT r12 item 3). ``capped``
+    degree table once between them. ``capped``
     feeds both wedge sides — persist it or each side re-runs the
     semi-join (same pathology the triangle operator had; released
     after the lineage cut materializes the 20-row output)."""
@@ -1258,7 +1258,7 @@ def _link_prediction_sketch_plan(
     # candidate-table discipline as the exact path — at 1B-node scale
     # the degree table is not broadcastable).
     dd = deg.select(F.col("node").alias("d"), F.col("dg").alias("dd"))
-    # dg<=T bypass (VERDICT r13 item 4): a center at or below T keeps
+    # dg<=T bypass: a center at or below T keeps
     # ALL its neighbors (oracle: rk <= T never filters) with weight
     # exactly 1 — the collect_list/array_sort/slice sample stage is a
     # weight-1 passthrough there. Route on the HUB set:

@@ -41,34 +41,14 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-_PRIORITY: list[str] = []
-
-
-def set_priority(names: list[str]) -> None:
-    """Pin registration-order output: ``names`` first, rest afterward.
-
-    External correctness harnesses may check a bounded prefix of
-    ``queries()`` — this pins which queries land in that prefix
-    (most-recently-changed and least-recently-verified first).
-    """
-    global _PRIORITY
-    _PRIORITY = list(names)
-
-
-def _ordered(d: dict) -> dict:
-    head = {n: d[n] for n in _PRIORITY if n in d}
-    tail = {n: v for n, v in d.items() if n not in head}
-    return {**head, **tail}
-
-
 def queries() -> dict[str, QueryFn]:
     _ensure_loaded()
-    return _ordered(_QUERIES)
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     _ensure_loaded()
-    return _ordered(_ORACLES)
+    return dict(_ORACLES)
 
 
 _LOADED = False

@@ -3,8 +3,8 @@
 For each declared query: run the Spark plan and the oracle SQL on the
 same parquet tables, sort columns by name and rows by value, and
 compare cell-by-cell (exact for ints/strings/bools, tiny-rtol for
-floats). This is the dev-loop feedback before the driver's own
-CORRECTNESS_r{N}.json run.
+floats). This is the dev-loop feedback before an outside harness runs
+the same check.
 """
 
 from __future__ import annotations

@@ -119,9 +119,13 @@ def hold_caches(result: DataFrame, *dfs: DataFrame) -> DataFrame:
 
 def release_cached(result: DataFrame) -> None:
     """Unpersist the caches :func:`hold_caches` attached to
-    ``result``. Call AFTER the result has been materialized
-    (written/collected); a later re-computation of ``result`` still
-    works — it just re-builds the cached table(s).
+    ``result`` and, when ``result`` is itself a :func:`truncate_lineage`
+    cut (e.g. ``kcore``'s final degree table), its checkpoint blocks
+    too — unless :func:`session_shared` holds it. Call AFTER the result
+    has been materialized (written/collected). A later re-computation
+    of a result with ride-along caches still works — it just re-builds
+    the cached table(s); a released checkpointed result cannot be
+    re-read (its lineage is gone), so rebuild it from its query.
 
     Storage-level policy: every ride-along cache is created with an
     ARGLESS ``DataFrame.persist()``, whose default is
@@ -134,6 +138,19 @@ def release_cached(result: DataFrame) -> None:
     (scripts/scale_smoke_mem.py) exercises the actual spill path."""
     for df in getattr(result, "_oarphpy_persisted", []):
         df.unpersist()
+    rdd = _checkpointed_rdd(result)
+    if rdd is not None and rdd.id() not in _shared_rdd_ids(result.sparkSession):
+        rdd.unpersist(False)
+
+
+def _checkpointed_rdd(df: DataFrame):
+    """The JVM RDD behind ``df`` if ``df`` is a checkpoint (its analyzed
+    plan is a ``LogicalRDD`` over a checkpointed RDD), else None."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() != "LogicalRDD":
+        return None
+    rdd = plan.rdd()
+    return rdd if rdd.isCheckpointed() else None
 
 
 # (applicationId, scope) -> {name: value}. Keyed by applicationId so a
@@ -161,6 +178,20 @@ def session_shared(
         value = build()
         _SHARED.setdefault((app, scope), {})[name] = value
         return value
+
+
+def _shared_rdd_ids(spark) -> set[int]:
+    """RDD ids of this application's shared checkpointed DataFrames."""
+    app = spark.sparkContext.applicationId
+    with _SHARED_LOCK:
+        values = [
+            v
+            for key, named in _SHARED.items()
+            if key[0] == app
+            for v in named.values()
+            if isinstance(v, DataFrame)
+        ]
+    return {rdd.id() for rdd in map(_checkpointed_rdd, values) if rdd is not None}
 
 
 def release_shared(spark, scope: Hashable | None = None) -> int:

@@ -236,7 +236,7 @@ def img_to_data_uri(img, format: str = "png") -> str:
     pass through without a transcode (``format`` is ignored — the
     mimetype is SNIFFED from the payload: PNG signature, JPEG SOI
     marker, else ``application/octet-stream`` so e.g. GIF/WebP bytes
-    are never mislabeled — ADVICE r14). ``format='jpg'`` for arrays
+    are never mislabeled). ``format='jpg'`` for arrays
     needs pillow (optional dependency, same policy as
     ``oarphpy_spark.llm.multimodal``)."""
     from base64 import b64encode
@@ -295,7 +295,7 @@ def img_to_img_tag(
     # Floor at 1px: get_hw_in_viewport truncates to int, so an extreme
     # aspect ratio can yield a 0 display dim that hides the thumbnail
     # (the reference has the same flaw — documented safe divergence;
-    # image_bytes_to_img_tag already clamps, ADVICE r14).
+    # image_bytes_to_img_tag already clamps).
     return (
         f'<img src="{src}" height="{max(1, dh)}" width="{max(1, dw)}" />'
     )

@@ -52,8 +52,8 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     contain a join/aggregate/repartition are returned UNCHANGED —
     their parallelism is governed by the shuffle-partition config, and
     probing ``df.rdd`` on them would finalize the adaptive plan and
-    eagerly materialize upstream shuffle stages at composition time
-    (ADVICE r15), besides reading a pre-AQE partition count that can
+    eagerly materialize upstream shuffle stages at composition time,
+    besides reading a pre-AQE partition count that can
     mis-trigger a redundant repartition.
 
     Every logical ``Join`` counts as shuffle-implying, broadcast joins

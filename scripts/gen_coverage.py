@@ -3,9 +3,9 @@ module, oracle status, and docstring summary — the line-by-line map
 from SURVEY.md §2 to the implementation.
 
 Usage: python scripts/gen_coverage.py [--out COVERAGE.md]
-(default: stdout; --out writes the file atomically — round_close
-passes --out so the checked-in COVERAGE.md can never go stale again,
-the round-11 verdict's staleness finding).
+(default: stdout; --out writes the file atomically). Re-run it with
+--out after adding or changing a query so the checked-in COVERAGE.md
+does not go stale.
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ import io
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from oarphpy_spark import registry  # noqa: E402
 

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""sf0.1 scalable-oracle parity tier (VERDICT r09 item 2).
+"""sf0.1 scalable-oracle parity tier.
 
 All 288 exact-oracle checks bind at sf0.01 (60 K lineitem rows); this
 gate re-runs the registry at sf0.1 (600 K rows) so overflow / precision

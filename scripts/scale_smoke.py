@@ -3,7 +3,7 @@
 lineitem rows, ~5k docs), run the headline queries once each with task
 metrics captured, and gate on BOTH completion and per-stage task skew.
 
-Rationale (VERDICT r04 item 8): the bounded-key rewrites of rounds 3-4
+Rationale: the bounded-key rewrites
 (salted grouped-map, percentile-bucketed ranking, LSH banding) exist so
 no task's work grows with the data. Timing at one SF can't see a
 violation; a second scale point with a task-skew gate can — a
@@ -43,7 +43,7 @@ OFF = 10**9  # per-replica key offset; far above any sf0.1 key
 
 # Non-headline queries with genuinely different scale shapes, run at
 # the sf1.0 point only (see main()): the FULL TPC-H 22 (so every SQL
-# surface has at-scale skew evidence, VERDICT r05 item 7) plus the two
+# surface has at-scale skew evidence) plus the two
 # iterative graph workloads.
 EXTRA_SCALE = [f"q_sql_tpch_q{i}" for i in range(1, 23)] + [
     "q_pagerank",      # 5-iteration join+aggregate
@@ -240,7 +240,7 @@ def main() -> None:
         REP_THRESHOLD_SEC = 12.0
 
         def run(name: str, spark) -> float:
-            # bench-v4 build/query split (VERDICT r14 item 5): an
+            # bench-v4 build/query split: an
             # untimed-into-the-wall warm pass builds the ride-along
             # caches and is recorded separately in warm_secs; timed
             # reps reuse them (caches released between QUERIES only),
@@ -291,8 +291,8 @@ def main() -> None:
         # fact-fact TPC-H joins, the iterative PageRank, and the
         # transitive-closure clustering.
         #
-        # r16 (VERDICT r15 items 6 + 9): the extras run in CHUNKS with
-        # a FRESH SparkSession per chunk. The r15 61-query single-JVM
+        # The extras run in CHUNKS with
+        # a FRESH SparkSession per chunk. A 61-query single-JVM
         # sweep accumulated session pressure that inflated late slugs
         # ~3-5x over their fresh-process walls (q_containment_join
         # 69.5 s in-sweep vs 15-25 s fresh; q_triangle_count 10.4 s at
@@ -320,7 +320,7 @@ def main() -> None:
             "q_triangle_count_sampled",
         }
         # Dedup-LSH family: shares one session-checkpointed MinHash
-        # bucket relation (r16, VERDICT r15 item 7) — grouped in one
+        # bucket relation — grouped in one
         # chunk so the sharing is exercised and the warm split shows it.
         BUCKET_SHARED = {"q_dedup_clusters", "q_component_sizes"}
         extras_all = [n for n in EXTRA_SCALE if n in qs]

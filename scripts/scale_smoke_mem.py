@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Constrained-memory scale smoke (VERDICT r08 item 5): run the
+"""Constrained-memory scale smoke: run the
 heaviest extras at sf1.0 with executor memory squeezed hard enough
 that shuffles/aggregations actually SPILL, and gate on completion.
 
@@ -50,7 +50,7 @@ MEM_QUERIES = [
     "q_kcore",
     "q_sql_tpch_q9",
     "q_sql_tpch_q21",
-    # The two slowest sf1.0 extras (VERDICT r09 item 3): the capped
+    # The two slowest sf1.0 extras: the capped
     # wedge join and its Horvitz-Thompson sketch — both persist shared
     # subtrees, so the squeeze also exercises cache-eviction-to-disk
     # through an InMemoryRelation instead of silent recompute.

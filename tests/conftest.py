@@ -16,9 +16,8 @@ def pytest_configure(config):
         "markers",
         "slow: opt-in tier — long soaks, registry-wide plan sweeps, "
         "randomized property suites. Skipped by default so the "
-        "inner-loop gate stays fast (VERDICT r14 item 8); "
-        "SPARK_GRAFT_SLOW_TESTS=1 runs them (scripts/round_close.py "
-        "sets it, so every round's close gate still runs EVERYTHING).",
+        "inner-loop gate stays fast; run them with "
+        "SPARK_GRAFT_SLOW_TESTS=1 python -m pytest tests/ -q",
     )
 
 
@@ -26,7 +25,7 @@ def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_SLOW_TESTS") == "1":
         return
     skip = pytest.mark.skip(
-        reason="slow tier: set SPARK_GRAFT_SLOW_TESTS=1 (round_close does)"
+        reason="slow tier: SPARK_GRAFT_SLOW_TESTS=1 python -m pytest tests/ -q"
     )
     for item in items:
         if "slow" in item.keywords:

@@ -76,7 +76,7 @@ def test_adaptive_rep_policy():
 
 def test_output_summary_survives_tail_truncation():
     """The grading driver keeps only the LAST 2000 chars of bench
-    stdout (BENCH_r14.json lost its headline totals when rep_detail
+    stdout (one recorded run lost its headline totals when rep_detail
     grew past that). `_assemble_output` must emit every summary key
     AFTER the bulky diagnostic blobs so the truncated tail is always
     self-contained — simulate a rep_detail far larger than any real

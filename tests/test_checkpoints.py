@@ -4,6 +4,7 @@ session's checkpoint dir, for operators and query result cuts."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -174,3 +175,41 @@ def test_lineage_cuts_and_observations_have_one_owner():
                         if token in line and rel != owner:
                             strays.append(f"{rel}:{lineno}: {token}")
     assert not strays, strays
+
+
+# A file name with a round suffix (two digits, or a ``{N}`` template)
+# before ``.json``/``.md``, and any ``scripts/<name>.py`` path.
+_ROUND_ARTIFACT = re.compile(
+    r"\b[A-Za-z0-9_]*[A-Za-z0-9]_r(?:[0-9]{2}|\{[^}]*\})[A-Za-z0-9_]*"
+    r"\.(?:json|md)\b"
+)
+_SCRIPT_PATH = re.compile(r"scripts/([A-Za-z0-9_]+)\.py\b")
+_CITING = ("oarphpy_spark", "tests", "scripts", "bench.py", "README.md",
+           os.path.join(".claude", "skills", "verify", "SKILL.md"))
+
+
+def test_no_citation_of_missing_artifacts_or_scripts():
+    """Code and docs cite no per-round artifact file (none is kept in
+    the repo) and no ``scripts/*.py`` that does not exist."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = []
+    for entry in _CITING:
+        top = os.path.join(repo, entry)
+        if os.path.isfile(top):
+            paths.append(top)
+        for dirpath, dirs, files in os.walk(top):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            paths.extend(os.path.join(dirpath, n) for n in files)
+    assert len(paths) > 100, paths
+    dangling = []
+    for path in paths:
+        rel = os.path.relpath(path, repo)
+        with open(path, encoding="utf-8", errors="ignore") as f:
+            for lineno, line in enumerate(f, 1):
+                names = _ROUND_ARTIFACT.findall(line) + [
+                    f"scripts/{m}.py"
+                    for m in _SCRIPT_PATH.findall(line)
+                    if not os.path.isfile(os.path.join(repo, "scripts", f"{m}.py"))
+                ]
+                dangling.extend(f"{rel}:{lineno}: {n}" for n in names)
+    assert not dangling, dangling

@@ -417,7 +417,7 @@ def test_ktruss_known_graphs(spark):
 def test_input_canonical_validation_guard(spark, monkeypatch):
     """OARPHPY_SPARK_VALIDATE_CANONICAL=1 turns input_canonical misuse
     (reversed or duplicate edges) into a loud ValueError instead of
-    silently wrong counts (ADVICE r15); canonical inputs pass."""
+    silently wrong counts; canonical inputs pass."""
     from oarphpy_spark.llm.graph import triangle_count
 
     monkeypatch.setenv("OARPHPY_SPARK_VALIDATE_CANONICAL", "1")

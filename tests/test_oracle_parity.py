@@ -31,7 +31,12 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     rows = df.collect()
     assert len(rows) > 0
-    assert all(k in registry.oracle_sql() or True for k in e.queries())
+    # The contract exposes the registry in registration order, and every
+    # oracle belongs to a registered query, in the same order.
+    names = list(e.queries())
+    assert names == list(registry._QUERIES)
+    oracles = e.oracle_sql()
+    assert list(oracles) == [n for n in names if n in oracles]
 
 
 # Slow tier: zero-vector ANSI edge-case sweep over the sim family

@@ -1,4 +1,4 @@
-"""Persist-policy guard (VERDICT r09 item 5).
+"""Persist-policy guard.
 
 The shared-subtree caches that ride on operator results via
 ``_oarphpy_persisted`` must never be memory-ONLY: at 100 TB the

@@ -120,7 +120,7 @@ def _dup_python_evals(formatted_plan: str) -> list[str]:
     def _split_top_level(arglist: str) -> list[str]:
         """Split a formatted Arguments list on top-level commas only —
         UDF calls contain commas inside their own parens, so a plain
-        split would shear multi-arg calls apart (ADVICE r15)."""
+        split would shear multi-arg calls apart."""
         parts, depth, cur = [], 0, []
         for ch in arglist:
             if ch in "([":
@@ -169,8 +169,8 @@ def test_sim_family_single_udf_evaluation(spark):
         assert not dupes, f"{name}: duplicated UDF evaluation {dupes}"
 
 
-# Slow tier: ~5 min registry-wide plan walk; the close gate runs it
-# every round, and per-query plan gates above stay in the default tier.
+# Slow tier: ~5 min registry-wide plan walk (SPARK_GRAFT_SLOW_TESTS=1);
+# the per-query plan gates above stay in the default tier.
 @pytest.mark.slow
 def test_no_accidental_cartesian_products(spark):
     """One walk over EVERY registered query's physical plan, three
@@ -179,7 +179,7 @@ def test_no_accidental_cartesian_products(spark):
     1. No CartesianProduct anywhere. (Broadcast nested-loop joins
        against tiny broadcast sides are fine and appear as
        BroadcastNestedLoopJoin.)
-    2. No NEW unpartitioned windows (VERDICT r11 item 4): a Window
+    2. No NEW unpartitioned windows: a Window
        with an empty partition spec moves its ENTIRE input through one
        task, so every such site must (a) belong to a query on the
        documented UNPARTITIONED_WINDOW_ALLOWLIST below and (b)
@@ -192,9 +192,9 @@ def test_no_accidental_cartesian_products(spark):
 
 
 def test_hygiene_gates_sampled(spark):
-    """Fast-tier slice of the registry-wide hygiene sweep (VERDICT r15
-    item 8): the full 298-query walk lives in the slow tier (the close
-    gate runs it), but the driver's default pytest run must exercise
+    """Fast-tier slice of the registry-wide hygiene sweep: the full
+    298-query walk lives in the slow tier, but the default pytest run
+    must exercise
     the same three gates. Deterministic sample: every bench query
     (headline + extras — the paths the driver times) plus a stable
     md5-keyed sample of the rest, ~45 queries total, so a hygiene
@@ -253,7 +253,7 @@ def _run_hygiene_sweep(spark, names) -> None:
         # The bounding operator must sit in the window's own INPUT
         # subtree (indent-walked), not merely anywhere later in the
         # printed plan — an aggregate in a sibling join branch does
-        # not bound what flows through THIS window (ADVICE r12).
+        # not bound what flows through THIS window.
         for i in bad:
             subtree = _input_subtree(lines, i)
             if not any(
@@ -697,7 +697,7 @@ def test_exists_subqueries_decorrelate(spark):
     assert "LeftAnti" in plan or "ExistenceJoin" in plan
 
 
-# Every documented unpartitioned-window site (VERDICT r11 item 4): a
+# Every documented unpartitioned-window site: a
 # Window with an empty partition spec moves its ENTIRE input through
 # one task, so each site below must consume a BOUNDED relation — a
 # value-domain rollup, a post-limit survivor set, or the prefix

@@ -163,7 +163,7 @@ def test_img_to_data_uri_roundtrip_and_golden():
     fake_jpeg = b"\xff\xd8\xff\xe0" + b"\x00" * 8
     assert img_to_data_uri(fake_jpeg).startswith("data:image/jpeg;base64,")
     # unrecognized bytes (e.g. GIF/WebP) must NOT be labeled jpeg —
-    # the mimetype is sniffed, never assumed (ADVICE r14)
+    # the mimetype is sniffed, never assumed
     assert img_to_data_uri(b"GIF89a" + b"\x00" * 8).startswith(
         "data:application/octet-stream;base64,"
     )
@@ -172,7 +172,7 @@ def test_img_to_data_uri_roundtrip_and_golden():
 def test_img_to_img_tag_clamps_zero_display_dims():
     """Extreme aspect ratios truncate a display dim to 0 in
     get_hw_in_viewport; the emitted attributes must floor at 1px or
-    the thumbnail renders invisible (ADVICE r14 — same clamp
+    the thumbnail renders invisible (same clamp
     image_bytes_to_img_tag already had)."""
     import re
 

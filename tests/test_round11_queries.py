@@ -99,7 +99,7 @@ def test_link_prediction_antijoin_is_shuffled_hash(spark):
     The gate executes the query FIRST and asserts on the FINAL
     adaptive plan (isFinalPlan=true), not the AQE initial plan — user
     join hints survive AQE re-planning, but this pins the actual
-    runtime strategy, not just the plan-time intent (ADVICE r11)."""
+    runtime strategy, not just the plan-time intent."""
     from oarphpy_spark.queries.graph_queries import (
         _link_prediction_exact_plan,
         _link_prediction_sketch_plan,

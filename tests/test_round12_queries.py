@@ -1,5 +1,5 @@
 """Round-12 regression tests: packed-key id-domain guard and the
-two-stage rerank self-exclusion contract (ADVICE r11)."""
+two-stage rerank self-exclusion contract."""
 
 from __future__ import annotations
 
@@ -14,7 +14,7 @@ SF = "/root/testdata/sf0.01"
 def test_packed_key_guard_raises_out_of_domain(spark):
     """shiftleft(u,32)+v packing is injective only for ids in
     [0, 2^32); the guard must fail the job loudly instead of silently
-    corrupting the packed key (ADVICE r11 graph_queries.py)."""
+    corrupting the packed key."""
     from oarphpy_spark.queries.graph_queries import _domain_checked_edges
 
     ok = spark.createDataFrame(
@@ -43,7 +43,7 @@ def test_link_prediction_guard_zero_cost_on_valid_ids(spark):
 def test_two_stage_rerank_self_exclude_flag(spark):
     """With independent query/corpus id spaces, an id collision is a
     legitimate neighbor: self_exclude=False must keep it, and the
-    default (True) must drop it (ADVICE r11 similarity.py)."""
+    default (True) must drop it."""
     from oarphpy_spark.llm.similarity import two_stage_rerank_topk
 
     corpus = spark.createDataFrame(
@@ -189,7 +189,7 @@ def test_release_shared_edges_drops_checkpoint_blocks(spark):
     each shared relation is an eager localCheckpoint registered in the
     context's persistent-RDD map, so the map must grow by exactly one
     per relation built (edges on first family touch, degrees only on
-    the first DEGREE consumer — the lazy split from ADVICE r13) and
+    the first DEGREE consumer — the lazy split) and
     return to its starting size after release_shared_edges."""
     import oarphpy_spark.queries.graph_queries as gq
 

@@ -1,6 +1,6 @@
 """Round-15 regression tests: the enforced degree-cap skew contract
-on exact link prediction (VERDICT r14 item 6) and the
-release_shared_edges live-count fix (ADVICE r14)."""
+on exact link prediction and the
+release_shared_edges live-count fix."""
 
 from __future__ import annotations
 
@@ -57,7 +57,7 @@ def test_release_shared_edges_count_excludes_stale_entries(spark):
     """Stale-applicationId leftovers from a prior in-process session
     are evicted but must NOT inflate the returned count — the count
     reflects only live entries matching the caller's filter, so
-    callers asserting `== 1` can't flake on leftovers (ADVICE r14)."""
+    callers asserting `== 1` can't flake on leftovers."""
     import oarphpy_spark.queries.graph_queries as gq
     from oarphpy_spark.util import checkpoints
 

@@ -14,8 +14,9 @@ from pyspark.sql import functions as F
 from oarphpy_spark.operators.bucketing import bucketed_join, write_bucketed
 from oarphpy_spark.operators.skew import salted_agg, salted_broadcast_join
 
-# Whole module is slow-tier: 10M-row smokes duplicate the per-round
-# scripts/scale_smoke.py evidence; the close gate runs them.
+# Whole module is slow-tier: 10M-row smokes duplicate the
+# scripts/scale_smoke.py evidence. Run them with
+# SPARK_GRAFT_SLOW_TESTS=1 python -m pytest tests/ -q
 pytestmark = pytest.mark.slow
 
 

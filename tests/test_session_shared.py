@@ -111,3 +111,34 @@ def test_wedge_agg_partitions_needs_exactly_one_sizing_arg(spark):
         gq._wedge_agg_partitions(spark, SF)
     with pytest.raises(ValueError, match="exactly one"):
         gq._wedge_agg_partitions(spark, SF, degree_cap=10, sample_t=4)
+
+
+def test_release_cached_frees_a_checkpointed_result(spark):
+    """A query result that is itself a lineage cut (k-core's final
+    degree table) is freed by the one release call every caller makes,
+    while the session-shared edges it was built from stay persisted and
+    readable — also when the shared value itself is passed in."""
+    import oarphpy_spark.queries.graph_queries as gq
+    from oarphpy_spark.util.checkpoints import release_cached, release_shared
+
+    jsc = spark.sparkContext._jsc
+    release_shared(spark)
+    try:
+        edges = gq._shared_edges(spark, SF)
+        edges_id = edges._jdf.queryExecution().analyzed().rdd().id()
+        n_edges = edges.count()
+        out = gq.q_kcore(spark, SF)
+        out.collect()
+        out_id = out._jdf.queryExecution().analyzed().rdd().id()
+        assert {out_id, edges_id} <= _persisted_ids(jsc)
+
+        release_cached(out)
+        assert out_id not in _persisted_ids(jsc)
+        assert edges_id in _persisted_ids(jsc)
+        assert edges.count() == n_edges
+
+        release_cached(edges)
+        assert edges_id in _persisted_ids(jsc)
+        assert edges.count() == n_edges
+    finally:
+        release_shared(spark)

@@ -1,4 +1,4 @@
-"""Long-soak streaming state checks (VERDICT r08 item 6): the
+"""Long-soak streaming state checks: the
 eviction tests prove eviction fires once; these soaks prove state is
 BOUNDED — the actual production property — by driving ~50
 micro-batches and asserting the state-store row count plateaus at the

@@ -178,7 +178,7 @@ def test_mixed_physical_forms_in_one_directory_raise(tmp_path):
     """A directory mixing ns and µs part files (e.g. after a partial
     fixture regeneration) cannot be classified by one kind — the
     footer probe must refuse loudly instead of mis-schematizing the
-    scan (ADVICE r04: the old probe looked only at the first part)."""
+    scan (an earlier probe looked only at the first part)."""
     from oarphpy_spark.tables import _events_ts_kind
 
     d = tmp_path / "events.parquet"
