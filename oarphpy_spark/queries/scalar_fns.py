@@ -532,14 +532,16 @@ def q_fn_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded; the WITHIN GROUP sort is per-key over <= 5 rows."""
     cust = table(spark, sf_dir, "customer")
     pairs = cust.select("c_nationkey", "c_mktsegment").distinct()
-    pairs.createOrReplaceTempView("_listagg_pairs")
+    # A DataFrame argument binds under a unique view name that PySpark
+    # drops after analysis, so no session-global temp view is left.
     return spark.sql(
         """
         SELECT c_nationkey AS nationkey,
                CAST(COUNT(*) AS BIGINT) AS n,
                listagg(c_mktsegment, '|')
                  WITHIN GROUP (ORDER BY c_mktsegment) AS segments
-        FROM _listagg_pairs
+        FROM {pairs}
         GROUP BY c_nationkey ORDER BY nationkey
-        """
+        """,
+        pairs=pairs,
     )

@@ -7,8 +7,10 @@ the SAME ``F.window`` / ``F.session_window`` expressions, which is
 exactly why the batch oracles certify the streaming semantics.
 
 Patterns covered:
-* file-source streaming reads of the events table (schema pinned —
-  streaming sources cannot infer),
+* file-source streaming reads of the events table under the batch
+  loader's declared schema (``tables._read_events``; streaming
+  sources cannot infer), with no session conf written but the UTC
+  timezone pin,
 * watermarks for bounded state / late-data handling,
 * tumbling / sliding / session windowed aggregation,
 * ``Trigger.AvailableNow``-style batch-equivalence testing (see
@@ -30,10 +32,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-EVENTS_SCHEMA = (
-    "event_id bigint, ts_ns bigint, user_id bigint, "
-    "event_type string, value double, props string"
-)
+from oarphpy_spark.tables import _read_events
 
 # Streaming file sources need a DIRECTORY; lone-file feeds get a
 # symlink wrapper. One wrapper per distinct source path per process
@@ -63,54 +62,25 @@ def _cleanup_wrappers() -> None:
 def stream_events(
     spark: SparkSession, source_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """Streaming scan of an events parquet directory. Streaming file
-    sources need a user-declared schema, and the fixture's physical
-    ``ts`` form has varied across driver regenerations (int64 nanos /
-    µs NTZ / UTC-adjusted — the same three cases as the batch loader,
-    ``oarphpy_spark.tables.table``), so the batch reader probes ONE
-    footer up front and the declared stream schema + JVM-side
-    normalization branch on what's actually on disk. All forms
-    normalize to a UTC TIMESTAMP column named ``ts``, so downstream
-    window/watermark logic — and batch-equivalence tests — see one
-    contract."""
-    from oarphpy_spark.tables import _events_ts_kind, _normalize_events_ts
-
+    """Streaming scan of the events table at ``source_dir``, a
+    directory of part files or one parquet file. It is the batch
+    loader's events reader (``oarphpy_spark.tables._read_events``) on
+    ``spark.readStream``: the same declared schema, with the type of
+    ``ts`` picked from the footers of every part file present at call
+    time, and the same normalization of ``ts`` to a UTC TIMESTAMP. So
+    window and watermark logic, and the batch-equivalence tests, see
+    the columns ``tables.table(spark, d, "events")`` returns. The only
+    session conf written is the UTC timezone pin, as in ``table``."""
     if os.path.isfile(source_dir):
-        # Streaming file sources require a directory; wrap a lone
-        # file (cached per source path, cleaned at exit).
+        # Streaming file sources require a directory (a lone file
+        # fails with "Option 'basePath' must be a directory"); wrap
+        # it (cached per source path, cleaned at exit).
         source_dir = _wrapper_dir(source_dir)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    kind = _events_ts_kind(source_dir)
-    if kind == "ns":
-        # Unlike the batch path (which restores the conf after read()),
-        # a stream re-plans every microbatch, so the legacy conf must
-        # stay set for the query's lifetime. Only the genuinely-ns case
-        # pays that session-wide contract — and because it also changes
-        # how UNRELATED batch reads of ns-parquet on this session are
-        # schematized (they'll now see bigint nanos, not an error), the
-        # switch is announced loudly rather than flipped silently.
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "stream_events: enabling spark.sql.legacy.parquet.nanosAsLong "
-            "session-wide for the lifetime of this streaming query (source "
-            "%s stores int64-nanosecond timestamps); unrelated batch reads "
-            "of ns-parquet on this session will scan ts as bigint nanos",
-            source_dir,
-        )
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ts_type = "bigint"
-    elif kind == "ntz":
-        ts_type = "timestamp_ntz"
-    else:
-        ts_type = "timestamp"
-    reader = spark.readStream.schema(
-        f"event_id bigint, ts {ts_type}, user_id bigint, "
-        "event_type string, value double, props string"
-    )
+    reader = spark.readStream
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return _normalize_events_ts(reader.parquet(source_dir), kind)
+    return _read_events(reader, source_dir)
 
 
 def tumbling_counts_stream(

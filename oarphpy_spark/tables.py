@@ -11,44 +11,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-# Footer-probe cache: (path, mtime_ns, size) -> one of
-# 'ns' | 'ntz' | 'utc' | 'none'.  Keyed on stat so a regenerated
-# fixture re-probes, while steady-state table() calls stay probe-free.
-_TS_KIND_CACHE: dict[tuple[str, int, int], str] = {}
-
-
-def _probe_ts_kind_one(probe: str) -> str:
-    """Footer-only ts classification of ONE parquet file (cached on
-    (path, mtime, size) so steady-state calls never re-read)."""
-    st = os.stat(probe)
-    key = (probe, st.st_mtime_ns, st.st_size)
-    kind = _TS_KIND_CACHE.get(key)
-    if kind is None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        field = None
-        schema = pq.ParquetFile(probe).schema_arrow
-        if "ts" in schema.names:
-            field = schema.field("ts")
-        if field is None or not pa.types.is_timestamp(field.type):
-            kind = "none"
-        elif field.type.unit == "ns":
-            kind = "ns"
-        elif field.type.tz is None:
-            kind = "ntz"
-        else:
-            kind = "utc"
-        _TS_KIND_CACHE[key] = kind
-    return kind
-
-
-# Schema memo: path -> (stamp, schema inferred under that stamp).  A
-# hit reads with the schema given, which skips Spark's inference job
-# (one footer-reading job per call) while the file listing stays fresh.
-_SCHEMA_CACHE: dict[str, tuple[tuple, StructType]] = {}
+# Schema memo: key -> (files stamp, schema); inferred schemas under
+# (path, inference confs), declared events schemas under ("events",
+# path).  A hit reads with the schema given, which skips Spark's
+# inference job (or the events footer probe) while the file listing
+# stays fresh.
+_SCHEMA_CACHE: dict = {}
 
 # Session confs that change what Spark 4.1 infers from parquet
 # footers: the ``ParquetToSparkSchemaConverter(SQLConf)`` inputs, the
@@ -69,13 +38,27 @@ _INFERENCE_CONFS = (
     "spark.sql.variant.allowReadingShredded",
 )
 
+# The events table's declared schema, for batch and stream reads;
+# ``{ts}`` is the type its ``ts`` column is read as, per physical form
+# (see :func:`_events_ts_kind`).
+_EVENTS_SCHEMA = (
+    "event_id bigint, ts {ts}, user_id bigint, "
+    "event_type string, value double, props string"
+)
+_EVENTS_TS_TYPES = {
+    "ns": "bigint",
+    "ntz": "timestamp_ntz",
+    "utc": "timestamp",
+    "none": "timestamp",
+}
+
 
 def _files_stamp(path: str) -> tuple | None:
     """``(mtime_ns, size)`` of a file; for a directory, the sorted
     ``(relative name, mtime_ns, size)`` of every entry below it,
     skipping ``.``/``_``-prefixed names as Spark's listing does.
     ``None`` when ``path`` cannot be stat-ed locally (missing, or a
-    URI): the caller then infers, and Spark reports the error."""
+    URI): the caller then rebuilds, and Spark reports the error."""
     try:
         st = os.stat(path)
         if not os.path.isdir(path):
@@ -94,32 +77,13 @@ def _files_stamp(path: str) -> tuple | None:
         return None
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` that infers each path's schema once.
-    The memo entry is stamped with the files' stat and the current
-    values of :data:`_INFERENCE_CONFS`; a rewritten file, an added or
-    removed part file, or a flipped conf misses and re-infers."""
-    files = _files_stamp(path)
-    if files is None:
-        return spark.read.parquet(path)
-    stamp = (files, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
-    hit = _SCHEMA_CACHE.get(path)
-    if hit is not None and hit[0] == stamp:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMA_CACHE[path] = (stamp, df.schema)
-    return df
-
-
-def memo_on_table(memo: dict, key, sf_dir: str, name: str, build):
-    """``build()``, memoized in ``memo[key]`` until table ``name``
-    under ``sf_dir`` is rewritten: the entry is stamped with the
-    table's :func:`_files_stamp`, the stamp :func:`_read_parquet`
-    keys its schemas on, so a driver-side artifact derived from a
-    table (an index's dimensionality, its centroids, a filter's bits)
-    is rebuilt exactly when a fresh read of the table would differ.
-    A table whose files cannot be stat-ed is rebuilt on every call."""
-    stamp = _files_stamp(os.path.join(sf_dir, f"{name}.parquet"))
+def _memo_on_files(memo: dict, key, path: str, build):
+    """``build()``, memoized in ``memo[key]`` until the files at
+    ``path`` change: the entry is stamped with :func:`_files_stamp`,
+    so a rewritten file or an added or removed part file rebuilds.
+    This is the module's one rule for "this file changed". A path
+    that cannot be stat-ed is rebuilt on every call."""
+    stamp = _files_stamp(path)
     hit = memo.get(key)
     if stamp is not None and hit is not None and hit[0] == stamp:
         return hit[1]
@@ -128,19 +92,55 @@ def memo_on_table(memo: dict, key, sf_dir: str, name: str, build):
     return value
 
 
+def memo_on_table(memo: dict, key, sf_dir: str, name: str, build):
+    """``build()``, memoized in ``memo[key]`` until table ``name``
+    under ``sf_dir`` is rewritten (:func:`_memo_on_files`, the stamp
+    :func:`table` keys its schemas on), so a driver-side artifact
+    derived from a table (an index's dimensionality, its centroids, a
+    filter's bits) is rebuilt exactly when a fresh read of the table
+    would differ."""
+    return _memo_on_files(memo, key, os.path.join(sf_dir, f"{name}.parquet"), build)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers each path's schema once.
+    The memo entry is stamped with the files' stat and keyed on the
+    current values of :data:`_INFERENCE_CONFS`; a rewritten file, an
+    added or removed part file, or a flipped conf re-infers."""
+    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    schema = _memo_on_files(
+        _SCHEMA_CACHE, (path, confs), path, lambda: spark.read.parquet(path).schema
+    )
+    return spark.read.schema(schema).parquet(path)
+
+
+def _probe_ts_kind(probe: str) -> str:
+    """The physical form of ``ts`` in ONE parquet file, from its
+    footer (see :func:`_events_ts_kind`)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pq.ParquetFile(probe).schema_arrow
+    if "ts" not in schema.names or not pa.types.is_timestamp(schema.field("ts").type):
+        return "none"
+    ts_type = schema.field("ts").type
+    if ts_type.unit == "ns":
+        return "ns"
+    return "ntz" if ts_type.tz is None else "utc"
+
+
 def _events_ts_kind(path: str) -> str:
     """Classify the physical form of ``events.ts`` from parquet footers
     only (no row groups read): 'ns' (INT64 nanos — unscannable by Spark
     as a timestamp), 'ntz' (µs/ms with isAdjustedToUTC=false → Spark
-    infers TIMESTAMP_NTZ), 'utc' (µs/ms UTC-adjusted → TIMESTAMP), or
+    reads TIMESTAMP_NTZ), 'utc' (µs/ms UTC-adjusted → TIMESTAMP), or
     'none' (no ts column / not a timestamp).
 
     EVERY part file of a directory is probed (footers are a few KB
-    each, and the per-file cache makes repeat calls free): a directory
-    holding mixed physical forms — e.g. one ns part beside a µs part
-    after a partial fixture regeneration — cannot be classified by any
-    single kind and would either mis-schema the reader or die with
-    PARQUET_TYPE_ILLEGAL mid-scan, so it raises loudly here instead."""
+    each): a directory holding mixed physical forms — e.g. one ns part
+    beside a µs part after a partial fixture regeneration — cannot be
+    read under any single schema and would die with a type error
+    mid-scan, so it raises loudly here instead."""
     probes = [path]
     if os.path.isdir(path):
         probes = sorted(
@@ -149,7 +149,7 @@ def _events_ts_kind(path: str) -> str:
         )
         if not probes:
             return "none"
-    kinds = {_probe_ts_kind_one(p) for p in probes}
+    kinds = {_probe_ts_kind(p) for p in probes}
     if len(kinds) > 1:
         raise ValueError(
             f"mixed physical timestamp forms {sorted(kinds)} across part "
@@ -158,19 +158,46 @@ def _events_ts_kind(path: str) -> str:
     return kinds.pop()
 
 
-def _normalize_events_ts(df: DataFrame, kind: str) -> DataFrame:
-    """Turn the ``ts`` column of an events scan whose physical form is
-    ``kind`` (see :func:`_events_ts_kind`) into a UTC TIMESTAMP: int64
-    nanos via ``timestamp_micros(ts div 1000)`` (the same ns→µs
-    truncation DuckDB applies), TIMESTAMP_NTZ by a cast to TIMESTAMP;
-    'utc' and 'none' pass through. Shared by the batch loader
-    (:func:`table`) and the streaming scan
-    (``streaming.windows.stream_events``)."""
-    if kind == "ns":
+def _normalize_events_ts(df: DataFrame) -> DataFrame:
+    """Turn the declared ``ts`` column of an events scan into a UTC
+    TIMESTAMP: ``bigint`` nanos via ``timestamp_micros(ts div 1000)``
+    (the same ns→µs truncation DuckDB applies), ``timestamp_ntz`` by a
+    cast to TIMESTAMP, which reads the wall clock in the session
+    timezone (pinned UTC: DuckDB's reading of a naive TIMESTAMP);
+    ``timestamp`` passes through."""
+    ts_type = dict(df.dtypes)["ts"]
+    if ts_type == "bigint":
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if kind == "ntz":
+    if ts_type == "timestamp_ntz":
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def _read_events(reader, path: str) -> DataFrame:
+    """The events table at ``path`` (a parquet file or a directory of
+    part files) through ``reader``: ``spark.read`` for a batch scan,
+    ``spark.readStream`` for a stream. Both read under the one declared
+    schema, :data:`_EVENTS_SCHEMA`, so a batch read runs no inference
+    job and a stream gets the schema its file source requires.
+
+    ``ts`` has been written in three physical forms, and the footers
+    (:func:`_events_ts_kind`, memoized on the files' stat) pick the
+    type it is declared as; :func:`_normalize_events_ts` then turns
+    each into the same UTC TIMESTAMP column:
+
+    * int64 nanoseconds: Spark cannot scan it as a timestamp
+      (PARQUET_TYPE_ILLEGAL), but reads it as ``bigint`` under a
+      declared schema, with no session conf set;
+    * µs/ms with ``isAdjustedToUTC=false``: ``timestamp_ntz``;
+    * UTC-adjusted µs/ms: ``timestamp``.
+    """
+    schema = _memo_on_files(
+        _SCHEMA_CACHE,
+        ("events", path),
+        path,
+        lambda: _EVENTS_SCHEMA.format(ts=_EVENTS_TS_TYPES[_events_ts_kind(path)]),
+    )
+    return _normalize_events_ts(reader.schema(schema).parquet(path))
 
 
 TABLE_NAMES = (
@@ -190,75 +217,36 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one table. Plain ``spark.read.parquet`` so Catalyst gets a
-    pushdown-capable FileScan (predicates + column pruning reach the
-    parquet reader).
+    """Scan one table as a parquet FileScan, so predicates and column
+    pruning reach the parquet reader.
 
-    Each path's schema is inferred once (:func:`_read_parquet`): Spark
-    infers a parquet schema with one job per read, ~70 ms of pure
-    overhead, so a warm call instead passes the memoized schema to
-    ``spark.read.schema(...)`` and launches no job. The memo entry is
-    stamped with the file's ``(mtime_ns, size)`` — for a directory,
-    every non-hidden entry below it — and with the session's
-    schema-inference confs (``binaryAsString``, ``int96AsTimestamp``,
-    ``inferTimestampNTZ.enabled``, ``nanosAsLong``, ``caseSensitive``,
-    ``mergeSchema`` and the rest of :data:`_INFERENCE_CONFS`). A
-    rewritten, added or removed file or a changed conf re-infers; the
-    file listing itself is never memoized.
+    ``events`` is read under its declared schema (:func:`_read_events`,
+    shared with ``streaming.windows.stream_events``), with ``ts``
+    normalized to a UTC TIMESTAMP whatever its physical form; it never
+    launches a Spark job.
 
-    ``events.ts`` arrives in whatever physical form the fixture
-    generator used, and that has varied across driver regenerations;
-    all three forms normalize to the same UTC TIMESTAMP column:
+    Every other table's schema is inferred once per path
+    (:func:`_read_parquet`): Spark infers a parquet schema with one job
+    per read, ~70 ms of pure overhead, so a warm call instead passes
+    the memoized schema to ``spark.read.schema(...)`` and launches no
+    job. The memo entry is stamped with the file's ``(mtime_ns,
+    size)`` — for a directory, every non-hidden entry below it — and
+    keyed on the session's schema-inference confs (``binaryAsString``,
+    ``int96AsTimestamp``, ``inferTimestampNTZ.enabled``,
+    ``nanosAsLong``, ``caseSensitive``, ``mergeSchema`` and the rest of
+    :data:`_INFERENCE_CONFS`). A rewritten, added or removed file or a
+    changed conf re-infers; the file listing itself is never memoized.
 
-    * nanosecond parquet — unscannable as a timestamp
-      (PARQUET_TYPE_ILLEGAL); read as raw int64 nanos
-      (``spark.sql.legacy.parquet.nanosAsLong``) and convert JVM-side
-      with ``timestamp_micros(ts div 1000)`` — the same ns→µs
-      truncation DuckDB applies;
-    * µs/ms parquet with ``isAdjustedToUTC=false`` — Spark 4 infers
-      ``TIMESTAMP_NTZ`` (``spark.sql.parquet.inferTimestampNTZ``
-      defaults on); cast to TIMESTAMP, which interprets the naive
-      wall-clock in the session timezone — pinned UTC below, exactly
-      DuckDB's reading of a naive TIMESTAMP;
-    * UTC-adjusted parquet — already TIMESTAMP, no-op.
-
-    The session timezone is pinned to UTC here (runtime-settable conf):
-    ``year``/``date_trunc``/date casts are tz-dependent, and queries
-    must produce identical results under ANY caller-built session.
-
-    The physical form is decided by a cached pyarrow FOOTER probe (no
-    row groups read), so the ``nanosAsLong`` legacy conf is touched
-    only when the file really is int64-nanos — and then restored to
-    its prior value immediately after ``spark.read.parquet`` returns.
-    Spark captures the inferred bigint schema into the relation at
-    read() time, so later actions on the returned DataFrame stay
-    correct (verified by tests/test_ts_schema_drift.py); other parquet
-    reads on the same session never observe the conf.
+    The session timezone is pinned to UTC here (runtime-settable conf),
+    the only conf this module writes: ``year``/``date_trunc``/date
+    casts are tz-dependent, and queries must produce identical results
+    under ANY caller-built session.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name != "events":
-        return _read_parquet(spark, path)
-
-    kind = _events_ts_kind(path)
-    if kind == "ns":
-        conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-        prior = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "true")
-        try:
-            df = _read_parquet(spark, path)
-        finally:
-            if prior is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prior)
-    else:
-        df = _read_parquet(spark, path)
-    return _normalize_events_ts(df, kind)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
+    if name == "events":
+        return _read_events(spark.read, path)
+    return _read_parquet(spark, path)
 
 
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:

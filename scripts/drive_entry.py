@@ -1,5 +1,7 @@
-"""Emulates the driver's smoke + correctness harness against
-/root/repo/__spark_entry__.py at sf0.01 (the driver's t2 scale).
+"""Smoke and correctness check of this checkout's ``__spark_entry__.py``:
+``entry(spark)`` must return rows, and every query in ``queries()``
+must match its ``oracle_sql()`` query run in DuckDB over the same
+parquet (default sf_dir: sf0.01).
 
 Usage: python scripts/drive_entry.py [sf_dir]
 """
@@ -10,7 +12,7 @@ import importlib.util
 import os
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession  # noqa: E402

@@ -29,7 +29,7 @@ import subprocess
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 ORACLE_TIMEOUT_S = float(os.environ.get("PARITY_ORACLE_TIMEOUT_S", "180"))

@@ -9,13 +9,18 @@ tests pin its contract without running Spark.
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 
 
+# The bench.py of the checkout this test file belongs to.
+_BENCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py"
+)
+
+
 def _load_bench():
-    spec = importlib.util.spec_from_file_location(
-        "bench_under_test", "/root/repo/bench.py"
-    )
+    spec = importlib.util.spec_from_file_location("bench_under_test", _BENCH)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod

@@ -190,7 +190,9 @@ _CITING = ("oarphpy_spark", "tests", "scripts", "bench.py", "README.md",
 
 def test_no_citation_of_missing_artifacts_or_scripts():
     """Code and docs cite no per-round artifact file (none is kept in
-    the repo) and no ``scripts/*.py`` that does not exist."""
+    the repo), no ``scripts/*.py`` that does not exist, and not the
+    checkout's own absolute path: a file that hard-codes it reads the
+    first checkout's files from any other."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     paths = []
     for entry in _CITING:
@@ -210,6 +212,6 @@ def test_no_citation_of_missing_artifacts_or_scripts():
                     f"scripts/{m}.py"
                     for m in _SCRIPT_PATH.findall(line)
                     if not os.path.isfile(os.path.join(repo, "scripts", f"{m}.py"))
-                ]
+                ] + [repo] * (repo in line)
                 dangling.extend(f"{rel}:{lineno}: {n}" for n in names)
     assert not dangling, dangling

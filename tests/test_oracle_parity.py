@@ -39,6 +39,14 @@ def test_entry_smoke(spark):
     assert list(oracles) == [n for n in names if n in oracles]
 
 
+def test_listagg_leaves_no_temp_view(spark):
+    """q_fn_listagg binds its input as a query argument, not as a
+    session-global temp view another client could see or rebind."""
+    problems = run_parity(spark, "q_fn_listagg", SF_SMALL)
+    assert not problems, problems
+    assert "_listagg_pairs" not in {t.name for t in spark.catalog.listTables()}
+
+
 # Slow tier: zero-vector ANSI edge-case sweep over the sim family
 # (~25 s); per-query oracles above stay default.
 @pytest.mark.slow

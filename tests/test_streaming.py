@@ -191,3 +191,33 @@ def test_idempotent_sink_end_to_end_stream(spark, tmp_path):
     assert q.awaitTermination(120)
     n_batch = table(spark, SF_SMALL, "events").count()
     assert spark.read.parquet(root).count() == n_batch
+
+
+def test_ns_stream_leaves_session_conf_unset(spark, tmp_path):
+    """Draining a stream over int64-nanosecond events sets no session
+    conf: ``nanosAsLong`` stays unset, so an unrelated ns parquet read
+    on the same session still fails as on a fresh one."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from .test_ts_schema_drift import _US, _forms
+
+    conf_key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(conf_key)
+    ns_dir = _forms(str(tmp_path))["nanos_int64"]
+    events = stream_events(spark, os.path.join(ns_dir, "events.parquet"))
+    got = run_to_memory_sink(
+        events.select("event_id", F.unix_micros("ts").alias("us")),
+        "t_ns_conf_unset",
+        output_mode="append",
+    )
+    assert sorted(r["us"] for r in got.collect()) == sorted(_US)
+    assert spark.conf.get(conf_key, None) is None
+
+    other = os.path.join(str(tmp_path), "other.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1, 2], pa.timestamp("ns"))}), other)
+    with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+        spark.read.parquet(other).collect()

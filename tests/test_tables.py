@@ -66,6 +66,17 @@ def test_added_part_file_is_read(spark, tmp_path):
     assert table(spark, str(tmp_path), "nation").count() == 3
 
 
+def test_cold_events_read_launches_no_job(spark, tmp_path):
+    """events is read under its declared schema, so even a cold read of
+    a fresh directory runs no inference job, whatever form ``ts`` has."""
+    from .test_ts_schema_drift import _forms
+
+    for form, d in _forms(str(tmp_path)).items():
+        df, n_jobs = _jobs_launched(spark, lambda: table(spark, d, "events"))
+        assert n_jobs == 0, form
+        assert dict(df.dtypes)["ts"] == "timestamp", form
+
+
 def test_inference_conf_change_reinfers_schema(spark, tmp_path):
     pq.write_table(
         pa.table({"k": [1], "b": pa.array([b"x"], pa.binary())}),
