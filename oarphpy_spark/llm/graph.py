@@ -307,9 +307,10 @@ def sssp(
     exits early once the frontier empties (sound: further rounds are
     no-ops; the frontier's size is counted inside its checkpoint
     job). The symmetrized edge table is built ONCE,
-    hash-repartitioned on its join key and persisted, so only the
-    small frontier relation shuffles each round; lineage is truncated
-    per round (``util/checkpoints.truncate_lineage``).
+    hash-repartitioned on its join key and persisted; the small
+    frontier and distance relations are broadcast to the round's joins
+    while they hold at most ``_BROADCAST_MAX_ROWS`` rows, and lineage
+    is truncated per round (``util/checkpoints.truncate_lineage``).
 
     ``source`` is a literal node id. Returns (node, dist) for nodes
     reachable within ``rounds`` hops; dist is LONG when weights are
@@ -351,7 +352,11 @@ def sssp(
         )
     )
     frontier = dist
+    # Row counts of the frontier and (an upper bound of) dist, so the
+    # round's joins broadcast them while they are small.
+    n_frontier = n_dist = 1
     for _ in range(rounds):
+        frontier = _broadcast_if_small(frontier, n_frontier)
         relaxed = (
             sym.join(frontier, sym.s == frontier.node)
             .select(
@@ -362,14 +367,16 @@ def sssp(
             .agg(F.min("nd").alias("nd"))
         )
         improved, obs = observed(
-            relaxed.join(dist, "node", "left")
+            relaxed.join(_broadcast_if_small(dist, n_dist), "node", "left")
             .filter(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
             .select("node", F.col("nd").alias("dist")),
             "sssp",
         )
         improved = truncate_lineage(improved, eager=True)
-        if obs.get["n_rows"] == 0:
+        n_frontier = obs.get["n_rows"]
+        if n_frontier == 0:
             break  # fixpoint: every further round is a no-op
+        n_dist += n_frontier
         dist = truncate_lineage(
             dist.unionByName(improved)
             .groupBy("node")
@@ -511,12 +518,41 @@ def triangle_count(
     return hold_caches(out, *persisted)
 
 
-# Keep-set size (node ids) up to which a kcore round broadcasts its
-# keep set to both semi-joins. Spark cannot size a checkpointed table,
-# so unhinted it shuffles the keep set before AQE turns the join into
-# a broadcast: extra jobs in every round of a job-latency-bound peel.
-# 2^20 longs are 8 MB, far below the presets' 64 MB broadcast bound.
-_KCORE_BROADCAST_KEEP_MAX_ROWS = 1 << 20
+# Row count up to which a round's small checkpointed relation (the
+# kcore keep set, the sssp frontier and distances, the ktruss deleted
+# edges) is hinted as a broadcast. Spark cannot size a checkpointed
+# table, so unhinted it shuffles that side before AQE turns the join
+# into a broadcast: extra jobs in every round of a job-latency-bound
+# loop. 2^20 rows of one or two longs are 8-16 MB, far below the
+# presets' 64 MB broadcast bound.
+_BROADCAST_MAX_ROWS = 1 << 20
+# kcore's own bound, so a test can force its shuffled keep-set path.
+_KCORE_BROADCAST_KEEP_MAX_ROWS = _BROADCAST_MAX_ROWS
+
+
+def _broadcast_if_small(df: DataFrame, n_rows: int) -> DataFrame:
+    return F.broadcast(df) if n_rows <= _BROADCAST_MAX_ROWS else df
+
+
+# One kcore round as one statement: the degree table of the original
+# edges ``{e}`` semi-joined on both endpoints to the keep set of the
+# last round's degree table ``{deg}``; the first round has no keep set.
+_KCORE_FIRST_ROUND_SQL = """
+SELECT node, COUNT(*) AS core_deg
+FROM (SELECT explode(array(lo, hi)) AS node FROM {e})
+GROUP BY node
+"""
+_KCORE_ROUND_SQL = """
+WITH keep AS (SELECT node FROM {{deg}} WHERE core_deg >= {{k}})
+SELECT node, COUNT(*) AS core_deg
+FROM (
+  SELECT {hint} explode(array(e.lo, e.hi)) AS node
+  FROM {{e}} e
+  LEFT SEMI JOIN keep ka ON e.lo = ka.node
+  LEFT SEMI JOIN keep kb ON e.hi = kb.node
+)
+GROUP BY node
+"""
 
 
 def kcore(
@@ -552,7 +588,8 @@ def kcore(
     released as soon as the next one is built. The same job counts
     the keep set, which is broadcast to the next round's semi-joins
     while it holds at most ``_KCORE_BROADCAST_KEEP_MAX_ROWS`` nodes
-    and shuffled beyond that. Raises if ``max_iter``
+    and shuffled beyond that. A round's plan is one ``spark.sql``
+    statement (one parse, one analysis). Raises if ``max_iter``
     rounds don't reach the fixpoint — callers (and the unrolled SQL
     oracle, whose round count must be >= the real one; extra unrolled
     rounds are no-ops at the fixpoint because peeling is monotone)
@@ -583,20 +620,22 @@ def kcore(
             .filter(F.col("lo") != F.col("hi"))
             .distinct()
         )
+    spark = e0.sparkSession
     deg, n_keep = None, 0
     for _ in range(max_iter):
-        e = e0
-        if deg is not None:
-            keep = deg.filter(F.col("core_deg") >= k).select("node")
-            if n_keep <= _KCORE_BROADCAST_KEEP_MAX_ROWS:
-                keep = F.broadcast(keep)
-            e = e0.join(
-                keep.withColumnRenamed("node", "lo"), "lo", "left_semi"
-            ).join(keep.withColumnRenamed("node", "hi"), "hi", "left_semi")
+        if deg is None:
+            round_df = spark.sql(_KCORE_FIRST_ROUND_SQL, e=e0)
+        else:
+            hint = (
+                "/*+ BROADCAST(ka, kb) */"
+                if n_keep <= _KCORE_BROADCAST_KEEP_MAX_ROWS
+                else ""
+            )
+            round_df = spark.sql(
+                _KCORE_ROUND_SQL.format(hint=hint), e=e0, deg=deg, k=k
+            )
         deg_next, obs = observed(
-            e.select(F.explode(F.array("lo", "hi")).alias("node"))
-            .groupBy("node")
-            .agg(F.count("*").alias("core_deg")),
+            round_df,
             "kcore",
             F.count("*").alias("n"),
             F.count(F.when(F.col("core_deg") < k, 1)).alias("below"),
@@ -740,9 +779,11 @@ def ktruss(
       edges deleted): every destroyed triangle contains a deleted
       edge, so the update enumerates only triangles touching the
       deletions (work proportional to the deleted edges' degrees) and
-      subtracts them from the survivors' supports — guide §2.4. At
-      sf0.1/k=12 this never fires (the peel deletes 97.6% then 66.6%);
-      it exists for the many-small-rounds regime of real peels.
+      subtracts them from the survivors' supports — guide §2.4. The
+      deleted edges are broadcast to both of its joins while they hold
+      at most ``_BROADCAST_MAX_ROWS`` rows. At sf0.1/k=12 this never
+      fires (the peel deletes 97.6% then 66.6%); it exists for the
+      many-small-rounds regime of real peels.
 
     The per-round support table is CHECKPOINTED (it is |E|-bounded):
     the post-convergence support join then re-reads it instead of
@@ -907,7 +948,7 @@ def ktruss(
                 e.join(e_next, ["lo", "hi"], "left_anti")
             )
             made.append(deleted)
-            pending = (keeps, deleted, e)
+            pending = (keeps, _broadcast_if_small(deleted, n_deleted), e)
         else:
             pending = None
         # Checkpoints from two rounds back are unreferenced once this

@@ -27,50 +27,53 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _quote_ident(name: str) -> str:
+    """``name`` as a backquoted Spark SQL identifier, safe to splice
+    into a statement formatted with ``str.format`` (braces doubled)."""
+    quoted = "`" + name.replace("`", "``") + "`"
+    return quoted.replace("{", "{{").replace("}", "}}")
+
+
+# One statement: NULL/NaN rows are excluded (numpy semantics; without
+# the filter LEAST's null-skipping would put them all in the last
+# bucket), the 1-row min/max relation is broadcast to both cross joins
+# (zero shuffle), a degenerate range (min == max) puts everything in
+# bucket 0, and the LEFT JOIN from range(n) keeps empty buckets.
+_HISTOGRAM_SQL = """
+WITH v AS (
+  SELECT x FROM (SELECT CAST({col} AS DOUBLE) AS x FROM {{df}})
+  WHERE x IS NOT NULL AND NOT isnan(x)
+), mm AS (
+  SELECT MIN(x) AS mn, MAX(x) AS mx FROM v
+), c AS (
+  SELECT /*+ BROADCAST(mm) */
+         CAST(CASE WHEN mn = mx THEN 0
+                   ELSE LEAST(FLOOR((x - mn) / ((mx - mn) / {n})), {n} - 1)
+              END AS BIGINT) AS bucket,
+         COUNT(*) AS `count`
+  FROM v CROSS JOIN mm
+  GROUP BY 1
+)
+SELECT /*+ BROADCAST(mm) */
+       b.id AS bucket,
+       mn + b.id * (mx - mn) / {n} AS lo,
+       mn + (b.id + 1) * (mx - mn) / {n} AS hi,
+       COALESCE(c.`count`, 0) AS `count`
+FROM range({n}) b CROSS JOIN mm LEFT JOIN c ON b.id = c.bucket
+"""
+
+
 def df_histogram(df: DataFrame, col: str, num_bins: int) -> DataFrame:
     """Fixed-width histogram of a numeric column.
 
     Returns a DataFrame (bucket BIGINT, lo DOUBLE, hi DOUBLE, count
     BIGINT) with exactly ``num_bins`` rows, empty buckets included —
-    numpy-compatible edges: lo_i = min + i*width, width=(max-min)/bins.
+    numpy-compatible edges: lo_i = min + i*width, width=(max-min)/bins,
+    the last bucket closed. The plan is one ``spark.sql`` statement
+    over ``df`` bound as an argument: one parse and one analysis.
     """
-    # NULL/NaN rows are excluded (numpy semantics); without this filter
-    # F.least's null-skipping would dump them all into the last bucket.
-    x0 = F.col(col).cast("double")
-    df = df.filter(x0.isNotNull() & ~F.isnan(x0))
-    mm = df.agg(
-        F.min(F.col(col).cast("double")).alias("mn"),
-        F.max(F.col(col).cast("double")).alias("mx"),
-    )
-    spark = df.sparkSession
-    buckets = spark.range(num_bins).select(F.col("id").alias("bucket"))
-    # Cross join with the 1-row min/max relation: broadcast, zero shuffle.
-    x = F.col(col).cast("double")
-    # Degenerate range (min == max) puts everything in bucket 0.
-    bucket_expr = F.when(F.col("mn") == F.col("mx"), F.lit(0)).otherwise(
-        F.least(
-            F.floor((x - F.col("mn")) / ((F.col("mx") - F.col("mn")) / num_bins)),
-            F.lit(num_bins - 1),
-        )
-    )
-    counts = (
-        df.crossJoin(F.broadcast(mm))
-        .select(bucket_expr.cast("long").alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count("*").alias("count"))
-    )
-    return (
-        buckets.join(F.broadcast(mm))
-        .join(counts, "bucket", "left")
-        .select(
-            "bucket",
-            (F.col("mn") + F.col("bucket") * (F.col("mx") - F.col("mn")) / num_bins).alias("lo"),
-            (F.col("mn") + (F.col("bucket") + 1) * (F.col("mx") - F.col("mn")) / num_bins).alias(
-                "hi"
-            ),
-            F.coalesce(F.col("count"), F.lit(0)).alias("count"),
-        )
-    )
+    text = _HISTOGRAM_SQL.format(col=_quote_ident(col), n=int(num_bins))
+    return df.sparkSession.sql(text, df=df)
 
 
 def histogram_to_numpy(hist_df: DataFrame) -> tuple[list[int], list[float]]:

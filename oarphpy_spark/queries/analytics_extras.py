@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from oarphpy_spark.operators.prefix import with_global_row_number
 from oarphpy_spark.registry import query
-from oarphpy_spark.tables import register_temp_views, table
+from oarphpy_spark.tables import bound_sql, plain_sql, table
 from oarphpy_spark.util.checkpoints import truncate_lineage
 
 # Canonical weighted co-purchase edges: parts sharing an order,
@@ -493,7 +493,7 @@ def q_anomaly_rolling_z(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RECURSIVE_REACH_SQL = """
 WITH RECURSIVE e AS (
   SELECT DISTINCT a.l_partkey AS s, b.l_partkey AS d
-  FROM lineitem a JOIN lineitem b
+  FROM {lineitem} a JOIN {lineitem} b
     ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
 ), sym AS (
   SELECT s, d FROM e UNION ALL SELECT d AS s, s AS d FROM e
@@ -511,7 +511,7 @@ FROM reach GROUP BY node
 """
 
 
-@query("q_sql_recursive_reach", oracle=_RECURSIVE_REACH_SQL)
+@query("q_sql_recursive_reach", oracle=plain_sql(_RECURSIVE_REACH_SQL))
 def q_sql_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS hop distance (<= 3 hops) from the minimum part over the
     co-purchase graph as ONE recursive CTE — the same ANSI
@@ -525,8 +525,7 @@ def q_sql_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     move the wall clock). The DataFrame-native BFS with explicit
     partitioning control is q_sssp/q_nhop_reach; this one certifies
     the SQL surface."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_RECURSIVE_REACH_SQL)
+    return bound_sql(spark, sf_dir, _RECURSIVE_REACH_SQL)
 
 
 @query(
@@ -1356,12 +1355,13 @@ def q_udtf_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
                     break
 
     spark.udtf.register("oarphpy_chunk_doc", ChunkDoc)
-    register_temp_views(spark, sf_dir)
-    return spark.sql(
+    return bound_sql(
+        spark,
+        sf_dir,
         """
         SELECT d.doc_id, c.chunk_idx, c.chunk_len, c.chunk_hash
-        FROM documents d, LATERAL oarphpy_chunk_doc(d.text) c
-        """
+        FROM {documents} d, LATERAL oarphpy_chunk_doc(d.text) c
+        """,
     )
 
 

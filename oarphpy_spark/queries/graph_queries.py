@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from oarphpy_spark.registry import query
-from oarphpy_spark.tables import table
+from oarphpy_spark.tables import bound_sql, table
 from oarphpy_spark.util.checkpoints import (
     hold_caches,
     release_shared,
@@ -37,46 +37,42 @@ _COPURCHASE_EDGES_SQL = """
 _UV_DOMAIN = 2 ** 32
 
 
-def _domain_checked(col) -> "F.Column":
-    """Packed-key id-domain guard: both link-prediction paths pack
-    (u, v) as shiftleft(u, 32) + v, which is injective only for ids
-    in [0, 2^32). Fail the job loudly at the |E|-row edge relation
+def _domain_checked_sql(col: str) -> str:
+    """Packed-key id-domain guard, as a SQL expression over column
+    ``col``: both link-prediction paths pack (u, v) as
+    shiftleft(u, 32) + v, which is injective only for ids in
+    [0, 2^32). Fail the job loudly at the |E|-row edge relation
     (two integer compares per edge, BEFORE the quadratic wedge
     expansion) if an id leaves the domain — a silent violation would
     corrupt the group key, the anti-join, and the unpacked u/v output
     rather than erroring."""
-    ok = (col >= 0) & (col < F.lit(_UV_DOMAIN).cast("bigint"))
-    return F.when(ok, col).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("packed-key id out of [0, 2^32): "),
-                col.cast("string"),
-            )
-        )
+    return (
+        f"CASE WHEN {col} >= 0 AND {col} < {_UV_DOMAIN} THEN {col} "
+        f"ELSE raise_error(concat('packed-key id out of [0, 2^32): ', "
+        f"CAST({col} AS STRING))) END"
     )
 
 
 def _domain_checked_edges(pr: DataFrame) -> DataFrame:
-    return pr.select(
-        _domain_checked(F.col("s")).alias("s"),
-        _domain_checked(F.col("d")).alias("d"),
+    return pr.selectExpr(
+        f"{_domain_checked_sql('s')} AS s", f"{_domain_checked_sql('d')} AS d"
     )
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.alias("a")
-    b = li.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("s"), F.col("b.l_partkey").alias("d")
-        )
-        .distinct()
+    """The co-purchase edge relation (s, d) as one statement: the
+    DISTINCT self-join ``_COPURCHASE_EDGES_SQL`` over the lineitem
+    table bound as an argument (the CTE named ``lineitem`` shadows any
+    catalog table), with the packed-key domain check on both ids (it
+    only raises, never filters)."""
+    return bound_sql(
+        spark,
+        sf_dir,
+        f"""
+        WITH lineitem AS (SELECT l_orderkey, l_partkey FROM {{lineitem}})
+        SELECT {_domain_checked_sql("s")} AS s, {_domain_checked_sql("d")} AS d
+        FROM ({_COPURCHASE_EDGES_SQL}) e
+        """,
     )
 
 
@@ -88,16 +84,12 @@ def _shared_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf_dir) and shared by every graph query over it — triangles,
     k-core, k-truss, degree stats, assortativity, both link-prediction
     paths — instead of each re-deriving the DISTINCT lineitem
-    self-join, the biggest subtree in each of those plans. Same rows
-    as ``_copurchase_edges`` (the domain check only raises, never
-    filters)."""
+    self-join, the biggest subtree in each of those plans."""
     return session_shared(
         spark,
         sf_dir,
         "copurchase_edges",
-        lambda: truncate_lineage(
-            _domain_checked_edges(_copurchase_edges(spark, sf_dir))
-        ),
+        lambda: truncate_lineage(_copurchase_edges(spark, sf_dir)),
     )
 
 

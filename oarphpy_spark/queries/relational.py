@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from oarphpy_spark.registry import query
-from oarphpy_spark.tables import table
+from oarphpy_spark.tables import bound_sql, plain_sql, table
 
 
 # ---------------------------------------------------------------------------
@@ -887,9 +887,9 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SET_OPS_ALL_SQL = """
 WITH a AS (
-  SELECT o_orderpriority AS p FROM orders WHERE o_orderstatus = 'F'
+  SELECT o_orderpriority AS p FROM {orders} WHERE o_orderstatus = 'F'
 ), b AS (
-  SELECT o_orderpriority AS p FROM orders WHERE o_orderstatus = 'O'
+  SELECT o_orderpriority AS p FROM {orders} WHERE o_orderstatus = 'O'
 ), i AS (
   SELECT p FROM a INTERSECT ALL SELECT p FROM b
 ), e AS (
@@ -904,7 +904,7 @@ ORDER BY op, p
 """
 
 
-@query("q_set_ops_all", oracle=_SET_OPS_ALL_SQL)
+@query("q_set_ops_all", oracle=plain_sql(_SET_OPS_ALL_SQL))
 def q_set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiset set operations — INTERSECT ALL (per-value min of the
     two multiplicities) and EXCEPT ALL (truncated multiplicity
@@ -915,7 +915,4 @@ def q_set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     greatest(c1-c2,0) copies — one shuffle on the value, no join,
     the same shape DuckDB uses. Counts re-aggregated per value so
     the result is a compact certificate of the multiset."""
-    from oarphpy_spark.tables import register_temp_views
-
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_SET_OPS_ALL_SQL)
+    return bound_sql(spark, sf_dir, _SET_OPS_ALL_SQL)

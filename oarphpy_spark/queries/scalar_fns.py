@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from oarphpy_spark.registry import query
-from oarphpy_spark.tables import table
+from oarphpy_spark.tables import bound_sql, table
 
 
 @query(
@@ -530,18 +530,15 @@ def q_fn_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes a concatenated column value-hashable at all. Applied to
     the distinct (nation, segment) pairs so the aggregate input is
     bounded; the WITHIN GROUP sort is per-key over <= 5 rows."""
-    cust = table(spark, sf_dir, "customer")
-    pairs = cust.select("c_nationkey", "c_mktsegment").distinct()
-    # A DataFrame argument binds under a unique view name that PySpark
-    # drops after analysis, so no session-global temp view is left.
-    return spark.sql(
+    return bound_sql(
+        spark,
+        sf_dir,
         """
         SELECT c_nationkey AS nationkey,
                CAST(COUNT(*) AS BIGINT) AS n,
                listagg(c_mktsegment, '|')
                  WITHIN GROUP (ORDER BY c_mktsegment) AS segments
-        FROM {pairs}
+        FROM (SELECT DISTINCT c_nationkey, c_mktsegment FROM {customer})
         GROUP BY c_nationkey ORDER BY nationkey
         """,
-        pairs=pairs,
     )

@@ -1,7 +1,8 @@
 """SQL-string entry path: the engine is equally drivable via
-``spark.sql`` over registered views — same Catalyst plans as the
-DataFrame API. These queries register the star schema as temp views
-and run ANSI SQL verbatim (which doubles as near-oracle SQL).
+``spark.sql`` — same Catalyst plans as the DataFrame API. These
+queries run ANSI SQL verbatim (which doubles as near-oracle SQL), with
+the tables each statement names bound as arguments
+(``tables.bound_sql``), so no query writes a session-global view.
 """
 
 from __future__ import annotations
@@ -10,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oarphpy_spark.registry import query
-from oarphpy_spark.tables import register_temp_views, table
+from oarphpy_spark.tables import bound_sql, plain_sql, table
 
 
 _Q3_SQL = """
@@ -18,9 +19,9 @@ SELECT l.l_orderkey,
        ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
        date_format(o.o_orderdate, 'yyyy-MM-dd') AS orderdate,
        o.o_orderpriority
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+FROM {customer} c
+JOIN {orders} o ON c.c_custkey = o.o_custkey
+JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
 WHERE c.c_mktsegment = 'BUILDING'
   AND o.o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
   AND l.l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
@@ -50,10 +51,9 @@ LIMIT 20
 )
 def q_sql_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 (shipping priority) submitted as a SQL string — the
-    spark.sql front door over registered views. Catalyst still pushes
+    spark.sql front door over bound tables. Catalyst still pushes
     both date predicates into the scans and broadcasts customer."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_Q3_SQL)
+    return bound_sql(spark, sf_dir, _Q3_SQL)
 
 
 @query(
@@ -128,29 +128,30 @@ def q_sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 (forecasting revenue change) via spark.sql: every
     predicate pushes into the parquet scan; the aggregation is a single
     partial+final pass with no shuffle of data rows."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(
+    return bound_sql(
+        spark,
+        sf_dir,
         """
         SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue,
                COUNT(*) AS n_items
-        FROM lineitem
+        FROM {lineitem}
         WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
           AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
           AND l_discount BETWEEN 0.05 AND 0.07
           AND l_quantity < 24
-        """
+        """,
     )
 
 
 _Q5_SQL = """
 SELECT n.n_name,
        ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
+FROM {customer} c
+JOIN {orders} o ON c.c_custkey = o.o_custkey
+JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
+JOIN {supplier} s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
+JOIN {nation} n ON s.s_nationkey = n.n_nationkey
+JOIN {region} r ON n.n_regionkey = r.r_regionkey
 WHERE r.r_name = 'ASIA'
   AND o.o_orderdate >= TIMESTAMP '1994-01-01 00:00:00'
   AND o.o_orderdate < TIMESTAMP '1996-01-01 00:00:00'
@@ -187,8 +188,7 @@ def q_sql_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (spec: one year) so the tiny test scale factors produce
     non-trivial per-nation groups — do not compare revenue against
     published Q5 numbers."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_Q5_SQL)
+    return bound_sql(spark, sf_dir, _Q5_SQL)
 
 
 _Q18_SQL = """
@@ -196,11 +196,11 @@ SELECT c.c_name, c.c_custkey, o.o_orderkey,
        date_format(o.o_orderdate, 'yyyy-MM-dd') AS orderdate,
        ROUND(o.o_totalprice, 2) AS totalprice,
        ROUND(SUM(l.l_quantity), 2) AS total_qty
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+FROM {customer} c
+JOIN {orders} o ON c.c_custkey = o.o_custkey
+JOIN {lineitem} l ON o.o_orderkey = l.l_orderkey
 WHERE o.o_orderkey IN (
-  SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
+  SELECT l_orderkey FROM {lineitem} GROUP BY l_orderkey
   HAVING SUM(l_quantity) > 270
 )
 GROUP BY c.c_name, c.c_custkey, o.o_orderkey,
@@ -239,8 +239,7 @@ def q_sql_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     (spec: 300) and LIMIT 50 (spec: 100) so every test scale factor
     has a non-empty, bounded result — do not compare against published
     Q18 numbers."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_Q18_SQL)
+    return bound_sql(spark, sf_dir, _Q18_SQL)
 
 
 _Q10_SQL = """
@@ -248,10 +247,10 @@ SELECT c.c_custkey,
        c.c_name,
        ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
        n.n_name
-FROM customer c
-JOIN orders o    ON c.c_custkey = o.o_custkey
-JOIN lineitem l  ON l.l_orderkey = o.o_orderkey
-JOIN nation n    ON c.c_nationkey = n.n_nationkey
+FROM {customer} c
+JOIN {orders} o    ON c.c_custkey = o.o_custkey
+JOIN {lineitem} l  ON l.l_orderkey = o.o_orderkey
+JOIN {nation} n    ON c.c_nationkey = n.n_nationkey
 WHERE o.o_orderdate >= TIMESTAMP '1996-10-01 00:00:00'
   AND o.o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
   AND l.l_returnflag = 'R'
@@ -261,7 +260,7 @@ LIMIT 20
 """
 
 
-@query("q_sql_tpch_q10", oracle=_Q10_SQL)
+@query("q_sql_tpch_q10", oracle=plain_sql(_Q10_SQL))
 def q_sql_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 (returned-item reporting): 4-table join, one quarter
     of orders, 'R'-flag lineitems only, top 20 customers by lost
@@ -271,8 +270,7 @@ def q_sql_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle hash join at 100 TB. ORDER BY carries c_custkey as the
     deterministic tie-break (the spec's revenue-only sort is
     underdetermined)."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_Q10_SQL)
+    return bound_sql(spark, sf_dir, _Q10_SQL)
 
 
 @query(
@@ -299,11 +297,11 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q4_SQL = """
 SELECT o.o_orderpriority, COUNT(*) AS order_count
-FROM orders o
+FROM {orders} o
 WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND o.o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
   AND EXISTS (
-    SELECT 1 FROM lineitem l
+    SELECT 1 FROM {lineitem} l
     WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate
   )
 GROUP BY o.o_orderpriority
@@ -331,8 +329,7 @@ def q_sql_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT SEMI join on orderkey — the orders side never duplicates no
     matter how many lineitems match, and the date predicate pushes
     into the orders scan before the join."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_Q4_SQL)
+    return bound_sql(spark, sf_dir, _Q4_SQL)
 
 
 _Q12_SQL = """
@@ -341,7 +338,7 @@ SELECT l.l_returnflag,
                 THEN 1 ELSE 0 END) AS high_line_count,
        SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
                 THEN 1 ELSE 0 END) AS low_line_count
-FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+FROM {orders} o JOIN {lineitem} l ON o.o_orderkey = l.l_orderkey
 WHERE l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l.l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
 GROUP BY l.l_returnflag
@@ -367,8 +364,7 @@ def q_sql_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     stands in for the fixture's missing l_shipmode): equi-join plus
     CONDITIONAL aggregation — both CASE branches accumulate in the
     same partial agg, one pass, no second join or union."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_Q12_SQL)
+    return bound_sql(spark, sf_dir, _Q12_SQL)
 
 
 _Q14_SQL = """
@@ -376,7 +372,7 @@ SELECT ROUND(100.00 * SUM(CASE WHEN p.p_type = 'PROMO'
                                THEN l.l_extendedprice * (1 - l.l_discount)
                                ELSE 0 END)
              / SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS promo_revenue_pct
-FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+FROM {lineitem} l JOIN {part} p ON l.l_partkey = p.p_partkey
 WHERE l.l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
   AND l.l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
 """
@@ -399,19 +395,18 @@ def q_sql_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem scan, part broadcast (dim ≪ fact at every SF), and the
     promo/total ratio computed from two conditional sums in ONE
     aggregation — never two scans."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_Q14_SQL)
+    return bound_sql(spark, sf_dir, _Q14_SQL)
 
 
 _Q16_SQL = """
 SELECT p.p_brand, p.p_type, p.p_size,
        COUNT(DISTINCT l.l_suppkey) AS supplier_cnt
-FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+FROM {lineitem} l JOIN {part} p ON l.l_partkey = p.p_partkey
 WHERE p.p_brand <> 'Brand#1'
   AND p.p_type <> 'PROMO'
   AND p.p_size IN (1, 5, 10, 15, 20, 25, 30, 35)
   AND l.l_suppkey NOT IN (
-    SELECT s_suppkey FROM supplier WHERE s_acctbal < 0
+    SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0
   )
 GROUP BY p.p_brand, p.p_type, p.p_size
 """
@@ -438,14 +433,13 @@ def q_sql_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     the complaints filter): NOT IN compiles to a null-aware ANTI join
     against a broadcast subquery, part predicates prune before the
     join, and COUNT(DISTINCT) runs as a two-phase expand+agg."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_Q16_SQL)
+    return bound_sql(spark, sf_dir, _Q16_SQL)
 
 
 _Q19_SQL = """
 SELECT ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
        COUNT(*) AS n_items
-FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+FROM {lineitem} l JOIN {part} p ON p.p_partkey = l.l_partkey
 WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15
        AND l.l_quantity >= 1 AND l.l_quantity <= 30)
    OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 1 AND 25
@@ -476,16 +470,15 @@ def q_sql_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole, but Catalyst extracts the common l_quantity bounds and the
     per-side implied predicates; part stays broadcast so the disjunction
     evaluates stream-side with zero extra shuffles."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_Q19_SQL)
+    return bound_sql(spark, sf_dir, _Q19_SQL)
 
 
 _CORR_SCALAR_SQL = """
 SELECT p.p_partkey, p.p_brand,
        ROUND(p.p_retailprice, 2) AS retailprice
-FROM part p
+FROM {part} p
 WHERE p.p_retailprice = (
-  SELECT MIN(p2.p_retailprice) FROM part p2 WHERE p2.p_brand = p.p_brand
+  SELECT MIN(p2.p_retailprice) FROM {part} p2 WHERE p2.p_brand = p.p_brand
 )
 """
 
@@ -507,14 +500,13 @@ def q_sql_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlation key — one extra aggregate and one equi-join, never a
     per-row re-scan. The de-correlation IS the scale story: a naive
     nested evaluation would be O(rows x groups) scans."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_CORR_SCALAR_SQL)
+    return bound_sql(spark, sf_dir, _CORR_SCALAR_SQL)
 
 
 _LATERAL_SQL = """
 SELECT n.n_name, t.c_name, t.c_acctbal
-FROM nation n, LATERAL (
-  SELECT c_name, c_acctbal FROM customer
+FROM {nation} n, LATERAL (
+  SELECT c_name, c_acctbal FROM {customer}
   WHERE c_nationkey = n.n_nationkey
   ORDER BY c_acctbal DESC, c_name LIMIT 3
 ) t
@@ -522,20 +514,19 @@ ORDER BY n.n_name, t.c_acctbal DESC, t.c_name
 """
 
 
-@query("q_sql_lateral_topk", oracle=_LATERAL_SQL)
+@query("q_sql_lateral_topk", oracle=plain_sql(_LATERAL_SQL))
 def q_sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery in the FROM clause — per-nation
     top-3 customers by balance, VERBATIM-shared SQL (both engines
-    parse the identical string, so the oracle is the query text
-    itself). Spark de-correlates the lateral into a ranked
+    parse the same string, its table placeholders filled with the
+    table names for the oracle). Spark de-correlates the lateral into a ranked
     window + filter under the hood — same physical plan as the
     row_number() formulation, so the per-group limit never
     materializes the full per-key sort output. The lateral spelling
     matters as surface: it is how analysts write 'top-k per row of
     the outer table' in ANSI-ish SQL, and how correlated
     unnest-style enrichments arrive from DuckDB/Postgres users."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_LATERAL_SQL)
+    return bound_sql(spark, sf_dir, _LATERAL_SQL)
 
 
 @query(
@@ -579,13 +570,13 @@ SELECT o_orderpriority,
        o_orderstatus,
        CAST(COUNT(*) AS BIGINT) AS n,
        ROUND(SUM(o_totalprice), 2) AS revenue
-FROM orders
+FROM {orders}
 GROUP BY ALL
 ORDER BY o_orderpriority, o_orderstatus
 """
 
 
-@query("q_sql_groupby_all", oracle=_GROUPBY_ALL_SQL)
+@query("q_sql_groupby_all", oracle=plain_sql(_GROUPBY_ALL_SQL))
 def q_sql_groupby_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ALL — the analyst-facing shorthand both Spark (3.4+)
     and DuckDB resolve to 'group by every non-aggregate select item'.
@@ -594,8 +585,7 @@ def q_sql_groupby_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     text (a dialect-resolution check, not just a value check). Plan
     is an ordinary partial-agg groupBy on two low-cardinality keys —
     nothing about the sugar changes the physical shape at 100 TB."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_GROUPBY_ALL_SQL)
+    return bound_sql(spark, sf_dir, _GROUPBY_ALL_SQL)
 
 
 _PIVOT_SQL = """
@@ -605,7 +595,7 @@ SELECT segment,
        COALESCE(n_p, 0) AS n_p
 FROM (
   SELECT c.c_mktsegment AS segment, o.o_orderstatus AS st
-  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+  FROM {orders} o JOIN {customer} c ON o.o_custkey = c.c_custkey
 )
 PIVOT (
   COUNT(*) FOR st IN ('F' AS n_f, 'O' AS n_o, 'P' AS n_p)
@@ -639,21 +629,20 @@ def q_sql_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     yields 0, so the pivoted counts are COALESCEd to 0 — without
     that the parity breaks at any SF where some segment lacks a
     status (rare 'P' is the realistic case)."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_PIVOT_SQL)
+    return bound_sql(spark, sf_dir, _PIVOT_SQL)
 
 
 _EXISTS_SQL = """
 SELECT c_mktsegment AS segment,
        CAST(COUNT(*) AS BIGINT) AS n_with_urgent,
        CAST(SUM(CASE WHEN NOT EXISTS (
-              SELECT 1 FROM orders o2
+              SELECT 1 FROM {orders} o2
               WHERE o2.o_custkey = c.c_custkey
                 AND o2.o_orderstatus = 'F'
             ) THEN 1 ELSE 0 END) AS BIGINT) AS n_no_finished
-FROM customer c
+FROM {customer} c
 WHERE EXISTS (
-  SELECT 1 FROM orders o
+  SELECT 1 FROM {orders} o
   WHERE o.o_custkey = c.c_custkey
     AND o.o_orderpriority = '1-URGENT'
 )
@@ -661,7 +650,7 @@ GROUP BY c_mktsegment ORDER BY segment
 """
 
 
-@query("q_sql_exists_decorrelate", oracle=_EXISTS_SQL)
+@query("q_sql_exists_decorrelate", oracle=plain_sql(_EXISTS_SQL))
 def q_sql_exists_decorrelate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS / NOT EXISTS subqueries, VERBATIM-shared SQL:
     customers with at least one urgent order, split by whether they
@@ -672,8 +661,7 @@ def q_sql_exists_decorrelate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the orders scans carry the pushed-down status/priority filters.
     Complements q_sql_correlated_scalar (scalar subquery) and
     q_sql_lateral_topk (LATERAL) on the correlation surface."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_EXISTS_SQL)
+    return bound_sql(spark, sf_dir, _EXISTS_SQL)
 
 
 _GROUPING_ID_SQL = """
@@ -682,14 +670,14 @@ SELECT COALESCE(c_mktsegment, 'ALL') AS segment,
        CAST(GROUPING(c_mktsegment) * 2 + GROUPING(c_nationkey)
             AS BIGINT) AS gid,
        CAST(COUNT(*) AS BIGINT) AS n
-FROM customer
+FROM {customer}
 GROUP BY GROUPING SETS ((c_mktsegment, c_nationkey),
                         (c_mktsegment), ())
 ORDER BY gid, segment, nation
 """
 
 
-@query("q_sql_grouping_id", oracle=_GROUPING_ID_SQL)
+@query("q_sql_grouping_id", oracle=plain_sql(_GROUPING_ID_SQL))
 def q_sql_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING() markers over GROUPING SETS, VERBATIM-shared SQL:
     the standard way a consumer distinguishes 'NULL because rolled
@@ -698,5 +686,4 @@ def q_sql_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     the aggregation level. Complements q_grouping_sets (which pins
     the row sets) with the indicator-function surface; one expand +
     hash aggregate, same plan shape either way."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_GROUPING_ID_SQL)
+    return bound_sql(spark, sf_dir, _GROUPING_ID_SQL)

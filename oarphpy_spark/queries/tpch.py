@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from oarphpy_spark.registry import query
-from oarphpy_spark.tables import register_temp_views, table
+from oarphpy_spark.tables import bound_sql, table
 
 
 # --------------------------------------------------------------------
@@ -49,7 +49,7 @@ SELECT l_returnflag, l_linestatus,
        ROUND(AVG(l_extendedprice), 6) AS avg_price,
        ROUND(AVG(l_discount), 6) AS avg_disc,
        COUNT(*) AS count_order
-FROM lineitem
+FROM {lineitem}
 WHERE l_shipdate <= TIMESTAMP '2001-08-01 00:00:00'
 GROUP BY l_returnflag, l_linestatus
 """
@@ -79,8 +79,7 @@ def q_sql_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     output to |flag x status| = 6 rows per task before the single
     6-row shuffle. At 100 TB this is bandwidth-bound by design — the
     plan moves no data except 6-row partials."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_Q1_SQL)
+    return bound_sql(spark, sf_dir, _Q1_SQL)
 
 
 # --------------------------------------------------------------------
@@ -171,11 +170,11 @@ FROM (
   SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
          CAST(year(l_shipdate) AS BIGINT) AS l_year,
          l_extendedprice * (1 - l_discount) AS volume
-  FROM supplier JOIN lineitem ON s_suppkey = l_suppkey
-  JOIN orders ON o_orderkey = l_orderkey
-  JOIN customer ON c_custkey = o_custkey
-  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-  JOIN nation n2 ON c_nationkey = n2.n_nationkey
+  FROM {supplier} JOIN {lineitem} ON s_suppkey = l_suppkey
+  JOIN {orders} ON o_orderkey = l_orderkey
+  JOIN {customer} ON c_custkey = o_custkey
+  JOIN {nation} n1 ON s_nationkey = n1.n_nationkey
+  JOIN {nation} n2 ON c_nationkey = n2.n_nationkey
   WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
       OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
     AND l_shipdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
@@ -212,8 +211,7 @@ def q_sql_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     still broadcasts supplier/customer/nation (dims) so the only
     fact-sized shuffle is lineitem x orders on orderkey; the shipdate
     range prunes the lineitem scan."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_Q7_SQL)
+    return bound_sql(spark, sf_dir, _Q7_SQL)
 
 
 # --------------------------------------------------------------------
@@ -228,13 +226,13 @@ FROM (
   SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
          l_extendedprice * (1 - l_discount) AS volume,
          n2.n_name AS nation
-  FROM part JOIN lineitem ON p_partkey = l_partkey
-  JOIN supplier ON s_suppkey = l_suppkey
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-  JOIN region ON n1.n_regionkey = r_regionkey
-  JOIN nation n2 ON s_nationkey = n2.n_nationkey
+  FROM {part} JOIN {lineitem} ON p_partkey = l_partkey
+  JOIN {supplier} ON s_suppkey = l_suppkey
+  JOIN {orders} ON l_orderkey = o_orderkey
+  JOIN {customer} ON o_custkey = c_custkey
+  JOIN {nation} n1 ON c_nationkey = n1.n_nationkey
+  JOIN {region} ON n1.n_regionkey = r_regionkey
+  JOIN {nation} n2 ON s_nationkey = n2.n_nationkey
   WHERE r_name = 'ASIA' AND p_type = 'PROMO'
     AND o_orderdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
                         AND TIMESTAMP '1997-12-31 00:00:00'
@@ -274,8 +272,7 @@ def q_sql_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup on partkey (effectively a semi-join pushdown); the
     two-branch SUM computes the share in one aggregate pass — no
     second scan for the numerator."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_Q8_SQL)
+    return bound_sql(spark, sf_dir, _Q8_SQL)
 
 
 # --------------------------------------------------------------------
@@ -292,10 +289,10 @@ FROM (
            * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))
            - 10 * CAST(ROUND(p_retailprice * 100) AS BIGINT)
                 * CAST(l_quantity AS BIGINT) AS amt_e4
-  FROM part JOIN lineitem ON p_partkey = l_partkey
-  JOIN supplier ON s_suppkey = l_suppkey
-  JOIN orders ON o_orderkey = l_orderkey
-  JOIN nation ON s_nationkey = n_nationkey
+  FROM {part} JOIN {lineitem} ON p_partkey = l_partkey
+  JOIN {supplier} ON s_suppkey = l_suppkey
+  JOIN {orders} ON o_orderkey = l_orderkey
+  JOIN {nation} ON s_nationkey = n_nationkey
   WHERE p_name LIKE '%widget%'
 ) profit
 GROUP BY nation, o_year
@@ -342,8 +339,7 @@ def q_sql_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     division yields a double, and 0.xx5 halves land on opposite sides
     of the representation error). The single cents/100.0 division maps
     the same integer to the same IEEE double in both engines."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_Q9_SQL)
+    return bound_sql(spark, sf_dir, _Q9_SQL)
 
 
 # --------------------------------------------------------------------
@@ -481,10 +477,10 @@ def q_sql_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q17_SQL = """
 SELECT ROUND(SUM(l_extendedprice) / 7.0, 2) AS avg_yearly
-FROM lineitem JOIN part ON p_partkey = l_partkey
+FROM {lineitem} JOIN {part} ON p_partkey = l_partkey
 WHERE p_brand = 'Brand#23' AND p_size < 10
   AND l_quantity < (
-    SELECT 0.5 * AVG(l2.l_quantity) FROM lineitem l2
+    SELECT 0.5 * AVG(l2.l_quantity) FROM {lineitem} l2
     WHERE l2.l_partkey = p_partkey
   )
 """
@@ -510,8 +506,7 @@ def q_sql_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic across engines because l_quantity is integer-valued:
     integer-valued doubles sum exactly, so AVG is one exact division.
     (Fixture has no l_container; p_size < 10 stands in.)"""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_Q17_SQL)
+    return bound_sql(spark, sf_dir, _Q17_SQL)
 
 
 # --------------------------------------------------------------------
@@ -575,18 +570,18 @@ def q_sql_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q21_SQL = """
 SELECT s_name, COUNT(*) AS numwait
-FROM supplier
-JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-JOIN orders ON o_orderkey = l1.l_orderkey
-JOIN nation ON s_nationkey = n_nationkey
+FROM {supplier}
+JOIN {lineitem} l1 ON s_suppkey = l1.l_suppkey
+JOIN {orders} ON o_orderkey = l1.l_orderkey
+JOIN {nation} ON s_nationkey = n_nationkey
 WHERE o_orderstatus = 'F' AND n_name = 'NATION_9'
   AND l1.l_shipdate > o_orderdate + INTERVAL 100 DAY
   AND EXISTS (
-    SELECT 1 FROM lineitem l2
+    SELECT 1 FROM {lineitem} l2
     WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey
   )
   AND NOT EXISTS (
-    SELECT 1 FROM lineitem l3
+    SELECT 1 FROM {lineitem} l3
     WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
       AND l3.l_shipdate > o_orderdate + INTERVAL 100 DAY
   )
@@ -629,8 +624,7 @@ def q_sql_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual join filters — never a nested loop. Three passes over
     lineitem but each is a projection of 3 columns; at 100 TB the
     orderkey-partitioned exchanges all share one partitioning."""
-    register_temp_views(spark, sf_dir)
-    return spark.sql(_Q21_SQL)
+    return bound_sql(spark, sf_dir, _Q21_SQL)
 
 
 # --------------------------------------------------------------------

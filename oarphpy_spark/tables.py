@@ -8,6 +8,7 @@ file per table under a scale-factor directory.
 from __future__ import annotations
 
 import os
+import string
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -120,9 +121,15 @@ def _probe_ts_kind(probe: str) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    schema = pq.ParquetFile(probe).schema_arrow
+    pf = pq.ParquetFile(probe)
+    schema = pf.schema_arrow
     if "ts" not in schema.names or not pa.types.is_timestamp(schema.field("ts").type):
         return "none"
+    # pyarrow reports INT96 (Spark's default timestamp output) as
+    # timestamp[ns]; Spark reads it as a UTC TIMESTAMP.
+    leaves = (pf.schema.column(i) for i in range(len(pf.schema)))
+    if next(c for c in leaves if c.path == "ts").physical_type == "INT96":
+        return "utc"
     ts_type = schema.field("ts").type
     if ts_type.unit == "ns":
         return "ns"
@@ -133,8 +140,8 @@ def _events_ts_kind(path: str) -> str:
     """Classify the physical form of ``events.ts`` from parquet footers
     only (no row groups read): 'ns' (INT64 nanos — unscannable by Spark
     as a timestamp), 'ntz' (µs/ms with isAdjustedToUTC=false → Spark
-    reads TIMESTAMP_NTZ), 'utc' (µs/ms UTC-adjusted → TIMESTAMP), or
-    'none' (no ts column / not a timestamp).
+    reads TIMESTAMP_NTZ), 'utc' (µs/ms UTC-adjusted, or INT96 → TIMESTAMP),
+    or 'none' (no ts column / not a timestamp).
 
     EVERY part file of a directory is probed (footers are a few KB
     each): a directory holding mixed physical forms — e.g. one ns part
@@ -189,7 +196,7 @@ def _read_events(reader, path: str) -> DataFrame:
       (PARQUET_TYPE_ILLEGAL), but reads it as ``bigint`` under a
       declared schema, with no session conf set;
     * µs/ms with ``isAdjustedToUTC=false``: ``timestamp_ntz``;
-    * UTC-adjusted µs/ms: ``timestamp``.
+    * UTC-adjusted µs/ms, or INT96 (Spark's default output): ``timestamp``.
     """
     schema = _memo_on_files(
         _SCHEMA_CACHE,
@@ -249,7 +256,30 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_parquet(spark, path)
 
 
+def bound_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """``spark.sql(text)`` over the tables the statement names: each
+    ``{name}`` placeholder is bound to ``table(spark, sf_dir, name)``.
+    PySpark passes every bound DataFrame to the statement under a
+    unique temp-view name and drops that view once the statement is
+    analyzed, so the plan goes through one parse and one analysis,
+    reads only the tables it names, and leaves the session catalog as
+    it found it. Literal braces in ``text`` are doubled, as in
+    ``str.format``."""
+    names = {f for _, f, _, _ in string.Formatter().parse(text) if f}
+    return spark.sql(text, **{n: table(spark, sf_dir, n) for n in sorted(names)})
+
+
+def plain_sql(text: str) -> str:
+    """A :func:`bound_sql` statement with each table placeholder
+    replaced by the bare table name: the same statement over views of
+    those names, as a DuckDB oracle runs it."""
+    return text.format(**{name: name for name in TABLE_NAMES})
+
+
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` queries work."""
+    """Register every table as a temp view under its own name, for
+    interactive ``spark.sql`` sessions and notebooks. Queries bind
+    their tables with :func:`bound_sql` instead, which writes no
+    session-global view name."""
     for name in TABLE_NAMES:
         table(spark, sf_dir, name).createOrReplaceTempView(name)

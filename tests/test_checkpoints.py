@@ -215,3 +215,34 @@ def test_no_citation_of_missing_artifacts_or_scripts():
                 ] + [repo] * (repo in line)
                 dangling.extend(f"{rel}:{lineno}: {n}" for n in names)
     assert not dangling, dangling
+
+
+_TEMP_VIEW_WRITE = re.compile(r"\b(register_temp_views|createOrReplaceTempView)\b")
+
+
+def test_queries_and_operators_write_no_temp_view():
+    """No module under ``queries/``, ``operators/`` or ``llm/`` names a
+    session-global temp view: a statement binds its inputs as
+    arguments (``tables.bound_sql``), so two clients on one session
+    never see or rebind each other's views."""
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "oarphpy_spark",
+    )
+    writes = []
+    n_files = 0
+    for pkg in ("queries", "operators", "llm"):
+        for dirpath, _dirs, files in os.walk(os.path.join(root, pkg)):
+            for name in files:
+                if not name.endswith(".py"):
+                    continue
+                n_files += 1
+                path = os.path.join(dirpath, name)
+                rel = os.path.relpath(path, root).replace(os.sep, "/")
+                with open(path, encoding="utf-8") as f:
+                    for lineno, line in enumerate(f, 1):
+                        m = _TEMP_VIEW_WRITE.search(line)
+                        if m:
+                            writes.append(f"{rel}:{lineno}: {m.group(1)}")
+    assert n_files > 20, n_files
+    assert not writes, writes

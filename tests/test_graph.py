@@ -372,6 +372,71 @@ def test_kcore_broadcast_and_shuffled_keep_sets_match_peeling(spark):
         g._KCORE_BROADCAST_KEEP_MAX_ROWS = orig
 
 
+def _jobs_and_actions(spark, fn):
+    """``fn()``'s result, with the Spark jobs and the actions
+    (``_actions_in_group``) it ran."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_actions = _actions_in_group(spark, group)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group)), n_actions
+
+
+def _hinted_and_shuffled(spark, fn):
+    """``_jobs_and_actions(fn)`` with the small-relation broadcast
+    hints on, then with them off (every join planned unhinted)."""
+    import oarphpy_spark.llm.graph as g
+
+    orig = g._BROADCAST_MAX_ROWS
+    try:
+        hinted = _jobs_and_actions(spark, fn)
+        g._BROADCAST_MAX_ROWS = -1
+        shuffled = _jobs_and_actions(spark, fn)
+    finally:
+        g._BROADCAST_MAX_ROWS = orig
+    return hinted, shuffled
+
+
+def test_sssp_broadcasts_frontier_and_dist(spark):
+    """Each relaxation round joins its frontier and distance
+    checkpoints as broadcasts while they are small: the same
+    distances in as many actions, with fewer Spark jobs than the
+    shuffled joins AQE would convert only after their stage jobs."""
+    from oarphpy_spark.llm.graph import sssp
+
+    edges = [(i, i + 1, 1) for i in range(6)] + [(0, 6, 10)]
+    df = spark.createDataFrame(edges, "s long, d long, w long")
+    hinted, shuffled = _hinted_and_shuffled(
+        spark,
+        lambda: {r.node: r.dist for r in sssp(df, 0, "s", "d", "w", rounds=8).collect()},
+    )
+    assert hinted[0] == shuffled[0] == {i: i for i in range(7)}
+    assert hinted[2] == shuffled[2]
+    assert hinted[1] < shuffled[1], (hinted[1], shuffled[1])
+
+
+def test_ktruss_broadcasts_deleted_edges(spark):
+    """The incremental support update joins the round's deleted-edge
+    checkpoint as a broadcast while it is small: the same truss in as
+    many actions, with fewer Spark jobs than the shuffled joins."""
+    from oarphpy_spark.llm.graph import ktruss
+
+    k5 = [(a, b) for a in range(5) for b in range(5) if a < b]
+    df = spark.createDataFrame(k5 + [(0, 10), (1, 10)], "src long, dst long")
+    hinted, shuffled = _hinted_and_shuffled(
+        spark, lambda: {(r.lo, r.hi, r.support) for r in ktruss(df, 4).collect()}
+    )
+    assert hinted[0] == shuffled[0] == {(a, b, 3) for a, b in k5}
+    assert hinted[2] == shuffled[2]
+    assert hinted[1] < shuffled[1], (hinted[1], shuffled[1])
+
+
 def test_q_kcore_keeps_shared_edges_and_drops_superseded_rounds(spark):
     """q_kcore peels the session-shared edge relation (2 rounds at the
     small fixture): that relation stays readable, and the only block

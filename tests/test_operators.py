@@ -187,6 +187,39 @@ def test_histogram_ignores_null_and_nan(spark):
     assert edges == [1.0, 1.5, 2.0]
 
 
+def test_histogram_quoted_column_matches_numpy(spark):
+    """``df_histogram`` is one SQL statement with the column name
+    backquoted: a name with a space, a backtick and braces works, and
+    NULL/NaN rows, ``min == max`` and ``num_bins=1`` give numpy's
+    counts and edges with the (bucket, lo, hi, count) schema."""
+    import random
+
+    import numpy as np
+
+    col = "unit price `usd` {x}"
+    rnd = random.Random(11)
+    vals = [rnd.uniform(-50, 250) for _ in range(300)]
+    rows = [(v,) for v in vals] + [(None,), (float("nan"),)] * 3
+    df = spark.createDataFrame(rows, f"`{col.replace('`', '``')}` double")
+    for bins in (1, 7):
+        h = df_histogram(df, col, bins)
+        assert h.dtypes == [
+            ("bucket", "bigint"), ("lo", "double"), ("hi", "double"), ("count", "bigint")
+        ]
+        counts, edges = histogram_to_numpy(h)
+        want_counts, want_edges = np.histogram(vals, bins=bins)
+        assert counts == want_counts.tolist(), bins
+        assert np.allclose(edges, want_edges, rtol=0, atol=1e-9), bins
+
+    same = spark.createDataFrame(
+        [(3.5,)] * 4 + [(None,), (float("nan"),)], f"`{col.replace('`', '``')}` double"
+    )
+    for bins in (1, 4):
+        counts, edges = histogram_to_numpy(df_histogram(same, col, bins))
+        assert counts == [4] + [0] * (bins - 1)
+        assert edges == [3.5] * (bins + 1)
+
+
 def test_salted_broadcast_join_rejects_outer(spark):
     from oarphpy_spark.operators.skew import salted_broadcast_join
 

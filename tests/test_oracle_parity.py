@@ -39,12 +39,36 @@ def test_entry_smoke(spark):
     assert list(oracles) == [n for n in names if n in oracles]
 
 
+# Queries that bind their inputs as ``spark.sql`` arguments
+# (``tables.bound_sql``, ``df_histogram``, the kcore rounds).
+_BOUND_SQL_QUERIES = (
+    "q_sql_tpch_q1", "q_sql_tpch_q3", "q_sql_tpch_q4", "q_sql_tpch_q5",
+    "q_sql_tpch_q6", "q_sql_tpch_q7", "q_sql_tpch_q8", "q_sql_tpch_q9",
+    "q_sql_tpch_q10", "q_sql_tpch_q12", "q_sql_tpch_q14", "q_sql_tpch_q16",
+    "q_sql_tpch_q17", "q_sql_tpch_q18", "q_sql_tpch_q19", "q_sql_tpch_q21",
+    "q_sql_correlated_scalar", "q_sql_lateral_topk", "q_sql_groupby_all",
+    "q_sql_pivot_clause", "q_sql_exists_decorrelate", "q_sql_grouping_id",
+    "q_set_ops_all", "q_sql_recursive_reach", "q_udtf_chunks",
+    "q_histogram", "q_kcore",
+)
+
+
 def test_listagg_leaves_no_temp_view(spark):
-    """q_fn_listagg binds its input as a query argument, not as a
-    session-global temp view another client could see or rebind."""
+    """q_fn_listagg, and every query that binds its tables as
+    statement arguments, leaves the session catalog as it found it:
+    no session-global temp view another client could see or rebind."""
     problems = run_parity(spark, "q_fn_listagg", SF_SMALL)
     assert not problems, problems
     assert "_listagg_pairs" not in {t.name for t in spark.catalog.listTables()}
+
+    # A fresh session on the same context starts with no temp view,
+    # so a view a query registers under a table's own name shows.
+    session = spark.newSession()
+    queries = registry.queries()
+    for name in _BOUND_SQL_QUERIES:
+        before = sorted(t.name for t in session.catalog.listTables())
+        queries[name](session, SF_SMALL)
+        assert sorted(t.name for t in session.catalog.listTables()) == before, name
 
 
 # Slow tier: zero-vector ANSI edge-case sweep over the sim family

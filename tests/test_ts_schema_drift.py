@@ -200,3 +200,50 @@ def test_homogeneous_directory_probes_all_parts(tmp_path):
     pq.write_table(tbl_us, d / "part-0.parquet")
     pq.write_table(tbl_us, d / "part-1.parquet")
     assert _events_ts_kind(str(d)) == "ntz"
+
+
+def test_spark_written_int96_events_read_in_batch_and_stream(spark, tmp_path):
+    """Spark writes timestamps as INT96 by default, which pyarrow
+    reports as timestamp[ns]: the footer probe must declare ``ts`` a
+    TIMESTAMP (not the int64-nanos ``bigint``), so ``table()`` and
+    ``stream_events`` read a Spark-written events table as is."""
+    from oarphpy_spark.streaming.windows import run_to_memory_sink, stream_events
+
+    key = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        assert spark.conf.get(key) == "INT96"
+        src = spark.createDataFrame(
+            list(zip(_ROWS["event_id"], _US, _ROWS["user_id"], _ROWS["event_type"],
+                     _ROWS["value"], _ROWS["props"])),
+            "event_id bigint, us bigint, user_id bigint, event_type string, "
+            "value double, props string",
+        ).select(
+            "event_id", F.timestamp_micros("us").alias("ts"), "user_id",
+            "event_type", "value", "props",
+        )
+        path = os.path.join(str(tmp_path), "events.parquet")
+        src.coalesce(1).write.parquet(path)
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
+    part = next(
+        os.path.join(path, n) for n in os.listdir(path) if n.endswith(".parquet")
+    )
+    leaves = pq.ParquetFile(part).schema
+    assert leaves.column(leaves.names.index("ts")).physical_type == "INT96"
+
+    expect = sorted(zip(_ROWS["event_id"], _US))
+    df = table(spark, str(tmp_path), "events")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    got = df.select("event_id", F.unix_micros("ts").alias("us")).collect()
+    assert sorted((r["event_id"], r["us"]) for r in got) == expect
+
+    events = stream_events(spark, path)
+    out = run_to_memory_sink(
+        events.select("event_id", F.unix_micros("ts").alias("us")),
+        "t_drift_int96",
+        output_mode="append",
+    )
+    assert sorted((r["event_id"], r["us"]) for r in out.collect()) == expect
