@@ -20,6 +20,16 @@ def dot(a, b) -> Column:
     return F.aggregate(products, F.lit(0.0), lambda acc, v: acc + v)
 
 
+def dot_sql(a_sql: str, b_sql: str) -> str:
+    """:func:`dot` as SQL text over two array expressions: the same
+    sequential fold in double, so results are bit-identical."""
+    return (
+        f"aggregate(zip_with({a_sql}, {b_sql}, "
+        "(x, y) -> cast(x as double) * cast(y as double)), "
+        "cast(0.0 as double), (acc, v) -> acc + v)"
+    )
+
+
 def lit_double_array_sql(values) -> str:
     """SQL text for an array<double> literal.
 
@@ -35,16 +45,16 @@ def dot_lit(vec_sql: str, values) -> Column:
     """``dot`` of a column (given as SQL text) with a driver-side constant
     vector, built as a single SQL expression. Same sequential fold and
     double math as :func:`dot`, so results are bit-identical."""
-    arr = lit_double_array_sql(values)
-    return F.expr(
-        f"aggregate(zip_with({vec_sql}, {arr}, "
-        "(x, y) -> cast(x as double) * y), cast(0.0 as double), "
-        "(acc, v) -> acc + v)"
-    )
+    return F.expr(dot_sql(vec_sql, lit_double_array_sql(values)))
 
 
 def l2_norm(a) -> Column:
     return F.sqrt(dot(a, a))
+
+
+def l2_norm_sql(a_sql: str) -> str:
+    """:func:`l2_norm` as SQL text over an array expression."""
+    return f"sqrt({dot_sql(a_sql, a_sql)})"
 
 
 def cosine(a, b) -> Column:

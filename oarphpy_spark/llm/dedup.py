@@ -4,13 +4,18 @@ All pure DataFrame transforms — nothing collects to the driver — so
 each scales to the 100 TB corpus target:
 
 * ``exact_dedup`` — content-hash groupBy; one shuffle on a 32-byte key.
-* ``minhash_signatures`` / ``minhash_candidate_pairs`` — MinHash + LSH
-  banding: shingle -> k minhashes -> b bands -> equi-join on
-  (band, band_hash). The join is on short hash keys (never on text),
-  and candidate verification happens only within buckets — the
-  standard way to avoid the O(n^2) crossJoin at scale. Skewed buckets
-  (boilerplate shingles) should be salted or capped at 100 TB;
-  ``max_bucket`` provides the cap.
+* ``minhash_signatures`` / ``minhash_band_buckets`` /
+  ``minhash_candidate_pairs`` — MinHash + LSH banding: shingle -> one
+  md5 per shingle -> k minhashes (disjoint slices of that digest) ->
+  b band hashes -> equi-join on (band, band_hash). The join is on short
+  hash keys (never on text), and candidate verification happens only
+  within buckets — the standard way to avoid the O(n^2) crossJoin at
+  scale. Skewed buckets (boilerplate shingles) should be salted or
+  capped at 100 TB; ``max_bucket`` provides the cap. The bucket table
+  and the pair self-join are each built as one ``spark.sql`` statement
+  with the input bound as its argument: one parse and one analysis per
+  plan instead of a Py4J round trip and an analysis per chained call,
+  which dominated these plans' build time on small inputs.
 * ``simhash16`` — 16-bit SimHash fingerprints: near-dup clusters share
   a fingerprint; Hamming-neighbor lookup = 16 more equi-joins.
   Computed per document in an Arrow-vectorized batch (integer-exact,
@@ -30,7 +35,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from oarphpy_spark.functions.text import md5_str, norm_tokens, shingles
+from oarphpy_spark.functions.text import (
+    md5_str,
+    md5_str_sql,
+    norm_tokens,
+    norm_tokens_sql,
+    quote_ident,
+    shingles,
+    shingles_sql,
+)
 from oarphpy_spark.util.checkpoints import (
     hold_caches,
     release_cached,  # noqa: F401 — re-exported for existing callers
@@ -47,6 +60,28 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         .groupBy("fingerprint")
         .agg(F.min(id_col).alias("doc_id"), F.count("*").alias("n_copies"))
     )
+
+
+def _signatures_sql(
+    text_col: str, id_col: str, num_hashes: int, shingle_n: int
+) -> str:
+    """The :func:`minhash_signatures` statement over ``{df}``."""
+    if num_hashes * 4 > 32:
+        raise ValueError("md5 supplies at most 8 4-hex-char minhash slices")
+    id_sql, text_sql = quote_ident(id_col), quote_ident(text_col)
+    sh = shingles_sql(norm_tokens_sql(text_sql), shingle_n)
+    mins = ", ".join(
+        f"min(substring(__h, {j * 4 + 1}, 4)) AS mh{j}" for j in range(num_hashes)
+    )
+    return f"""
+SELECT {id_sql}, {mins}
+FROM (
+  SELECT {id_sql}, {md5_str_sql("__s")} AS __h
+  FROM (SELECT {id_sql}, explode_outer(IF({text_sql} IS NULL, NULL, {sh})) AS __s
+        FROM {{df}})
+)
+GROUP BY {id_sql}
+"""
 
 
 def minhash_signatures(
@@ -67,23 +102,20 @@ def minhash_signatures(
     fine in isolation and ~5x slower once the band projection consumed
     it).
 
-    Plan shape: explode shingles → one md5 → ``num_hashes`` parallel
-    ``min`` aggregates in one pass; partial aggregation shrinks map
-    output to one row per doc before the only shuffle, and every
-    expression is whole-stage codegen'd. Requires num_hashes*4 <= 32
-    hex chars.
+    The plan is one ``spark.sql`` statement over ``spread(df)`` bound
+    as its one argument: explode shingles → one md5 → ``num_hashes``
+    parallel ``min(substring(...))`` aggregates in one pass. Partial
+    aggregation shrinks map output to one row per doc before the only
+    shuffle, and every expression is whole-stage codegen'd. Written
+    as text, the whole plan costs one parse and one analysis instead
+    of a Py4J round trip per column expression. A NULL text has no
+    shingles: its minhashes are NULL, so its band hashes are NULL and
+    it shares no bucket, as in the SQL oracle (an empty text is one
+    empty shingle). Output: ``id_col``, ``mh0`` .. ``mh{num_hashes-1}``.
+    Requires num_hashes*4 <= 32 hex chars.
     """
-    if num_hashes * 4 > 32:
-        raise ValueError("md5 supplies at most 8 4-hex-char minhash slices")
-    sh = shingles(norm_tokens(F.col(text_col)), shingle_n)
-    exploded = spread(df).select(F.col(id_col), F.explode(sh).alias("__s")).select(
-        F.col(id_col), md5_str(F.col("__s")).alias("__h")
-    )
-    aggs = [
-        F.min(F.substring("__h", j * 4 + 1, 4)).alias(f"mh{j}")
-        for j in range(num_hashes)
-    ]
-    return exploded.groupBy(id_col).agg(*aggs)
+    text = _signatures_sql(text_col, id_col, num_hashes, shingle_n)
+    return df.sparkSession.sql(text, df=spread(df))
 
 
 def minhash_band_buckets(
@@ -99,22 +131,50 @@ def minhash_band_buckets(
     (``minhash_candidate_pairs``) and the batch-vs-corpus incremental
     path (``incremental_minhash_dedup``) build on.  At 100 TB the
     corpus side of this table is what a production pipeline
-    materializes once and re-joins every ingest batch against."""
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), md5_str(F.concat(*parts)).alias("h"))
+    materializes once and re-joins every ingest batch against.
+
+    One statement: the :func:`minhash_signatures` statement, then one
+    md5 of each band's concatenated minhashes, exploded to
+    (doc, band, h)."""
+    r = num_hashes // bands
+
+    def band_hash(b: int) -> str:
+        return md5_str_sql(
+            "concat(" + ", ".join(f"mh{b * r + i}" for i in range(r)) + ")"
         )
-    return sigs.select(
-        F.col(id_col).alias("doc"), F.explode(F.array(*band_cols)).alias("bh")
-    ).select("doc", F.col("bh.band").alias("band"), F.col("bh.h").alias("h"))
+
+    structs = ", ".join(
+        f"named_struct('band', {b}, 'h', {band_hash(b)})" for b in range(bands)
+    )
+    sig = _signatures_sql(text_col, id_col, num_hashes, shingle_n)
+    text = f"""
+SELECT doc, bh.band AS band, bh.h AS h
+FROM (SELECT {quote_ident(id_col)} AS doc, explode(array({structs})) AS bh
+      FROM ({sig}))
+"""
+    return df.sparkSession.sql(text, df=spread(df))
+
+
+# Docs sharing a (band, h) bucket pair up; both sides of the self-join
+# read the one bound (persisted or checkpointed) bucket table ``{bk}``.
+_PAIRS_SQL = """
+SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_shared_bands
+FROM {bk} a JOIN {bk} b ON a.band = b.band AND a.h = b.h
+WHERE a.doc < b.doc
+GROUP BY a.doc, b.doc
+"""
+
+# The buckets whose (band, h) holds at most ``{max_bucket}`` docs.
+_CAPPED_SQL = """
+SELECT bk.doc, bk.band, bk.h
+FROM {bk} bk LEFT SEMI JOIN (
+  SELECT band, h FROM {bk} GROUP BY band, h HAVING COUNT(*) <= {max_bucket}
+) kept ON bk.band = kept.band AND bk.h = kept.h
+"""
 
 
 def minhash_candidate_pairs(
-    df: DataFrame,
+    df: DataFrame | None,
     text_col: str,
     id_col: str,
     num_hashes: int = 8,
@@ -134,14 +194,15 @@ def minhash_candidate_pairs(
     them should pay that derivation once, like the graph family's
     shared edge relation). When ``buckets`` is given, ``df``,
     ``text_col``, ``id_col``, ``num_hashes``, ``bands`` and
-    ``shingle_n`` are ignored: the buckets already encode them. The
-    caller owns the buckets' lifecycle: no persist here and no
-    ride-along cache."""
+    ``shingle_n`` are ignored (``df`` may be None): the buckets already
+    encode them. The caller owns the buckets' lifecycle: no persist
+    here and no ride-along cache."""
     shared_buckets = buckets is not None
     if not shared_buckets:
         buckets = minhash_band_buckets(
             df, text_col, id_col, num_hashes, bands, shingle_n
         )
+    spark = buckets.sparkSession
     # Pair generation: persist the tiny bucket table (bands x (id +
     # 32-byte hash) per doc — a sliver of the corpus) and self-join on
     # (band, h). A one-shuffle alternative (collect_list each bucket
@@ -161,26 +222,11 @@ def minhash_candidate_pairs(
         # million-doc bucket must never reach the m^2 expansion. Costs
         # one extra count shuffle — the right trade at the 100 TB
         # setting where the cap is in play.
-        sizes = buckets.groupBy("band", "h").agg(F.count("*").alias("__n"))
-        buckets = buckets.join(
-            sizes.filter(F.col("__n") <= max_bucket).select("band", "h"),
-            ["band", "h"],
-        )
+        buckets = spark.sql(_CAPPED_SQL, bk=buckets, max_bucket=int(max_bucket))
         shared_buckets = False  # capped relation is per-call again
     if not shared_buckets:
         buckets = buckets.persist()
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.h") == F.col("b.h")),
-        )
-        .filter(F.col("a.doc") < F.col("b.doc"))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count("*").alias("n_shared_bands"))
-    )
+    pairs = spark.sql(_PAIRS_SQL, bk=buckets)
     # Deterministic cache release: the persisted bucket table rides on
     # the result (hold_caches); long-lived sessions that call
     # this repeatedly should `release_cached(pairs)` after

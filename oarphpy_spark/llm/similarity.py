@@ -27,7 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from oarphpy_spark.functions.vectors import dot, dot_lit, l2_norm
+from oarphpy_spark.functions.vectors import dot, dot_lit, dot_sql, l2_norm, l2_norm_sql
+from oarphpy_spark.functions.text import quote_ident
 from oarphpy_spark.util.partitioning import spread
 
 
@@ -47,18 +48,25 @@ def _paired_cosine() -> "F.Column":
     return F.try_divide(dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn"))
 
 
-def _drop_undefined(scored: DataFrame) -> DataFrame:
-    return scored.filter(F.col("cos").isNotNull())
+# Rank each query's scored candidates by (cos DESC, neighbor_id) and
+# keep the first ``{k}``; NULL scores (zero vectors, see
+# _paired_cosine) are dropped before ranking.
+_TOPK_SQL = """
+SELECT {cols} FROM (
+  SELECT *, row_number() OVER (PARTITION BY query_id
+                               ORDER BY cos DESC, neighbor_id) AS __rk
+  FROM {{scored}} WHERE cos IS NOT NULL
+) WHERE __rk <= {k}
+"""
 
 
 def _topk_by_cos(scored: DataFrame, k: int) -> DataFrame:
-    scored = _drop_undefined(scored)
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .drop("rk")
-    )
+    """Top-``k`` rows of ``scored`` per ``query_id``, with all of its
+    columns: one statement over ``scored`` bound as its argument. Every
+    search in this module ranks through here."""
+    cols = ", ".join(quote_ident(c) for c in scored.columns)
+    text = _TOPK_SQL.format(cols=cols, k=int(k))
+    return scored.sparkSession.sql(text, scored=scored)
 
 
 def brute_force_topk(
@@ -357,6 +365,30 @@ def two_stage_rerank_topk(
     return _topk_by_cos(rerank, k)
 
 
+def _ivf_scored_sql(id_col: str, vec_col: str, probe: bool) -> str:
+    """The IVF cell join and cosine over the two assigned sides ``{c}``
+    and ``{q}``, each its input plus the ``__cell`` (or, when
+    ``probe``, the query side's ``__cells`` array) its projection
+    added. The query side is broadcast, norms are taken once per row
+    before the join (see _paired_cosine), and the score is the same
+    rounded ``try_divide`` cosine."""
+    idq, vq = quote_ident(id_col), quote_ident(vec_col)
+    q_from = "{q} LATERAL VIEW explode(__cells) p AS __cell" if probe else "{q}"
+    return f"""
+WITH c AS (
+  SELECT {idq} AS neighbor_id, {vq} AS cv, {l2_norm_sql(vq)} AS cn, __cell AS cell
+  FROM {{c}}
+), q AS (
+  SELECT {idq} AS query_id, {vq} AS qv, {l2_norm_sql(vq)} AS qn, __cell AS cell
+  FROM {q_from}
+)
+SELECT /*+ BROADCAST(q) */ query_id, neighbor_id,
+       round(try_divide({dot_sql("qv", "cv")}, qn * cn), 6) AS cos
+FROM c JOIN q ON c.cell = q.cell
+WHERE neighbor_id != query_id
+"""
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -391,6 +423,10 @@ def ivf_topk(
     tuned by ``n_probe`` — each query searches its ``n_probe`` nearest
     cells (the corpus side always lives in exactly one cell, so the
     candidate fanout grows only with the tiny query side).
+
+    The cell join and cosine are one ``spark.sql`` statement over the
+    two assigned sides, bound as its arguments, and the top-k ranking
+    one more; the UDF runs in one projection per side ahead of them.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -448,49 +484,25 @@ def ivf_topk(
     assign_cell = assign_cell.asNondeterministic()
     assign_probe_cells = assign_probe_cells.asNondeterministic()
 
-    def assign(df: DataFrame, out_id: str, vec_out: str, norm_out: str,
-               cell_expr: "F.Column | None" = None):
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.col(vec_col).alias(vec_out),
-            l2_norm(F.col(vec_col)).alias(norm_out),
-            (cell_expr if cell_expr is not None
-             else assign_cell(vec_col)).alias("cell"),
-        )
-
-    # spread(): see brute_force_topk — the corpus-side cell-assignment
-    # UDF must not run on a single scan split.
-    c_assigned = assign(spread(corpus), "neighbor_id", "cv", "cn")
+    # One projection per side applies the UDF, and the statement reads
+    # its output. spread(): see brute_force_topk — the corpus-side
+    # cell-assignment UDF must not run on a single scan split.
+    c = spread(corpus).withColumn("__cell", assign_cell(vec_col))
     if n_probe <= 1:
-        q_assigned = assign(queries, "query_id", "qv", "qn")
+        q = queries.withColumn("__cell", assign_cell(vec_col))
     else:
         # probe cells are pairwise distinct per query and each corpus
         # row has exactly one cell, so the explode join cannot emit a
-        # (query, neighbor) pair twice — no dedup shuffle needed.
-        # Two projections: a generator cannot take the (now
-        # non-deterministic) UDF directly, and the split also pins a
-        # single UDF evaluation before the explode.
-        q_assigned = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            l2_norm(F.col(vec_col)).alias("qn"),
-            assign_probe_cells(vec_col).alias("probe_cells"),
-        ).select(
-            "query_id",
-            "qv",
-            "qn",
-            F.explode("probe_cells").alias("cell"),
-        )
-    scored = (
-        c_assigned.join(F.broadcast(q_assigned), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_paired_cosine(), 6).alias("cos"),
-        )
-    )
-    return _topk_by_cos(scored, k)
+        # (query, neighbor) pair twice — no dedup shuffle needed. The
+        # explode reads the bound projection's output: a generator
+        # cannot take the (non-deterministic) UDF directly, and the
+        # split pins a single UDF evaluation before the explode.
+        q = queries.withColumn("__cells", assign_probe_cells(vec_col))
+    # The ranking stays _topk_by_cos's own statement over the scored
+    # pairs: every search here ranks through it, and perfbench's
+    # tracer counts scored candidates per result there.
+    text = _ivf_scored_sql(id_col, vec_col, probe=n_probe > 1)
+    return _topk_by_cos(corpus.sparkSession.sql(text, c=c, q=q), k)
 
 
 def hyperplane_lsh_topk_multiprobe(

@@ -26,12 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _quote_ident(name: str) -> str:
-    """``name`` as a backquoted Spark SQL identifier, safe to splice
-    into a statement formatted with ``str.format`` (braces doubled)."""
-    quoted = "`" + name.replace("`", "``") + "`"
-    return quoted.replace("{", "{{").replace("}", "}}")
+from oarphpy_spark.functions.text import quote_ident
 
 
 # One statement: NULL/NaN rows are excluded (numpy semantics; without
@@ -72,7 +67,7 @@ def df_histogram(df: DataFrame, col: str, num_bins: int) -> DataFrame:
     the last bucket closed. The plan is one ``spark.sql`` statement
     over ``df`` bound as an argument: one parse and one analysis.
     """
-    text = _HISTOGRAM_SQL.format(col=_quote_ident(col), n=int(num_bins))
+    text = _HISTOGRAM_SQL.format(col=quote_ident(col), n=int(num_bins))
     return df.sparkSession.sql(text, df=df)
 
 

@@ -166,9 +166,11 @@ def _minhash_oracle(num_hashes: int = 8, bands: int = 4, n: int = 3) -> str:
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidates: shingle → 8 min-wise hashes →
     4 bands → equi-join on (band, hash). Never compares texts pairwise;
-    the join key is a 32-char hash — the 100 TB-safe shape."""
+    the join key is a 32-char hash — the 100 TB-safe shape. The
+    shared buckets already encode the documents, so the table is not
+    read again here."""
     return minhash_candidate_pairs(
-        table(spark, sf_dir, "documents"),
+        None,
         "text",
         "doc_id",
         num_hashes=8,

@@ -550,6 +550,7 @@ def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle regardless of micro-batch boundaries or retries."""
     import os as _os
     import time
+    import uuid
 
     from pyspark.sql import functions as F
 
@@ -569,7 +570,9 @@ def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         F.sum("v_centi").alias("sum_centi"),
     )
-    sink = "q_stream_python_source_sink"
+    # A unique name per drain, dropped at the end: the memory sink's
+    # name is a session temp view (see run_to_memory_sink).
+    sink = f"q_stream_python_source_sink_{uuid.uuid4().hex}"
     q = (
         agg.writeStream.format("memory")
         .queryName(sink)
@@ -592,9 +595,10 @@ def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise TimeoutError(
                 f"replay drain incomplete: {sink} never reached {n_rows}"
             )
+        return spark.table(sink).orderBy("hour_us")
     finally:
         q.stop()
-    return spark.table(sink).orderBy("hour_us")
+        spark.catalog.dropTempView(sink)
 
 
 @query(

@@ -108,7 +108,22 @@ class ReplayDataSource(DataSource):
 
 
 def register(spark) -> None:
-    spark.dataSource.register(ReplayDataSource)
+    """Register the replay source with ``spark``. Spark checks a new
+    Python data source name against the thread's ACTIVE session, so a
+    ``newSession()`` child registering a name its active parent already
+    holds is refused (DATA_SOURCE_ALREADY_EXISTS) while the child still
+    cannot read it; ``spark`` is made active for the registration and
+    the previous active session restored."""
+    jsession = spark._jvm.org.apache.spark.sql.SparkSession
+    previous = jsession.getActiveSession()
+    jsession.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(ReplayDataSource)
+    finally:
+        if previous.isDefined():
+            jsession.setActiveSession(previous.get())
+        else:
+            jsession.clearActiveSession()
 
 
 __all__ = [

@@ -28,6 +28,7 @@ import atexit
 import os
 import shutil
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -150,20 +151,32 @@ def run_to_memory_sink(
     """Execute a streaming plan over all currently-available input
     (availableNow trigger), landing results in an in-memory table —
     the batch-equivalence test harness. Stream-stream joins require
-    ``output_mode='append'``."""
+    ``output_mode='append'``.
+
+    Each drain runs under its own name, ``query_name`` plus a unique
+    suffix: the memory sink registers its name as a session temp view,
+    and Spark refuses to start a query whose name is active. The result
+    is bound to the sink's data and the view is dropped, so concurrent
+    drains of one plan do not collide and the session catalog is left
+    as it was found."""
+    spark = stream_df.sparkSession
+    name = f"{query_name}_{uuid.uuid4().hex}"
     q = (
         stream_df.writeStream.format("memory")
-        .queryName(query_name)
+        .queryName(name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {query_name!r} did not finish in {timeout_sec}s"
-        )
-    return stream_df.sparkSession.table(query_name)
+    try:
+        if not q.awaitTermination(timeout_sec):
+            q.stop()
+            raise TimeoutError(
+                f"streaming query {query_name!r} did not finish in {timeout_sec}s"
+            )
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def enriched_counts_stream(

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import string
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,19 +79,37 @@ def _files_stamp(path: str) -> tuple | None:
         return None
 
 
+# One lock per memo key, so concurrent misses on a key build once
+# while a slow build (an inference job) blocks no other key.
+_BUILD_LOCKS: dict = {}
+_BUILD_LOCKS_GUARD = threading.Lock()
+
+
+def _build_lock(memo: dict, key) -> threading.RLock:
+    with _BUILD_LOCKS_GUARD:
+        return _BUILD_LOCKS.setdefault((id(memo), key), threading.RLock())
+
+
 def _memo_on_files(memo: dict, key, path: str, build):
     """``build()``, memoized in ``memo[key]`` until the files at
     ``path`` change: the entry is stamped with :func:`_files_stamp`,
     so a rewritten file or an added or removed part file rebuilds.
     This is the module's one rule for "this file changed". A path
-    that cannot be stat-ed is rebuilt on every call."""
+    that cannot be stat-ed is rebuilt on every call. Concurrent
+    misses on one key wait for a single build."""
     stamp = _files_stamp(path)
-    hit = memo.get(key)
-    if stamp is not None and hit is not None and hit[0] == stamp:
-        return hit[1]
-    value = build()
-    memo[key] = (stamp, value)
-    return value
+
+    def current():
+        hit = memo.get(key)
+        return hit if stamp is not None and hit is not None and hit[0] == stamp else None
+
+    hit = current()
+    if hit is None:
+        with _build_lock(memo, key):
+            hit = current()
+            if hit is None:
+                hit = memo[key] = (stamp, build())
+    return hit[1]
 
 
 def memo_on_table(memo: dict, key, sf_dir: str, name: str, build):
@@ -103,12 +122,26 @@ def memo_on_table(memo: dict, key, sf_dir: str, name: str, build):
     return _memo_on_files(memo, key, os.path.join(sf_dir, f"{name}.parquet"), build)
 
 
+def _inference_confs(spark: SparkSession) -> tuple:
+    """The session's values of :data:`_INFERENCE_CONFS`, ``None`` where
+    unset, as ``spark.conf.get(k, None)`` gives them. The explicit
+    settings come over as one string (two Py4J calls: the settings
+    snapshot and its rendering), not one call per conf; a value that
+    holds the rendering's separator falls back to a call per conf."""
+    rendered = spark.conf._jconf.getAll().mkString("\0")
+    entries = [e.split(" -> ", 1) for e in rendered.split("\0")] if rendered else []
+    if any(len(e) != 2 for e in entries):
+        return tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    settings = dict(entries)
+    return tuple(settings.get(k) for k in _INFERENCE_CONFS)
+
+
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` that infers each path's schema once.
     The memo entry is stamped with the files' stat and keyed on the
     current values of :data:`_INFERENCE_CONFS`; a rewritten file, an
     added or removed part file, or a flipped conf re-infers."""
-    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    confs = _inference_confs(spark)
     schema = _memo_on_files(
         _SCHEMA_CACHE, (path, confs), path, lambda: spark.read.parquet(path).schema
     )

@@ -356,3 +356,97 @@ def test_minhash_max_bucket_excludes_boilerplate(spark):
     assert all(d >= 100 for d in docs_in_pairs), capped
     uncapped = minhash_candidate_pairs(df, "text", "doc_id").collect()
     assert len(uncapped) > len(capped)  # boilerplate pairs reappear
+
+
+def test_minhash_band_buckets_match_duckdb_on_edge_texts(spark):
+    """The band-bucket statement against the DuckDB oracle's CTE chain
+    (``_minhash_bands_cte``) on the texts its CASE branches split on:
+    NULL, empty, one and two tokens (one whole-text shingle), exactly
+    three, repeated shingles, case folding and a double space (an
+    empty token)."""
+    import duckdb
+    import pandas as pd
+
+    from oarphpy_spark.llm.dedup import minhash_band_buckets
+    from oarphpy_spark.queries.llm_queries import _minhash_bands_cte
+
+    texts = [
+        None, "", "one", "two words", "exactly three words",
+        "a a a a a a", "a b a b a b a b", "The Quick brown FOX jumps",
+        "the quick brown fox jumps", "x  y z",
+    ]
+    pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
+    df = spark.createDataFrame(
+        list(zip(range(len(texts)), texts)), "doc_id bigint, text string"
+    )
+    buckets = minhash_band_buckets(df, "text", "doc_id", 8, 4, 3)
+    assert buckets.schema.simpleString() == "struct<doc:bigint,band:int,h:string>"
+
+    def key(row):
+        return tuple("" if v is None else v for v in row)
+
+    got = sorted((tuple(r) for r in buckets.collect()), key=key)
+    conn = duckdb.connect()
+    conn.register("documents", pdf)
+    want = sorted(
+        conn.execute(
+            f"WITH {_minhash_bands_cte(8, 4, 3)} SELECT doc_id, band, h FROM bands"
+        ).fetchall(),
+        key=key,
+    )
+    assert got == want
+
+
+def test_ivf_multiprobe_with_separate_queries_matches_numpy(spark):
+    """``ivf_topk`` with ``n_probe=2`` and a query DataFrame that is not
+    drawn from the corpus (its ids overlap the corpus's, so the
+    self-exclusion is by id), against a numpy restatement: two nearest
+    cells per query, cosine within them, NULL (zero-vector) scores
+    dropped, ranked by (cos DESC, neighbor_id)."""
+    import numpy as np
+
+    from oarphpy_spark.llm.similarity import ivf_topk
+
+    rng = np.random.default_rng(11)
+    corpus = rng.normal(size=(60, 6)).round(3)
+    corpus[7] = 0.0  # no defined cosine against anything
+    queries = rng.normal(size=(6, 6)).round(3)
+    queries[4] = 0.0
+    centroids = [(c, corpus[c + 10].tolist()) for c in range(5)]
+    cmat = np.array([v for _, v in centroids])
+    k = 4
+
+    def cells(v):
+        d = ((cmat - v) ** 2).sum(axis=1).round(6)
+        return np.argsort(d, kind="stable")
+
+    def cos(a, b):
+        na, nb = np.sqrt(a @ a), np.sqrt(b @ b)
+        return None if na * nb == 0 else round(float(a @ b / (na * nb)), 6)
+
+    corpus_cell = [cells(v)[0] for v in corpus]
+    want = []
+    for qid, qv in enumerate(queries):
+        probe = set(cells(qv)[:2])
+        scored = [
+            (cos(qv, cv), nid)
+            for nid, cv in enumerate(corpus)
+            if corpus_cell[nid] in probe and nid != qid
+        ]
+        scored = sorted((s for s in scored if s[0] is not None),
+                        key=lambda s: (-s[0], s[1]))
+        want += [(qid, nid, c) for c, nid in scored[:k]]
+
+    schema = "vec_id bigint, embedding array<double>"
+    cdf = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(corpus)], schema
+    )
+    qdf = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(queries)], schema
+    )
+    out = ivf_topk(cdf, qdf, k=k, centroids=centroids, n_probe=2)
+    assert out.columns == ["query_id", "neighbor_id", "cos"]
+    got = sorted(tuple(r) for r in out.collect())
+    assert [g[:2] for g in got] == [w[:2] for w in sorted(want)]
+    assert np.allclose([g[2] for g in got], [w[2] for w in sorted(want)], atol=2e-6)
+    assert 4 not in {g[0] for g in got} and 7 not in {g[1] for g in got}

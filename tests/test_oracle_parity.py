@@ -50,6 +50,18 @@ _BOUND_SQL_QUERIES = (
     "q_sql_pivot_clause", "q_sql_exists_decorrelate", "q_sql_grouping_id",
     "q_set_ops_all", "q_sql_recursive_reach", "q_udtf_chunks",
     "q_histogram", "q_kcore",
+    "q_dedup_minhash", "q_sim_topk", "q_sim_ivf_topk", "q_sim_ivf_multiprobe",
+)
+
+# Queries that drain a stream into a memory sink, whose name Spark
+# registers as a session temp view.
+_MEMORY_SINK_QUERIES = (
+    "q_stream_tumbling", "q_stream_sessionize", "q_stream_enriched",
+    "q_stream_stateful_totals", "q_stream_sliding", "q_stream_dropdup",
+    "q_stream_interval_join", "q_stream_late_data", "q_stream_ohlc",
+    "q_stream_distinct_users", "q_stream_python_source",
+    "q_stream_hierarchical_rollup", "q_stream_dedup_within_watermark",
+    "q_stream_running_anomaly",
 )
 
 
@@ -65,7 +77,7 @@ def test_listagg_leaves_no_temp_view(spark):
     # so a view a query registers under a table's own name shows.
     session = spark.newSession()
     queries = registry.queries()
-    for name in _BOUND_SQL_QUERIES:
+    for name in _BOUND_SQL_QUERIES + _MEMORY_SINK_QUERIES:
         before = sorted(t.name for t in session.catalog.listTables())
         queries[name](session, SF_SMALL)
         assert sorted(t.name for t in session.catalog.listTables()) == before, name

@@ -117,3 +117,23 @@ def test_slice_rounding_is_half_away_from_zero(tmp_path):
     # 0.135*100 is NOT an exact binary half (13.500000000000002) —
     # both schemes agree; pins that ordinary values are untouched.
     assert got[3] == 14
+
+
+def test_register_in_a_child_session_after_the_parent(spark):
+    """A ``newSession()`` child registers the source after its active
+    parent did, can read it, and leaves the parent active."""
+    from oarphpy_spark.sources.replay_stream import register
+
+    jsession = spark._jvm.org.apache.spark.sql.SparkSession
+    register(spark)
+    child = spark.newSession()
+    register(child)
+    assert jsession.getActiveSession().get().equals(spark._jsparkSession)
+    for session in (child, spark):
+        feed = (
+            session.readStream.format("events_replay")
+            .option("path", PATH)
+            .option("n_rows", "10")
+            .load()
+        )
+        assert feed.isStreaming

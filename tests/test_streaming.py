@@ -221,3 +221,30 @@ def test_ns_stream_leaves_session_conf_unset(spark, tmp_path):
     pq.write_table(pa.table({"ts": pa.array([1, 2], pa.timestamp("ns"))}), other)
     with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
         spark.read.parquet(other).collect()
+
+
+def test_concurrent_memory_sink_drains_match_oracle(spark):
+    """Two threads drain ``q_stream_tumbling`` at once in one session.
+    Each drain runs under its own memory-sink name, so neither start is
+    refused as a duplicate of an active query, and both results match
+    the DuckDB oracle."""
+    import threading
+
+    from oarphpy_spark.testing.parity import run_parity
+
+    barrier = threading.Barrier(2)
+    problems: list = [None, None]
+
+    def drain(i):
+        barrier.wait()
+        try:
+            problems[i] = run_parity(spark, "q_stream_tumbling", SF_SMALL)
+        except Exception as e:  # noqa: BLE001 — reported below
+            problems[i] = [repr(e)]
+
+    threads = [threading.Thread(target=drain, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+    assert problems == [[], []], problems

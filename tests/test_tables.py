@@ -166,3 +166,88 @@ def test_bloom_bits_follow_a_rewritten_supplier_table(spark, tmp_path):
     assert names() == ["S1", "S2"]
     write_supplier([2, 3, 4])
     assert names() == ["S2", "S3", "S4"]
+
+
+def test_inference_confs_read_as_conf_get(spark, monkeypatch):
+    """One read of the inference confs gives what ``spark.conf.get(k,
+    None)`` gives per key: ``None`` while unset, the value once set
+    (also a value holding the rendering's separators), and
+    ``None`` again after unset."""
+    from oarphpy_spark import tables
+
+    extra = "spark.oarphpy_spark.test.inferenceConf"
+    confs = tables._INFERENCE_CONFS + (extra,)
+    monkeypatch.setattr(tables, "_INFERENCE_CONFS", confs)
+
+    def per_key():
+        return tuple(spark.conf.get(k, None) for k in confs)
+
+    assert tables._inference_confs(spark) == per_key()
+    changed = {
+        "spark.sql.parquet.binaryAsString": "true",
+        "spark.sql.caseSensitive": "false",
+        extra: "a -> b, c",
+    }
+    before = {k: spark.conf.get(k, None) for k in changed}
+    try:
+        for k, v in changed.items():
+            spark.conf.set(k, v)
+        got = tables._inference_confs(spark)
+        assert got == per_key()
+        assert got[-1] == "a -> b, c"
+        spark.conf.set(extra, "x\x00y")  # the rendering's separator
+        assert tables._inference_confs(spark) == per_key()
+        for k in changed:
+            spark.conf.unset(k)
+        got = tables._inference_confs(spark)
+        assert got == per_key()
+        assert got[-1] is None
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_memo_builds_once_under_concurrent_misses(tmp_path):
+    """N threads missing one key run ``build`` once and all get its
+    value; a slow build holds up no other key."""
+    import threading
+    import time
+
+    from oarphpy_spark.tables import _memo_on_files
+
+    path = os.path.join(str(tmp_path), "f.parquet")
+    with open(path, "wb") as f:
+        f.write(b"x")
+    memo: dict = {}
+    calls = []
+    release = threading.Event()
+
+    def slow_build():
+        calls.append(1)
+        release.wait(10)
+        return object()
+
+    n = 8
+    barrier = threading.Barrier(n)
+    got = [None] * n
+
+    def miss(i):
+        barrier.wait()
+        got[i] = _memo_on_files(memo, "slow", path, slow_build)
+
+    threads = [threading.Thread(target=miss, args=(i,)) for i in range(n)]
+    for t in threads:
+        t.start()
+    deadline = time.monotonic() + 10
+    while not calls and time.monotonic() < deadline:
+        time.sleep(0.01)
+    # While "slow" is building, another key builds and returns.
+    assert _memo_on_files(memo, "other", path, lambda: "other") == "other"
+    release.set()
+    for t in threads:
+        t.join(10)
+    assert len(calls) == 1
+    assert all(v is got[0] for v in got) and got[0] is not None
