@@ -17,6 +17,7 @@ threshold as the reference (``oarphpy/spark.py:931``).
 
 from __future__ import annotations
 
+import functools
 from typing import Any
 
 import numpy as np
@@ -28,6 +29,12 @@ TENSOR_PACK_MIN_BYTES = 2 * 1024
 
 PYCLASS_KEY = "__pyclass__"
 _TENSOR_PYCLASS = "oarphpy_spark.codec.tensor.Tensor"
+
+
+@functools.lru_cache(maxsize=64)
+def _dtype_name(dtype: np.dtype) -> str:
+    # str(dtype) runs numpy's Python-level name formatting on each call.
+    return str(dtype)
 
 
 class Tensor:
@@ -42,9 +49,10 @@ class Tensor:
             **{
                 PYCLASS_KEY: _TENSOR_PYCLASS,
                 "shape": list(arr_c.shape),
-                "dtype": str(arr_c.dtype),
+                "dtype": _dtype_name(arr_c.dtype),
                 "order": "C",
-                "values": [] if packed else [v.item() for v in arr_c.ravel()],
+                # tolist() unboxes each element as item() does, in C.
+                "values": [] if packed else arr_c.ravel().tolist(),
                 "values_packed": bytearray(arr_c.tobytes()) if packed else bytearray(),
             }
         )

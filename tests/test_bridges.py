@@ -104,6 +104,96 @@ def test_iter_arrow_batches_raises_task_failure(spark):
         list(iter_arrow_batches(df))
 
 
+def _jobs_in_group(spark, group, run):
+    """Spark jobs that ``run()`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "feed job count")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+@pytest.mark.parametrize("prefetch", [True, False], ids=["prefetch", "no_prefetch"])
+def test_iter_arrow_batches_one_job_per_window(spark, prefetch):
+    """A P-partition feed runs ceil(P / defaultParallelism) jobs, each
+    computing a window of partitions in parallel."""
+    import math
+
+    window = spark.sparkContext.defaultParallelism
+    for n_parts in (1, window, 2 * window + 1):
+        df = spark.range(0, 10 * n_parts, 1, n_parts)
+        rows = []
+        jobs = _jobs_in_group(
+            spark, f"feed-windows-{prefetch}-{n_parts}",
+            lambda: rows.extend(b.num_rows for b in iter_arrow_batches(df, prefetch)),
+        )
+        assert sum(rows) == 10 * n_parts
+        assert len(jobs) == math.ceil(n_parts / window), (n_parts, window)
+
+
+def test_iter_arrow_batches_order_across_windows(spark):
+    """Partition order holds across window boundaries when the
+    partition count is not a multiple of the window, with uneven and
+    empty partitions."""
+    window = spark.sparkContext.defaultParallelism
+    assert window > 1
+    n_parts = 2 * window + 1
+    df = spark.range(0, 3000, 1, n_parts).filter(
+        ~F.col("id").between(1000, 1600) & (F.col("id") % 5 != 2)
+    )
+    ids = [i for b in iter_arrow_batches(df) for i in b.column("id").to_pylist()]
+    assert ids == [i for i in range(3000) if not 1000 <= i <= 1600 and i % 5 != 2]
+
+
+def test_iter_arrow_batches_raises_task_failure_in_second_window(spark):
+    """A failed task in the second window raises to the consumer after
+    the first window's rows were delivered."""
+    window = spark.sparkContext.defaultParallelism
+    n_parts, per_part = 2 * window, 10
+    bad = window * per_part  # first row of the second window
+    df = spark.range(0, n_parts * per_part, 1, n_parts).select(
+        F.when(F.col("id") == bad, F.raise_error(F.lit("window-boom")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+    seen = []
+    with pytest.raises(Exception, match="window-boom"):
+        for b in iter_arrow_batches(df):
+            seen.extend(b.column("id").to_pylist())
+    assert seen == list(range(bad))
+
+
+@pytest.mark.parametrize("prefetch,launched", [(True, 2), (False, 1)],
+                         ids=["prefetch", "no_prefetch"])
+def test_iter_arrow_batches_close_launches_no_further_job(spark, prefetch, launched):
+    """Closing the iterator after its first batch launches no job
+    beyond the window being read and, with prefetch, the next one."""
+    import time
+
+    sc = spark.sparkContext
+    window = sc.defaultParallelism
+    df = spark.range(0, 400 * window, 1, 4 * window)
+    group = f"feed-close-{prefetch}"
+
+    def first_batch_then_close():
+        it = iter_arrow_batches(df, prefetch)
+        next(it)
+        it.close()
+
+    _jobs_in_group(spark, group, first_batch_then_close)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 60
+    while time.monotonic() < deadline:  # let the prefetched job land
+        jobs = tracker.getJobIdsForGroup(group)
+        if len(jobs) >= launched and not tracker.getActiveJobsIds():
+            break
+        time.sleep(0.1)
+    time.sleep(0.5)
+    assert len(tracker.getJobIdsForGroup(group)) == launched
+
+
 def test_iter_row_batches_empty_df(spark):
     df = spark.range(10).filter("id < 0")
     assert list(iter_row_batches(df)) == []

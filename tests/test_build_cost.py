@@ -1,17 +1,23 @@
-"""Plan-build cost guard for the llm_curation hot queries.
+"""Driver-cost guards for the llm_curation hot paths.
 
 Both workloads of the benchmark spend more time building plans than
 running tasks: a plan costs Py4J round trips and analyzer passes. Each of
-these queries builds its plans as bound ``spark.sql`` statements; this
-test counts the Py4J commands a warm build sends and fails when a
-change brings back a chain of per-expression calls.
+the hot queries builds its plans as bound ``spark.sql`` statements; these
+tests count the Py4J commands a warm build sends and fail when a change
+brings back a chain of per-expression calls. ``RowAdapter.to_df`` gets
+the same guard: a fixed number of commands and no job, whatever the
+number of objects.
 """
 
 from __future__ import annotations
 
 import contextlib
+import dataclasses
+import functools
+import operator
 import threading
 
+import numpy as np
 import pytest
 
 from oarphpy_spark import registry
@@ -66,4 +72,69 @@ def test_warm_build_py4j_budget(spark, name):
     assert len(sent) <= _BUDGET[name], (
         f"{name}: {len(sent)} Py4J commands in a warm build "
         f"(budget {_BUDGET[name]})"
+    )
+
+
+@dataclasses.dataclass
+class _Box:
+    x: float
+    y: float
+
+
+@dataclasses.dataclass
+class _Sample:
+    """Shaped like the benchmark's codec objects: scalars, containers,
+    nested objects, a small and a packed tensor, a wrapped callable."""
+
+    sample_id: int
+    name: str
+    tags: list
+    attrs: dict
+    boxes: list
+    small: np.ndarray
+    big: np.ndarray
+    fn: object
+
+
+def _samples(n):
+    from oarphpy_spark.codec.callables import CloudpickeledCallable
+
+    rng = np.random.default_rng(0)
+    return [
+        _Sample(
+            sample_id=i,
+            name=f"sample-{i}",
+            tags=["a", "b"][: 1 + i % 2],
+            attrs={f"a{j}": float(j) for j in range(1 + i % 3)},
+            boxes=[_Box(float(i), float(j)) for j in range(1 + i % 3)],
+            small=rng.normal(size=(3, 3)).astype("float32"),
+            big=rng.normal(size=(16, 32)).astype("float32"),
+            fn=CloudpickeledCallable(functools.partial(operator.mul, i)),
+        )
+        for i in range(n)
+    ]
+
+
+# Py4J commands of a warm to_df of 600 objects, about 1.5x the 13
+# measured: parallelize ships the encoded rows in one file, then
+# pythonToJava and applySchemaToPythonRDD wrap them. The count does not
+# grow with the number of objects.
+_TO_DF_BUDGET = 20
+
+
+def test_warm_to_df_py4j_budget(spark):
+    from oarphpy_spark.codec.row_adapter import RowAdapter
+
+    objs = _samples(600)
+    RowAdapter.to_df(spark, objs)  # warms the compiled encoder
+    sc = spark.sparkContext
+    sc.setJobGroup("to-df-budget", "warm to_df")
+    try:
+        with _counting_py4j(spark) as sent:
+            RowAdapter.to_df(spark, objs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("to-df-budget") == []
+    assert len(sent) <= _TO_DF_BUDGET, (
+        f"to_df: {len(sent)} Py4J commands for 600 objects (budget {_TO_DF_BUDGET})"
     )

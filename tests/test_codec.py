@@ -215,3 +215,81 @@ def test_to_df_matches_create_dataframe_without_a_python_task(spark):
     # createDataFrame re-pickles its rows in a Python worker first.
     assert "PythonRDD[" in want._jdf.rdd().toDebugString()
     assert "PythonRDD[" not in df._jdf.rdd().toDebugString()
+
+
+class Holder:
+    def __init__(self, child=None, arr=None, tag=""):
+        self.child = child
+        self.arr = arr
+        self.tag = tag
+
+
+def _assert_to_df_equals_create_dataframe(spark, objs, proto=None):
+    schema = RowAdapter.to_schema(proto if proto is not None else objs[0])
+    want = spark.createDataFrame(
+        [RowAdapter.to_row(o) for o in objs], schema=schema, verifySchema=False
+    )
+    got = RowAdapter.to_df(spark, objs, prototype=proto)
+    assert got.schema == want.schema
+    assert got.rdd.getNumPartitions() == want.rdd.getNumPartitions()
+    assert got.collect() == want.collect()
+    return got
+
+
+def _evolved_holder():
+    # An instance written before ``gone`` was removed from the class
+    # still carries it; the schema comes from a current prototype.
+    h = Holder(child=DictObj(foo=9, bar="z"), arr=np.arange(2), tag="old")
+    h.gone = 5
+    return h
+
+
+_EDGE_CASES = {
+    "none_nested_object_and_tensor": [
+        Holder(child=DictObj(foo=1, bar="a"), arr=np.arange(3), tag="x"),
+        Holder(child=None, arr=None, tag=None),
+    ],
+    "empty_zero_d_and_bool_tensors": [
+        Holder(child=DictObj(), arr=np.zeros(0), tag="empty"),
+        Holder(child=DictObj(), arr=np.array(3.5), tag="0-d"),
+        Holder(child=DictObj(), arr=np.array([True, False]), tag="bool"),
+        Holder(child=DictObj(), arr=np.zeros((0, 3), np.int32), tag="empty-2d"),
+        Holder(child=DictObj(), arr=np.ones((40, 40), np.float32), tag="packed"),
+    ],
+    "slots_dict_hybrids": [HybridSlots(), HybridSlots()],
+    "frozen_dataclasses": [FrozenPoint(x=1, y="a"), FrozenPoint(x=2, y="b")],
+    "frozen_slots_dataclasses": [FrozenSlotPoint(x=3, y="c")],
+    "removed_field_on_old_instances": [
+        Holder(child=DictObj(foo=1, bar="a"), arr=np.arange(2), tag="new"),
+        _evolved_holder(),
+    ],
+    "callables_and_maps": [
+        DictObj(foo={"k": CloudpickeledCallable(_mod_double)}, bar=[b"\x00", b""]),
+        DictObj(foo={"k": CloudpickeledCallable()}, bar=[]),
+    ],
+}
+for _i, _h in enumerate(_EDGE_CASES["slots_dict_hybrids"]):
+    _h.x = _i
+    _h.extra = f"dict-{_i}"  # lands in __dict__ beside the slot
+
+
+@pytest.mark.parametrize("case", sorted(_EDGE_CASES))
+def test_to_df_equals_create_dataframe_on_edge_objects(spark, case):
+    _assert_to_df_equals_create_dataframe(spark, _EDGE_CASES[case])
+
+
+def test_to_df_decodes_edge_objects(spark, tmp_path):
+    objs = _EDGE_CASES["none_nested_object_and_tensor"]
+    back = _roundtrip_df(spark, objs, tmp_path)
+    back = sorted(back, key=lambda o: o.tag is None)
+    assert back[0].child == DictObj(foo=1, bar="a")
+    assert np.array_equal(back[0].arr, np.arange(3))
+    assert back[1].child is None and back[1].arr is None
+
+
+def test_to_df_of_no_objects_needs_a_prototype(spark):
+    with pytest.raises(ValueError, match="prototype"):
+        RowAdapter.to_df(spark, [])
+    df = RowAdapter.to_df(spark, [], prototype=DictObj(foo=1, bar="a"))
+    assert df.schema == RowAdapter.to_schema(DictObj(foo=1, bar="a"))
+    assert df.count() == 0

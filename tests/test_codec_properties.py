@@ -1,11 +1,15 @@
 """Property-based round-trip tests for the codec layer (hypothesis):
 for ANY generated object graph, from_row(to_row(x)) == x, and the
-deduced schema accepts the encoded row. Runs driver-side (no Spark
-job) so hundreds of examples stay fast; the Spark/parquet leg is
+deduced schema accepts the encoded row, and ``to_df``'s compiled
+encoder ships exactly what ``createDataFrame`` would. Runs driver-side
+(no Spark job) so hundreds of examples stay fast, except for one
+DataFrame-level check on a few examples; the Spark/parquet leg is
 covered by tests/test_codec.py on representative cases.
 """
 
 from __future__ import annotations
+
+import dataclasses
 
 import numpy as np
 from hypothesis import given, settings
@@ -90,3 +94,105 @@ def test_schema_deducible_for_nonempty(v):
         assert "empty" in str(ex) or "None" in str(ex)
         return
     assert schema.fieldNames() == ["x"]
+
+
+class Pair:
+    """A plain object: its fields are listed per instance, set here out
+    of the sorted order ``to_row`` lists them in."""
+
+    def __init__(self, b=None, a=None):
+        self.b, self.a = b, a
+
+
+@dataclasses.dataclass
+class Triple:
+    """Fields fixed by the class, declared out of sorted order."""
+
+    z: object = None
+    m: object = None
+    a: object = None
+
+
+# Like ``values``, with multi-field objects of both kinds nested in and
+# map keys of two types (a key of the other type than the prototype's
+# is converted, not passed through).
+encoder_values = st.recursive(
+    st.one_of(scalars, arrays),
+    lambda children: st.one_of(
+        st.lists(children, min_size=1, max_size=4),
+        st.dictionaries(
+            st.one_of(st.text(min_size=1, max_size=8), st.integers(-3, 3)),
+            children, min_size=1, max_size=4,
+        ),
+        children.map(Box),
+        st.builds(Pair, children, children),
+        st.builds(Triple, children, children, children),
+    ),
+    max_leaves=8,
+)
+
+
+def _reference_internal(schema, obj):
+    """What ``createDataFrame(rows, schema, verifySchema=False)`` ships
+    for ``obj``: ``to_row``, the Row-name-dropping converter, then
+    ``toInternal``."""
+    from pyspark.sql.types import _create_converter
+
+    return schema.toInternal(_create_converter(schema)(RowAdapter.to_row(obj)))
+
+
+def _encoded_or_error(encode, obj):
+    try:
+        return encode(obj)
+    except Exception as ex:  # noqa: BLE001 — compared, not swallowed
+        return type(ex)
+
+
+@given(st.lists(encoder_values, min_size=1, max_size=4))
+@settings(max_examples=300, deadline=None)
+def test_compiled_encoder_equals_reference_encoding(vs):
+    """The compiled encoder emits exactly the internal tuples
+    createDataFrame builds, for every object under the first object's
+    schema: same-shaped objects take the compiled plan, others its
+    fallback (an error on both sides counts as equal)."""
+    from oarphpy_spark.codec.row_adapter import _encoder
+
+    objs = [Box(payload=v) for v in vs]
+    try:
+        schema = RowAdapter.to_schema(objs[0])
+    except ValueError:
+        return  # the documented empty-container / None pitfall
+    encode = _encoder(schema)
+    for o in objs:
+        assert _encoded_or_error(encode, o) == _encoded_or_error(
+            lambda x: _reference_internal(schema, x), o
+        )
+
+
+@given(st.lists(encoder_values, min_size=1, max_size=3))
+@settings(max_examples=8, deadline=None)
+def test_to_df_equals_create_dataframe(spark, vs):
+    """DataFrame level: to_df's schema, rows and partition count equal
+    createDataFrame's over the rows to_row encodes."""
+    import pytest
+
+    objs = [Box(payload=v) for v in vs]
+    try:
+        schema = RowAdapter.to_schema(objs[0])
+        for o in objs:
+            _reference_internal(schema, o)
+    except (ValueError, TypeError):
+        return  # untypeable prototype, or objects the schema cannot hold
+    want = spark.createDataFrame(
+        [RowAdapter.to_row(o) for o in objs], schema=schema, verifySchema=False
+    )
+    got = RowAdapter.to_df(spark, objs)
+    assert got.schema == want.schema
+    assert got.rdd.getNumPartitions() == want.rdd.getNumPartitions()
+    try:
+        want_rows = want.collect()
+    except Exception:  # noqa: BLE001 — the JVM rejects a value: so must to_df
+        with pytest.raises(Exception):
+            got.collect()
+        return
+    assert got.collect() == want_rows

@@ -400,3 +400,68 @@ def test_spread_leaves_join_and_aggregate_plans_unchanged(spark, tmp_path):
     shuffled = big.join(small, "k")
     for df in (bcast, agg, shuffled):
         assert spread(df) is df
+
+
+def test_spread_reads_scan_partitions_without_a_job(spark, tmp_path):
+    """spread takes the same decision as ``df.rdd.getNumPartitions() <
+    defaultParallelism`` on a one-file scan, a multi-split scan, scans
+    of several files (counted from the listing, and past its file cap)
+    and a shuffled plan, and launches no job to take it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from oarphpy_spark.util.partitioning import scan_partitions, spread
+
+    one = str(tmp_path / "one.parquet")
+    pq.write_table(pa.table({"k": list(range(200))}), one)
+    split = str(tmp_path / "split.parquet")
+    pq.write_table(
+        pa.table({"k": list(range(60_000))}), split, row_group_size=5_000
+    )
+    multi = tmp_path / "multi"
+    multi.mkdir()
+    for i, n in enumerate([0, 10, 2_000, 50_000]):
+        pq.write_table(
+            pa.table({"k": list(range(n))}), str(multi / f"p{i}.parquet"),
+            row_group_size=5_000,
+        )
+    wide = tmp_path / "wide"  # more files than the listing count reads
+    wide.mkdir()
+    for i in range(20):
+        pq.write_table(pa.table({"k": [i]}), str(wide / f"w{i}.parquet"))
+    sc = spark.sparkContext
+    target = sc.defaultParallelism
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    try:
+        for max_bytes in ("134217728", "65536", "4096"):
+            spark.conf.set(key, max_bytes)
+            frames = {
+                "one_file": spark.read.parquet(one),
+                "multi_split": spark.read.parquet(split).filter(F.col("k") > 3),
+                "many_files": spark.read.parquet(str(multi)).select("k"),
+                "past_listing_cap": spark.read.parquet(str(wide)),
+            }
+            for name, df in frames.items():
+                want = df.rdd.getNumPartitions()
+                group = f"spread-probe-{max_bytes}-{name}"
+                sc.setJobGroup(group, "spread")
+                try:
+                    got = scan_partitions(df)
+                    out = spread(df)
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                assert sc.statusTracker().getJobIdsForGroup(group) == []
+                assert got == want, (max_bytes, name)
+                assert (out is not df) == (want < target), (max_bytes, name)
+        assert spark.read.parquet(split).rdd.getNumPartitions() > 1  # splits at 4 KB
+        shuffled = spark.read.parquet(one).groupBy("k").count()
+        sc.setJobGroup("spread-probe-shuffled", "spread")
+        try:
+            assert spread(shuffled) is shuffled
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("spread-probe-shuffled") == []
+    finally:
+        spark.conf.set(key, prior)
