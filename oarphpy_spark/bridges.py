@@ -19,7 +19,12 @@ dicts ready for ``tf.data.Dataset.from_generator`` / torch
 Memory is bounded by a window, not by the frame: the JVM driver holds
 the encoded batches of the window being read plus at most one
 prefetched window, and Python holds one batch at a time (each window is
-streamed from its socket, never listed).
+streamed from its socket, never listed). A window's batches are one
+job's results, so ``spark.driver.maxResultSize`` caps a window where it
+used to cap a partition: windows shrink, down to one partition, to fit
+the optimizer's size estimate under half of it. The estimate is not a bound; a
+window whose Arrow batches outgrow the cap fails its job with Spark's
+"bigger than spark.driver.maxResultSize" error.
 
 The feed reaches into the JVM DataFrame (``df._jdf``), so it needs a
 classic session, not Spark Connect. Timestamps are labelled ``UTC``
@@ -47,11 +52,14 @@ def iter_arrow_batches(
     partition order, one window of partitions per Spark job, never a
     full collect.
 
-    A window is up to ``sc.defaultParallelism`` consecutive partitions.
-    Each window is one job (``PythonRDD.runJob`` over
-    ``toArrowBatchRdd``, the encoder behind ``toArrow()``; ~10k rows
-    per batch, ``spark.sql.execution.arrow.maxRecordsPerBatch``) whose
-    tasks run in parallel; the JVM driver then serves the window's
+    A window is up to ``sc.defaultParallelism`` consecutive partitions,
+    fewer when the plan's estimated size (``stats.sizeInBytes``, spread
+    evenly over its partitions) of that many would exceed half of
+    ``spark.driver.maxResultSize``. Each window is one job
+    (``PythonRDD.runJob`` over ``toArrowBatchRdd``, the encoder behind
+    ``toArrow()``; ~10k rows per batch,
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``) whose tasks run
+    in parallel; the JVM driver then serves the window's
     Arrow IPC record-batch messages over a local socket, in partition
     order, and the driver wraps each message zero-copy against the
     schema ``toArrow()`` builds. No Python worker and no per-row object
@@ -61,7 +69,19 @@ def iter_arrow_batches(
     partitions' encoded batches) in the JVM driver, plus one more when
     ``prefetch_partitions`` is true: the next window's job then runs on
     a background thread, under the caller's job group and other local
-    properties, while the consumer reads the current window.
+    properties, while the consumer reads the current window. The
+    background thread also connects to the window's socket as soon as
+    the job ends, since the JVM serves it only to a client that
+    connects within ``spark.python.authenticate.socketTimeout``; a
+    consumer may take as long as it likes over each window.
+
+    The window's results must fit ``spark.driver.maxResultSize``.
+    Windows are sized from the optimizer's estimate, which can be low
+    (compressed files, wide strings) or high (joins without statistics,
+    which then run one partition per job). A window whose encoded
+    batches exceed the cap raises Spark's "bigger than
+    spark.driver.maxResultSize" error, as a partition that alone
+    exceeds it always did.
 
     Abandoning the iterator early launches no further job: the window
     in flight finishes and is discarded. A failed task raises to the
@@ -82,16 +102,20 @@ def iter_arrow_batches(
         prefers_large_types=spark._jconf.arrowUseLargeVarTypes(),
     )
     jrdd = df._jdf.toArrowBatchRdd().toJavaRDD()
-    n, step = jrdd.getNumPartitions(), max(1, sc.defaultParallelism)
+    n = jrdd.getNumPartitions()
+    step = _window_size(df, n)
     windows = [list(range(i, min(i + step, n))) for i in range(0, n, step)]
     run_job = functools.partial(sc._jvm.PythonRDD.runJob, sc._jsc.sc(), jrdd)
-    served = _prefetched(sc, run_job, windows) if prefetch_partitions else map(
-        run_job, windows
+
+    def serve(window):  # connect at once: the JVM accepts for a bounded time
+        return _create_local_socket(run_job(window))
+
+    served = _prefetched(sc, serve, windows) if prefetch_partitions else map(
+        serve, windows
     )
     frames = NoOpSerializer()
     try:
-        for sock_info in served:
-            sockfile = _create_local_socket(sock_info)
+        for sockfile in served:
             try:
                 for buf in frames.load_stream(sockfile):
                     yield pa.ipc.read_record_batch(pa.py_buffer(buf), schema)
@@ -100,6 +124,22 @@ def iter_arrow_batches(
     finally:
         if prefetch_partitions:
             served.close()
+
+
+def _window_size(df: DataFrame, n_partitions: int) -> int:
+    """Partitions per feed job: ``defaultParallelism``, or fewer when
+    the optimizer's size estimate for that many of the plan's
+    ``n_partitions`` would exceed half of ``spark.driver.maxResultSize``
+    (the bytes one job may return to the driver; 0: no cap). Half,
+    because the estimate is rough."""
+    sc = df.sparkSession.sparkContext
+    step = max(1, sc.defaultParallelism)
+    cap = sc._jsc.sc().conf().getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if cap > 0 and n_partitions > 0:
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        size = int(str(stats.sizeInBytes()))  # a JVM BigInt
+        step = max(1, min(step, cap // 2 * n_partitions // max(1, size)))
+    return step
 
 
 def _prefetched(sc, run: Callable, args: Sequence) -> Iterator:
@@ -111,13 +151,11 @@ def _prefetched(sc, run: Callable, args: Sequence) -> Iterator:
     (job group, tags, scheduler pool), as ``InheritableThread`` does.
     An exception from ``run`` raises here when its result is reached.
     Closing the generator starts nothing new; a result still in flight
-    is discarded when it lands, its served socket connected and closed
-    so the JVM's serving thread ends at once.
+    is closed when it lands.
     """
     from concurrent.futures import ThreadPoolExecutor
 
     from py4j.clientserver import ClientServer
-    from pyspark.util import _create_local_socket
 
     if not args:
         return
@@ -139,8 +177,7 @@ def _prefetched(sc, run: Callable, args: Sequence) -> Iterator:
     finally:
         if pending is not None:
             pending.add_done_callback(
-                lambda f: f.exception() is None
-                and _create_local_socket(f.result()).close()
+                lambda f: f.exception() is None and f.result().close()
             )
         pool.shutdown(wait=False)
 

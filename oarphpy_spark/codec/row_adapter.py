@@ -21,7 +21,6 @@ from __future__ import annotations
 import dataclasses
 import functools
 import importlib
-import operator
 from collections.abc import Callable
 from typing import Any
 
@@ -219,44 +218,22 @@ def _compile_struct(dt, ref) -> Callable[[Any], Any]:
         )
     if not dt.names or dt.names[0] != PYCLASS_KEY:
         return ref
-    names = dt.names[1:]
     encs = [_compile(f.dataType) for f in dt.fields[1:]]
-    if len(names) > 1:
-        by_class = operator.attrgetter(*names)
-    else:
-        by_class = lambda v: tuple(getattr(v, n) for n in names)  # noqa: E731
-    plans: dict[type, tuple] = {}
-
-    def plan(v) -> tuple:
-        # (field reader, __pyclass__ tag) for every instance of v's
-        # class. Dataclass and attrs classes fix their fields per class,
-        # so one check of the names lets every instance be read by name;
-        # other objects list theirs per instance, in to_row's order.
-        cls = type(v)
-        if issubclass(cls, _NOT_OBJECTS):
-            return None, None
-        if dataclasses.is_dataclass(cls):
-            keys = [f.name for f in dataclasses.fields(cls)]
-        elif hasattr(cls, "__attrs_attrs__"):
-            keys = [a.name for a in cls.__attrs_attrs__]
-        else:
-            keys = None
-        read = by_class if keys is not None and sorted(keys) == names else by_instance
-        return read, _pyclass_of(v)
-
-    def by_instance(v):
-        # Positional, like the converter and toInternal on to_row's Row:
-        # an object whose fields differ from the schema's lines up (and
-        # truncates) exactly as it does there.
-        return _object_fields(v).values()
+    pyclasses: dict[type, str | None] = {}  # None: not an object to_row tags
 
     def enc_object(v):
         if v is None:
             return None
-        read, pyclass = plans.get(type(v)) or plans.setdefault(type(v), plan(v))
-        if read is None:
+        cls = type(v)
+        if cls not in pyclasses:
+            pyclasses[cls] = None if issubclass(cls, _NOT_OBJECTS) else _pyclass_of(v)
+        pyclass = pyclasses[cls]
+        if pyclass is None:
             return ref(v)
-        return (pyclass, *[e(x) for e, x in zip(encs, read(v))])
+        # Positional, like the converter and toInternal on to_row's Row:
+        # an object whose fields differ from the schema's lines up (and
+        # truncates) exactly as it does there.
+        return (pyclass, *[e(x) for e, x in zip(encs, _object_fields(v).values())])
 
     return enc_object
 
@@ -359,11 +336,10 @@ class RowAdapter:
 
         * An encoder compiled once per schema walks the ``StructType``
           and emits Spark's internal tuples straight from the objects:
-          tensor and callable structs, ``__pyclass__`` objects (read
-          by ``getattr`` over the schema's field names when their
-          dataclass or attrs class has exactly those fields), arrays,
-          maps and binary. No ``Row`` is built, and no per-row
-          ``toInternal`` pass follows. A value whose shape the schema
+          tensor and callable structs, ``__pyclass__`` objects (their
+          fields read in ``to_row``'s order), arrays, maps and binary.
+          No ``Row`` is built, and no per-row ``toInternal`` pass
+          follows. A value whose shape the schema
           does not describe falls back to ``to_row`` and
           ``toInternal``, so the result is the same whatever the
           objects hold.

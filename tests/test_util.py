@@ -405,13 +405,13 @@ def test_spread_leaves_join_and_aggregate_plans_unchanged(spark, tmp_path):
 def test_spread_reads_scan_partitions_without_a_job(spark, tmp_path):
     """spread takes the same decision as ``df.rdd.getNumPartitions() <
     defaultParallelism`` on a one-file scan, a multi-split scan, scans
-    of several files (counted from the listing, and past its file cap)
-    and a shuffled plan, and launches no job to take it."""
+    of several files and a shuffled plan, and launches no job to take
+    it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from oarphpy_spark.util.partitioning import scan_partitions, spread
+    from oarphpy_spark.util.partitioning import spread
 
     one = str(tmp_path / "one.parquet")
     pq.write_table(pa.table({"k": list(range(200))}), one)
@@ -426,7 +426,7 @@ def test_spread_reads_scan_partitions_without_a_job(spark, tmp_path):
             pa.table({"k": list(range(n))}), str(multi / f"p{i}.parquet"),
             row_group_size=5_000,
         )
-    wide = tmp_path / "wide"  # more files than the listing count reads
+    wide = tmp_path / "wide"
     wide.mkdir()
     for i in range(20):
         pq.write_table(pa.table({"k": [i]}), str(wide / f"w{i}.parquet"))
@@ -441,19 +441,17 @@ def test_spread_reads_scan_partitions_without_a_job(spark, tmp_path):
                 "one_file": spark.read.parquet(one),
                 "multi_split": spark.read.parquet(split).filter(F.col("k") > 3),
                 "many_files": spark.read.parquet(str(multi)).select("k"),
-                "past_listing_cap": spark.read.parquet(str(wide)),
+                "twenty_files": spark.read.parquet(str(wide)),
             }
             for name, df in frames.items():
                 want = df.rdd.getNumPartitions()
                 group = f"spread-probe-{max_bytes}-{name}"
                 sc.setJobGroup(group, "spread")
                 try:
-                    got = scan_partitions(df)
                     out = spread(df)
                 finally:
                     sc.setLocalProperty("spark.jobGroup.id", None)
                 assert sc.statusTracker().getJobIdsForGroup(group) == []
-                assert got == want, (max_bytes, name)
                 assert (out is not df) == (want < target), (max_bytes, name)
         assert spark.read.parquet(split).rdd.getNumPartitions() > 1  # splits at 4 KB
         shuffled = spark.read.parquet(one).groupBy("k").count()
