@@ -43,8 +43,14 @@ class Tensor:
 
     @staticmethod
     def from_numpy(arr: np.ndarray) -> Row:
-        arr_c = np.ascontiguousarray(arr)
+        # asarray keeps a 0-d array 0-d; ascontiguousarray makes it (1,).
+        arr_c = np.asarray(arr, order="C")
         packed = arr_c.nbytes >= TENSOR_PACK_MIN_BYTES or arr_c.size == 0
+        flat = arr_c.ravel()
+        if flat.dtype == np.bool_:
+            # The cell is typed array<bigint>, where the JVM nulls
+            # Python bools; 0/1 ints decode back to dtype=bool.
+            flat = flat.view(np.uint8)
         return Row(
             **{
                 PYCLASS_KEY: _TENSOR_PYCLASS,
@@ -52,7 +58,7 @@ class Tensor:
                 "dtype": _dtype_name(arr_c.dtype),
                 "order": "C",
                 # tolist() unboxes each element as item() does, in C.
-                "values": [] if packed else arr_c.ravel().tolist(),
+                "values": [] if packed else flat.tolist(),
                 "values_packed": bytearray(arr_c.tobytes()) if packed else bytearray(),
             }
         )

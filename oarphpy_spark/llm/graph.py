@@ -17,8 +17,9 @@ message loops, just a handful of hash-partitioned self-joins over an
 edge table that *shrinks* as stars collapse.
 
 In the convergence-checked loops (connected components, k-core,
-k-truss, SSSP) a round is one Spark action: the eager lineage cut of
-the round's result (``util/checkpoints.truncate_lineage``, so round
+k-truss, SSSP, and each step of strongly connected components) a
+round is one Spark action: the eager lineage cut of the round's
+result (``util/checkpoints.truncate_lineage``, so round
 k's plan does not replay rounds 1..k-1), with the convergence test —
 a row count, a content checksum — counted inside that same job
 through ``operators/counters.observed`` rather than by a second
@@ -198,8 +199,9 @@ def pagerank(
     iteration (without it, iteration k replans and recomputes 1..k-1,
     which is quadratic) through ``util/checkpoints.truncate_lineage``,
     reliable iff a checkpoint dir is configured. The final result is
-    checkpointed eagerly so the persisted loop inputs can be released
-    deterministically before returning. Nodes with no inbound edges
+    checkpointed eagerly so the persisted loop inputs and the
+    superseded round cuts can be released deterministically before
+    returning. Nodes with no inbound edges
     settle at 1-d; nodes absent from ``edges`` do not appear.
 
     ``seed_indicator`` turns this into PERSONALIZED PageRank
@@ -237,12 +239,16 @@ def pagerank(
         base = F.lit(1.0 - damping) * seed
         r0 = seed
     ranks = nodes.withColumn("rank", r0)
+    cuts = []
     for _ in range(iterations):
         ranks = truncate_lineage(
             _pagerank_step(nodes, edges_w, ranks, damping, base),
             eager=False,
         )
+        cuts.append(ranks)
     ranks = truncate_lineage(ranks, eager=True)
+    for df in cuts:
+        release_checkpoint(df)
     nodes.unpersist()
     edges_w.unpersist()
     return ranks
@@ -520,14 +526,12 @@ def triangle_count(
 
 # Row count up to which a round's small checkpointed relation (the
 # kcore keep set, the sssp frontier and distances, the ktruss deleted
-# edges) is hinted as a broadcast. Spark cannot size a checkpointed
-# table, so unhinted it shuffles that side before AQE turns the join
-# into a broadcast: extra jobs in every round of a job-latency-bound
-# loop. 2^20 rows of one or two longs are 8-16 MB, far below the
-# presets' 64 MB broadcast bound.
+# edges, the scc node-side relations) is hinted as a broadcast. Spark
+# cannot size a checkpointed table, so unhinted it shuffles that side
+# before AQE turns the join into a broadcast: extra jobs in every
+# round of a job-latency-bound loop. 2^20 rows of one or two longs
+# are 8-16 MB, far below the presets' 64 MB broadcast bound.
 _BROADCAST_MAX_ROWS = 1 << 20
-# kcore's own bound, so a test can force its shuffled keep-set path.
-_KCORE_BROADCAST_KEEP_MAX_ROWS = _BROADCAST_MAX_ROWS
 
 
 def _broadcast_if_small(df: DataFrame, n_rows: int) -> DataFrame:
@@ -587,7 +591,7 @@ def kcore(
     costs no action of its own, and the superseded degree table is
     released as soon as the next one is built. The same job counts
     the keep set, which is broadcast to the next round's semi-joins
-    while it holds at most ``_KCORE_BROADCAST_KEEP_MAX_ROWS`` nodes
+    while it holds at most ``_BROADCAST_MAX_ROWS`` nodes
     and shuffled beyond that. A round's plan is one ``spark.sql``
     statement (one parse, one analysis). Raises if ``max_iter``
     rounds don't reach the fixpoint — callers (and the unrolled SQL
@@ -628,7 +632,7 @@ def kcore(
         else:
             hint = (
                 "/*+ BROADCAST(ka, kb) */"
-                if n_keep <= _KCORE_BROADCAST_KEEP_MAX_ROWS
+                if n_keep <= _BROADCAST_MAX_ROWS
                 else ""
             )
             round_df = spark.sql(
@@ -988,7 +992,9 @@ def label_propagation(
     hash-partitioned on node id, lineage truncated per round. The
     symmetric edge table is built once, repartitioned on src and
     persisted, so the per-round join never re-exchanges the big side
-    (the pagerank loop's discipline).
+    (the pagerank loop's discipline). As there, the final labels are
+    cut eagerly and the round cuts released: only the result's
+    checkpoint outlives the call.
 
     Returns (node, label); isolated nodes keep their own id only if
     they appear in ``edges`` (self-loops count as neighbors).
@@ -1007,6 +1013,7 @@ def label_propagation(
         .distinct()
         .withColumn("label", F.col("node"))
     )
+    cuts = []
     for _ in range(rounds):
         labels = (
             sym.join(labels, sym.b == labels.node)
@@ -1020,7 +1027,10 @@ def label_propagation(
             )
         )
         labels = truncate_lineage(labels, eager=False)
+        cuts.append(labels)
     labels = truncate_lineage(labels, eager=True)
+    for df in cuts:
+        release_checkpoint(df)
     sym.unpersist()
     return labels
 
@@ -1033,199 +1043,174 @@ def strongly_connected_components(
     max_inner: int = 64,
 ) -> DataFrame:
     """SCCs of a DIRECTED edge list via trim + Orzan coloring — the
-    label-propagation SCC used by Pregel-style systems (Orzan 2004;
-    Salihoglu & Widom, VLDB 2014 §6.3), here as shuffle-bounded
-    DataFrame passes. Returns ``(node, scc_id)`` for every
-    non-isolated node, ``scc_id`` = MAX node id in the SCC.
+    label-propagation SCC of Pregel-style systems (Orzan 2004;
+    Salihoglu & Widom, VLDB 2014 §6.3) — over one relation,
+    ``state(node, scc_id)``, with ``scc_id`` NULL while a node is
+    open. Returns ``(node, scc_id)`` for every non-isolated node,
+    ``scc_id`` = MAX node id in the SCC, typed like the input ids.
 
-    Per outer round, on the still-unassigned subgraph:
+    Every step is one Spark action: the eager lineage cut of its
+    relation, with its convergence test a count observed in that same
+    job (``operators/counters.observed``). Per outer round:
 
-    1. TRIM — nodes with no in-edges or no out-edges are singleton
-       SCCs by definition; peel them (two semi/anti joins). This is
-       what kills the long DAG tail real graphs have.
-    2. COLOR — propagate ``color = max(reachable-ancestor id)``
-       forward to fixpoint (join + groupBy-max per step; the
-       1-row convergence action exploits that SUM(color) is
-       strictly monotone until the fixpoint).
-    3. PEEL — every color root (``color == node``) can reach its
-       whole color class FORWARD; the root's SCC is the subset that
-       reaches it BACK. Backward-propagate membership from the
-       roots along color-respecting edges to fixpoint (COUNT is
-       monotone), assign, subtract, repeat.
+    1. TRIM — open nodes with no open in-edge or no open out-edge are
+       singleton SCCs (``scc_id = node``). Repeated until a pass trims
+       nothing, so a DAG tail peels from both ends within one round.
+    2. COLOR — forward max-id propagation over the open nodes. A step
+       aggregates ``(node, color = max, prev = max of the old color)``
+       and the fixpoint is no ``color != prev``, for any id type.
+    3. PEEL — a color root (``color == node``) reaches its class
+       forward; its SCC is the part that reaches it back: ``marked ∪
+       msgs`` DISTINCT along same-color edges until the marked row
+       count stops growing.
+    4. ASSIGN — marked nodes take their root's id; the open count
+       observed there ends the loop at 0.
 
-    Every relation that loops is lineage-truncated per step
-    (``util/checkpoints.truncate_lineage``); the active-subgraph edge table is
-    rebuilt per outer round but the node set only shrinks. Worst
-    case (adversarial id order on a path) is O(V) outer rounds —
-    bounded by ``max_outer`` with a convergence raise, same
-    contract as ``connected_components``.
+    Node-side relations are broadcast while they hold at most
+    ``_BROADCAST_MAX_ROWS`` rows. Each superseded ``state``/``color``/
+    ``marked`` checkpoint is released once its successor is
+    materialized, and the edge copy at the end: only the result's
+    checkpoint outlives the call. Worst case (adversarial id order on
+    a path) is O(V) outer rounds, bounded by ``max_outer`` (each inner
+    loop by ``max_inner``) with a convergence raise, as in
+    ``connected_components``.
     """
-    spark = edges.sparkSession
-    e0 = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-    )
-    e0 = truncate_lineage(e0, eager=True)
-    nodes = truncate_lineage(
-        e0.select(F.col("s").alias("node"))
-        .union(e0.select("d"))
-        .distinct(),
-        eager=True,
-    )
-    # The empty seed's schema derives from the input edge id type
-    # (scc_id = MAX node id, same type), so string/other non-integral
-    # node ids work exactly as they do in connected_components.
-    from pyspark.sql.types import StructField, StructType
+    def cut(df, cols, old, name, **counts):
+        """``df``'s ``cols`` cut eagerly, each of ``counts`` (name ->
+        predicate over ``df``) counted in that job; ``old``, the
+        checkpoint it supersedes, is released after."""
+        df, obs = observed(
+            df,
+            f"scc_{name}",
+            *(F.count(F.when(p, 1)).alias(k) for k, p in counts.items()),
+        )
+        df = truncate_lineage(df.select(*cols))
+        if old is not None:
+            release_checkpoint(old)
+        return df, obs.get
 
-    id_type = e0.schema["s"].dataType
-    assigned = spark.createDataFrame(
-        [],
-        StructType(
-            [
-                StructField("node", id_type),
-                StructField("scc_id", id_type),
-            ]
-        ),
-    )
+    def proj(df, **cols):
+        """``df`` as ``cols``: name -> a column of ``df`` or a literal."""
+        return df.select(
+            *(
+                (F.col(v) if isinstance(v, str) else F.lit(v)).alias(k)
+                for k, v in cols.items()
+            )
+        )
 
+    e0, m = cut(
+        proj(edges, s=src, d=dst).filter(F.col("s") != F.col("d")).distinct(),
+        ("s", "d"), None, "edges", n=F.lit(True),
+    )
+    is_open = F.col("scc_id").isNull()
+    # One seed row per edge end, so 2|E| bounds the open node count.
+    state, n_open = None, 2 * m["n"]
+    seed = (
+        proj(e0, node="s")
+        .unionByName(proj(e0, node="d"))
+        .withColumn("scc_id", F.lit(None).cast(e0.schema["s"].dataType))
+    )
     for _outer in range(max_outer):
-        if nodes.isEmpty():
-            return assigned
-        # 1. TRIM to FIXPOINT: no in-edge or no out-edge => singleton
-        # SCC. Iterated within the round so a DAG chain/tail of any
-        # length peels here in O(depth) cheap passes instead of
-        # consuming one full color+peel round per level.
-        ae = None
         for _ in range(max_inner):
-            if ae is not None:
-                ae.unpersist()
-            ae = (
-                e0.join(nodes, e0.s == nodes.node, "left_semi")
-                .join(nodes, F.col("d") == nodes.node, "left_semi")
-                .persist()
+            cur = seed if state is None else state
+            open_ = _broadcast_if_small(cur.filter(is_open), n_open)
+            ae = e0.join(proj(open_, s="node"), "s", "left_semi").join(
+                proj(open_, d="node"), "d", "left_semi"
             )
-            has_in = ae.select(F.col("d").alias("node")).distinct()
-            has_out = ae.select(F.col("s").alias("node")).distinct()
-            trimmed = truncate_lineage(
-                nodes.join(has_in, "node", "left_anti")
-                .union(nodes.join(has_out, "node", "left_anti"))
-                .distinct()
-                .select("node", F.col("node").alias("scc_id")),
-                eager=True,
+            # i / o: the node has an open in-edge / out-edge.
+            state, m = cut(
+                proj(cur, node="node", scc_id="scc_id", i=0, o=0)
+                .unionByName(proj(ae, node="d", scc_id=None, i=1, o=0))
+                .unionByName(proj(ae, node="s", scc_id=None, i=0, o=1))
+                .groupBy("node")
+                .agg(
+                    F.max("scc_id").alias("was"),
+                    (F.max("i") * F.max("o")).alias("io"),
+                )
+                .withColumn(
+                    "scc_id",
+                    F.coalesce("was", F.when(F.col("io") == 0, F.col("node"))),
+                ),
+                ("node", "scc_id"), state, "trim",
+                open=is_open, trimmed=F.col("was").isNull() & ~is_open,
             )
-            if trimmed.isEmpty():
+            n_open = m["open"]
+            if n_open == 0:
+                release_checkpoint(e0)
+                return state
+            if m["trimmed"] == 0:
                 break
-            assigned = truncate_lineage(
-                assigned.unionByName(trimmed), eager=True
-            )
-            nodes = truncate_lineage(
-                nodes.join(trimmed, "node", "left_anti"),
-                eager=True,
-            )
         else:
             raise RuntimeError(
                 f"scc trim did not reach a fixpoint in {max_inner} passes"
             )
-        if nodes.isEmpty():
-            ae.unpersist()
-            return assigned
 
-        # 2. COLOR: forward max-id propagation to fixpoint. Numeric
-        # ids get the 1-row monotone SUM(color) convergence action;
-        # non-numeric ids (where a decimal cast would NULL out and
-        # falsely report convergence) pay one small node-sized
-        # anti-check join per step instead — exact for any id type.
-        from pyspark.sql.types import NumericType
-
-        numeric_ids = isinstance(id_type, NumericType)
-        color = nodes.select("node", F.col("node").alias("color"))
-        prev_sum = None
-        for _ in range(max_inner):
-            msgs = ae.join(color, ae.s == color.node).select(
-                F.col("d").alias("node"), "color"
-            )
-            new_color = truncate_lineage(
-                color.unionByName(msgs)
+        color = proj(state.filter(is_open), node="node", color="node")
+        for step in range(max_inner):
+            # prev is NULL only at closed nodes, which msgs also reach.
+            to_s = proj(color, s="node", color="color")
+            msgs = e0.join(_broadcast_if_small(to_s, n_open), "s")
+            color, m = cut(
+                proj(color, node="node", color="color", prev="color")
+                .unionByName(proj(msgs, node="d", color="color", prev=None))
                 .groupBy("node")
-                .agg(F.max("color").alias("color")),
-                eager=False,
-            )
-            if numeric_ids:
-                s = new_color.agg(
-                    F.sum(F.col("color").cast("decimal(38,0)")).alias("s")
-                ).collect()[0]["s"]
-                converged = s == prev_sum
-                prev_sum = s
-            else:
-                converged = (
-                    new_color.join(
-                        color.withColumnRenamed("color", "pc"), "node"
-                    )
-                    .filter(F.col("color") != F.col("pc"))
-                    .limit(1)
-                    .isEmpty()
+                .agg(
+                    F.max("color").alias("color"), F.max("prev").alias("prev")
                 )
-            color = new_color
-            if converged:
+                .filter(F.col("prev").isNotNull()),
+                ("node", "color"), color if step else None, "color",
+                changed=F.col("color") != F.col("prev"),
+                roots=F.col("color") == F.col("node"),
+            )
+            if m["changed"] == 0:
                 break
         else:
             raise RuntimeError(
                 f"scc coloring did not converge in {max_inner} steps"
             )
 
-        # 3. PEEL: backward membership from the color roots.
-        ce = (
-            ae.join(
-                color.select(
-                    F.col("node").alias("s"), F.col("color").alias("cs")
-                ),
-                "s",
-            )
-            .join(
-                color.select(
-                    F.col("node").alias("d"), F.col("color").alias("cd")
-                ),
-                "d",
-            )
-            .filter(F.col("cs") == F.col("cd"))
-            .select("s", "d")
-            .persist()
+        # A marked node's scc_id is its color, so an edge into it stays
+        # in one color class iff its source's color equals that id.
+        same_color = _broadcast_if_small(
+            proj(color, s="node", scc_id="color"), n_open
         )
-        marked = truncate_lineage(
-            color.filter(F.col("node") == F.col("color")).select(
-                "node", F.col("color").alias("scc_id")
-            ),
-            eager=True,
+        marked = proj(
+            color.filter(F.col("color") == F.col("node")),
+            node="node", scc_id="color",
         )
-        prev_n = None
-        for _ in range(max_inner):
-            msgs = ce.join(marked, ce.d == marked.node).select(
-                F.col("s").alias("node"), "scc_id"
+        n_marked = m["roots"]
+        for step in range(max_inner):
+            to_d = proj(marked, d="node", scc_id="scc_id")
+            msgs = e0.join(_broadcast_if_small(to_d, n_marked), "d").join(
+                same_color, ["s", "scc_id"]
             )
-            marked = truncate_lineage(
-                marked.unionByName(msgs).distinct(),
-                eager=False,
+            marked, m = cut(
+                marked.unionByName(proj(msgs, node="s", scc_id="scc_id"))
+                .distinct(),
+                ("node", "scc_id"), marked if step else None, "peel",
+                n=F.lit(True),
             )
-            n = marked.count()
-            if n == prev_n:
+            if m["n"] == n_marked:
                 break
-            prev_n = n
+            n_marked = m["n"]
         else:
             raise RuntimeError(
                 f"scc backward peel did not converge in {max_inner} steps"
             )
-        assigned = truncate_lineage(assigned.unionByName(marked), eager=True)
-        nodes = truncate_lineage(
-            nodes.join(marked, "node", "left_anti"),
-            eager=True,
-        )
-        ce.unpersist()
-        ae.unpersist()
 
-    if not nodes.isEmpty():
-        raise RuntimeError(
-            f"strongly_connected_components did not finish in "
-            f"{max_outer} outer rounds"
+        state, m = cut(
+            state.unionByName(marked)
+            .groupBy("node")
+            .agg(F.max("scc_id").alias("scc_id")),
+            ("node", "scc_id"), state, "assign", open=is_open,
         )
-    return assigned
+        release_checkpoint(color)
+        release_checkpoint(marked)
+        n_open = m["open"]
+        if n_open == 0:
+            release_checkpoint(e0)
+            return state
+    raise RuntimeError(
+        f"strongly_connected_components did not finish in "
+        f"{max_outer} outer rounds"
+    )

@@ -283,39 +283,22 @@ def q_stream_dropdup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from oarphpy_spark.streaming.windows import stream_events  # noqa: F401
+    from oarphpy_spark.streaming.windows import _wrapper_dir
 
-    feed_path = _os.path.join(sf_dir, "documents.parquet")
-    d = feed_path
-    wrap = None
+    d = _os.path.join(sf_dir, "documents.parquet")
     if _os.path.isfile(d):
-        import tempfile
-
-        wrap = tempfile.mkdtemp(prefix="oarphpy_spark_docfeed_")
-        _os.symlink(d, _os.path.join(wrap, _os.path.basename(d)))
-        d = wrap
-    try:
-        stream = spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string, "
-            "n_chars bigint"
-        ).parquet(d)
-        norm = F.regexp_replace(
-            F.trim(F.lower(F.col("text"))), "\\s+", " "
-        )
-        keyed = stream.select(
-            F.md5(norm.cast("binary")).alias("fingerprint")
-        )
-        deduped = keyed.dropDuplicates(["fingerprint"])
-        return run_to_memory_sink(
-            deduped, "q_stream_dropdup_sink", output_mode="append"
-        )
-    finally:
-        if wrap is not None:
-            # run_to_memory_sink drains availableNow synchronously, so
-            # the wrapper dir (and its symlink) is dead weight by now.
-            import shutil as _shutil
-
-            _shutil.rmtree(wrap, ignore_errors=True)
+        # Streaming file sources require a directory.
+        d = _wrapper_dir(d)
+    stream = spark.readStream.schema(
+        "doc_id bigint, text string, lang string, source string, "
+        "n_chars bigint"
+    ).parquet(d)
+    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), "\\s+", " ")
+    keyed = stream.select(F.md5(norm.cast("binary")).alias("fingerprint"))
+    deduped = keyed.dropDuplicates(["fingerprint"])
+    return run_to_memory_sink(
+        deduped, "q_stream_dropdup_sink", output_mode="append"
+    )
 
 
 @query(

@@ -41,10 +41,9 @@ def _has_shuffle_ancestor(df: DataFrame) -> bool:
     return False
 
 
-def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Repartition iff the input is a narrow (scan-like) plan with
-    fewer partitions than the cluster's default parallelism (or
-    ``min_partitions``).
+    fewer partitions than the cluster's default parallelism.
 
     Scan-like means the optimized logical plan contains no
     shuffle-implying operator. For those plans the partition count is
@@ -66,7 +65,7 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """
     if _has_shuffle_ancestor(df):
         return df
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df._jdf.queryExecution().toRdd().getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -185,7 +185,7 @@ _ROUND_ARTIFACT = re.compile(
 )
 _SCRIPT_PATH = re.compile(r"scripts/([A-Za-z0-9_]+)\.py\b")
 _CITING = ("oarphpy_spark", "tests", "scripts", "bench.py", "README.md",
-           os.path.join(".claude", "skills", "verify", "SKILL.md"))
+           "SURVEY.md", os.path.join(".claude", "skills", "verify", "SKILL.md"))
 
 
 def test_no_citation_of_missing_artifacts_or_scripts():

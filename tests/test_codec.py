@@ -70,6 +70,9 @@ def test_nested_containers_roundtrip(spark, tmp_path):
         np.arange(6, dtype=np.float32).reshape(2, 3),
         np.arange(1024, dtype=np.float64),  # packed (8 KB)
         np.zeros((0,), dtype=np.int32),  # empty
+        np.array([True, False, True]),  # bool, stored as 0/1
+        np.array(3.5),  # 0-d
+        np.array(7, dtype=np.int32),  # 0-d int
     ],
 )
 def test_tensor_roundtrip(spark, tmp_path, arr):

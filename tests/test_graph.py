@@ -340,7 +340,7 @@ def test_kcore_releases_superseded_rounds(spark):
 
 def test_kcore_broadcast_and_shuffled_keep_sets_match_peeling(spark):
     """Both join strategies for the keep set (broadcast while it is
-    small, shuffled beyond ``_KCORE_BROADCAST_KEEP_MAX_ROWS``) give the
+    small, shuffled beyond ``_BROADCAST_MAX_ROWS``) give the
     k-core a sequential peel computes."""
     import oarphpy_spark.llm.graph as g
 
@@ -362,14 +362,14 @@ def test_kcore_broadcast_and_shuffled_keep_sets_match_peeling(spark):
     assert want  # non-degenerate: a 4-core survives
 
     df = spark.createDataFrame(sorted(edges), "src long, dst long")
-    orig = g._KCORE_BROADCAST_KEEP_MAX_ROWS
+    orig = g._BROADCAST_MAX_ROWS
     try:
         for bound in (orig, -1):
-            g._KCORE_BROADCAST_KEEP_MAX_ROWS = bound
+            g._BROADCAST_MAX_ROWS = bound
             got = {(r.node, r.core_deg) for r in g.kcore(df, k).collect()}
             assert got == want, bound
     finally:
-        g._KCORE_BROADCAST_KEEP_MAX_ROWS = orig
+        g._BROADCAST_MAX_ROWS = orig
 
 
 def _jobs_and_actions(spark, fn):
@@ -562,6 +562,25 @@ def test_label_propagation_two_cliques(spark):
     got = {r.node: r.label for r in label_propagation(df, rounds=3).collect()}
     assert all(got[v] == 0 for v in range(4))
     assert all(got[v] == 10 for v in range(11, 14))
+
+
+def test_label_propagation_and_pagerank_release_round_cuts(spark):
+    """Only the result's checkpoint outlives ``label_propagation`` or
+    ``pagerank``: each round's lazy cut, materialized by the final
+    eager cut, is released after it."""
+    from oarphpy_spark.llm.graph import label_propagation, pagerank
+
+    c1 = [(a, b) for a in range(4) for b in range(4) if a < b]
+    df = spark.createDataFrame(c1 + [(3, 10), (10, 11)], "src long, dst long")
+    for op in (
+        lambda: label_propagation(df, rounds=3),
+        lambda: pagerank(df, iterations=5),
+        lambda: pagerank(df, iterations=2, seed_indicator=lambda n: n == 0),
+    ):
+        before = _persistent_rdd_ids(spark)
+        out = op()
+        assert _persistent_rdd_ids(spark) - before == {_checkpoint_rdd_id(out)}
+        assert out.count() == 6
 
 
 @pytest.mark.slow
@@ -854,3 +873,48 @@ def test_triangle_count_caches_shared_subtrees(spark):
     assert all(df.storageLevel != StorageLevel.NONE for df in cached)
     release_cached(out)
     assert all(df.storageLevel == StorageLevel.NONE for df in cached)
+
+
+# Two cycles bridged by a DAG path + a pendant source (the known-answer
+# graph above), and a 30-edge directed chain.
+_SCC_KNOWN = [(1, 2), (2, 3), (3, 1), (5, 6), (6, 5), (3, 4), (4, 5), (7, 1)]
+_SCC_CHAIN = [(i, i + 1) for i in range(30)]
+
+
+def test_scc_one_action_per_step(spark):
+    """Every trim pass, color step, peel step and state update is one
+    action — its eager cut, with the convergence count observed in
+    that job — and reading the result is one more: at most 12 actions
+    on the known-answer graph, 20 on the 30-node chain (which trims
+    from both ends, so in 16 passes)."""
+    from oarphpy_spark.llm.graph import strongly_connected_components
+
+    for edges, budget in ((_SCC_KNOWN, 12), (_SCC_CHAIN, 20)):
+        df = spark.createDataFrame(edges, "src long, dst long")
+        rows, _, n_actions = _jobs_and_actions(
+            spark, lambda: strongly_connected_components(df).collect()
+        )
+        assert len(rows) == len({v for e in edges for v in e})
+        assert n_actions <= budget, (len(edges), n_actions)
+
+
+def test_scc_releases_superseded_steps(spark):
+    """Only the result's checkpoint outlives
+    ``strongly_connected_components``: every superseded state, color
+    and marked checkpoint and the distinct edge copy are released —
+    for a graph that colors and peels, a chain that only trims,
+    string ids and an empty input alike."""
+    from oarphpy_spark.llm.graph import strongly_connected_components
+
+    cases = [
+        (_SCC_KNOWN, "long"),
+        (_SCC_CHAIN, "long"),
+        ([("a", "b"), ("b", "a"), ("b", "c")], "string"),
+        ([], "long"),
+    ]
+    for edges, id_type in cases:
+        df = spark.createDataFrame(edges, f"src {id_type}, dst {id_type}")
+        before = _persistent_rdd_ids(spark)
+        out = strongly_connected_components(df)
+        assert _persistent_rdd_ids(spark) - before == {_checkpoint_rdd_id(out)}
+        assert out.count() == len({v for e in edges for v in e})
