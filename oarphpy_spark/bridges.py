@@ -45,9 +45,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 
 
-def iter_arrow_batches(
-    df: DataFrame, prefetch_partitions: bool = True
-) -> Iterator["pyarrow.RecordBatch"]:  # noqa: F821
+def iter_arrow_batches(df: DataFrame) -> Iterator["pyarrow.RecordBatch"]:  # noqa: F821
     """Stream a DataFrame to the driver as Arrow RecordBatches in
     partition order, one window of partitions per Spark job, never a
     full collect.
@@ -66,14 +64,14 @@ def iter_arrow_batches(
     exists anywhere on the path.
 
     Memory bound: one window (at most ``defaultParallelism``
-    partitions' encoded batches) in the JVM driver, plus one more when
-    ``prefetch_partitions`` is true: the next window's job then runs on
-    a background thread, under the caller's job group and other local
-    properties, while the consumer reads the current window. The
-    background thread also connects to the window's socket as soon as
-    the job ends, since the JVM serves it only to a client that
-    connects within ``spark.python.authenticate.socketTimeout``; a
-    consumer may take as long as it likes over each window.
+    partitions' encoded batches) in the JVM driver, plus one more: the
+    next window's job runs on a background thread, under the caller's
+    job group and other local properties, while the consumer reads the
+    current window. The background thread also connects to the
+    window's socket as soon as the job ends, since the JVM serves it
+    only to a client that connects within
+    ``spark.python.authenticate.socketTimeout``; a consumer may take as
+    long as it likes over each window.
 
     The window's results must fit ``spark.driver.maxResultSize``.
     Windows are sized from the optimizer's estimate, which can be low
@@ -110,9 +108,7 @@ def iter_arrow_batches(
     def serve(window):  # connect at once: the JVM accepts for a bounded time
         return _create_local_socket(run_job(window))
 
-    served = _prefetched(sc, serve, windows) if prefetch_partitions else map(
-        serve, windows
-    )
+    served = _prefetched(sc, serve, windows)
     frames = NoOpSerializer()
     try:
         for sockfile in served:
@@ -122,8 +118,7 @@ def iter_arrow_batches(
             finally:
                 sockfile.close()
     finally:
-        if prefetch_partitions:
-            served.close()
+        served.close()
 
 
 def _window_size(df: DataFrame, n_partitions: int) -> int:
@@ -194,7 +189,7 @@ def _columns_of(table) -> dict[str, Any]:
 
 
 def iter_row_batches(
-    df: DataFrame, batch_size: int = 1024, prefetch_partitions: bool = True
+    df: DataFrame, batch_size: int = 1024
 ) -> Iterator[dict[str, Any]]:
     """Stream a DataFrame as column-dict batches (numpy-valued) of
     exactly ``batch_size`` rows (except the last), memory-bounded.
@@ -203,7 +198,7 @@ def iter_row_batches(
     import pyarrow as pa
 
     buf: "pa.Table | None" = None
-    for batch in iter_arrow_batches(df, prefetch_partitions):
+    for batch in iter_arrow_batches(df):
         t = pa.Table.from_batches([batch])
         buf = t if buf is None else pa.concat_tables([buf, t])
         while buf.num_rows >= batch_size:

@@ -135,6 +135,10 @@ def connected_components(
     and near-dup graphs settle in 2-4 rounds. Raises if the bound is
     hit without convergence (silently-partial clusters would corrupt
     a dedup pass).
+
+    The result is a projection of the final round's checkpoint, which
+    it holds (``util/checkpoints.hold_caches``):
+    ``release_cached(result)`` frees it.
     """
     e = (
         edges.select(F.col(src).alias(_SRC), F.col(dst).alias(_DST))
@@ -167,7 +171,8 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )
-    return e.select(F.col(_SRC).alias("node"), F.col(_DST).alias("component"))
+    stars = e.select(F.col(_SRC).alias("node"), F.col(_DST).alias("component"))
+    return hold_caches(stars, e)
 
 
 def pagerank(
@@ -316,7 +321,9 @@ def sssp(
     hash-repartitioned on its join key and persisted; the small
     frontier and distance relations are broadcast to the round's joins
     while they hold at most ``_BROADCAST_MAX_ROWS`` rows, and lineage
-    is truncated per round (``util/checkpoints.truncate_lineage``).
+    is truncated per round (``util/checkpoints.truncate_lineage``);
+    the round cuts are released after the final eager cut, so only the
+    result's checkpoint outlives the call.
 
     ``source`` is a literal node id. Returns (node, dist) for nodes
     reachable within ``rounds`` hops; dist is LONG when weights are
@@ -361,6 +368,7 @@ def sssp(
     # Row counts of the frontier and (an upper bound of) dist, so the
     # round's joins broadcast them while they are small.
     n_frontier = n_dist = 1
+    cuts = []
     for _ in range(rounds):
         frontier = _broadcast_if_small(frontier, n_frontier)
         relaxed = (
@@ -379,6 +387,7 @@ def sssp(
             "sssp",
         )
         improved = truncate_lineage(improved, eager=True)
+        cuts.append(improved)
         n_frontier = obs.get["n_rows"]
         if n_frontier == 0:
             break  # fixpoint: every further round is a no-op
@@ -389,8 +398,11 @@ def sssp(
             .agg(F.min("dist").alias("dist")),
             eager=False,
         )
+        cuts.append(dist)
         frontier = improved
     dist = truncate_lineage(dist, eager=True)
+    for df in cuts:
+        release_checkpoint(df)
     sym.unpersist()
     base.unpersist()
     return dist
@@ -806,7 +818,10 @@ def ktruss(
     distinct shuffle — see ``triangle_count``.
 
     Returns surviving canonical edges with support:
-    (lo, hi, support), support >= k-2.
+    (lo, hi, support), support >= k-2 — a join of the final round's
+    edge and support checkpoints, which the result holds
+    (``util/checkpoints.hold_caches``): ``release_cached(result)``
+    frees them.
     """
     if input_canonical:
         e = _check_canonical(
@@ -969,8 +984,8 @@ def ktruss(
     else:
         raise RuntimeError(f"ktruss did not converge in {max_iter} rounds")
     if n_prev == 0:
-        return e.withColumn("support", F.lit(0).cast("long"))
-    return e.join(sup, ["lo", "hi"])
+        return hold_caches(e.withColumn("support", F.lit(0).cast("long")), e, sup)
+    return hold_caches(e.join(sup, ["lo", "hi"]), e, sup)
 
 
 def label_propagation(

@@ -27,18 +27,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _parquet_files(path: str) -> list[str]:
-    return [
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    ]
+from oarphpy_spark.util.fs import input_files
 
 
 def plan_compaction(in_dir: str, target_bytes: int) -> tuple[int, int]:
     """(files_before, n_output_files) from the listing only."""
-    files = _parquet_files(in_dir)
+    files = input_files(in_dir)
     total = sum(os.path.getsize(f) for f in files)
     return len(files), max(1, math.ceil(total / target_bytes))
 
@@ -59,6 +53,6 @@ def compact(
     sized.write.mode("overwrite").parquet(out_dir)
     return {
         "files_before": files_before,
-        "files_after": len(_parquet_files(out_dir)),
+        "files_after": len(input_files(out_dir)),
         "n_output_planned": n_out,
     }

@@ -26,11 +26,12 @@ skipping a predicate achieves — the evidence loop for layout tuning.
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from oarphpy_spark.util.fs import input_files
 
 ZKEY = "__zkey"
 
@@ -129,11 +130,6 @@ def file_prune_stats(
     from oarphpy_spark.sources.manifest import file_stats, stats_overlap
 
     cols = list(predicates)
-    total, kept = 0, 0
-    for name in sorted(os.listdir(path)):
-        if not name.endswith(".parquet"):
-            continue
-        total += 1
-        if stats_overlap(file_stats(os.path.join(path, name), cols), predicates):
-            kept += 1
-    return total, kept
+    files = input_files(path)
+    kept = sum(stats_overlap(file_stats(f, cols), predicates) for f in files)
+    return len(files), kept

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from oarphpy_spark.operators.prefix import with_global_row_number
 from oarphpy_spark.registry import query
 from oarphpy_spark.tables import bound_sql, plain_sql, table
-from oarphpy_spark.util.checkpoints import truncate_lineage
+from oarphpy_spark.util.checkpoints import release_checkpoint, truncate_lineage
 
 # Canonical weighted co-purchase edges: parts sharing an order,
 # s < d, with a deterministic data-derived integer weight (the demo
@@ -96,7 +96,9 @@ def q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # operator's symmetric union would otherwise each re-run it.
     e = truncate_lineage(_weighted_edges(spark, sf_dir))
     seed = e.agg(F.min("s")).collect()[0][0]
-    return sssp(e, seed, "s", "d", "w", rounds=4)
+    dist = sssp(e, seed, "s", "d", "w", rounds=4)
+    release_checkpoint(e)  # dist is an eager cut: e is read no more
+    return dist
 
 
 @query(

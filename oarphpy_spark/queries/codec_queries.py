@@ -10,15 +10,13 @@ oracle-checked.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import numpy as np
 
 from pyspark.sql import DataFrame, Row, SparkSession
 
 from oarphpy_spark.codec import CloudpickeledCallable, RowAdapter, Tensor
 from oarphpy_spark.registry import query
+from oarphpy_spark.util.fs import transient_scratch_dir
 
 
 class _Fixture:
@@ -61,12 +59,9 @@ def q_rowadapter_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the decoded callable is invocable (-1 = empty callable)."""
     objs = _fixture_objects()
     df = RowAdapter.to_df(spark, objs)
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"oarphpy_spark_codec_roundtrip_{os.path.basename(sf_dir)}_{os.getpid()}",
-    )
-    df.write.mode("overwrite").parquet(out)
-    decoded = RowAdapter.collect_objects(spark.read.parquet(out))
+    with transient_scratch_dir("codec_roundtrip") as out:
+        df.write.mode("overwrite").parquet(out)
+        decoded = RowAdapter.collect_objects(spark.read.parquet(out))
 
     rows = []
     for o in sorted(decoded, key=lambda o: o.obj_id):
@@ -116,12 +111,9 @@ def q_tensor_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     proto = Row(**{k: v for k, v in sorted(arrays.items())})
     row = Row(**{k: Tensor.from_numpy(v) for k, v in sorted(arrays.items())})
     df = spark.createDataFrame([row], schema=RowAdapter.to_schema(proto))
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"oarphpy_spark_codec_tensor_{os.path.basename(sf_dir)}_{os.getpid()}",
-    )
-    df.write.mode("overwrite").parquet(out)
-    back = spark.read.parquet(out).collect()[0]
+    with transient_scratch_dir("codec_tensor") as out:
+        df.write.mode("overwrite").parquet(out)
+        back = spark.read.parquet(out).collect()[0]
 
     summary = []
     for name in sorted(arrays):

@@ -11,7 +11,6 @@ threshold" — each a pure DataFrame plan with an exact DuckDB oracle.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -19,7 +18,8 @@ from pyspark.sql import functions as F
 from oarphpy_spark.functions.text import md5_str
 from oarphpy_spark.registry import query
 from oarphpy_spark.tables import table
-from oarphpy_spark.util.checkpoints import truncate_lineage
+from oarphpy_spark.util.checkpoints import hold_caches, truncate_lineage
+from oarphpy_spark.util.fs import input_files, new_scratch_dir, transient_scratch_dir
 
 # The "new snapshot" for the diff is derived deterministically from the
 # orders table so the oracle can re-derive it verbatim: every 19th key
@@ -209,13 +209,10 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     data is read to plan the rewrite."""
     import math
 
-    from oarphpy_spark.operators.compaction import compact, plan_compaction
+    from oarphpy_spark.operators.compaction import compact
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"oarphpy_spark_compact_{os.path.basename(sf_dir)}_{os.getpid()}",
-    )
-    frag, comp = base + "_frag", base + "_comp"
+    base = new_scratch_dir("compact")
+    frag, comp = os.path.join(base, "frag"), os.path.join(base, "comp")
     (
         table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_quantity")
@@ -223,20 +220,16 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(frag)
     )
-    n_files, _ = plan_compaction(frag, 1 << 60)
-    total = sum(
-        os.path.getsize(os.path.join(frag, f))
-        for f in os.listdir(frag)
-        if f.endswith(".parquet")
-    )
+    total = sum(os.path.getsize(f) for f in input_files(frag))
     stats = compact(spark, frag, comp, target_bytes=max(1, math.ceil(total / 4)))
-    return spark.read.parquet(comp).agg(
+    agg = spark.read.parquet(comp).agg(
         F.count("*").alias("n_rows"),
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
         F.lit(
             stats["files_after"] < stats["files_before"]
         ).alias("fewer_files"),
     )
+    return hold_caches(agg, base)
 
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -457,7 +450,7 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("component", "c_custkey").alias("entity_id"),
     )
     w = Window.partitionBy("entity_id")
-    return labeled.select(
+    entities = labeled.select(
         "c_custkey",
         "entity_id",
         F.count("*").over(w).alias("entity_size"),
@@ -465,6 +458,7 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0))
         .alias("is_canonical"),
     )
+    return hold_caches(entities, cc)
 
 
 @query(
@@ -486,10 +480,7 @@ def q_sink_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the same aggregate over the raw table. Predicate applied BEFORE
     the write so the sink test also witnesses filter pushdown into the
     producing scan."""
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"oarphpy_spark_sink_orc_{os.path.basename(sf_dir)}_{os.getpid()}",
-    )
+    out = new_scratch_dir("sink_orc")
     (
         table(spark, sf_dir, "orders")
         .filter(F.col("o_totalprice") > 1000)
@@ -497,7 +488,7 @@ def q_sink_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .orc(out, compression="zlib")
     )
-    return (
+    agg = (
         spark.read.orc(out)
         .groupBy("o_orderstatus")
         .agg(
@@ -505,6 +496,7 @@ def q_sink_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("o_totalprice"), 2).alias("sum_price"),
         )
     )
+    return hold_caches(agg, out)
 
 
 @query(
@@ -556,20 +548,13 @@ def q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Retention note: time travel reaches exactly ``keep_generations``
     back; reading a pruned generation raises rather than serving the
     wrong version."""
-    import shutil
-
     from oarphpy_spark.streaming.upsert import (
         read_generation,
         read_snapshot,
         upsert_snapshot_sink,
     )
-    from oarphpy_spark.util.fs import scratch_dir
 
-    root = os.path.join(
-        scratch_dir(), f"oarphpy_spark_timetravel_{os.getpid()}"
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    try:
+    with transient_scratch_dir("timetravel") as root:
         feed = table(spark, sf_dir, "orders").select(
             F.col("o_custkey").alias("k"),
             F.col("o_orderkey").alias("seq"),
@@ -605,8 +590,6 @@ def q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(changed).cast("long").alias("n_changed"),
             )
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -634,13 +617,7 @@ def q_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame
     proves non-click partitions survived byte-identical while click
     holds exactly the replacement rows (even event_ids). Integer
     counts and centi-sums only."""
-    import shutil
-
-    from oarphpy_spark.util.fs import scratch_dir
-
-    root = os.path.join(scratch_dir(), f"oarphpy_spark_dpo_{os.getpid()}")
-    shutil.rmtree(root, ignore_errors=True)
-    try:
+    with transient_scratch_dir("dpo") as root:
         ev = table(spark, sf_dir, "events").select(
             "event_id", "event_type", "value"
         )
@@ -668,8 +645,6 @@ def q_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame
             )
             .orderBy("event_type")
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(

@@ -8,7 +8,6 @@ the semantics are deterministic.
 from __future__ import annotations
 
 import os
-import tempfile
 import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,7 +24,8 @@ from oarphpy_spark.operators.union import union_dfs
 from oarphpy_spark.registry import query
 from oarphpy_spark.sources.archive import archive_df
 from oarphpy_spark.tables import table
-from oarphpy_spark.util.fs import scratch_dir
+from oarphpy_spark.util.checkpoints import hold_caches
+from oarphpy_spark.util.fs import new_scratch_dir, transient_scratch_dir
 
 
 @query(
@@ -239,21 +239,20 @@ def q_archive_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     oarphpy/spark.py:457-459 + util/archive_flyweight.py). Fixture zip
     mirrors the reference's name==content members
     (oarphpy_test/test_spark.py:206-262)."""
-    # Keyed by PID so concurrent sessions never clobber each other's
-    # fixture; scratch_dir() honors SPARK_GRAFT_SCRATCH_DIR so a real
-    # cluster can point this at shared storage (util/fs.py).
-    zpath = os.path.join(
-        scratch_dir(), f"oarphpy_spark_fixture_{os.getpid()}.zip"
-    )
+    # The archive is read lazily, so the fixture's directory rides on
+    # the result (util/fs.py: scratch lifetime).
+    zdir = new_scratch_dir("fixture")
+    zpath = os.path.join(zdir, "fixture.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for m in _ARCHIVE_MEMBERS:
             z.writestr(m, m)
     df = archive_df(spark, zpath)
-    return df.select(
+    out = df.select(
         "name",
         F.length("data").cast("long").alias("n_bytes"),
         F.md5("data").alias("digest"),
     )
+    return hold_caches(out, zdir)
 
 
 @query("q_monte_carlo_pi")  # rows-only: randomized by nature
@@ -344,18 +343,15 @@ def q_tfevents_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         _image(2, "viz/frame", 4, 5, png),
         _tensor(3, "emb/vec", [0.5, 0.25, 0.75]),
     ]
-    # Fixture lives in a PID-keyed temp dir for the DURATION OF THE SCAN
-    # only, then is removed — no litter across runs. The distributed
-    # ``tfrecords`` read requires executors to share the driver
-    # filesystem (true in local mode and on any cluster whose event-log
-    # dir is shared storage — the real deployment shape for TensorBoard
-    # logs); the scan is forced eagerly below so cleanup can't race it.
-    evdir = os.path.join(
-        scratch_dir(), f"oarphpy_spark_tfevents_{os.getpid()}"
-    )
-    os.makedirs(evdir, exist_ok=True)
-    evpath = os.path.join(evdir, "events.out.tfevents.1.fixture")
-    try:
+    # Fixture lives in a private scratch dir for the DURATION OF THE
+    # SCAN only, then is removed — no litter across runs. The
+    # distributed ``tfrecords`` read requires executors to share the
+    # driver filesystem (true in local mode and on any cluster whose
+    # event-log dir is shared storage — the real deployment shape for
+    # TensorBoard logs); the scan is forced eagerly below so cleanup
+    # can't race it.
+    with transient_scratch_dir("tfevents") as evdir:
+        evpath = os.path.join(evdir, "events.out.tfevents.1.fixture")
         with open(evpath, "wb") as fobj:
             write_tfrecords(fobj, events)
 
@@ -374,7 +370,3 @@ def q_tfevents_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # already ran distributed above.
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        import shutil
-
-        shutil.rmtree(evdir, ignore_errors=True)

@@ -266,13 +266,14 @@ def q_triangle_count_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per consumer — map-only over |E| rows, cheaper than a shuffle).
     sam = und.filter(coin < 3)
     tri = triangle_count(sam, "s", "d", input_canonical=True)
-    return tri.select(
+    est = tri.select(
         F.col("n_triangles").alias("n_sampled_triangles"),
         F.round(F.col("n_triangles") * F.lit(1000.0) / F.lit(27.0), 2).alias(
             "est_triangles"
         ),
         F.col("n_edges").alias("n_sampled_edges"),
     )
+    return hold_caches(est, tri)
 
 
 def _kcore_oracle(k: int, rounds: int) -> str:
@@ -628,11 +629,12 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("t_nano")
         )
     )
-    return terms.crossJoin(F.broadcast(m_df)).agg(
+    q = terms.crossJoin(F.broadcast(m_df)).agg(
         F.count("*").alias("n_communities"),
         F.max("m").alias("m"),
         F.round(F.sum("t_nano") / 1e9, 6).alias("modularity"),
     )
+    return hold_caches(q, labels)
 
 
 @query(
@@ -830,13 +832,14 @@ def q_scc_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from oarphpy_spark.llm.graph import strongly_connected_components
 
     scc = strongly_connected_components(e, "s", "d")
-    return (
+    sizes = (
         scc.groupBy("scc_id")
         .agg(F.count("*").alias("sz"))
         .groupBy(F.col("sz").alias("scc_size"))
         .agg(F.count("*").alias("n_sccs"))
         .orderBy("scc_size")
     )
+    return hold_caches(sizes, scc)
 
 
 # Exact link prediction excludes wedge CENTERS above this degree: one

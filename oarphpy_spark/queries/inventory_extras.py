@@ -96,7 +96,7 @@ def q_for_each_executor(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe thunk on every slot, return one row per slot."""
     import os
 
-    results = for_each_executor(spark, lambda: os.getpid())
+    results = for_each_executor(spark, os.getpid)
     return spark.createDataFrame(
         [Row(slot=i, pid=int(p)) for i, p in enumerate(results)],
         "slot int, pid long",

@@ -1245,9 +1245,10 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("cluster_id")
-    return labeled.select(
+    sized = labeled.select(
         "doc_id", "cluster_id", F.count("*").over(w).alias("cluster_size")
     )
+    return hold_caches(sized, cc)
 
 
 @query(
@@ -1302,9 +1303,10 @@ def q_component_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_cluster = labeled.groupBy("cluster_id").agg(
         F.count("*").alias("cluster_size")
     )
-    return per_cluster.groupBy("cluster_size").agg(
+    hist = per_cluster.groupBy("cluster_size").agg(
         F.count("*").alias("n_clusters")
     )
+    return hold_caches(hist, cc)
 
 
 @query(
@@ -2092,7 +2094,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from oarphpy_spark.llm.graph import pagerank
 
     ranks = pagerank(edges, iterations=5, damping=0.85)
-    return ranks.select("node", F.round("rank", 6).alias("rank"))
+    return hold_caches(ranks.select("node", F.round("rank", 6).alias("rank")), ranks)
 
 
 def _ppr_oracle(iterations: int = 5) -> str:
@@ -2157,7 +2159,7 @@ def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
         damping=0.85,
         seed_indicator=lambda node: (node % 20 == 0).cast("int"),
     )
-    return ranks.select("node", F.round("rank", 6).alias("rank"))
+    return hold_caches(ranks.select("node", F.round("rank", 6).alias("rank")), ranks)
 
 
 def _lpa_oracle(rounds: int = 3) -> str:

@@ -9,14 +9,13 @@ order-insensitive value hash is stable across summation orders.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from oarphpy_spark.registry import query
 from oarphpy_spark.tables import bound_sql, plain_sql, table
+from oarphpy_spark.util.checkpoints import hold_caches
+from oarphpy_spark.util.fs import new_scratch_dir
 
 
 # ---------------------------------------------------------------------------
@@ -112,10 +111,7 @@ def _sink_roundtrip(spark: SparkSession, sf_dir: str, codec: str) -> DataFrame:
     parquet codec, read it back, and aggregate — proves the sink produces
     partition-pruned, re-scannable data (reference codec checks:
     oarphpy_test/test_spark.py:54-86)."""
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"oarphpy_spark_sink_{codec}_{os.path.basename(sf_dir)}_{os.getpid()}",
-    )
+    out = new_scratch_dir(f"sink_{codec}")
     (
         table(spark, sf_dir, "lineitem")
         .filter(F.col("l_discount") > 0.05)
@@ -123,7 +119,7 @@ def _sink_roundtrip(spark: SparkSession, sf_dir: str, codec: str) -> DataFrame:
         .partitionBy("l_returnflag")
         .parquet(out, compression=codec)
     )
-    return (
+    agg = (
         spark.read.parquet(out)
         .groupBy("l_returnflag")
         .agg(
@@ -131,6 +127,7 @@ def _sink_roundtrip(spark: SparkSession, sf_dir: str, codec: str) -> DataFrame:
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
         )
     )
+    return hold_caches(agg, out)
 
 
 @query("q_sink_parquet_zstd", oracle=_SINK_ORACLE)
@@ -172,15 +169,12 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure shift/mask/OR inside codegen."""
     from oarphpy_spark.operators.zorder import write_zordered
 
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"oarphpy_spark_zorder_{os.path.basename(sf_dir)}_{os.getpid()}",
-    )
+    out = new_scratch_dir("zorder")
     li = table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_partkey", "l_suppkey", "l_quantity"
     )
     write_zordered(li, out, ["l_partkey", "l_suppkey"], num_files=8, bits=10)
-    return (
+    agg = (
         spark.read.parquet(out)
         .filter((F.col("l_partkey") <= 250) & (F.col("l_suppkey") <= 12))
         .groupBy("l_returnflag")
@@ -189,6 +183,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
         )
     )
+    return hold_caches(agg, out)
 
 
 # ---------------------------------------------------------------------------
@@ -409,16 +404,13 @@ def q_manifest_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from oarphpy_spark.operators.zorder import write_zordered
     from oarphpy_spark.sources.manifest import build_manifest, pruned_read
 
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"oarphpy_spark_manifest_{os.path.basename(sf_dir)}_{os.getpid()}",
-    )
+    out = new_scratch_dir("manifest")
     li = table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_partkey", "l_suppkey", "l_quantity"
     )
     write_zordered(li, out, ["l_partkey", "l_suppkey"], num_files=8, bits=10)
     man = build_manifest(spark, out, ["l_partkey", "l_suppkey"])
-    return (
+    agg = (
         pruned_read(
             spark, man, {"l_partkey": (0, 250), "l_suppkey": (0, 12)}
         )
@@ -428,6 +420,7 @@ def q_manifest_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
         )
     )
+    return hold_caches(agg, out)
 
 
 @query(
@@ -780,10 +773,7 @@ def _text_source_roundtrip(
     """Write documents through a text-based format and read it back
     with a PINNED schema (inference over 100 TB means a second full
     scan — production readers always declare), then aggregate."""
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"oarphpy_spark_src_{fmt}_{os.path.basename(sf_dir)}_{os.getpid()}",
-    )
+    out = new_scratch_dir(f"src_{fmt}")
     docs = table(spark, sf_dir, "documents")
     w = docs.write.mode("overwrite")
     if fmt == "json":
@@ -792,10 +782,11 @@ def _text_source_roundtrip(
     else:
         w.option("header", True).csv(out)
         back = spark.read.schema(_DOCS_SCHEMA).option("header", True).csv(out)
-    return back.groupBy("lang").agg(
+    agg = back.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("total_chars"),
     )
+    return hold_caches(agg, out)
 
 
 @query("q_source_json", oracle=_TEXT_SOURCE_ORACLE)
@@ -826,17 +817,14 @@ def q_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     time, so only 1 of 5 partition subtrees is ever listed or scanned
     (tests/test_plans.py pins the pruned-partition count in the scan
     node). At 100 TB, partition design IS the first query optimizer."""
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"oarphpy_spark_part_{os.path.basename(sf_dir)}_{os.getpid()}",
-    )
+    out = new_scratch_dir("part")
     (
         table(spark, sf_dir, "orders")
         .write.mode("overwrite")
         .partitionBy("o_orderpriority")
         .parquet(out)
     )
-    return (
+    urgent = (
         spark.read.parquet(out)
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .select(
@@ -845,6 +833,7 @@ def q_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderpriority",
         )
     )
+    return hold_caches(urgent, out)
 
 
 @query(

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from oarphpy_spark.functions.text import md5_str
 from oarphpy_spark.registry import query
 from oarphpy_spark.tables import table
-from oarphpy_spark.util.checkpoints import truncate_lineage
+from oarphpy_spark.util.checkpoints import release_cached, truncate_lineage
 
 # Base world is [0, 10000)^2 at the 1500-customer reference scale;
 # radius/eps 300 => ~33x33 cells of side 300. The world SIDE grows
@@ -285,6 +285,7 @@ def q_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("cluster_id", "role")
     )
     out = truncate_lineage(out)
+    release_cached(cc)
     np_.unpersist()
     core.unpersist()
     pts.unpersist()

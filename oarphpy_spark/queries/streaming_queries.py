@@ -21,7 +21,10 @@ micro-batches instead of one availableNow drain.
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -34,10 +37,39 @@ from oarphpy_spark.streaming.windows import (
     tumbling_counts_stream,
 )
 from oarphpy_spark.util.checkpoints import truncate_lineage
+from oarphpy_spark.util.fs import transient_scratch_dir
 
 
 def _events_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_events(spark, os.path.join(sf_dir, "events.parquet"))
+
+
+def _file_per_batch_stream(
+    spark: SparkSession,
+    work: str,
+    schema: str,
+    parts: list[tuple[str, DataFrame, int]],
+) -> DataFrame:
+    """A file-source stream over ``<work>/feed`` that reads each
+    ``(name, df, age_s)`` of ``parts`` as its own micro-batch, in list
+    order: each ``df`` is written as ONE parquet file whose mtime is
+    ``age_s`` seconds ago (ages descending), and the stream takes one
+    file per trigger."""
+    feed = os.path.join(work, "feed")
+    os.makedirs(feed)
+    now = time.time()
+    for name, df, age in parts:
+        tmp = os.path.join(work, f"tmp_{name}")
+        df.coalesce(1).write.parquet(tmp)
+        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+        dst = os.path.join(feed, f"{name}.parquet")
+        shutil.move(part, dst)
+        os.utime(dst, (now - age, now - age))
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed)
+    )
 
 
 @query(
@@ -157,8 +189,6 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     recent change is not a delete. The snapshot is eagerly
     checkpointed so the scratch directory (stream feed + generations
     + checkpoint) can be removed before returning — nothing leaks."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from oarphpy_spark.streaming.upsert import (
@@ -166,33 +196,28 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_upsert_stream,
     )
     from oarphpy_spark.tables import table
-    from oarphpy_spark.util.fs import scratch_dir
 
-    work = os.path.join(
-        scratch_dir(), f"oarphpy_spark_stream_upsert_{os.getpid()}"
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    feed = os.path.join(work, "feed")
-    root = os.path.join(work, "snap")
-    changes = table(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("k"),
-        F.col("o_orderkey").alias("seq"),
-        F.when(F.col("o_orderkey") % 97 == 0, "D").otherwise("U").alias("op"),
-        F.col("o_orderkey").alias("last_order"),
-        F.round("o_totalprice", 2).alias("last_total"),
-    )
-    changes.write.parquet(feed)
-    stream = spark.readStream.schema(
-        "k bigint, seq bigint, op string, last_order bigint, "
-        "last_total double"
-    ).parquet(feed)
-    q = run_upsert_stream(stream, root, "k", f"q_stream_upsert_{os.getpid()}")
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("q_stream_upsert drain did not finish")
-    snap = truncate_lineage(read_snapshot(spark, root))
-    shutil.rmtree(work, ignore_errors=True)
-    return snap
+    with transient_scratch_dir("stream_upsert") as work:
+        feed = os.path.join(work, "feed")
+        root = os.path.join(work, "snap")
+        changes = table(spark, sf_dir, "orders").select(
+            F.col("o_custkey").alias("k"),
+            F.col("o_orderkey").alias("seq"),
+            F.when(F.col("o_orderkey") % 97 == 0, "D").otherwise("U").alias("op"),
+            F.col("o_orderkey").alias("last_order"),
+            F.round("o_totalprice", 2).alias("last_total"),
+        )
+        changes.write.parquet(feed)
+        stream = spark.readStream.schema(
+            "k bigint, seq bigint, op string, last_order bigint, "
+            "last_total double"
+        ).parquet(feed)
+        # The private dir's name is unique, so it names the stream too.
+        q = run_upsert_stream(stream, root, "k", os.path.basename(work))
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError("q_stream_upsert drain did not finish")
+        return truncate_lineage(read_snapshot(spark, root))
 
 
 @query(
@@ -369,47 +394,28 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drop, every hourly window ever seen stays resident forever.
     Output: finalized windows only (append mode — window end at or
     below the final watermark)."""
-    import glob
-    import shutil
-    import time
-
     from pyspark.sql import functions as F
 
     from oarphpy_spark.tables import table
-    from oarphpy_spark.util.fs import scratch_dir
 
-    work = os.path.join(
-        scratch_dir(), f"oarphpy_spark_stream_late_{os.getpid()}"
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    feed = os.path.join(work, "feed")
-    os.makedirs(feed)
-    try:
+    with transient_scratch_dir("stream_late") as work:
         ev = table(spark, sf_dir, "events").select("event_id", "ts")
         mx = ev.agg(F.max("ts")).collect()[0][0]
-        parts = [
-            ("a1", ev.filter(F.col("event_id") % 2 == 0), 300),
-            ("a2", ev.filter(F.col("event_id") % 2 == 1), 200),
-            (
-                "b",
-                ev.filter(
-                    F.col("ts") < F.lit(mx) - F.expr("INTERVAL 2 DAYS")
+        stream = _file_per_batch_stream(
+            spark,
+            work,
+            "event_id bigint, ts timestamp",
+            [
+                ("a1", ev.filter(F.col("event_id") % 2 == 0), 300),
+                ("a2", ev.filter(F.col("event_id") % 2 == 1), 200),
+                (
+                    "b",
+                    ev.filter(
+                        F.col("ts") < F.lit(mx) - F.expr("INTERVAL 2 DAYS")
+                    ),
+                    100,
                 ),
-                100,
-            ),
-        ]
-        now = time.time()
-        for name, df, age in parts:
-            tmp = os.path.join(work, f"tmp_{name}")
-            df.coalesce(1).write.parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(feed, f"{name}.parquet")
-            shutil.move(part, dst)
-            os.utime(dst, (now - age, now - age))
-        stream = (
-            spark.readStream.schema("event_id bigint, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
+            ],
         )
         agg = (
             stream.withWatermark("ts", "10 minutes")
@@ -423,8 +429,6 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             agg, "q_stream_late_data_sink", output_mode="append"
         )
         return truncate_lineage(out)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -673,39 +677,19 @@ def q_stream_dedup_within_watermark(
     duplicate doubles a bucket and breaks the hash. Chained into a
     windowed aggregation downstream (the supported multi-stateful
     pipeline)."""
-    import glob
-    import shutil
-    import time
-
     from pyspark.sql import functions as F
 
     from oarphpy_spark.tables import table as _table
-    from oarphpy_spark.util.fs import scratch_dir
 
-    work = os.path.join(
-        scratch_dir(), f"oarphpy_spark_stream_ddww_{os.getpid()}"
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    feed = os.path.join(work, "feed")
-    os.makedirs(feed)
-    try:
+    with transient_scratch_dir("stream_ddww") as work:
         ev = _table(spark, sf_dir, "events").select(
             "event_id", "ts", "value"
         )
-        now = time.time()
-        for name, age in (("orig", 300), ("replay", 100)):
-            tmp = os.path.join(work, f"tmp_{name}")
-            ev.coalesce(1).write.parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(feed, f"{name}.parquet")
-            shutil.move(part, dst)
-            os.utime(dst, (now - age, now - age))
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, ts timestamp, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
+        stream = _file_per_batch_stream(
+            spark,
+            work,
+            "event_id bigint, ts timestamp, value double",
+            [("orig", ev, 300), ("replay", ev, 100)],
         )
         deduped = stream.withWatermark(
             "ts", "60 days"
@@ -726,8 +710,6 @@ def q_stream_dedup_within_watermark(
         )
         out = run_to_memory_sink(agg, "q_stream_ddww_sink")
         return truncate_lineage(out)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -774,24 +756,12 @@ def q_stream_running_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     128-bit — the batch form of 'judge against prior state'. This is
     the operator class (custom per-key accumulators) the built-in
     windowed aggregations can't express."""
-    import glob
-    import shutil
-    import time
-
     from pyspark.sql import functions as F
 
     from oarphpy_spark.streaming.stateful import running_anomaly_flags
-    from oarphpy_spark.streaming.windows import run_to_memory_sink
     from oarphpy_spark.tables import table as _table
-    from oarphpy_spark.util.fs import scratch_dir
 
-    work = os.path.join(
-        scratch_dir(), f"oarphpy_spark_stream_anom_{os.getpid()}"
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    feed = os.path.join(work, "feed")
-    os.makedirs(feed)
-    try:
+    with transient_scratch_dir("stream_anom") as work:
         ev = _table(spark, sf_dir, "events").select(
             "user_id",
             "ts",
@@ -803,24 +773,14 @@ def q_stream_running_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("m")
         ).collect()[0]["m"]
-        now = time.time()
-        halves = [
-            ("a", ev.filter(F.unix_micros("ts") < mid), 300),
-            ("b", ev.filter(F.unix_micros("ts") >= mid), 100),
-        ]
-        for name, df, age in halves:
-            tmp = os.path.join(work, f"tmp_{name}")
-            df.coalesce(1).write.parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(feed, f"{name}.parquet")
-            shutil.move(part, dst)
-            os.utime(dst, (now - age, now - age))
-        stream = (
-            spark.readStream.schema(
-                "user_id bigint, ts timestamp, event_id bigint, cv bigint"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
+        stream = _file_per_batch_stream(
+            spark,
+            work,
+            "user_id bigint, ts timestamp, event_id bigint, cv bigint",
+            [
+                ("a", ev.filter(F.unix_micros("ts") < mid), 300),
+                ("b", ev.filter(F.unix_micros("ts") >= mid), 100),
+            ],
         )
         out = run_to_memory_sink(
             running_anomaly_flags(stream),
@@ -836,5 +796,3 @@ def q_stream_running_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("user_id")
         )
         return truncate_lineage(final)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oarphpy_spark.util.fs import input_files
+
 
 def file_stats(path: str, cols: list[str]) -> dict:
     """Footer-only stats for ONE parquet file: file/n_rows/n_bytes plus
@@ -90,12 +92,9 @@ def build_manifest(
 
     ``cols`` must share ``col_type`` (per-column types would need a
     struct schema; integer keys cover the layout/index use case).
-    The file list is parallelized so footer I/O runs executor-side."""
-    files = sorted(
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
+    The file list (``util/fs.input_files``, Spark's listing rule) is
+    parallelized so footer I/O runs executor-side."""
+    files = input_files(path)
     if not files:
         raise ValueError(f"no parquet data files under {path!r}")
     listing = spark.createDataFrame([(f,) for f in files], "path string")

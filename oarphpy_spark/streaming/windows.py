@@ -24,40 +24,34 @@ idempotent/transactional writer (Delta/Kafka/foreachBatch-upsert).
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oarphpy_spark.tables import _read_events
+from oarphpy_spark.util.fs import new_scratch_dir
 
 # Streaming file sources need a DIRECTORY; lone-file feeds get a
 # symlink wrapper. One wrapper per distinct source path per process
 # (not per invocation — a registry of 200+ queries re-building feeds
-# would otherwise leak a tmpdir each run), removed at interpreter
-# exit.
+# would otherwise leak a dir each run), made under a lock so racing
+# callers share one, and removed at interpreter exit (util/fs.py).
 _FILE_WRAPPERS: dict[str, str] = {}
+_FILE_WRAPPERS_LOCK = threading.Lock()
 
 
 def _wrapper_dir(source_file: str) -> str:
     key = os.path.realpath(source_file)
-    d = _FILE_WRAPPERS.get(key)
-    if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix="oarphpy_spark_stream_")
-        os.symlink(key, os.path.join(d, os.path.basename(key)))
-        _FILE_WRAPPERS[key] = d
+    with _FILE_WRAPPERS_LOCK:
+        d = _FILE_WRAPPERS.get(key)
+        if d is None or not os.path.isdir(d):
+            d = new_scratch_dir("stream")
+            os.symlink(key, os.path.join(d, os.path.basename(key)))
+            _FILE_WRAPPERS[key] = d
     return d
-
-
-@atexit.register
-def _cleanup_wrappers() -> None:
-    for d in _FILE_WRAPPERS.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _FILE_WRAPPERS.clear()
 
 
 def stream_events(

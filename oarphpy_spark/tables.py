@@ -14,6 +14,8 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from oarphpy_spark.util.fs import input_files
+
 # Schema memo: key -> (files stamp, schema); inferred schemas under
 # (path, inference confs), declared events schemas under ("events",
 # path).  A hit reads with the schema given, which skips Spark's
@@ -177,18 +179,15 @@ def _events_ts_kind(path: str) -> str:
     or 'none' (no ts column / not a timestamp).
 
     EVERY part file of a directory is probed (footers are a few KB
-    each): a directory holding mixed physical forms — e.g. one ns part
-    beside a µs part after a partial fixture regeneration — cannot be
-    read under any single schema and would die with a type error
-    mid-scan, so it raises loudly here instead."""
-    probes = [path]
-    if os.path.isdir(path):
-        probes = sorted(
-            os.path.join(path, n) for n in os.listdir(path)
-            if n.endswith(".parquet") and not n.startswith((".", "_"))
-        )
-        if not probes:
-            return "none"
+    each), listed by Spark's rule (``util/fs.input_files``: recursive,
+    so hive partitions count): a directory holding mixed physical
+    forms — e.g. one ns part beside a µs part after a partial fixture
+    regeneration — cannot be read under any single schema and would
+    die with a type error mid-scan, so it raises loudly here
+    instead."""
+    probes = input_files(path)
+    if not probes:
+        return "none"
     kinds = {_probe_ts_kind(p) for p in probes}
     if len(kinds) > 1:
         raise ValueError(

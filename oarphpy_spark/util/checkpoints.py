@@ -26,13 +26,18 @@ production job that calls ``sc.setCheckpointDir(...)`` at startup
 gets executor-loss-safe loops and results with zero per-operator
 plumbing; local runs keep the fast path.
 
-Ride-along caches: an operator that ``persist()``s an intermediate
+Ride-along storage: an operator that ``persist()``s an intermediate
 for its lazy result cannot unpersist it before returning. It attaches
 the cache to the result with :func:`hold_caches`, and the caller
 frees it with :func:`release_cached` once the result is materialized.
 SQL-persisted plans are held by the session's CacheManager until an
 explicit ``unpersist()``, so driver GC of the result does NOT reclaim
-them.
+them. The same rule covers an operator's checkpointed result under a
+query's projection (the query holds the operator result) and a
+query's scratch directory (``util/fs.new_scratch_dir``): a result
+that reads its directory lazily holds the path, and
+:func:`release_cached` removes it. A query that materializes its
+result before returning removes its directory itself.
 
 The same module owns the session's other storage decision: which
 derived relations are reused across queries. :func:`session_shared`
@@ -54,6 +59,8 @@ from collections.abc import Callable, Hashable
 from typing import Any
 
 from pyspark.sql import DataFrame
+
+from oarphpy_spark.util.fs import remove_scratch_dir
 
 
 def checkpoint_dir_configured(df: DataFrame) -> bool:
@@ -103,29 +110,34 @@ def release_checkpoint(df: DataFrame) -> None:
         pass
 
 
-def hold_caches(result: DataFrame, *dfs: DataFrame) -> DataFrame:
-    """Append ``dfs`` to ``result``'s ride-along caches and return
-    ``result``; :func:`release_cached` frees them. Each of ``dfs`` is
-    either a DataFrame persisted on behalf of ``result`` or an
-    operator result that holds caches of its own, which ``result``
-    then holds in its place (e.g. a query built on
-    ``triangle_count``'s output)."""
-    held = list(getattr(result, "_oarphpy_persisted", []))
-    for df in dfs:
-        held.extend(getattr(df, "_oarphpy_persisted", [df]))
-    result._oarphpy_persisted = held
+def hold_caches(result: DataFrame, *held: DataFrame | str) -> DataFrame:
+    """Append ``held`` to ``result``'s ride-along storage and return
+    ``result``; :func:`release_cached` frees it. Each of ``held`` is a
+    DataFrame persisted on behalf of ``result``, an operator result
+    that ``result`` is built on (its own ride-along storage and its
+    checkpoint, if it is one, pass to ``result``; e.g. a query built on
+    ``triangle_count``'s output), or a scratch directory
+    (``util/fs.new_scratch_dir``) that ``result`` reads."""
+    out = list(getattr(result, "_oarphpy_persisted", []))
+    for item in held:
+        out.extend(getattr(item, "_oarphpy_persisted", []))
+        out.append(item)
+    result._oarphpy_persisted = out
     return result
 
 
 def release_cached(result: DataFrame) -> None:
-    """Unpersist the caches :func:`hold_caches` attached to
-    ``result`` and, when ``result`` is itself a :func:`truncate_lineage`
-    cut (e.g. ``kcore``'s final degree table), its checkpoint blocks
-    too — unless :func:`session_shared` holds it. Call AFTER the result
-    has been materialized (written/collected). A later re-computation
-    of a result with ride-along caches still works — it just re-builds
-    the cached table(s); a released checkpointed result cannot be
-    re-read (its lineage is gone), so rebuild it from its query.
+    """Free what :func:`hold_caches` attached to ``result`` — unpersist
+    each held DataFrame, release its checkpoint blocks if it is a
+    :func:`truncate_lineage` cut, remove each held scratch directory —
+    and, when ``result`` is itself a cut (e.g. ``kcore``'s final degree
+    table), its checkpoint blocks too. A checkpoint that
+    :func:`session_shared` holds is never released. Call AFTER the
+    result has been materialized (written/collected). A later
+    re-computation of a result with ride-along caches still works — it
+    just re-builds the cached table(s); a released checkpoint or
+    scratch directory cannot be re-read (its lineage or files are
+    gone), so rebuild such a result from its query.
 
     Storage-level policy: every ride-along cache is created with an
     ARGLESS ``DataFrame.persist()``, whose default is
@@ -136,11 +148,19 @@ def release_cached(result: DataFrame) -> None:
     no source site may pass a memory-only level, and live ride-along
     entries must report ``useDisk=True``; the sf1.0 4 GB-squeeze smoke
     (scripts/scale_smoke_mem.py) exercises the actual spill path."""
-    for df in getattr(result, "_oarphpy_persisted", []):
-        df.unpersist()
-    rdd = _checkpointed_rdd(result)
-    if rdd is not None and rdd.id() not in _shared_rdd_ids(result.sparkSession):
-        rdd.unpersist(False)
+    cuts = []
+    for item in getattr(result, "_oarphpy_persisted", []):
+        if isinstance(item, str):
+            remove_scratch_dir(item)
+        else:
+            item.unpersist()
+            cuts.append(_checkpointed_rdd(item))
+    cuts = [rdd for rdd in [*cuts, _checkpointed_rdd(result)] if rdd is not None]
+    if cuts:
+        shared = _shared_rdd_ids(result.sparkSession)
+        for rdd in cuts:
+            if rdd.id() not in shared:
+                rdd.unpersist(False)
 
 
 def _checkpointed_rdd(df: DataFrame):

@@ -2,15 +2,33 @@
 fs helpers, ``oarphpy/util/misc.py:430-467``). Local or POSIX-mounted
 paths only: no ``hdfs://``/``s3a://``/``file:`` URIs and no Hadoop
 ``{a,b}`` globs. That includes :func:`input_files`, the path expansion
-of the ``archive`` and ``tfrecords`` sources."""
+of the ``archive`` and ``tfrecords`` sources, and the one listing rule
+for parquet part files.
+
+This module is also the one owner of query scratch space. A query
+that writes files to read them back asks :func:`new_scratch_dir` for
+a directory of its own: a new, uniquely named directory under
+:func:`scratch_dir`, never shared with another call, thread or
+process. Its lifetime follows the query's result:
+
+- a result that reads the directory lazily holds it
+  (``util/checkpoints.hold_caches``), and
+  ``util/checkpoints.release_cached`` removes it;
+- a query that materializes its result before returning removes the
+  directory before returning (:func:`transient_scratch_dir`).
+
+Every directory still present at interpreter exit is removed then."""
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import glob
 import os
 import shutil
 import tarfile
 import tempfile
+import threading
 import urllib.parse
 import urllib.request
 import zipfile
@@ -148,3 +166,47 @@ def scratch_dir() -> str:
     d = os.environ.get("SPARK_GRAFT_SCRATCH_DIR") or tempfile.gettempdir()
     os.makedirs(d, exist_ok=True)
     return d
+
+
+# Scratch directories handed out and not yet removed.
+_SCRATCH_DIRS: set[str] = set()
+_SCRATCH_LOCK = threading.Lock()
+
+
+def new_scratch_dir(tag: str) -> str:
+    """A new, empty directory ``oarphpy_spark_<tag>_<random>`` under
+    :func:`scratch_dir`, private to this call. Remove it with
+    :func:`remove_scratch_dir` (or hold it on a lazy result, see the
+    module docstring); whatever is left is removed at interpreter
+    exit."""
+    d = tempfile.mkdtemp(prefix=f"oarphpy_spark_{tag}_", dir=scratch_dir())
+    with _SCRATCH_LOCK:
+        _SCRATCH_DIRS.add(d)
+    return d
+
+
+def remove_scratch_dir(path: str) -> None:
+    """Remove a directory made by :func:`new_scratch_dir`."""
+    with _SCRATCH_LOCK:
+        _SCRATCH_DIRS.discard(path)
+    rm_rf(path)
+
+
+@contextlib.contextmanager
+def transient_scratch_dir(tag: str) -> Iterator[str]:
+    """:func:`new_scratch_dir` for the duration of a ``with`` block,
+    for a query that materializes its result before returning."""
+    d = new_scratch_dir(tag)
+    try:
+        yield d
+    finally:
+        remove_scratch_dir(d)
+
+
+@atexit.register
+def _remove_scratch_dirs() -> None:
+    with _SCRATCH_LOCK:
+        left = list(_SCRATCH_DIRS)
+        _SCRATCH_DIRS.clear()
+    for d in left:
+        rm_rf(d)

@@ -12,7 +12,8 @@ I/O) — with the hand-tuned constants kept as floors.
 from __future__ import annotations
 
 import math
-import os
+
+from oarphpy_spark.util.fs import input_files
 
 # One pandas/sort partition of ~1M rows stays comfortably inside a
 # multi-GB executor for the narrow (few-column) frames these operators
@@ -24,17 +25,12 @@ def parquet_row_count(path: str) -> int:
     """Exact row count of a parquet file or directory from footer
     metadata alone (``num_rows`` is a required footer field): O(part
     files) footer reads, zero data pages — cheap even for a 100 TB
-    table, and free compared to a ``count()`` job."""
+    table, and free compared to a ``count()`` job. A directory's part
+    files are listed by Spark's rule (``util/fs.input_files``), so a
+    hive-partitioned layout counts every partition."""
     import pyarrow.parquet as pq
 
-    paths = [path]
-    if os.path.isdir(path):
-        paths = [
-            os.path.join(path, n)
-            for n in sorted(os.listdir(path))
-            if n.endswith(".parquet") and not n.startswith((".", "_"))
-        ]
-    return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
+    return sum(pq.ParquetFile(p).metadata.num_rows for p in input_files(path))
 
 
 def derive_subkey_count(

@@ -115,7 +115,7 @@ def _jobs_in_group(spark, group, run):
     return sc.statusTracker().getJobIdsForGroup(group)
 
 
-@pytest.mark.parametrize("prefetch", [True, False], ids=["prefetch", "no_prefetch"])
+@pytest.mark.parametrize("prefetch", [True], ids=["prefetch"])
 def test_iter_arrow_batches_one_job_per_window(spark, prefetch):
     """A P-partition feed runs ceil(P / defaultParallelism) jobs, each
     computing a window of partitions in parallel."""
@@ -127,7 +127,7 @@ def test_iter_arrow_batches_one_job_per_window(spark, prefetch):
         rows = []
         jobs = _jobs_in_group(
             spark, f"feed-windows-{prefetch}-{n_parts}",
-            lambda: rows.extend(b.num_rows for b in iter_arrow_batches(df, prefetch)),
+            lambda: rows.extend(b.num_rows for b in iter_arrow_batches(df)),
         )
         assert sum(rows) == 10 * n_parts
         assert len(jobs) == math.ceil(n_parts / window), (n_parts, window)
@@ -165,8 +165,7 @@ def test_iter_arrow_batches_raises_task_failure_in_second_window(spark):
     assert seen == list(range(bad))
 
 
-@pytest.mark.parametrize("prefetch,launched", [(True, 2), (False, 1)],
-                         ids=["prefetch", "no_prefetch"])
+@pytest.mark.parametrize("prefetch,launched", [(True, 2)], ids=["prefetch"])
 def test_iter_arrow_batches_close_launches_no_further_job(spark, prefetch, launched):
     """Closing the iterator after its first batch launches no job
     beyond the window being read and, with prefetch, the next one."""
@@ -178,7 +177,7 @@ def test_iter_arrow_batches_close_launches_no_further_job(spark, prefetch, launc
     group = f"feed-close-{prefetch}"
 
     def first_batch_then_close():
-        it = iter_arrow_batches(df, prefetch)
+        it = iter_arrow_batches(df)
         next(it)
         it.close()
 
@@ -249,7 +248,7 @@ def _binary_files(directory, n_files, file_bytes):
     return str(directory)
 
 
-@pytest.mark.parametrize("prefetch", [True, False], ids=["prefetch", "no_prefetch"])
+@pytest.mark.parametrize("prefetch", [True], ids=["prefetch"])
 def test_iter_arrow_batches_windows_fit_max_result_size(spark, tmp_path, prefetch):
     """Windows shrink to fit the plan's size estimate under
     spark.driver.maxResultSize, which caps one job's results: 8
@@ -264,12 +263,12 @@ def test_iter_arrow_batches_windows_fit_max_result_size(spark, tmp_path, prefetc
         rows = []
         jobs = _jobs_in_group(
             spark, f"feed-cap-{prefetch}",
-            lambda: rows.extend(b.num_rows for b in iter_arrow_batches(small, prefetch)),
+            lambda: rows.extend(b.num_rows for b in iter_arrow_batches(small)),
         )
         assert sum(rows) == 8 * 25
         assert len(jobs) == 4  # 2 partitions, ~500 KB estimated, per job
         with pytest.raises(Exception, match="maxResultSize"):
-            list(iter_arrow_batches(big, prefetch))
+            list(iter_arrow_batches(big))
 
     key = "spark.sql.files.maxPartitionBytes"
     prior = spark.conf.get(key)

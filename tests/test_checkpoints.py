@@ -147,13 +147,15 @@ def test_observed_convergence_follows_checkpoint_dir(spark, tmp_path):
 
 # Each token may appear in oarphpy_spark/ only in the module that owns
 # the decision behind it: how lineage is cut and ride-along caches are
-# held (util/checkpoints), and how plan metrics are observed
-# (operators/counters).
+# held (util/checkpoints), how plan metrics are observed
+# (operators/counters), and where scratch directories are made
+# (util/fs).
 _OWNED_TOKENS = {
     "localCheckpoint(": "util/checkpoints.py",
     ".checkpoint(": "util/checkpoints.py",
     "_oarphpy_persisted": "util/checkpoints.py",
     "Observation(": "operators/counters.py",
+    "mkdtemp(": "util/fs.py",
 }
 
 
@@ -246,3 +248,34 @@ def test_queries_and_operators_write_no_temp_view():
                             writes.append(f"{rel}:{lineno}: {m.group(1)}")
     assert n_files > 20, n_files
     assert not writes, writes
+
+
+_PROCESS_KEYED_SCRATCH = re.compile(r"\b((?:os\.)?getpid|(?:tempfile\.)?gettempdir)\s*\(")
+
+
+def test_queries_build_no_process_keyed_scratch_path():
+    """No module under ``queries/`` calls ``os.getpid()`` or
+    ``tempfile.gettempdir()``: a path keyed on the process is shared by
+    every thread and session in it, so two concurrent calls of one
+    query would write over each other. Queries take a private
+    directory from ``util/fs.new_scratch_dir``."""
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "oarphpy_spark",
+        "queries",
+    )
+    calls = []
+    n_files = 0
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            n_files += 1
+            path = os.path.join(dirpath, name)
+            with open(path, encoding="utf-8") as f:
+                for lineno, line in enumerate(f, 1):
+                    m = _PROCESS_KEYED_SCRATCH.search(line)
+                    if m:
+                        calls.append(f"queries/{name}:{lineno}: {m.group(1)}")
+    assert n_files > 20, n_files
+    assert not calls, calls

@@ -583,6 +583,31 @@ def test_label_propagation_and_pagerank_release_round_cuts(spark):
         assert out.count() == 6
 
 
+def test_queries_over_operator_checkpoints_release_them(spark):
+    """Each of these queries projects, aggregates or joins over an
+    operator's checkpointed result; the result holds the checkpoint,
+    so a call plus ``release_cached``/``release_shared`` leaves no
+    persistent RDD behind (RDDs of earlier tests may be cleaned
+    meanwhile)."""
+    from oarphpy_spark import registry
+    from oarphpy_spark.util.checkpoints import release_cached, release_shared
+    from tests.conftest import SF_SMALL
+
+    for name in (
+        "q_scc_sizes", "q_pagerank", "q_ppr", "q_triangle_count_sampled",
+        "q_graph_modularity", "q_ktruss", "q_dedup_clusters",
+        "q_component_sizes", "q_sssp", "q_entity_resolution",
+        "q_dbscan_grid",
+    ):
+        release_shared(spark)
+        before = _persistent_rdd_ids(spark)
+        df = registry.queries()[name](spark, SF_SMALL)
+        assert df.count() > 0, name
+        release_cached(df)
+        release_shared(spark)
+        assert _persistent_rdd_ids(spark) - before == set(), name
+
+
 @pytest.mark.slow
 def test_sssp_matches_dijkstra_brute_force(spark):
     """Bounded-round Bellman-Ford == brute-force shortest paths on a
@@ -789,12 +814,10 @@ def test_scc_long_dag_chain_trims_in_one_round(spark):
 
 
 def test_scc_string_node_ids(spark):
-    """The assigned/seed schemas derive from the INPUT id type, so
-    string node ids work exactly as in connected_components (the
-    round-7 advice defect: a hardcoded 'node long' seed made the
-    first unionByName throw). Also exercises the non-numeric COLOR
-    convergence check (the decimal-cast SUM would NULL out on
-    strings and falsely converge)."""
+    """String node ids work exactly as in connected_components: the
+    state relation's schema derives from the INPUT id type, and the
+    one color rule (``max`` over ids, convergence counted as
+    ``color != prev``) serves every id type, strings included."""
     from oarphpy_spark.llm.graph import strongly_connected_components
 
     edges = spark.createDataFrame(

@@ -189,6 +189,13 @@ def test_mixed_physical_forms_in_one_directory_raise(tmp_path):
     pq.write_table(tbl_us, d / "part-1.parquet")
     with pytest.raises(ValueError, match="mixed physical timestamp forms"):
         _events_ts_kind(str(d))
+    # the same mix across hive partitions
+    h = tmp_path / "hive.parquet"
+    for k, tbl in ((1, tbl_ns), (2, tbl_us)):
+        os.makedirs(h / f"k={k}")
+        pq.write_table(tbl, h / f"k={k}" / "part-0.parquet")
+    with pytest.raises(ValueError, match="mixed physical timestamp forms"):
+        _events_ts_kind(str(h))
 
 
 def test_homogeneous_directory_probes_all_parts(tmp_path):
@@ -200,6 +207,15 @@ def test_homogeneous_directory_probes_all_parts(tmp_path):
     pq.write_table(tbl_us, d / "part-0.parquet")
     pq.write_table(tbl_us, d / "part-1.parquet")
     assert _events_ts_kind(str(d)) == "ntz"
+    # hive-partitioned (k=1/, k=2/, k=3/; 5 ns rows): the parts below
+    # the partition dirs are probed, not the top-level listing
+    h = tmp_path / "hive.parquet"
+    ns = 1_700_000_000_000_000_000
+    for k, n in ((1, 2), (2, 1), (3, 2)):
+        os.makedirs(h / f"k={k}")
+        tbl = pa.table({"ts": pa.array([ns + i for i in range(n)], pa.timestamp("ns"))})
+        pq.write_table(tbl, h / f"k={k}" / "part-0.parquet")
+    assert _events_ts_kind(str(h)) == "ns"
 
 
 def test_spark_written_int96_events_read_in_batch_and_stream(spark, tmp_path):

@@ -254,6 +254,13 @@ def test_parquet_row_count_footer_only(tmp_path):
     pq.write_table(t, d / "part-0.parquet")
     pq.write_table(t, d / "part-1.parquet")
     assert parquet_row_count(str(d)) == 2468
+    # hive-partitioned: every partition's parts count, markers do not
+    h = tmp_path / "hive.parquet"
+    for k, n in ((1, 2), (2, 1), (3, 2)):
+        (h / f"k={k}").mkdir(parents=True)
+        pq.write_table(pa.table({"x": list(range(n))}), h / f"k={k}" / "part-0.parquet")
+    (h / "_SUCCESS").write_bytes(b"")
+    assert parquet_row_count(str(h)) == 5
 
 
 def test_run_cmd_collect_and_check():
