@@ -2,7 +2,10 @@
 
 ``entry(spark)`` runs the flagship query on sf0.001 as a smoke check;
 ``queries()`` / ``oracle_sql()`` expose the full declared inventory from
-``oarphpy_spark.registry`` for the DuckDB correctness harness.
+``oarphpy_spark.registry`` for the DuckDB correctness harness, as plain
+dicts in registration order. The registry itself is lazy: ``entry``
+imports only the flagship query's module, while ``queries()`` and
+``oracle_sql()`` import every query module to fill their dicts.
 """
 
 from __future__ import annotations
@@ -26,9 +29,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return registry.queries()
+    return dict(registry.queries())
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query; omitted keys → rows-only check."""
-    return registry.oracle_sql()
+    return dict(registry.oracle_sql())

@@ -2162,63 +2162,6 @@ def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hold_caches(ranks.select("node", F.round("rank", 6).alias("rank")), ranks)
 
 
-def _lpa_oracle(rounds: int = 3) -> str:
-    """Unrolled deterministic label propagation: per round each node
-    takes its neighbors' most frequent label, smallest label on
-    ties (ROW_NUMBER over (count desc, label asc))."""
-    step = """
-    l{i} AS MATERIALIZED (
-      SELECT node, label FROM (
-        SELECT s.a AS node, l.label, COUNT(*) AS cnt,
-               ROW_NUMBER() OVER (PARTITION BY s.a
-                                  ORDER BY COUNT(*) DESC, l.label ASC)
-                 AS rn
-        FROM sym s JOIN l{p} l ON s.b = l.node
-        GROUP BY s.a, l.label
-      ) WHERE rn = 1
-    )"""
-    steps = ",".join(
-        step.format(i=i, p=i - 1) for i in range(1, rounds + 1)
-    )
-    return f"""
-    WITH sym AS MATERIALIZED (
-      SELECT DISTINCT l_suppkey AS a, l_partkey + 10000000 AS b
-      FROM lineitem
-      UNION
-      SELECT DISTINCT l_partkey + 10000000 AS a, l_suppkey AS b
-      FROM lineitem
-    ),
-    l0 AS MATERIALIZED (
-      SELECT DISTINCT a AS node, a AS label FROM sym
-    ),
-    {steps}
-    SELECT node, label FROM l{rounds}
-    """
-
-
-@query("q_label_propagation", oracle=_lpa_oracle())
-def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community detection over the supplier<->part graph by
-    3-round deterministic label propagation
-    (llm/graph.py:label_propagation — Raghavan et al. with
-    smallest-label tie-breaking and a FIXED round count, the form an
-    SQL oracle can restate exactly; synchronous LPA can oscillate, so
-    to-fixpoint would be ill-defined). Each round: one equi-join on
-    the persisted src-partitioned symmetric edges, one partial-
-    aggregable (node, label) count, one argmax via min_by keyed on
-    (count desc, label) — tie-free because the key includes the
-    label. Complements q_dedup_clusters (exact components) with the
-    density-sensitive community notion."""
-    li = table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.col("l_suppkey").alias("src"),
-        (F.col("l_partkey") + 10_000_000).alias("dst"),
-    )
-    from oarphpy_spark.llm.graph import label_propagation
-
-    return label_propagation(fwd, rounds=3)
-
-
 def _kmeans_relational_oracle() -> str:
     """3 unrolled Lloyd iterations; each stage MATERIALIZED (the
     assignment CTE is referenced twice per round)."""

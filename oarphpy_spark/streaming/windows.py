@@ -9,8 +9,7 @@ exactly why the batch oracles certify the streaming semantics.
 Patterns covered:
 * file-source streaming reads of the events table under the batch
   loader's declared schema (``tables._read_events``; streaming
-  sources cannot infer), with no session conf written but the UTC
-  timezone pin,
+  sources cannot infer), with no session conf written,
 * watermarks for bounded state / late-data handling,
 * tumbling / sliding / session windowed aggregation,
 * ``Trigger.AvailableNow``-style batch-equivalence testing (see
@@ -64,14 +63,13 @@ def stream_events(
     ``ts`` picked from the footers of every part file present at call
     time, and the same normalization of ``ts`` to a UTC TIMESTAMP. So
     window and watermark logic, and the batch-equivalence tests, see
-    the columns ``tables.table(spark, d, "events")`` returns. The only
-    session conf written is the UTC timezone pin, as in ``table``."""
+    the columns ``tables.table(spark, d, "events")`` returns. No
+    session conf is written, as in ``table``."""
     if os.path.isfile(source_dir):
         # Streaming file sources require a directory (a lone file
         # fails with "Option 'basePath' must be a directory"); wrap
         # it (cached per source path, cleaned at exit).
         source_dir = _wrapper_dir(source_dir)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     reader = spark.readStream
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

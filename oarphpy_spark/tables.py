@@ -51,7 +51,9 @@ _EVENTS_SCHEMA = (
 )
 _EVENTS_TS_TYPES = {
     "ns": "bigint",
-    "ntz": "timestamp_ntz",
+    # Declared TIMESTAMP, Spark keeps a naive timestamp's micros: its
+    # wall clock read as UTC, under any session timezone.
+    "ntz": "timestamp",
     "utc": "timestamp",
     "none": "timestamp",
 }
@@ -174,9 +176,10 @@ def _probe_ts_kind(probe: str) -> str:
 def _events_ts_kind(path: str) -> str:
     """Classify the physical form of ``events.ts`` from parquet footers
     only (no row groups read): 'ns' (INT64 nanos — unscannable by Spark
-    as a timestamp), 'ntz' (µs/ms with isAdjustedToUTC=false → Spark
-    reads TIMESTAMP_NTZ), 'utc' (µs/ms UTC-adjusted, or INT96 → TIMESTAMP),
-    or 'none' (no ts column / not a timestamp).
+    as a timestamp), 'ntz' (µs/ms with isAdjustedToUTC=false, read as
+    TIMESTAMP with its wall clock taken as UTC), 'utc' (µs/ms
+    UTC-adjusted, or INT96 → TIMESTAMP), or 'none' (no ts column / not
+    a timestamp).
 
     EVERY part file of a directory is probed (footers are a few KB
     each), listed by Spark's rule (``util/fs.input_files``: recursive,
@@ -200,15 +203,10 @@ def _events_ts_kind(path: str) -> str:
 def _normalize_events_ts(df: DataFrame) -> DataFrame:
     """Turn the declared ``ts`` column of an events scan into a UTC
     TIMESTAMP: ``bigint`` nanos via ``timestamp_micros(ts div 1000)``
-    (the same ns→µs truncation DuckDB applies), ``timestamp_ntz`` by a
-    cast to TIMESTAMP, which reads the wall clock in the session
-    timezone (pinned UTC: DuckDB's reading of a naive TIMESTAMP);
-    ``timestamp`` passes through."""
-    ts_type = dict(df.dtypes)["ts"]
-    if ts_type == "bigint":
+    (the same ns→µs truncation DuckDB applies); ``timestamp`` passes
+    through. Neither form depends on the session timezone."""
+    if dict(df.dtypes)["ts"] == "bigint":
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if ts_type == "timestamp_ntz":
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
@@ -227,7 +225,9 @@ def _read_events(reader, path: str) -> DataFrame:
     * int64 nanoseconds: Spark cannot scan it as a timestamp
       (PARQUET_TYPE_ILLEGAL), but reads it as ``bigint`` under a
       declared schema, with no session conf set;
-    * µs/ms with ``isAdjustedToUTC=false``: ``timestamp_ntz``;
+    * µs/ms with ``isAdjustedToUTC=false``: ``timestamp``, the naive
+      wall clock read as UTC (DuckDB's reading); a ``timestamp_ntz``
+      cast to TIMESTAMP would read it in the session timezone;
     * UTC-adjusted µs/ms, or INT96 (Spark's default output): ``timestamp``.
     """
     schema = _memo_on_files(
@@ -276,12 +276,11 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     :data:`_INFERENCE_CONFS`). A rewritten, added or removed file or a
     changed conf re-infers; the file listing itself is never memoized.
 
-    The session timezone is pinned to UTC here (runtime-settable conf),
-    the only conf this module writes: ``year``/``date_trunc``/date
-    casts are tz-dependent, and queries must produce identical results
-    under ANY caller-built session.
+    No session conf is written. The session presets set the timezone
+    to UTC, and the events ``ts`` column holds the same instants under
+    any session timezone; ``year``/``date_trunc``/date casts in a query
+    follow the caller's timezone when the caller sets another.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         return _read_events(spark.read, path)

@@ -1,4 +1,4 @@
-"""Driver-cost guards for the llm_curation hot paths.
+"""Driver-cost guards for session start-up and the llm_curation hot paths.
 
 Both workloads of the benchmark spend more time building plans than
 running tasks: a plan costs Py4J round trips and analyzer passes. Each of
@@ -6,7 +6,8 @@ the hot queries builds its plans as bound ``spark.sql`` statements; these
 tests count the Py4J commands a warm build sends and fail when a change
 brings back a chain of per-expression calls. ``RowAdapter.to_df`` gets
 the same guard: a fixed number of commands and no job, whatever the
-number of objects.
+number of objects. Listing the registry at start-up gets a module
+budget: it must not import the query modules.
 """
 
 from __future__ import annotations
@@ -14,7 +15,11 @@ from __future__ import annotations
 import contextlib
 import dataclasses
 import functools
+import json
 import operator
+import os
+import subprocess
+import sys
 import threading
 
 import numpy as np
@@ -138,3 +143,27 @@ def test_warm_to_df_py4j_budget(spark):
     assert len(sent) <= _TO_DF_BUDGET, (
         f"to_df: {len(sent)} Py4J commands for 600 objects (budget {_TO_DF_BUDGET})"
     )
+
+
+# Engine modules a fresh ``registry.queries()`` may load: the package,
+# ``registry``, ``queries`` and ``session`` (4 measured). Importing the
+# query modules to register them loaded 59.
+_STARTUP_MODULE_BUDGET = 6
+
+
+def test_registry_listing_module_budget():
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import json, sys\n"
+        "from oarphpy_spark import registry\n"
+        "n = len(registry.queries())\n"
+        "print(json.dumps([n, sorted(m for m in sys.modules"
+        " if m.split('.')[0] == 'oarphpy_spark')]))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, check=True,
+        env=dict(os.environ, PYTHONPATH=repo),
+    )
+    n, loaded = json.loads(out.stdout.strip().splitlines()[-1])
+    assert n > 250
+    assert len(loaded) <= _STARTUP_MODULE_BUDGET, loaded

@@ -3,6 +3,7 @@ session's checkpoint dir, for operators and query result cuts."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -279,3 +280,53 @@ def test_queries_build_no_process_keyed_scratch_path():
                         calls.append(f"queries/{name}:{lineno}: {m.group(1)}")
     assert n_files > 20, n_files
     assert not calls, calls
+
+
+def _query_decorators(tree: ast.AST):
+    """``(lineno, first argument)`` of every ``@query(...)`` decorator."""
+    for node in ast.walk(tree):
+        for deco in getattr(node, "decorator_list", ()):
+            call = deco if isinstance(deco, ast.Call) else None
+            func = call.func if call else deco
+            name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
+            if name == "query":
+                yield deco.lineno, (call.args[0] if call and call.args else None)
+
+
+def test_query_declarations_are_indexable():
+    """Every ``@query(`` under ``oarphpy_spark/`` sits in a module
+    directly under ``oarphpy_spark/queries/`` and names its query with a
+    string literal first argument, in the form the registry's index
+    scans for (``registry._DECLARATION``). A declaration the scan missed
+    would be a query no lookup can reach."""
+    from oarphpy_spark import registry
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "oarphpy_spark",
+    )
+    problems = []
+    n_declared = 0
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if d != "__pycache__"]
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, root).replace(os.sep, "/")
+            with open(path, encoding="utf-8") as f:
+                text = f.read()
+            declared = []
+            for lineno, first in _query_decorators(ast.parse(text)):
+                if not (isinstance(first, ast.Constant) and isinstance(first.value, str)):
+                    problems.append(f"{rel}:{lineno}: first argument is not a string literal")
+                    continue
+                declared.append(first.value)
+                if os.path.dirname(rel) != "queries" or name == "__init__.py":
+                    problems.append(f"{rel}:{lineno}: {first.value} outside a query module")
+            scanned = registry._DECLARATION.findall(text)
+            if sorted(declared) != sorted(scanned):
+                problems.append(f"{rel}: declared {sorted(declared)}, scanned {sorted(scanned)}")
+            n_declared += len(declared)
+    assert n_declared > 250, n_declared
+    assert not problems, problems

@@ -136,6 +136,23 @@ def test_build_library_zip_changes_digest_with_content(tmp_path):
     assert z1 != z2
 
 
+def test_build_library_zip_is_stored_and_byte_stable(tmp_path):
+    """Entries are stored uncompressed, and the same source gives the
+    same bytes wherever the zip is built."""
+    from oarphpy_spark.shipping import build_library_zip
+
+    pkg_root = _write_pkg(tmp_path, "stored_lib", 1)
+    z1 = build_library_zip(pkg_root, str(tmp_path / "out1"))
+    z2 = build_library_zip(pkg_root, str(tmp_path / "out2"))
+    assert os.path.basename(z1) == os.path.basename(z2)
+    with open(z1, "rb") as f1, open(z2, "rb") as f2:
+        assert f1.read() == f2.read()
+    with zipfile.ZipFile(z1) as z:
+        infos = z.infolist()
+    assert len(infos) == 3
+    assert {i.compress_type for i in infos} == {zipfile.ZIP_STORED}
+
+
 def test_infer_caller_package_root_skips_engine_frames(tmp_path):
     """Auto-inference (reference oarphpy/spark.py:590-657 stack-walk)
     must resolve the *user's* package even when the call goes through

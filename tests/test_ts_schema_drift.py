@@ -263,3 +263,38 @@ def test_spark_written_int96_events_read_in_batch_and_stream(spark, tmp_path):
         output_mode="append",
     )
     assert sorted((r["event_id"], r["us"]) for r in out.collect()) == expect
+
+
+def test_reads_keep_instants_and_session_timezone(spark, tmp_path):
+    """Batch and stream reads of every form give the same instants under
+    a non-UTC session as under UTC, and leave the caller's timezone as
+    it was: no read writes ``spark.sql.session.timeZone``."""
+    from oarphpy_spark.streaming.windows import stream_events
+
+    key = "spark.sql.session.timeZone"
+    prior = spark.conf.get(key)
+    forms = _forms(str(tmp_path))
+    expect = sorted(zip(_ROWS["event_id"], _US))
+    try:
+        for tz in ("UTC", "America/Los_Angeles"):
+            spark.conf.set(key, tz)
+            for form, d in forms.items():
+                batch = table(spark, d, "events").select(
+                    "event_id", F.unix_micros("ts").alias("us")
+                )
+                assert sorted(map(tuple, batch.collect())) == expect, (tz, form)
+                q = (
+                    stream_events(spark, os.path.join(d, "events.parquet"))
+                    .select("event_id", F.unix_micros("ts").alias("us"))
+                    .writeStream.format("memory")
+                    .queryName(f"t_tz_{form}")
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination(60)
+                rows = spark.sql(f"SELECT * FROM t_tz_{form}").collect()
+                spark.sql(f"DROP VIEW IF EXISTS t_tz_{form}")
+                assert sorted(map(tuple, rows)) == expect, (tz, form, "stream")
+                assert spark.conf.get(key) == tz, (tz, form)
+    finally:
+        spark.conf.set(key, prior)
